@@ -100,7 +100,7 @@ object Scale {
         .write.format("noop").mode("overwrite").save()
     }
     // the custom physical operator (HybridSortExec: range scatter via
-    // EnsureRequirements + per-partition literal quicksort/insertion
+    // EnsureRequirements + per-partition quicksort/insertion-sort
     // hybrid per run, heap merge of spilled runs) over the same frame —
     // the reference's algorithm head-to-head against Tungsten's sort at
     // 50x the reference's published ceiling. Since the round-7 external
@@ -122,7 +122,19 @@ object Scale {
         .write.format("noop").mode("overwrite").save()
       finally spark.conf.unset("spark.graft.hybridSort.spillBytes")
     }
-    println(f"""{"n_rows":$n,"global_sort_sec":$sortSec%.1f,"top_k_sec":$topkSec%.1f,"hybrid_exec_sec":$hybridSec%.1f,"hybrid_exec_8mb_budget_sec":$hybridSpillSec%.1f,"cpus":$cpus}""")
+    // the key shapes that made the reference's last-element Lomuto
+    // partition quadratic, through the same operator: an already ordered
+    // key (`id`, as a time-ordered column arrives) and a 4-key column
+    // (`id % 4`, a low-cardinality status column) carrying `id` along.
+    val hybridPresortedSec = time {
+      ops.Sorts.hybridSortExec(gen.select("id"), 25, "id")
+        .write.format("noop").mode("overwrite").save()
+    }
+    val hybridFourKeySec = time {
+      ops.Sorts.hybridSortExec(gen.selectExpr("id % 4 AS k4", "id"), 25, "k4")
+        .write.format("noop").mode("overwrite").save()
+    }
+    println(f"""{"n_rows":$n,"global_sort_sec":$sortSec%.1f,"top_k_sec":$topkSec%.1f,"hybrid_exec_sec":$hybridSec%.1f,"hybrid_exec_8mb_budget_sec":$hybridSpillSec%.1f,"hybrid_exec_presorted_sec":$hybridPresortedSec%.1f,"hybrid_exec_4key_sec":$hybridFourKeySec%.1f,"cpus":$cpus}""")
     spark.stop()
   }
 

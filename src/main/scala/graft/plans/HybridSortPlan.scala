@@ -24,13 +24,15 @@ import graft.ops.HybridSort
   * child distribution, so `EnsureRequirements` inserts a range-partitioning
   * shuffle: Spark's sampled range scatter standing in for the reference's
   * root-computed `Scatterv` counts (`QuickInsertionHeap.c:164-187`). Each
-  * task then runs the literal hybrid algorithm
-  * (`SequentialQuickInsert.c:40-52`, threshold knob
-  * `quickThreshold.c:188-191`) over its partition, comparator supplied by
-  * Catalyst's generated row ordering — so the operator sorts ANY schema by
-  * ANY key set, not just the reference's bare ints. Downstream consumption
-  * in partition-index order is the gather/merge; no single-node k-way merge
-  * exists anywhere (the reference's rank-0 merge is its scale ceiling).
+  * task then runs the reference's hybrid structure
+  * (`SequentialQuickInsert.c:40-52`: quicksort, insertion sort below the
+  * threshold knob of `quickThreshold.c:188-191`) with a worst-case-safe
+  * partition step (see [[graft.ops.HybridSort]]) over its partition,
+  * comparator supplied by Catalyst's generated row ordering — so the
+  * operator sorts ANY schema by ANY key set, not just the reference's bare
+  * ints. Downstream consumption in partition-index order is the
+  * gather/merge; no single-node k-way merge exists anywhere (the
+  * reference's rank-0 merge is its scale ceiling).
   *
   * Scale contract: unlike the reference (which `malloc`s the full chunk,
   * `QuickInsertionHeap.c:181`, and dies past node memory), this operator

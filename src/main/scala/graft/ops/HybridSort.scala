@@ -38,8 +38,9 @@ object HybridSort {
 
   /** The algorithm, written once; `lt` is its only abstract member.
     * `@specialized` compiles the Int and Long copies, which read and write
-    * primitive arrays without boxing; the `Ordering` entry point (the row
-    * sort of [[graft.plans.HybridSortExec]]) runs the generic copy.
+    * primitive arrays without boxing. [[graft.plans.HybridSortExec]] sorts
+    * its rows through the `Long` copy, as packed (key prefix, row index)
+    * keys; the `Ordering` entry point runs the generic copy.
     */
   private[graft] abstract class Kernel[@specialized(Int, Long) T] {
     def lt(x: T, y: T): Boolean
@@ -160,7 +161,7 @@ object HybridSort {
   }
 
   /** Introsort's partition-level budget for `n` keys: `2·⌊log2 n⌋`. */
-  private def depthBudget(n: Int): Int =
+  private[graft] def depthBudget(n: Int): Int =
     2 * (31 - Integer.numberOfLeadingZeros(n.max(1)))
 
   /** In-place hybrid sort of `a[low..high]`. */

@@ -77,8 +77,9 @@ object Sorts {
     * distribution) + per-partition hybrid quicksort/insertion-sort — the
     * reference's algorithm planned as a first-class Catalyst node instead
     * of `orderBy`. Keys are resolved by name against the input and sorted
-    * ascending (the reference's only order). See the operator's Scaladoc
-    * for the in-memory-partition caveat vs Tungsten's spilling SortExec.
+    * ascending (the reference's only order). Like Tungsten's SortExec, the
+    * operator spills sorted runs past a per-task budget and heap-merges
+    * them; see [[graft.plans.HybridSortPlan]]'s scale contract.
     */
   def hybridSortExec(df: DataFrame, threshold: Int, keys: String*): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge

@@ -134,7 +134,13 @@ object Scale {
       ops.Sorts.hybridSortExec(gen.selectExpr("id % 4 AS k4", "id"), 25, "k4")
         .write.format("noop").mode("overwrite").save()
     }
-    println(f"""{"n_rows":$n,"global_sort_sec":$sortSec%.1f,"top_k_sec":$topkSec%.1f,"hybrid_exec_sec":$hybridSec%.1f,"hybrid_exec_8mb_budget_sec":$hybridSpillSec%.1f,"hybrid_exec_presorted_sec":$hybridPresortedSec%.1f,"hybrid_exec_4key_sec":$hybridFourKeySec%.1f,"cpus":$cpus}""")
+    // the distributed ROW_NUMBER over the same frame: one range shuffle,
+    // one count pass over its output, one sort within partitions
+    val globalIndexSec = time {
+      ops.Sorts.globalIndex(gen.select("value", "id"), col("value"), col("id"))
+        .write.format("noop").mode("overwrite").save()
+    }
+    println(f"""{"n_rows":$n,"global_sort_sec":$sortSec%.1f,"top_k_sec":$topkSec%.1f,"hybrid_exec_sec":$hybridSec%.1f,"hybrid_exec_8mb_budget_sec":$hybridSpillSec%.1f,"hybrid_exec_presorted_sec":$hybridPresortedSec%.1f,"hybrid_exec_4key_sec":$hybridFourKeySec%.1f,"global_index_sec":$globalIndexSec%.1f,"cpus":$cpus}""")
     spark.stop()
   }
 

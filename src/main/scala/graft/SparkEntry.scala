@@ -2699,6 +2699,8 @@ object SparkEntry {
 
     // Distributed ROW_NUMBER: contiguous 0-based index in key order via
     // range-scatter + per-partition offsets (never a one-partition window).
+    // One range shuffle and one sort; the result declares idx's range
+    // partitioning and order, so this orderBy plans no exchange, no sort.
     "global_index" -> ((s, d) =>
       Sorts.globalIndex(li(s, d).select(sortCols.map(col): _*),
           col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))

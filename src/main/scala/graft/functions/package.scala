@@ -34,10 +34,6 @@ package object functions {
     org.apache.spark.sql.GraftColumnBridge.column(
       MinHash31(org.apache.spark.sql.GraftColumnBridge.expression(c), k))
 
-  /** Seeded variant: independent hash function per integer seed. */
-  def h60Seeded(seed: Int, c: Column): Column =
-    h60(concat(lit(seed.toString), lit(":"), c))
-
   /** Lowercased alphanumeric tokens; empty tokens removed.
     * DuckDB mirror: `list_filter(string_split_regex(lower(x),'[^a-z0-9]+'), t -> t <> '')`.
     */
@@ -64,7 +60,4 @@ package object functions {
     * engine, so no engine-specific scale reduction ever rounds a digit.
     */
   def rate2(c: Column): Column = c.cast(DecimalType(4, 2))
-
-  /** SUM(dec2(c)) presented as double — exact then converted once. */
-  def sumMoney(c: Column): Column = sum(dec2(c)).cast("double")
 }

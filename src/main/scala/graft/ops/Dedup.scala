@@ -354,38 +354,6 @@ object Dedup {
         round(abs(col("est_j") - col("jaccard")), 4).as("abs_err"))
   }
 
-  /** Exact n-gram Jaccard over *rare* shingles: shingles occurring in more
-    * than `maxDf` documents are dropped first (web-scale "stop shingles" —
-    * they contribute no discriminative signal and are what makes the
-    * shingle self-join quadratic). Pair similarity is computed over the
-    * surviving shingle sets; `minJaccard` filters the output.
-    */
-  def ngramJaccardPairs(docs: DataFrame, shingleN: Int, maxDf: Int,
-                        minJaccard: Double): DataFrame = {
-    // Same single-split fan-out as minhashSignatures: the shingle explode
-    // is the CPU-heavy map leg feeding the distinct shuffle.
-    val sh = graft.spark.CheckpointUtil.fanOutScan(
-        docs.select(col("doc_id"), col("text")))
-      .select(col("doc_id"), explode(shingles(tokens(col("text")), shingleN)).as("shingle"))
-      .distinct()
-    val rare = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .where(col("df") <= maxDf).select(col("shingle"))
-    val rs = sh.join(rare, Seq("shingle"))
-    val sizes = rs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val inter = rs.as("x").join(rs.as("y"),
-        col("x.shingle") === col("y.shingle") && col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-      .withColumn("jaccard",
-        round(col("inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("inter")).cast("double"), 4))
-      .where(col("jaccard") >= minJaccard)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
-
   /** Canonical duplicate-cluster labels: every document that appears in a
     * near-dup pair gets the smallest doc_id of its connected component —
     * the "keep one doc per duplicate cluster" step that turns pairwise

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Seeded synthetic data sources — the reference's only "scan" operator.
@@ -12,25 +12,10 @@ import org.apache.spark.sql.functions._
   * Spark restatement: `spark.range(n)` is an embarrassingly parallel,
   * partitioned long source — it scales linearly with executors and never
   * materializes on the driver, so the same code serves 1e3 rows and 1e12.
+  * One generator serves the engine: [[lcgInts]], whose rows an oracle can
+  * regenerate (the partitioned `graft-gen` source covers scale runs).
   */
 object Gen {
-
-  /** Uniform ints in `[0, bound)`, Spark-native RNG with a fixed seed.
-    * Mirrors `rand() % bound` with `srand(42)` (`quickThreshold.c:147,167`).
-    */
-  def randInts(spark: SparkSession, n: Long, seed: Long = 42L,
-               bound: Int = 1000000): DataFrame =
-    spark.range(n).select(
-      (rand(seed) * bound).cast("int").as("value"))
-
-  /** Product-of-uniforms distribution `(rand()*rand()) % 5e6` — the
-    * non-uniform variant at `SequentialQuickInsert.c:68`. Skews small.
-    */
-  def randIntsProduct(spark: SparkSession, n: Long, seed: Long = 42L,
-                      bound: Int = 5000000): DataFrame =
-    spark.range(n).select(
-      ((rand(seed) * rand(seed + 1) * bound.toLong * bound.toLong)
-        .cast("long") % bound).cast("int").as("value"))
 
   /** Deterministic multiplicative-congruential values — identical in any
     * engine with 64-bit integer arithmetic, so a DuckDB oracle can
@@ -47,10 +32,4 @@ object Gen {
     spark.range(n).select(
       (((col("id") % LcgDomain) * 2654435761L) % bound).as("value"),
       col("id"))
-
-  /** Knuth-style multiplicative hash as a Column, for salting/shingling.
-    * Same overflow-safe domain reduction as [[lcgInts]].
-    */
-  def mixCol(c: Column, bound: Long): Column =
-    ((c % LcgDomain) * 2654435761L) % bound
 }

@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.types.LongType
 
 /** The reference's distributed pipeline — scatter → local hybrid sort →
   * k-way merge (`/root/reference/QuickInsertionHeap.c:197-215`) — restated
@@ -52,24 +55,52 @@ object Sorts {
   /** Contiguous global row index 0..N-1 in key order — the scale-safe form
     * of `ROW_NUMBER() OVER (ORDER BY …)`. The window form plans as a
     * SINGLE-partition sort (every row through one task — the same
-    * bottleneck as the reference's rank-0 merge); this one range-scatters,
-    * sorts within partitions, then assigns `partition offset + local
-    * position` via zipWithIndex, whose first phase materializes only ONE
-    * COUNT PER PARTITION on the driver — O(P), not O(N). Costs a second
-    * pass over the sorted data (persist upstream if the input is hot).
+    * bottleneck as the reference's rank-0 merge); this one range-scatters
+    * ONCE and sorts ONCE:
+    *  1. `repartitionByRange` runs the sample and the shuffle map stage;
+    *  2. a count job over that same shuffle output (a plain read, no sort)
+    *     brings ONE COUNT PER PARTITION to the driver — O(P), not O(N);
+    *  3. each partition is sorted within itself and each row gets
+    *     `offset(partition) + position` prepended as an `UnsafeRow`.
+    * The map stage is never rerun: the sort and every later action read
+    * the shuffle files step 1 wrote.
+    *
+    * The result declares `RangePartitioning(idx ASC)` over its actual
+    * partition count and `idx ASC` as its ordering. Both hold by
+    * construction (partition i holds exactly the indices
+    * `[off_i, off_{i+1})`, in order), so `orderBy("idx")` on it plans with
+    * no exchange and no sort. The input columns keep their attributes:
+    * `df("x")` resolves on the result as it does on `df`.
+    *
     * `keys` must pin a TOTAL order (include a tiebreaker): rows tied on
     * all keys may land in either partition of a range boundary, making
     * their relative index nondeterministic.
     */
   def globalIndex(df: DataFrame, keys: Column*): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    val sorted = partitionSort(df, p, keys: _*)
-    val schema = StructType(
-      StructField("idx", LongType, nullable = false) +: sorted.schema.fields)
-    val rdd = sorted.rdd.zipWithIndex.map { case (row, i) =>
-      Row.fromSeq(i +: row.toSeq)
+    val spark = df.sparkSession
+    val ranged = df.repartitionByRange(spark.sparkContext.defaultParallelism, keys: _*)
+    val output = ranged.queryExecution.analyzed.output
+    val scattered = ranged.queryExecution.toRdd
+    val offsets = scattered.mapPartitions(rows => Iterator.single(rows.size.toLong))
+      .collect().scanLeft(0L)(_ + _)
+    val sorted = GraftColumnBridge.ofRdd(spark, output, scattered)
+      .sortWithinPartitions(keys: _*).queryExecution.toRdd
+    val types = (LongType +: output.map(_.dataType)).toArray
+    val indexed = sorted.mapPartitionsWithIndex[InternalRow] { (p, rows) =>
+      val idx = new GenericInternalRow(1)
+      val joined = new JoinedRow
+      val toUnsafe = UnsafeProjection.create(types)
+      var next = offsets(p)
+      rows.map { r =>
+        idx.setLong(0, next)
+        next += 1
+        toUnsafe(joined(idx, r))
+      }
     }
-    sorted.sparkSession.createDataFrame(rdd, schema)
+    val idxAttr = AttributeReference("idx", LongType, nullable = false)()
+    val order = Seq(SortOrder(idxAttr, Ascending))
+    GraftColumnBridge.ofRdd(spark, idxAttr +: output, indexed,
+      RangePartitioning(order, indexed.getNumPartitions), order)
   }
 
   /** Global sort through the engine's OWN physical operator
@@ -82,8 +113,6 @@ object Sorts {
     * them; see [[graft.plans.HybridSortPlan]]'s scale contract.
     */
   def hybridSortExec(df: DataFrame, threshold: Int, keys: String*): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
     require(keys.nonEmpty)
     val spark = df.sparkSession
     GraftColumnBridge.addStrategy(spark, graft.plans.HybridSortStrategy)

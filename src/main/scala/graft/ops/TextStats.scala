@@ -96,53 +96,6 @@ object TextStats {
         col("e.cos_sim").as("quality"))
   }
 
-  /** Token-budget curation — fill each source's token budget with its
-    * highest-quality documents: keep docs in (quality desc, doc_id asc)
-    * order while the source's cumulative token count stays ≤ `budget`
-    * ("give me the best 100B tokens per domain", the mixture-construction
-    * step after scoring). Output: (source, doc_id, quality, n_tokens) of
-    * the kept docs.
-    *
-    * Scale shape — the corpus is NEVER sorted or shuffled whole:
-    *  1. quality is 4dp-quantized ([[qualityScore]]), so the per-source
-    *     token mass collapses to ≤ 10⁴ (source, quality) rows via one
-    *     map-side-combined aggregate; the budget-crossing quality (and
-    *     the token remainder at it) comes from a window over THAT tiny
-    *     frame — O(sources) output, broadcast back;
-    *  2. docs strictly above the cut pass a map-only filter (no shuffle,
-    *     no sort); only docs AT the boundary quality value — one 4dp
-    *     bucket per source — are windowed doc_id-ascending to spend the
-    *     remainder deterministically.
-    * For an unquantized score column, bucket it first (the same bounded-
-    * granularity precondition [[SkewAgg.histogramQuantiles]] states) or
-    * swap step 1's exact cut for the certified KLL bracket of
-    * [[Quantiles]] — the boundary-only pass-2 is unchanged either way.
-    */
-  def budgetPack(docs: DataFrame, budget: Long): DataFrame = {
-    val d = qualityScore(
-      docs.withColumn("n_tokens", size(tokens(col("text"))).cast("long")),
-      Seq("source", "n_tokens"))
-    val perQ = d.groupBy(col("source"), col("quality"))
-      .agg(sum(col("n_tokens")).as("tok_sum"))
-    val wq = Window.partitionBy(col("source")).orderBy(col("quality").desc)
-    val cum = perQ.withColumn("cum", sum(col("tok_sum")).over(wq))
-    // boundary row per source = the highest quality whose running mass
-    // crosses the budget; everything strictly above it fits in full
-    val cuts = cum.where(col("cum") > budget)
-      .withColumn("rn", row_number().over(wq))
-      .where(col("rn") === 1)
-      .select(col("source"), col("quality").as("cut_q"),
-        (lit(budget) - (col("cum") - col("tok_sum"))).as("rem"))
-    val j = d.join(broadcast(cuts), Seq("source"), "left")
-    val full = j.where(col("cut_q").isNull || col("quality") > col("cut_q"))
-    val wb = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-    val bnd = j.where(col("quality") === col("cut_q"))
-      .withColumn("dcum", sum(col("n_tokens")).over(wb))
-      .where(col("dcum") <= col("rem"))
-    val cols = Seq(col("source"), col("doc_id"), col("quality"), col("n_tokens"))
-    full.select(cols: _*).unionByName(bnd.select(cols: _*))
-  }
-
   /** Text normalization — the first stage of any curation pipeline:
     * strip ASCII control characters, collapse whitespace runs to single
     * spaces, trim. Map-only; emits the cleaned length and digest (the
@@ -836,6 +789,16 @@ object TextStats {
   def bigramSurprisal(docs: DataFrame): DataFrame =
     bigramSurprisalTk(docs.select(col("doc_id"), tokens(col("text")).as("tk")))
 
+  /** The decimal sum `s` over the count `n` as a double, rounded to 6
+    * places the way SQL engines round a double: scale by 10^6, round half
+    * away from zero, scale back. Spark's `round(x, 6)` instead rounds the
+    * shortest decimal string of `x`, which can sit on the other side of a
+    * 7th-decimal tie than `x · 10^6` (179.351158 / 28 = 6.4053984999999996:
+    * `round` gives 6.405398, the scaled form 6.405399).
+    */
+  private[graft] def mean6(s: Column, n: Column): Column =
+    round(s.cast("double") / n * 1e6, 0) / 1e6
+
   /** [[bigramSurprisal]] over an ALREADY-tokenized `(doc_id, tk)` frame —
     * the stage-once path (see [[TextStage]]): all three aggregates read
     * pre-split token arrays, the regex tokenizer never runs here.
@@ -858,7 +821,7 @@ object TextStats {
       .groupBy(col("doc_id"))
       .agg(sum(col("tf")).as("n_bigrams"), sum(col("c")).as("s"))
       .select(col("doc_id"), col("n_bigrams"),
-        round(col("s").cast("double") / col("n_bigrams"), 6).as("avg_surprisal"))
+        mean6(col("s"), col("n_bigrams")).as("avg_surprisal"))
   }
 
   /** Distribution-shift monitor: Jensen–Shannon divergence of each
@@ -1003,7 +966,7 @@ object TextStats {
       .groupBy(col("doc_id"))
       .agg(sum(col("tf")).as("n_tokens"), sum(col("c")).as("s"))
       .select(col("doc_id"), col("n_tokens"),
-        round(col("s").cast("double") / col("n_tokens"), 6).as("avg_surprisal"))
+        mean6(col("s"), col("n_tokens")).as("avg_surprisal"))
   }
 
   /** Exact corpus heavy hitters in two bounded passes — the scale-honest

@@ -1,8 +1,11 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.{LogicalRDD, SparkStrategy}
 
 /** Bridge to Spark's `private[sql]` Column ↔ catalyst-Expression
   * conversion (Spark 4 wraps Columns in ColumnNodes; `classic.
@@ -20,6 +23,17 @@ object GraftColumnBridge {
     */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A DataFrame over rows that are already Catalyst rows of `output`
+    * (a `queryExecution.toRdd`), with no `Row` conversion. `partitioning`
+    * and `ordering` are PROMISES the planner acts on without checking:
+    * declare only what the RDD holds by construction.
+    */
+  def ofRdd(spark: SparkSession, output: Seq[Attribute], rdd: RDD[InternalRow],
+      partitioning: Partitioning = UnknownPartitioning(0),
+      ordering: Seq[SortOrder] = Nil): DataFrame =
+    ofRows(spark, LogicalRDD(output, rdd, partitioning, ordering)(
+      spark.asInstanceOf[classic.SparkSession]))
 
   /** Idempotently add a planner strategy to THIS session (the per-session
     * analog of `GraftExtensions`' cluster-wide `injectPlannerStrategy`).

@@ -14,7 +14,7 @@ object KeyShapes {
   def ints(shape: String, n: Int, seed: Long): Array[Int] = {
     val rnd = new scala.util.Random(seed)
     shape match {
-      case "all_equal" => Array.fill(n)(rnd.nextInt())
+      case "all_equal" => val k = rnd.nextInt(); Array.fill(n)(k)
       case "few_distinct" => // 2-4 keys
         val keys = Array.fill(2 + rnd.nextInt(3))(rnd.nextInt())
         Array.fill(n)(keys(rnd.nextInt(keys.length)))

@@ -24,13 +24,6 @@ object HybridSortSweep {
   val Thresholds = Seq(5, 10, 25, 50)
   val Reps = 5
 
-  /** `n` keys of `shape`. `KeyShapes.ints("all_equal", ...)` draws every
-    * key afresh, so its keys are random; here all keys are one value.
-    */
-  def keys(shape: String, n: Int, seed: Long): Array[Int] =
-    if (shape != "all_equal") KeyShapes.ints(shape, n, seed)
-    else { val k = new scala.util.Random(seed).nextInt(); Array.fill(n)(k) }
-
   /** `keys` as the operator packs them: rebased prefix, then row index. */
   def packed(ks: Array[Int]): Array[Long] = {
     val lo = if (ks.isEmpty) 0L else ks.min.toLong
@@ -65,9 +58,9 @@ object HybridSortSweep {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("THRESHOLD_SWEEP.json")
     // warm the kernel before the first timed cell
-    for (_ <- 0 until 3) measure(packed(keys("random", 200000, 1)))
+    for (_ <- 0 until 3) measure(packed(KeyShapes.ints("random", 200000, 1)))
     val cells = for (n <- Sizes; shape <- KeyShapes.Names) yield {
-      val ns = measure(packed(keys(shape, n, 42)))
+      val ns = measure(packed(KeyShapes.ints(shape, n, 42)))
       System.err.println(s"[sweep] n=$n $shape " +
         Thresholds.map(t => f"t$t=${ns(t)}%.2f").mkString(" "))
       (n, shape, ns)

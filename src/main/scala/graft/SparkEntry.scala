@@ -542,6 +542,17 @@ object SparkEntry {
         .option("note", "delta").save(p)
     }
 
+  /** Runs `body` — SQL that names the catalog `name` and is analyzed (or
+    * executed) inside — with the graft snapshot catalog registered as
+    * `name` over `root`, then restores the session conf. The loaded
+    * catalog stays cached in the session's catalog manager, so the
+    * returned frame executes after the conf is restored.
+    */
+  private def withSnapCatalog[T](s: SparkSession, name: String, root: String)(body: => T): T =
+    graft.spark.SessionConf.withConf(s,
+      s"spark.sql.catalog.$name" -> "graft.sources.GraftSnapCatalog",
+      s"spark.sql.catalog.$name.root" -> root)(body)
+
   /** The shared SQL-DML fixture `sql_update_where` and
     * `sql_delete_where` both read: base committed through the writer,
     * then a `CALL update_where` (+500 on BUILDING ∧ ≡0 mod 7) and a
@@ -556,16 +567,15 @@ object SparkEntry {
         col("c_mktsegment"), dec2(col("c_acctbal")).as("acctbal"))
       cust.write.format("graft-snap").option("note", "base").save(p)
       val slash = p.lastIndexOf('/')
-      s.conf.set("spark.sql.catalog.graftdml",
-        "graft.sources.GraftSnapCatalog")
-      s.conf.set("spark.sql.catalog.graftdml.root", p.substring(0, slash))
       val tbl = p.substring(slash + 1)
-      s.sql(s"CALL graftdml.update_where('$tbl', " +
-        "'acctbal = CAST(acctbal + 500 AS DECIMAL(18,2))', " +
-        "\"c_mktsegment = 'BUILDING' AND c_custkey % 7 = 0\")")
-        .collect(): Unit
-      s.sql(s"DELETE FROM graftdml.`$tbl` WHERE c_mktsegment = 'MACHINERY'")
-        .collect(): Unit
+      withSnapCatalog(s, "graftdml", p.substring(0, slash)) {
+        s.sql(s"CALL graftdml.update_where('$tbl', " +
+          "'acctbal = CAST(acctbal + 500 AS DECIMAL(18,2))', " +
+          "\"c_mktsegment = 'BUILDING' AND c_custkey % 7 = 0\")")
+          .collect(): Unit
+        s.sql(s"DELETE FROM graftdml.`$tbl` WHERE c_mktsegment = 'MACHINERY'")
+          .collect(): Unit
+      }
     }
 
   /** The shared POSITION-DELETE CDC fixture `snapshot_cdf_pos` and
@@ -2035,17 +2045,16 @@ object SparkEntry {
       val root = snapSqlTable(s, d)
       val slash = root.lastIndexOf('/')
       val (parent, tbl) = (root.substring(0, slash), root.substring(slash + 1))
-      s.conf.set("spark.sql.catalog.graftcat",
-        "graft.sources.GraftSnapCatalog")
-      s.conf.set("spark.sql.catalog.graftcat.root", parent)
-      s.sql(s"""SELECT CAST(1 AS BIGINT) AS version,
-               |  count(*) AS n_rows, CAST(sum(acctbal) AS DOUBLE) AS sum_bal
-               |FROM graftcat.`$tbl` VERSION AS OF 1
-               |UNION ALL
-               |SELECT CAST(2 AS BIGINT), count(*),
-               |  CAST(sum(acctbal) AS DOUBLE)
-               |FROM graftcat.`$tbl` VERSION AS OF 2
-               |ORDER BY version""".stripMargin)
+      withSnapCatalog(s, "graftcat", parent) {
+        s.sql(s"""SELECT CAST(1 AS BIGINT) AS version,
+                 |  count(*) AS n_rows, CAST(sum(acctbal) AS DOUBLE) AS sum_bal
+                 |FROM graftcat.`$tbl` VERSION AS OF 1
+                 |UNION ALL
+                 |SELECT CAST(2 AS BIGINT), count(*),
+                 |  CAST(sum(acctbal) AS DOUBLE)
+                 |FROM graftcat.`$tbl` VERSION AS OF 2
+                 |ORDER BY version""".stripMargin)
+      }
     }),
 
     // SQL ROW-LEVEL DML through the v2 catalog, UPDATE half: the
@@ -2058,14 +2067,13 @@ object SparkEntry {
     "sql_update_where" -> ((s, d) => {
       val root = sqlDmlTable(s, d)
       val slash = root.lastIndexOf('/')
-      s.conf.set("spark.sql.catalog.graftdml",
-        "graft.sources.GraftSnapCatalog")
-      s.conf.set("spark.sql.catalog.graftdml.root", root.substring(0, slash))
       val tbl = root.substring(slash + 1)
-      s.sql(s"""SELECT count(*) AS n_rows,
-               |  CAST(sum(acctbal) AS DOUBLE) AS sum_bal
-               |FROM graftdml.`$tbl`
-               |WHERE c_mktsegment = 'BUILDING'""".stripMargin)
+      withSnapCatalog(s, "graftdml", root.substring(0, slash)) {
+        s.sql(s"""SELECT count(*) AS n_rows,
+                 |  CAST(sum(acctbal) AS DOUBLE) AS sum_bal
+                 |FROM graftdml.`$tbl`
+                 |WHERE c_mktsegment = 'BUILDING'""".stripMargin)
+      }
     }),
 
     // SQL ROW-LEVEL DML, DELETE half: native `DELETE FROM graftdml.t
@@ -2077,14 +2085,13 @@ object SparkEntry {
     "sql_delete_where" -> ((s, d) => {
       val root = sqlDmlTable(s, d)
       val slash = root.lastIndexOf('/')
-      s.conf.set("spark.sql.catalog.graftdml",
-        "graft.sources.GraftSnapCatalog")
-      s.conf.set("spark.sql.catalog.graftdml.root", root.substring(0, slash))
       val tbl = root.substring(slash + 1)
-      s.sql(s"""SELECT c_mktsegment, count(*) AS n_rows,
-               |  CAST(sum(acctbal) AS DOUBLE) AS sum_bal
-               |FROM graftdml.`$tbl`
-               |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
+      withSnapCatalog(s, "graftdml", root.substring(0, slash)) {
+        s.sql(s"""SELECT c_mktsegment, count(*) AS n_rows,
+                 |  CAST(sum(acctbal) AS DOUBLE) AS sum_bal
+                 |FROM graftdml.`$tbl`
+                 |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
+      }
     }),
 
     // ATOMIC CTAS through the v2 catalog: `CREATE TABLE graft.t AS
@@ -2097,27 +2104,25 @@ object SparkEntry {
     "sql_ctas" -> ((s, d) => {
       val root = ModelStore.fit(s"sqlctas|${cid(d)}", "graft_sqlctas") { p =>
         val slash = p.lastIndexOf('/')
-        s.conf.set("spark.sql.catalog.graftctas",
-          "graft.sources.GraftSnapCatalog")
-        s.conf.set("spark.sql.catalog.graftctas.root", p.substring(0, slash))
         val tbl = p.substring(slash + 1)
         Tables.customer(s, d).createOrReplaceTempView("graft_ctas_src")
-        s.sql(s"""CREATE TABLE graftctas.`$tbl`
-                 |TBLPROPERTIES('statsCols' = 'c_custkey')
-                 |AS SELECT c_custkey, c_mktsegment,
-                 |  CAST(c_acctbal AS DECIMAL(18,2)) AS acctbal
-                 |FROM graft_ctas_src
-                 |WHERE c_custkey % 3 = 0""".stripMargin).collect(): Unit
+        withSnapCatalog(s, "graftctas", p.substring(0, slash)) {
+          s.sql(s"""CREATE TABLE graftctas.`$tbl`
+                   |TBLPROPERTIES('statsCols' = 'c_custkey')
+                   |AS SELECT c_custkey, c_mktsegment,
+                   |  CAST(c_acctbal AS DECIMAL(18,2)) AS acctbal
+                   |FROM graft_ctas_src
+                   |WHERE c_custkey % 3 = 0""".stripMargin).collect(): Unit
+        }
       }
       val slash = root.lastIndexOf('/')
-      s.conf.set("spark.sql.catalog.graftctas",
-        "graft.sources.GraftSnapCatalog")
-      s.conf.set("spark.sql.catalog.graftctas.root", root.substring(0, slash))
       val tbl = root.substring(slash + 1)
-      s.sql(s"""SELECT c_mktsegment, count(*) AS n_rows,
-               |  CAST(sum(acctbal) AS DOUBLE) AS sum_bal
-               |FROM graftctas.`$tbl`
-               |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
+      withSnapCatalog(s, "graftctas", root.substring(0, slash)) {
+        s.sql(s"""SELECT c_mktsegment, count(*) AS n_rows,
+                 |  CAST(sum(acctbal) AS DOUBLE) AS sum_bal
+                 |FROM graftctas.`$tbl`
+                 |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
+      }
     }),
 
     // The table format built and read ENTIRELY through a Hadoop
@@ -3823,12 +3828,14 @@ object SparkEntry {
         regexp_replace(col("text"), "[\\x00-\\x1f]", ""), "\\s+", " "))
       // all per-doc gate signals in ONE map-only projection chain
       // (lang_pred and quality ride through via passThrough — never a
-      // doc_id self-join back onto the corpus). Fanned to cluster width
-      // first: the lang-trigram + quality regex work is the CPU-heavy leg
-      // and ran as ONE task on the one-row-group scan (event log: 1.3 s
-      // single-task checkpoint stage); no-op when the scan splits.
+      // doc_id self-join back onto the corpus). Projected to the two
+      // columns the chain reads, then fanned to cluster width: the
+      // lang-trigram + quality regex work is the CPU-heavy leg and ran as
+      // ONE task on the one-row-group scan (event log: 1.3 s single-task
+      // checkpoint stage).
       val flags = TextStats.qualityScore(
-          TextStats.langId(graft.spark.CheckpointUtil.fanOutScan(base),
+          TextStats.langId(graft.spark.Adaptive.fanOut(
+              base.select(col("doc_id"), col("text"))),
             passThrough = Seq("text")),
           passThrough = Seq("text", "lang_pred"))
         .select(col("doc_id"), col("lang_pred"), col("quality"),

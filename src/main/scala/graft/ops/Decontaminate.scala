@@ -35,8 +35,7 @@ object Decontaminate {
     // work that would run single-threaded on a one-row-group scan (the
     // small-corpus case; a no-op at 100 TB where scans split). Project to
     // the two needed columns first so only they move.
-    graft.spark.CheckpointUtil.fanOutScan(
-        corpus.select(col("doc_id"), col("text")))
+    graft.spark.Adaptive.fanOut(corpus.select(col("doc_id"), col("text")))
       .select(col("doc_id"), array_distinct(shingles(tokens(col("text")), n)).as("grams"))
       .select(col("doc_id"), size(col("grams")).cast("long").as("n_grams"),
         explode(col("grams")).as("gram"))

@@ -76,16 +76,10 @@ object Dedup {
     * tokens drop out.
     */
   def minhashSignatures(docs: DataFrame, k: Int, shingleN: Int): DataFrame = {
-    // Hash-heavy map stage: if the source delivers fewer splits than the
-    // cluster has slots (single unsplittable file, small row-group count),
-    // fan out first — the tiny (doc_id, text) shuffle is paid once and the
-    // per-shingle hashing then uses every core. When the scan already
-    // parallelizes (the 100 TB case: thousands of splits), no-op.
-    val slots = docs.sparkSession.sparkContext.defaultParallelism
-    val base =
-      if (docs.rdd.getNumPartitions < slots / 2) docs.repartition(slots) else docs
+    // Hash-heavy map stage: fan a few-split scan out first, so the
+    // per-shingle hashing uses every core.
     val sh = shingles(tokens(col("text")), shingleN)
-    base.select(col("doc_id"), sh.as("sh"))
+    graft.spark.Adaptive.fanOut(docs).select(col("doc_id"), sh.as("sh"))
       .where(size(col("sh")) > 0)
       .select(col("doc_id"), minhash31(col("sh"), k).as("sig"))
   }
@@ -286,10 +280,8 @@ object Dedup {
     */
   def sourceOverlap(docs: DataFrame, shingleN: Int): DataFrame = {
     // Tokenize+shingle+hash is the CPU-heavy leg — fan a one-row-group
-    // scan to cluster width first (no-op when the scan already splits),
-    // same guard as minhashSignatures.
-    val sg = graft.spark.CheckpointUtil.fanOutScan(
-        docs.select(col("source"), col("text")))
+    // scan to cluster width first (see Adaptive.fanOut).
+    val sg = graft.spark.Adaptive.fanOut(docs.select(col("source"), col("text")))
       .select(col("source"), explode(shingles(tokens(col("text")), shingleN)).as("g"))
       .select(col("source"), h60(col("g")).as("gd"))
       .distinct()
@@ -371,23 +363,11 @@ object Dedup {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .localCheckpoint(true)
-    // Broadcast the per-round label frames when the MEASURED edge count
-    // bounds them (|labels| ≤ |edges| ids): the label frame is a
-    // checkpointed RDD each round, so Catalyst has no statistics for it
-    // and plans sort-merge joins that re-shuffle the (loop-invariant)
-    // edge list EVERY round just to attach the labels — the same
-    // stats-blind-cached-RDD problem [[graft.ops.Graph]]'s PageRank loop
-    // gates with `broadcastNodesMax`, decided here from the edge count
-    // the eager checkpoint makes free. Min-label propagation is
-    // join-strategy-free (the min aggregate is associative), so results
-    // are identical either way; a web-scale pair set past the threshold
-    // keeps the shuffle joins. `spark.graft.dedup.broadcastLabelsMax`
-    // overrides (0 forces the shuffle path).
-    val labelsMax = pairs.sparkSession.conf
-      .getOption("spark.graft.dedup.broadcastLabelsMax")
-      .map(_.toLong).getOrElse(2000000L)
-    val bcast = edges.count() <= labelsMax
-    def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+    // The per-round label frames hold at most |edges| ids: broadcast them
+    // under the edge cap, measured by a count the eager checkpoint makes
+    // free (see Adaptive.broadcastIf).
+    val b = graft.spark.Adaptive.broadcastIf(pairs.sparkSession, edges.count(),
+      graft.spark.Adaptive.BroadcastEdgesMax)
     // LAZY checkpoints + ONE action per round: the changed-count read is
     // also the materializing action for that round's label frame (the
     // count consumes `next`'s RDD, which caches as a side effect — column
@@ -403,12 +383,12 @@ object Dedup {
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
-      val prop = edges.join(maybeB(labels), edges("dst") === labels("id"))
+      val prop = edges.join(b(labels), edges("dst") === labels("id"))
         .select(edges("src").as("id"), col("cluster_id"))
       val next = labels.unionAll(prop)
         .groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id"))
         .localCheckpoint(eager = false)
-      changed = next.join(maybeB(labels.withColumnRenamed("cluster_id", "prev")), "id")
+      changed = next.join(b(labels.withColumnRenamed("cluster_id", "prev")), "id")
         .where(col("cluster_id") < col("prev")).count()
       graft.spark.CheckpointUtil.unpersistCheckpointed(labels)
       labels = next

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.spark.Adaptive
+
 /** Distributed graph primitives as declarative plans. Like
   * [[Similarity.kmeansStep]], iterative algorithms surface here as ONE
   * verifiable iteration — a driver loop composes them (each round is the
@@ -111,31 +113,13 @@ object Graph {
     if (tol <= 0.0) pagerankChain(edges, damping, maxIters)
     else pagerankLoop(edges, damping, maxIters, tol)._1
 
-  /** Max node count for which the per-round rank / in-mass frames are
-    * BROADCAST instead of shuffle-joined. The rank frame is a checkpointed
-    * RDD each round, so Catalyst has NO size statistics for it and always
-    * falls back to a sort-merge join — shuffling the (much larger,
-    * loop-invariant) degreed edge list by src EVERY round just to attach
-    * |nodes| small rank rows. The loop already collects N as a driver
-    * literal, so the broadcast decision is made from a MEASURED row count
-    * (the same data-driven call AQE makes from shuffle stats — it cannot
-    * see it here because the rank frame is a bare cached RDD): n rank
-    * rows broadcast when they fit comfortably (≤ maxN ⇒ ≤ ~100 MB framed),
-    * and a web-scale graph keeps the shuffle join. Overridable per
-    * deployment via `spark.graft.graph.broadcastNodesMax` (set it to 0 to
-    * force the shuffle path everywhere).
-    */
-  private def broadcastNodesMax(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.graph.broadcastNodesMax")
-      .map(_.toLong).getOrElse(2000000L)
-
   /** One PageRank round as a plan: (damped in-mass per node) + teleport,
     * from the previous round's `ranks`. Shared verbatim by the delta-read
     * loop and the chained fixed-round path so both produce bit-identical
     * per-round frames (same expressions, same evaluation order).
     *
-    * `bcast` (decided ONCE per loop from the measured node count) swaps
-    * the two |nodes|-sized per-round frames (previous ranks, new in-mass)
+    * `b` (decided ONCE per loop from the measured node count) swaps the
+    * two |nodes|-sized per-round frames (previous ranks, new in-mass)
     * from shuffle joins to broadcasts: per-round data movement drops from
     * O(|edges|) — the edge list re-shuffled by src every round — to
     * O(|nodes|) broadcast bytes plus the one unavoidable contribution
@@ -144,17 +128,16 @@ object Graph {
     */
   private def pagerankRound(nodes: DataFrame, eo: DataFrame, ranks: DataFrame,
                             damping: Double, n: Double,
-                            bcast: Boolean): DataFrame = {
-    def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+                            b: DataFrame => DataFrame): DataFrame = {
     val contrib = eo
-      .join(maybeB(ranks.select(col("node").as("src"), col("rank").as("r_prev"))),
+      .join(b(ranks.select(col("node").as("src"), col("rank").as("r_prev"))),
         "src")
       .select(col("dst"),
         round(lit(damping) * col("r_prev") / col("outdeg"), 15)
           .cast(Dec).as("c"))
     val inMass = contrib.groupBy(col("dst")).agg(sum(col("c")).as("mass"))
     nodes
-      .join(maybeB(inMass), col("node") === col("dst"), "left")
+      .join(b(inMass), col("node") === col("dst"), "left")
       .select(col("node"),
         round(coalesce(col("mass").cast("double"), lit(0.0d))
           + lit((1.0d - damping) / n), 9).as("rank"))
@@ -199,13 +182,13 @@ object Graph {
         .select(col("src"), col("dst"), col("outdeg")))
     graft.spark.CheckpointUtil.unpersistCheckpointed(e)
     val n = nodes.count().toDouble
-    val bcast = n <= broadcastNodesMax(edges)
+    val b = Adaptive.broadcastIf(edges.sparkSession, n.toLong, Adaptive.BroadcastNodesMax)
     var ranks = nodes
       .select(col("node"), lit(1.0d / n).as("rank"))
       .localCheckpoint(eager = false)
     var rounds = 0
     while (rounds < maxIters) {
-      ranks = pagerankRound(nodes, eo, ranks, damping, n, bcast)
+      ranks = pagerankRound(nodes, eo, ranks, damping, n, b)
         .localCheckpoint(eager = false)
       rounds += 1
     }
@@ -241,12 +224,12 @@ object Graph {
     var ranks = nodes
       .select(col("node"), lit(1.0d / n).as("rank"))
       .localCheckpoint(eager = false)
-    val bcast = n <= broadcastNodesMax(edges)
+    val b = Adaptive.broadcastIf(edges.sparkSession, n.toLong, Adaptive.BroadcastNodesMax)
     val deltas = scala.collection.mutable.ArrayBuffer.empty[Double]
     var rounds = 0
     var done = false
     while (rounds < maxIters && !done) {
-      val next = pagerankRound(nodes, eo, ranks, damping, n, bcast)
+      val next = pagerankRound(nodes, eo, ranks, damping, n, b)
         .localCheckpoint(eager = false)
       // coalesce: sum over the empty delta join (edge frame with no rows
       // → empty node set) is NULL; an empty graph is converged at 0.
@@ -293,16 +276,10 @@ object Graph {
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "bfs needs a non-negative hop cap")
     val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    // Broadcast the per-level frontier / visited frames when the MEASURED
-    // edge count bounds them (|visited| ≤ |nodes| ≤ 2·|edges|): both are
-    // stats-blind checkpointed RDDs each level, so Catalyst would
-    // re-shuffle the loop-invariant edge list by src EVERY level just to
-    // attach the frontier — the same gate as the PageRank loop's
-    // `broadcastNodesMax`, decided from the count the eager checkpoint
-    // makes free. Reachability is join-strategy-free; a web-scale graph
-    // past the threshold keeps the shuffle joins.
-    val bcast = e.count() <= broadcastNodesMax(edges)
-    def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+    // The per-level frontier and visited frames hold at most 2·|edges|
+    // nodes: broadcast them under the edge cap, measured by a count the
+    // eager checkpoint makes free (see Adaptive.broadcastIf).
+    val b = Adaptive.broadcastIf(edges.sparkSession, e.count(), Adaptive.BroadcastEdgesMax)
     var visited = seeds.select(col("node")).distinct()
       .select(col("node"), lit(0).as("hops"))
       .localCheckpoint(eager = false)
@@ -313,9 +290,9 @@ object Graph {
     var grew = visited.count() > 0
     while (level < maxHops && grew) {
       val frontier = visited.where(col("hops") === level).select(col("node"))
-      val next = e.join(maybeB(frontier), e("src") === frontier("node"))
+      val next = e.join(b(frontier), e("src") === frontier("node"))
         .select(col("dst").as("node")).distinct()
-        .join(maybeB(visited.select(col("node"))), Seq("node"), "left_anti")
+        .join(b(visited.select(col("node"))), Seq("node"), "left_anti")
         .select(col("node"), lit(level + 1).as("hops"))
       val grown = visited.unionAll(next).localCheckpoint(eager = false)
       level += 1
@@ -393,23 +370,6 @@ object Graph {
       .select(col("s1"), col("s2"))
   }
 
-  /** Max edge count for which [[triangleCount]] BROADCASTS the two wedge
-    * probe sides. Mirrors [[broadcastNodesMax]]: the edge frame reaching
-    * triangleCount is a checkpointed RDD, so Catalyst has no size
-    * statistics for it and would plan sort-merge joins that shuffle the
-    * wedge EXPLOSION; the decision is therefore made from a MEASURED edge
-    * count (the frame is already materialized by the caller — the count
-    * reads cached blocks). Two id columns at ≤ 2M rows framed is well
-    * under Spark's 8 GB / 512M-row broadcast cap; past the threshold the
-    * probes fall back to shuffle joins, which spill gracefully — a
-    * heavy-tailed co-occurrence distribution must DEGRADE to sort-merge,
-    * never throw at the broadcast cap. Overridable per deployment via
-    * `spark.graft.graph.broadcastEdgesMax` (0 forces the shuffle path).
-    */
-  private def broadcastEdgesMax(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.graph.broadcastEdgesMax")
-      .map(_.toLong).getOrElse(2000000L)
-
   /** Triangle count of an oriented (s1 < s2) edge list: two wedge-closing
     * equi-joins — e1=(a,b), e2=(b,c) keyed on the shared middle node,
     * closed by probing (a,c). Every join is keyed (no cartesian); with
@@ -418,10 +378,12 @@ object Graph {
     * multiple consumers — Catalyst has no subtree CSE.
     *
     * Join strategy (guide §3.1): both probe sides BROADCAST while the
-    * MEASURED edge count clears [[broadcastEdgesMax]] — the edge list is
-    * the post-threshold sparse tail (two id columns; the mean+σ cut in
-    * [[cooccurrenceEdges]] bounds the typical case), which fits a
-    * broadcast relation long after the wedge stream does not. The
+    * MEASURED edge count clears [[graft.spark.Adaptive.BroadcastEdgesMax]]
+    * (the caller has materialized `edges`, so the count reads cached
+    * blocks) — the edge list is the post-threshold sparse tail (two id
+    * columns; the mean+σ cut in [[cooccurrenceEdges]] bounds the typical
+    * case), which fits a broadcast relation long after the wedge stream
+    * does not. The
     * sort-merge alternative shuffles the wedge EXPLOSION by (a,c) —
     * measured at sf0.1 that shuffle's byte size coalesced the probe to
     * ONE task (AQE sizes by bytes, wedge rows are 3 ids) while the
@@ -433,12 +395,12 @@ object Graph {
     * join is join-strategy-free).
     */
   def triangleCount(edges: DataFrame): DataFrame = {
-    val bcast = edges.count() <= broadcastEdgesMax(edges)
-    def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+    val b = Adaptive.broadcastIf(edges.sparkSession, edges.count(),
+      Adaptive.BroadcastEdgesMax)
     edges
-      .join(maybeB(edges.select(col("s1").as("t2_s1"), col("s2").as("t2_s2"))),
+      .join(b(edges.select(col("s1").as("t2_s1"), col("s2").as("t2_s2"))),
         col("s2") === col("t2_s1"))
-      .join(maybeB(edges.select(col("s1").as("t3_s1"), col("s2").as("t3_s2"))),
+      .join(b(edges.select(col("s1").as("t3_s1"), col("s2").as("t3_s2"))),
         col("s1") === col("t3_s1") && col("t2_s2") === col("t3_s2"))
       .agg(count(lit(1)).as("n_triangles"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{h60, GraftFunctions}
+import graft.spark.Adaptive.fanOut
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -48,21 +49,6 @@ object Similarity {
     * double-precision in every engine.
     */
   def asDouble(emb: Column): Column = transform(emb, x => x.cast("double"))
-
-  /** Fan the corpus side out to cluster width when the source delivers
-    * fewer splits than the cluster has slots (single unsplittable file,
-    * few row groups — the small-corpus / test case): every kernel here
-    * does O(K·dim) per-row math (argmax over centroids, PQ encoding, ADC
-    * sums), and a 1-split scan runs all of it single-threaded no matter
-    * how many cores exist (measured: every ANN stage at sf0.1 was ONE
-    * task). The narrow (id, vector) shuffle is paid once per kernel; when
-    * the scan already parallelizes (the 100 TB case: thousands of
-    * splits), this is a no-op. Same guard as Dedup.minhashSignatures.
-    */
-  private def fanOut(df: DataFrame): DataFrame = {
-    val slots = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < slots / 2) df.repartition(slots) else df
-  }
 
   /** Cosine similarity from precomputed norms; 0.0 when either norm is 0
     * (a NaN would otherwise rank above every real similarity).

@@ -75,8 +75,8 @@ object Stats {
     // Fan the scan out first: the ×k stack + string rendering + partial
     // distinct aggregate is the heavy map leg of this pass, and a
     // 1-split source would run all of it on one core (measured: one
-    // 2 s single-task stage at sf0.1; see CheckpointUtil.fanOutScan).
-    val stacked = graft.spark.CheckpointUtil.fanOutScan(df)
+    // 2 s single-task stage at sf0.1; see Adaptive.fanOut).
+    val stacked = graft.spark.Adaptive.fanOut(df)
       .select(explode(array(cols.map { case (n, c) =>
         struct(lit(n).as("col_name"), c.cast("string").as("v"))
       }: _*)).as("e"))

@@ -42,18 +42,4 @@ object CheckpointUtil {
     val slots = df.sparkSession.sparkContext.defaultParallelism
     df.repartition(slots).localCheckpoint()
   }
-
-  /** Fan a frame out to cluster width when its source delivers fewer
-    * splits than half the cluster's slots (single unsplittable file /
-    * one row group — the small-corpus case): CPU-heavy map work over a
-    * 1-split scan otherwise runs single-threaded no matter how many
-    * cores exist. The narrow input shuffle is paid once; when the scan
-    * already parallelizes (the 100 TB case: thousands of splits) this is
-    * a no-op. Apply BEFORE the expensive projection so only source
-    * columns move.
-    */
-  def fanOutScan(df: DataFrame): DataFrame = {
-    val slots = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < slots / 2) df.repartition(slots) else df
-  }
 }

@@ -11,6 +11,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   TimerValues, Trigger, ValueState}
 
 import graft.functions._
+import graft.spark.SessionConf
 
 /** Structured Streaming surface: the batch operators of [[graft.ops.Events]]
   * restated incrementally. The transforms are IDENTICAL plan shapes — a
@@ -212,12 +213,8 @@ object StreamOps {
       if (p == null) Nil else p.stateOperators.map(_.operatorName).toSeq)
   }
 
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
+  private def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
+    SessionConf.withConf(spark, "spark.sql.shuffle.partitions" -> n.toString)(body)
 
   /** Run `body` with trailing NO-DATA micro-batches disabled
     * (`spark.sql.streaming.noDataMicroBatches.enabled=false`). After the
@@ -236,15 +233,9 @@ object StreamOps {
     * aggregates, timer fires) must leave the default on — which is why
     * this is scoped to the bounded runners, not set session-wide.
     */
-  private def withoutNoDataBatches[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  private def withoutNoDataBatches[T](spark: SparkSession)(body: => T): T =
+    SessionConf.withConf(spark,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(body)
 
   /** Run a streaming aggregate over the bounded file source to completion
     * (`Trigger.AvailableNow`) and return the final result table.
@@ -645,12 +636,9 @@ object StreamOps {
     * streaming queries on the default provider).
     */
   def runToCompletionUpdate(spark: SparkSession, out: Dataset[_],
-                            statePartitions: Int = 8): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+                            statePartitions: Int = 8): DataFrame =
+    SessionConf.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val name = s"graft_tws_${java.util.UUID.randomUUID().toString.replace("-", "")}"
       withoutNoDataBatches(spark) { withStatePartitions(spark, statePartitions) {
         val q = out.writeStream
@@ -663,11 +651,7 @@ object StreamOps {
         recordStateOps(q)
       } }
       spark.table(name)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
-  }
 
   // ----------------------------------------------------- sessionization
 

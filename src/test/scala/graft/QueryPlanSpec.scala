@@ -1,6 +1,9 @@
 package graft
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -39,10 +42,28 @@ class QueryPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  // formatted mode: scan metadata (PushedFilters, ReadSchema) untruncated
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sfDir).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+  /** What the tests read of one query, from ONE build of it: the session
+    * SQL conf entries that building and analyzing it added, removed or
+    * changed (the conf-purity sweep's input), its executed plan, and that
+    * plan's formatted explain. The corpus-wide sweeps would otherwise each
+    * rebuild all the queries.
+    */
+  private final case class Built(confDiff: Set[(String, String)], executed: String,
+                                 formatted: String)
+  private val built = mutable.Map.empty[String, Built]
+
+  private def build(name: String): Built = built.getOrElseUpdate(name, {
+    val before = spark.conf.getAll
+    val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+    qe.analyzed
+    val after = spark.conf.getAll
+    Built((after.toSet -- before.toSet) ++ (before.toSet -- after.toSet),
+      qe.executedPlan.toString,
+      // formatted mode: scan metadata (PushedFilters, ReadSchema) untruncated
+      qe.explainString(ExplainMode.fromString("formatted")))
+  })
+
+  private def plan(name: String): String = build(name).formatted
 
   private def assertNoLoopJoin(name: String): Unit = {
     val p = plan(name)
@@ -98,8 +119,7 @@ class QueryPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the two dimension tables — the fact is provably not re-scanned.
     // (executedPlan.toString prints each node once, unlike formatted mode
     // whose detail section would double-count.)
-    val p = SparkEntry.queries("q20_dominant_supplier")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val p = build("q20_dominant_supplier").executed
     val scans = "Scan parquet".r.findAllIn(p).length
     assert(scans <= 2, s"q20 should scan only supplier+nation after the checkpoint, got $scans:\n$p")
   }
@@ -178,7 +198,7 @@ class QueryPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // queries this class of guard was blind to through round 7.
     val names = SparkEntry.queries.keys.toSeq.sorted
     val offenders = names.flatMap { n =>
-      val p = SparkEntry.queries(n)(spark, sfDir).queryExecution.executedPlan.toString
+      val p = build(n).executed
       val cart = p.contains("CartesianProduct")
       val bnlj = p.contains("BroadcastNestedLoopJoin") && !boundedBnlj(n)
       if (cart || bnlj) Some(s"$n${if (cart) " [cartesian]" else " [unlisted BNLJ]"}")
@@ -327,8 +347,7 @@ class QueryPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the returned batch leg's scans (see the BNLJ sweep note above)
     val names = SparkEntry.queries.keys.toSeq.sorted
     val offenders = names.flatMap { n =>
-      val p = SparkEntry.queries(n)(spark, sfDir).queryExecution
-        .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val p = plan(n)
       "/([a-z_]+)\\.parquet".r.findAllMatchIn(p).map(_.group(1)).toSeq
         .groupBy(identity).collect {
           case (t, hits) if hits.size > budget(n).getOrElse(t, 1) =>
@@ -362,9 +381,7 @@ class QueryPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       "sparse_knn" -> 0,         // postings/idf/weighted-postings all checkpointed
       "sparse_recall" -> 0)      // both legs' postings/idf checkpointed at build
     budgets.foreach { case (name, maxStaged) =>
-      val p = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val p = plan(name)
       assert(!p.contains("documents.parquet"),
         s"$name must read the staged token frame, not re-tokenize documents:\n$p")
       val staged = "graft_toks".r.findAllIn(p).length
@@ -383,14 +400,13 @@ class QueryPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // full build-and-run, instead of taking their own specs' word for it.
     // Session EXTENSIONS (an optimizer rule / strategy added via the
     // experimental hook by range_join_auto / hybrid_sort_exec) are not
-    // SQL confs and are idempotent — this guard checks confs only.
+    // SQL confs and are idempotent — this guard checks confs only. The
+    // diff is of each query's FIRST build in this session (see `build`):
+    // a later build would miss a builder that sets a fixed value.
     val names = SparkEntry.queries.keys.toSeq.sorted
     val offenders = names.flatMap { n =>
-      val before = spark.conf.getAll
-      SparkEntry.queries(n)(spark, sfDir).queryExecution.analyzed
-      val after = spark.conf.getAll
-      if (after == before) None
-      else Some(s"$n changed: ${(after.toSet -- before.toSet) ++ (before.toSet -- after.toSet)}")
+      val diff = build(n).confDiff
+      if (diff.isEmpty) None else Some(s"$n changed: $diff")
     }
     assert(offenders.isEmpty,
       s"impure query builders:\n${offenders.mkString("\n")}")

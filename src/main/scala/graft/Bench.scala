@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every SparkEntry query at SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line. A failed query is recorded as -1 (never as a
   * fake elapsed time) and listed in "errors"; "value" sums successful
@@ -10,16 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events reader prerequisite - see Tables.NanosAsLongConf
-      .config(graft.ops.Tables.NanosAsLongConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     // Warm the session before timing: JVM/codegen/parquet-reader init
     // otherwise lands entirely on the alphabetically-first query (~7s of
     // one-time cost misattributed to it).
@@ -52,12 +41,9 @@ object Bench {
       .map { case ((name, fn), qIdx) =>
       def once(): Double = {
         val t0 = System.nanoTime()
-        // noop sink, not count(): under an aggregate Catalyst removes the
-        // orderBy (EliminateSorts) and prunes unused projections, so count()
-        // would bench a scan instead of the query's real work. The noop
-        // writer consumes every row of every column with zero sink cost.
+        // noop sink, not count(): see Harness.noop
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          Harness.noop(fn(spark, sfDir))
           (System.nanoTime() - t0) / 1e9
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
@@ -66,25 +52,7 @@ object Bench {
       val a = once()
       val b = if (a < 0) -1.0 else once()
       val sec = if (a < 0) a else if (b < 0) a else math.min(a, b)
-      // Free the query's localCheckpoint blocks: several queries
-      // checkpoint multi-referenced subplans, and without this the blocks
-      // accumulate in the BlockManager across the whole suite — the GC
-      // pressure inflated late-alphabet queries up to 10× (hll_merge: 19s
-      // in-suite vs 2.1s isolated) before this cleanup.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      // Streaming queries leave per-partition state-store PROVIDERS
-      // loaded in the JVM (HDFSBackedStateStoreProvider keeps recent
-      // version maps in memory; local mode has no executor decommission
-      // to shed them) and the StreamingQueryManager pins terminated
-      // query objects — across 21 stream_* queries × 2 runs × 32
-      // partitions that is the same slow heap squeeze the unpersist
-      // loop fixed for checkpoints (r13's winsorize read 15.6 s in the
-      // driver's memory-tighter harness while isolated runs stayed at
-      // ~1 s). Both releases are public API and O(ms).
-      try {
-        org.apache.spark.sql.GraftSqlShims.unloadStateStores()
-        spark.streams.resetTerminated()
-      } catch { case scala.util.control.NonFatal(_) => () }
+      Harness.release(spark)
       // Broadcast blocks are reaped by ContextCleaner only after their
       // weak refs GC — nudge periodically so a few hundred queries'
       // broadcasts never pile up to a GC wall inside someone's timed

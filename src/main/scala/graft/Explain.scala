@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: print the formatted physical plan of one or more
   * `SparkEntry.queries` entries without executing them.
   *
@@ -18,16 +16,7 @@ object Explain {
     val names: Seq[String] =
       if (args.length > 1) args(1).split(",").map(_.trim).toSeq
       else SparkEntry.queries.keys.filterNot(_.startsWith("stream_")).toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events reader prerequisite - see Tables.NanosAsLongConf
-      .config(graft.ops.Tables.NanosAsLongConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     names.foreach { n =>
       println(s"\n================ $n ================")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

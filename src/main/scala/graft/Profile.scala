@@ -1,43 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc profiling harness: runs named queries (default: all) twice each
   * with a no-op sink — run 1 includes plan+codegen+JIT warmup, run 2 is
-  * steady-state. `GRAFT_EXPLAIN=1` additionally dumps the formatted plan.
+  * steady-state. For a query's plan, see [[graft.Explain]].
   *
   * Usage: runMain graft.Profile <sfDir> [query...]
+  * Extra session confs: GRAFT_CONF="k=v,k=v".
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names =
       if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events reader prerequisite - see Tables.NanosAsLongConf
-      .config(graft.ops.Tables.NanosAsLongConf, "true")
-      .config("spark.ui.enabled", "false")
-    // extra confs: GRAFT_CONF="k=v,k=v"
-    sys.env.get("GRAFT_CONF").foreach(_.split(",").filter(_.nonEmpty).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val conf = sys.env.get("GRAFT_CONF").toSeq
+      .flatMap(_.split(",").filter(_.nonEmpty))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = Harness.session(conf: _*)
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      val times = (1 to 2).map(_ => Harness.time(Harness.noop(fn(spark, sfDir))))
       println(f"[profile] $n%-20s run1=${times(0)}%7.2fs run2=${times(1)}%7.2fs")
-      if (sys.env.contains("GRAFT_EXPLAIN")) fn(spark, sfDir).explain("formatted")
-      // Drop localCheckpoint blocks between queries (twin of Bench.scala).
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Harness.release(spark)
     }
     spark.stop()
   }

@@ -3,102 +3,131 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Harness.{noop, time}
+
 /** Scale smoke: the reference pipeline (generate → globally sort) far past
   * the reference's largest published test (4,000,000 elements,
   * `/root/reference/README.md:17`). Generation comes from the `graft-gen`
   * V2 source (partitioned, O(1) state per task) and the sort is the
   * engine's `global_sort` (range scatter + per-partition sort), driven to
-  * a noop sink so the FULL sort executes with zero sink cost.
+  * a noop sink so the FULL sort executes with zero sink cost. Each named
+  * mode drives one operator family the same way.
   *
-  *   sbt "runMain graft.Scale [nRows]"          (default 200,000,000)
-  *   sbt "runMain graft.Scale dedup [nDocs]"    (default 5,000,000)
-  *   sbt "runMain graft.Scale spans [nDocs]"    (default 2,000,000)
-  *   sbt "runMain graft.Scale events [nRows]"   (default 100,000,000)
-  *   sbt "runMain graft.Scale ann [nVecs]"      (default 2,000,000)
-  *   sbt "runMain graft.Scale joins [nLine]"    (default 200,000,000)
-  *   sbt "runMain graft.Scale range [nPts] [nIv]" (default 50M × 1M)
-  *   sbt "runMain graft.Scale stream [nRows]"   (default 100,000,000)
-  *   sbt "runMain graft.Scale graph [nInc]"     (default 10,000,000)
-  *   sbt "runMain graft.Scale hh [n] [vocab]"   (default 100M × 10M)
-  *   sbt "runMain graft.Scale hhskew [n] [nSmall]" (default 100M × 20)
+  *   sbt "runMain graft.Scale [nRows]"                  (default 200M)
+  *   sbt "runMain graft.Scale ann [nVecs]"              (default 2M)
+  *   sbt "runMain graft.Scale apply [nVecs]"            (default 2M)
+  *   sbt "runMain graft.Scale arbiters [commits]"       (default 300)
+  *   sbt "runMain graft.Scale bloom [nRows]"            (default 50M)
+  *   sbt "runMain graft.Scale cdcplan [versions] [files]" (default 400 × 512)
+  *   sbt "runMain graft.Scale checkpoint [versions] [every]" (default 1000 × 100)
+  *   sbt "runMain graft.Scale compaction [nChunks]"     (default 5M)
+  *   sbt "runMain graft.Scale dedup [nDocs]"            (default 5M)
+  *   sbt "runMain graft.Scale events [nRows]"           (default 100M)
+  *   sbt "runMain graft.Scale graph [nInc]"             (default 10M)
+  *   sbt "runMain graft.Scale hh [n] [vocab]"           (default 100M × 10M)
+  *   sbt "runMain graft.Scale hhskew [n] [nSmall]"      (default 100M × 20)
+  *   sbt "runMain graft.Scale incr [nBase] [nBatch]"    (default 2M × 20k)
+  *   sbt "runMain graft.Scale joins [nLine]"            (default 200M)
+  *   sbt "runMain graft.Scale kll [n] [k]"              (default 200M × 8192)
+  *   sbt "runMain graft.Scale kllskew [n] [nSmall]"     (default 100M × 20)
+  *   sbt "runMain graft.Scale lex [n] [nKeys]"          (default 100M × n/100)
+  *   sbt "runMain graft.Scale merge [nRows]"            (default 50M)
+  *   sbt "runMain graft.Scale mor [nRows]"              (default 10M)
+  *   sbt "runMain graft.Scale pagerank [nEdges] [iters]" (default 20M × 10)
   *   sbt "runMain graft.Scale perplexity [nDocs] [vocab]" (default 4M × 100k)
-  *   sbt "runMain graft.Scale apply [nVecs]" (default 2,000,000)
+  *   sbt "runMain graft.Scale posmor [nRows]"           (default 10M)
+  *   sbt "runMain graft.Scale range [nPts] [nIv]"       (default 50M × 1M)
+  *   sbt "runMain graft.Scale rowgroups [nRows]"        (default 50M)
+  *   sbt "runMain graft.Scale shard [nRows] [shards]"   (default 100M × 64)
+  *   sbt "runMain graft.Scale skew [nFact] [nDim]"      (default 200M × 1M)
+  *   sbt "runMain graft.Scale snapshots [nFiles]"       (default 4096)
+  *   sbt "runMain graft.Scale spans [nDocs]"            (default 2M)
+  *   sbt "runMain graft.Scale sparse [nDocs] [vocab]"   (default 2M × 200k)
+  *   sbt "runMain graft.Scale stream [nRows]"           (default 100M)
+  *   sbt "runMain graft.Scale streamplan [versions] [files]" (default 500 × 2048)
+  *   sbt "runMain graft.Scale train [nLogreg] [nPca]"   (default 100M × 1M)
+  *   sbt "runMain graft.Scale versions [versions]"      (default 200)
+  *   sbt "runMain graft.Scale zonemap [nRows]"          (default 50M)
+  *   sbt "runMain graft.Scale zorder [nRows]"           (default 50M)
   *
-  * `dedup` mode drives the MinHash-LSH near-dup pipeline (the same
-  * operators as the `minhash_pairs` query, same k/bands) over synthetic
-  * documents with a planted 5% near-duplicate rate — each planted doc
-  * copies its base's 12 tokens with exactly one perturbed, so candidate
-  * recall is testable and the hashing/banding/self-join cost is real.
-  *
-  * Prints one JSON line — local-mode evidence that the plan shapes hold
-  * orders of magnitude past the reference's ceiling; on a real cluster
-  * the same plans scale out by partition count.
+  * Every leg runs in one [[Harness.session]] (`SPARK_GRAFT_CPUS` cores,
+  * else all of them), after a 1M-row warm-up off the clock, and prints one
+  * JSON line — local-mode evidence that the plan shapes hold orders of
+  * magnitude past the reference's ceiling; on a real cluster the same
+  * plans scale out by partition count.
   */
 object Scale {
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("dedup")) return dedupMain(args.drop(1))
-    if (args.headOption.contains("spans")) return spansMain(args.drop(1))
-    if (args.headOption.contains("events")) return eventsMain(args.drop(1))
-    if (args.headOption.contains("ann")) return annMain(args.drop(1))
-    if (args.headOption.contains("joins")) return joinsMain(args.drop(1))
-    if (args.headOption.contains("skew")) return skewMain(args.drop(1))
-    if (args.headOption.contains("range")) return rangeMain(args.drop(1))
-    if (args.headOption.contains("graph")) return graphMain(args.drop(1))
-    if (args.headOption.contains("pagerank")) return pagerankMain(args.drop(1))
-    if (args.headOption.contains("incr")) return incrMain(args.drop(1))
-    if (args.headOption.contains("lex")) return lexMain(args.drop(1))
-    if (args.headOption.contains("stream")) return streamMain(args.drop(1))
-    if (args.headOption.contains("hhskew")) return hhSkewMain(args.drop(1))
-    if (args.headOption.contains("hh")) return hhMain(args.drop(1))
-    if (args.headOption.contains("kllskew")) return kllSkewMain(args.drop(1))
-    if (args.headOption.contains("kll")) return kllMain(args.drop(1))
-    if (args.headOption.contains("sparse")) return sparseMain(args.drop(1))
-    if (args.headOption.contains("shard")) return shardMain(args.drop(1))
-    if (args.headOption.contains("train")) return trainMain(args.drop(1))
-    if (args.headOption.contains("perplexity")) return perplexityMain(args.drop(1))
-    if (args.headOption.contains("apply")) return applyMain(args.drop(1))
-    if (args.headOption.contains("zorder")) return zorderMain(args.drop(1))
-    if (args.headOption.contains("zonemap")) return zonemapMain(args.drop(1))
-    if (args.headOption.contains("rowgroups")) return rowgroupsMain(args.drop(1))
-    if (args.headOption.contains("bloom")) return bloomMain(args.drop(1))
-    if (args.headOption.contains("posmor")) return posMorMain(args.drop(1))
-    if (args.headOption.contains("versions")) return versionsMain(args.drop(1))
-    if (args.headOption.contains("checkpoint")) return checkpointMain(args.drop(1))
-    if (args.headOption.contains("streamplan")) return streamPlanMain(args.drop(1))
-    if (args.headOption.contains("cdcplan")) return cdcPlanMain(args.drop(1))
-    if (args.headOption.contains("arbiters")) return arbitersMain(args.drop(1))
-    if (args.headOption.contains("snapshots")) return snapshotsMain(args.drop(1))
-    if (args.headOption.contains("mor")) return morMain(args.drop(1))
-    if (args.headOption.contains("merge")) return mergeMain(args.drop(1))
-    if (args.headOption.contains("compaction")) return compactionMain(args.drop(1))
+  def main(args: Array[String]): Unit = args.headOption match {
+    case Some(m) if !m.forall(_.isDigit) =>
+      modes.getOrElse(m, throw new IllegalArgumentException(
+        s"unknown Scale mode '$m'; valid modes: " +
+          modes.keys.toSeq.sorted.mkString(", ") +
+          " (or a row count alone for the sort leg)"))(args.drop(1))
+    case _ => sortMain(args)
+  }
+
+  /** The named legs, by the word that selects them. */
+  val modes: Map[String, Array[String] => Unit] = Map(
+    ("ann", annMain),
+    ("apply", applyMain),
+    ("arbiters", arbitersMain),
+    ("bloom", bloomMain),
+    ("cdcplan", cdcPlanMain),
+    ("checkpoint", checkpointMain),
+    ("compaction", compactionMain),
+    ("dedup", dedupMain),
+    ("events", eventsMain),
+    ("graph", graphMain),
+    ("hh", hhMain),
+    ("hhskew", hhSkewMain),
+    ("incr", incrMain),
+    ("joins", joinsMain),
+    ("kll", kllMain),
+    ("kllskew", kllSkewMain),
+    ("lex", lexMain),
+    ("merge", mergeMain),
+    ("mor", morMain),
+    ("pagerank", pagerankMain),
+    ("perplexity", perplexityMain),
+    ("posmor", posMorMain),
+    ("range", rangeMain),
+    ("rowgroups", rowgroupsMain),
+    ("shard", shardMain),
+    ("skew", skewMain),
+    ("snapshots", snapshotsMain),
+    ("spans", spansMain),
+    ("sparse", sparseMain),
+    ("stream", streamMain),
+    ("streamplan", streamPlanMain),
+    ("train", trainMain),
+    ("versions", versionsMain),
+    ("zonemap", zonemapMain),
+    ("zorder", zorderMain))
+
+  /** One leg's scaffold: opens the harness session, warms the JVM and
+    * codegen off the clock, prints the JSON line `body` returns, and stops
+    * the session. `body` gets the session and its core count.
+    */
+  private def leg(body: (SparkSession, Int) => String): Unit = {
+    val spark = Harness.session()
+    try {
+      spark.range(1000000L).selectExpr("sum(id % 7)").collect()
+      println(body(spark, spark.sparkContext.defaultParallelism))
+    } finally spark.stop()
+  }
+
+  /** The default leg: `global_sort`, `top_k`, `HybridSortExec` over four
+    * key shapes and budgets, and `globalIndex`, each over `graft-gen` rows.
+    */
+  private def sortMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 200000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     def gen = spark.read.format("graft-gen")
       .option("n", n).option("bound", 5000000L)
-      .option("numPartitions", cpus.toInt * 2).load()
+      .option("numPartitions", cpus * 2).load()
 
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    // warm-up: JVM + codegen init off the clock
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-
-    val sortSec = time {
-      ops.Sorts.globalSort(gen.select("value"), col("value"))
-        .write.format("noop").mode("overwrite").save()
-    }
-    val topkSec = time {
-      ops.Sorts.topK(gen, 100, col("value").desc, col("id"))
-        .write.format("noop").mode("overwrite").save()
-    }
+    val sortSec = time(noop(ops.Sorts.globalSort(gen.select("value"), col("value"))))
+    val topkSec = time(noop(ops.Sorts.topK(gen, 100, col("value").desc, col("id"))))
     // the custom physical operator (HybridSortExec: range scatter via
     // EnsureRequirements + per-partition quicksort/insertion-sort
     // hybrid per run, heap merge of spilled runs) over the same frame —
@@ -108,40 +137,28 @@ object Scale {
     // session's DEFAULT partitioning with AQE coalescing ON — no
     // partition-sizing discipline, the exact posture Tungsten's sort
     // gets. Default budget: 128 MB per task run.
-    val hybridSec = time {
-      ops.Sorts.hybridSortExec(gen.select("value"), 25, "value")
-        .write.format("noop").mode("overwrite").save()
-    }
+    val hybridSec = time(noop(ops.Sorts.hybridSortExec(gen.select("value"), 25, "value")))
     // same plan under a deliberately TINY run budget (8 MB → ~16x the
     // spilled runs): prices the spill path itself — sequential run I/O +
     // a wider heap merge — and proves graceful degradation where the
     // pre-rework operator would have OOMed.
     val hybridSpillSec = time {
       spark.conf.set("spark.graft.hybridSort.spillBytes", (8L << 20).toString)
-      try ops.Sorts.hybridSortExec(gen.select("value"), 25, "value")
-        .write.format("noop").mode("overwrite").save()
+      try noop(ops.Sorts.hybridSortExec(gen.select("value"), 25, "value"))
       finally spark.conf.unset("spark.graft.hybridSort.spillBytes")
     }
     // the key shapes that made the reference's last-element Lomuto
     // partition quadratic, through the same operator: an already ordered
     // key (`id`, as a time-ordered column arrives) and a 4-key column
     // (`id % 4`, a low-cardinality status column) carrying `id` along.
-    val hybridPresortedSec = time {
-      ops.Sorts.hybridSortExec(gen.select("id"), 25, "id")
-        .write.format("noop").mode("overwrite").save()
-    }
-    val hybridFourKeySec = time {
-      ops.Sorts.hybridSortExec(gen.selectExpr("id % 4 AS k4", "id"), 25, "k4")
-        .write.format("noop").mode("overwrite").save()
-    }
+    val hybridPresortedSec = time(noop(ops.Sorts.hybridSortExec(gen.select("id"), 25, "id")))
+    val hybridFourKeySec = time(noop(
+      ops.Sorts.hybridSortExec(gen.selectExpr("id % 4 AS k4", "id"), 25, "k4")))
     // the distributed ROW_NUMBER over the same frame: one range shuffle,
     // one count pass over its output, one sort within partitions
-    val globalIndexSec = time {
-      ops.Sorts.globalIndex(gen.select("value", "id"), col("value"), col("id"))
-        .write.format("noop").mode("overwrite").save()
-    }
-    println(f"""{"n_rows":$n,"global_sort_sec":$sortSec%.1f,"top_k_sec":$topkSec%.1f,"hybrid_exec_sec":$hybridSec%.1f,"hybrid_exec_8mb_budget_sec":$hybridSpillSec%.1f,"hybrid_exec_presorted_sec":$hybridPresortedSec%.1f,"hybrid_exec_4key_sec":$hybridFourKeySec%.1f,"global_index_sec":$globalIndexSec%.1f,"cpus":$cpus}""")
-    spark.stop()
+    val globalIndexSec = time(noop(
+      ops.Sorts.globalIndex(gen.select("value", "id"), col("value"), col("id"))))
+    f"""{"n_rows":$n,"global_sort_sec":$sortSec%.1f,"top_k_sec":$topkSec%.1f,"hybrid_exec_sec":$hybridSec%.1f,"hybrid_exec_8mb_budget_sec":$hybridSpillSec%.1f,"hybrid_exec_presorted_sec":$hybridPresortedSec%.1f,"hybrid_exec_4key_sec":$hybridFourKeySec%.1f,"global_index_sec":$globalIndexSec%.1f,"cpus":$cpus}"""
   }
 
   /** Event-analytics family at volume: gap sessionization, the ordered
@@ -155,52 +172,19 @@ object Scale {
     * [[graft.ops.Gen]]); each timed query regenerates the frame, so the
     * per-query cost comparison is apples-to-apples.
     */
-  private def eventsMain(args: Array[String]): Unit = {
+  private def eventsMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 100000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val users = math.max(1L, n / 200)
-    def events = synthEvents(spark, n, users, cpus.toInt)
-
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    def events = synthEvents(spark, n, users, cpus)
 
     val sessionsSec = time(noop(ops.Events.sessionize(events, 30)))
     val funnelSec = time(noop(ops.Events.funnel(events,
       Seq("view", "click", "purchase"))))
     val cohortSec = time(noop(ops.Events.cohortRetention(events)))
-    println(f"""{"mode":"events","n_rows":$n,"n_users":$users,"sessions_sec":$sessionsSec%.1f,"funnel_sec":$funnelSec%.1f,"cohort_sec":$cohortSec%.1f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"events","n_rows":$n,"n_users":$users,"sessions_sec":$sessionsSec%.1f,"funnel_sec":$funnelSec%.1f,"cohort_sec":$cohortSec%.1f,"cpus":$cpus}"""
   }
 
-  /** Similarity family at volume: brute-force kNN (8 queries), SemDeDup
-    * semantic dedup (cells scaled with n), and PQ encoding over synthetic
-    * 64-dim embeddings. Vectors with id % 50 == 1 are PLANTED near-dups
-    * (copy of id-1 with one component shifted by 0.01 — cosine ≈ 0.9999),
-    * so the semantic-dedup count is checkable: nearly every planted pair
-    * should land in its base's cell and clear the 0.9 floor, and almost
-    * nothing else should.
-    *
-    * Components are md5-hash-derived uniforms in [-1, 1]: a linear
-    * congruential mix (id·k1 + j·k2 mod p) leaves affine structure —
-    * (x+c) mod p is piecewise-linear in x, so ~20% of vector pairs
-    * exceed |cos| 0.4 and the dedup count explodes (measured: 133M
-    * "pairs" at 200k vectors). Hashing (id, j) kills the correlation;
-    * unrelated 64-dim cosines concentrate at N(0, 1/64) and the only
-    * pairs above the floor are the planted ones.
-    */
   /** `apply` mode: the SHIPPED-MODEL apply paths at volume — train a
     * k-means quantizer once on a sample, persist it through
     * [[graft.ops.ModelStore]], reload, then (a) assign every corpus
@@ -212,28 +196,16 @@ object Scale {
     * training cost is a constant paid once on the bounded sample, and
     * the artifact round-trips through parquet between the phases.
     */
-  private def applyMain(args: Array[String]): Unit = {
+  private def applyMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 2000000L
     val dim = 64
     val k = 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
     val comp = transform(sequence(lit(0), lit(dim - 1)), j =>
       ((pmod(graft.functions.h60(
           concat(col("id").cast("string"), lit("_"), j.cast("string"))),
         lit(2000003L)) - 1000000L) / lit(1000000.0)).cast("float"))
-    def embs = spark.range(n).repartition(cpus.toInt * 2)
+    def embs = spark.range(n).repartition(cpus * 2)
       .select(col("id").as("vec_id"), comp.as("embedding"))
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     // fit ONCE on a bounded 100k-row sample (training cost is constant in
     // the corpus size), persist, reload — the production split
     var path = ""
@@ -280,8 +252,7 @@ object Scale {
     }
     require(pqHits == 80, s"expected 8 queries x 10 ivfpq ranks, got $pqHits")
     val cached = spark.sparkContext.getPersistentRDDs.size
-    println(f"""{"mode":"apply","n_vecs":$n,"dim":$dim,"k":$k,"fit_seconds":$fitSec%.1f,"assign_seconds":$assignSec%.1f,"search_seconds":$searchSec%.1f,"pq_fit_seconds":$pqFitSec%.1f,"ivfpq_search_seconds":$ivfpqSec%.1f,"cells_seen":$cellsSeen,"cached_rdds":$cached,"assign_vecs_per_sec":${n / assignSec}%.0f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"apply","n_vecs":$n,"dim":$dim,"k":$k,"fit_seconds":$fitSec%.1f,"assign_seconds":$assignSec%.1f,"search_seconds":$searchSec%.1f,"pq_fit_seconds":$pqFitSec%.1f,"ivfpq_search_seconds":$ivfpqSec%.1f,"cells_seen":$cellsSeen,"cached_rdds":$cached,"assign_vecs_per_sec":${n / assignSec}%.0f,"cpus":$cpus}"""
   }
 
   /** `compaction` mode: the OPTIMIZE planner at the scale it exists
@@ -297,29 +268,17 @@ object Scale {
     * sum crosses the target, so it can under-run by at most the
     * previous chunk and over-run by at most its own last chunk).
     */
-  private def compactionMain(args: Array[String]): Unit = {
+  private def compactionMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 5000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
     val target = 128L * 1024 * 1024
     // chunk sizes 64 KB..8 MB (hash-spread): the small-files regime
-    val chunks = spark.range(n).repartition(cpus.toInt * 2)
+    val chunks = spark.range(n).repartition(cpus * 2)
       .select(
         pmod(graft.functions.h60(concat(lit("cp:"), col("id"))), lit(1024L))
           .as("part"),
         col("id").as("chunk"),
         (lit(65536L) + pmod(graft.functions.h60(concat(lit("cb:"), col("id"))),
           lit(8L * 1024 * 1024 - 65536))).as("bytes"))
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     var stats: Array[org.apache.spark.sql.Row] = null
     val planSec = time {
       stats = ops.Layout.compactionPlan(chunks, Seq("part"), "chunk",
@@ -342,8 +301,7 @@ object Scale {
       s"more out-of-band files (${files - fullFiles}) than partitions")
     require(maxFile < target + 8L * 1024 * 1024,
       s"a planned file overflowed target + max chunk: $maxFile")
-    println(f"""{"mode":"compaction","n_chunks":$n,"partitions":1024,"planned_files":$files,"planned_bytes":$bytes,"plan_sec":$planSec%.1f,"chunks_per_sec":${n / planSec}%.0f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"compaction","n_chunks":$n,"partitions":1024,"planned_files":$files,"planned_bytes":$bytes,"plan_sec":$planSec%.1f,"chunks_per_sec":${n / planSec}%.0f,"cpus":$cpus}"""
   }
 
   /** `zorder` mode: the skip-index scan at volume. Writes n rows
@@ -360,31 +318,19 @@ object Scale {
     * pruned fraction of the table is never opened, listed cost aside —
     * the scan cost scales with the SELECTED box, not the table.
     */
-  private def zorderMain(args: Array[String]): Unit = {
+  private def zorderMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 50000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
     // AQE off for the MEASURED scans only: the adaptive wrapper hides
     // the FileSourceScanExec (and its numFiles/filesSize metrics) behind
     // query stages; this mode measures planning-time pruning, which AQE
     // neither helps nor harms.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val df = spark.range(n).repartition(cpus.toInt * 2)
+    val df = spark.range(n).repartition(cpus * 2)
       .select(col("id"),
         pmod(graft.functions.h60(concat(lit("za:"), col("id"))), lit(1024L)).as("a"),
         pmod(graft.functions.h60(concat(lit("zb:"), col("id"))), lit(1024L)).as("b"),
         (col("id") % 97).cast("double").as("v"))
     val out = java.nio.file.Files.createTempDirectory("graft_zorder_scale").toString
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     val writeSec = time {
       ops.Layout.zorderWrite(df, "a", "b", 10, 6, out): Unit
     }
@@ -422,8 +368,7 @@ object Scale {
       s"auto path lost rows: ${full._3.toSeq} vs ${auto._3.toSeq}")
     require(auto._1 == skip._1,
       s"rule must prune the same files as the hand path: ${auto._1} vs ${skip._1}")
-    println(f"""{"mode":"zorder","n_rows":$n,"write_sec":$writeSec%.1f,"strips_selected":${strips.length},"strips_total":64,"full_files":${full._1},"full_bytes":${full._2},"full_sec":$fullSec%.1f,"skip_files":${skip._1},"skip_bytes":${skip._2},"skip_sec":$skipSec%.1f,"auto_files":${auto._1},"auto_bytes":${auto._2},"auto_sec":$autoSec%.1f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"zorder","n_rows":$n,"write_sec":$writeSec%.1f,"strips_selected":${strips.length},"strips_total":64,"full_files":${full._1},"full_bytes":${full._2},"full_sec":$fullSec%.1f,"skip_files":${skip._1},"skip_bytes":${skip._2},"skip_sec":$skipSec%.1f,"auto_files":${auto._1},"auto_bytes":${auto._2},"auto_sec":$autoSec%.1f,"cpus":$cpus}"""
   }
 
   /** Generic zone-map (per-file min/max) pruning at volume: a range-laid
@@ -434,27 +379,15 @@ object Scale {
     * pruned scan's planned bytes shrink with the window, not the table —
     * the Delta/Iceberg file-skipping channel for NON-partition columns.
     */
-  private def zonemapMain(args: Array[String]): Unit = {
+  private def zonemapMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 50000000L
     val nFiles = 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
     // AQE off for the MEASURED scans (same reason as zorderMain: the
     // FileSourceScanExec metrics measure planning-time pruning)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val df = spark.range(n).repartition(cpus.toInt * 2)
+    val df = spark.range(n).repartition(cpus * 2)
       .select(col("id"), (col("id") % 97).cast("double").as("v"))
     val out = java.nio.file.Files.createTempDirectory("graft_zm_scale").toString
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     val writeSec = time {
       df.repartitionByRange(nFiles, col("id"))
         .sortWithinPartitions(col("id"))
@@ -487,8 +420,7 @@ object Scale {
     }
     require(full._3.toSeq == skip._3.toSeq,
       s"pruned path lost rows: ${full._3.toSeq} vs ${skip._3.toSeq}")
-    println(f"""{"mode":"zonemap","n_rows":$n,"write_sec":$writeSec%.1f,"stats_sec":$statsSec%.1f,"files_total":$nFiles,"files_survive":${survivors.size},"full_files":${full._1},"full_bytes":${full._2},"full_sec":$fullSec%.1f,"skip_files":${skip._1},"skip_bytes":${skip._2},"skip_sec":$skipSec%.1f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"zonemap","n_rows":$n,"write_sec":$writeSec%.1f,"stats_sec":$statsSec%.1f,"files_total":$nFiles,"files_survive":${survivors.size},"full_files":${full._1},"full_bytes":${full._2},"full_sec":$fullSec%.1f,"skip_files":${skip._1},"skip_bytes":${skip._2},"skip_sec":$skipSec%.1f,"cpus":$cpus}"""
   }
 
   /** Row-group zone maps where FILE-level pruning is powerless: `n`
@@ -502,20 +434,8 @@ object Scale {
     * skipping is the only stats channel left, and its bytes track the
     * WINDOW, not the file.
     */
-  private def rowgroupsMain(args: Array[String]): Unit = {
+  private def rowgroupsMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 50000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     val out = java.nio.file.Files.createTempDirectory("graft_rg_scale").toString
     val writeSec = time {
       spark.range(n).select(col("id"), (col("id") % 97).cast("double").as("v"))
@@ -550,8 +470,7 @@ object Scale {
         StructField("id", LongType), StructField("v", DoubleType)))))
     }
     require(full == skip, s"ranged read lost rows: $full vs $skip")
-    println(f"""{"mode":"rowgroups","n_rows":$n,"write_sec":$writeSec%.1f,"stats_sec":$statsSec%.1f,"groups_total":$nGroups,"groups_survive":${survivors.size},"files_survive_filelevel":${fileSurvivors.size},"total_bytes":$totalBytes,"skip_bytes":$skipBytes,"full_sec":$fullSec%.1f,"skip_sec":$skipSec%.1f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"rowgroups","n_rows":$n,"write_sec":$writeSec%.1f,"stats_sec":$statsSec%.1f,"groups_total":$nGroups,"groups_survive":${survivors.size},"files_survive_filelevel":${fileSurvivors.size},"total_bytes":$totalBytes,"skip_bytes":$skipBytes,"full_sec":$fullSec%.1f,"skip_sec":$skipSec%.1f,"cpus":$cpus}"""
   }
 
   /** The bloom skip channel where zones are powerless: `n` rows
@@ -563,22 +482,10 @@ object Scale {
     * pattern every secondary-index design exists for — served by footer
     * + bitset reads instead of a full-table scan.
     */
-  private def bloomMain(args: Array[String]): Unit = {
+  private def bloomMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 50000000L
     val nFiles = 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     val out = java.nio.file.Files.createTempDirectory("graft_bloom_scale").toString
     val writeSec = time {
       spark.range(n).select(col("id"), (col("id") % 97).cast("double").as("v"))
@@ -602,8 +509,7 @@ object Scale {
     var skip: Seq[Long] = null
     val skipSec = time { skip = lookup(spark.read.parquet(survivors: _*)) }
     require(full == skip, s"bloom path lost rows: $full vs $skip")
-    println(f"""{"mode":"bloom","n_rows":$n,"write_sec":$writeSec%.1f,"files_total":$nFiles,"files_survive":${survivors.size},"probe_sec":$probeSec%.2f,"full_sec":$fullSec%.1f,"skip_sec":$skipSec%.2f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"bloom","n_rows":$n,"write_sec":$writeSec%.1f,"files_total":$nFiles,"files_survive":${survivors.size},"probe_sec":$probeSec%.2f,"full_sec":$fullSec%.1f,"skip_sec":$skipSec%.2f,"cpus":$cpus}"""
   }
 
   /** Position-delete merge-on-read priced at volume: a clustered `n`-row
@@ -618,20 +524,8 @@ object Scale {
     * leg prices, now for the positional flavor that serves non-key
     * predicates.
     */
-  private def posMorMain(args: Array[String]): Unit = {
+  private def posMorMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 10000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     val root = ops.Snapshots.init(
       java.nio.file.Files.createTempDirectory("graft_posmor_scale").toString)
     ops.Snapshots.commit(root, spark.range(n)
@@ -670,8 +564,7 @@ object Scale {
       afterN = ops.Snapshots.read(spark, root).count()
     }
     require(afterN == mergedN)
-    println(f"""{"mode":"posmor","n_rows":$n,"plain_sec":$plainSec%.1f,"delete_where_sec":$deleteSec%.1f,"update_where_sec":$updateSec%.1f,"merged_read_sec":$mergedSec%.1f,"compact_sec":$compactSec%.1f,"after_read_sec":$afterSec%.1f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"posmor","n_rows":$n,"plain_sec":$plainSec%.1f,"delete_where_sec":$deleteSec%.1f,"update_where_sec":$updateSec%.1f,"merged_read_sec":$mergedSec%.1f,"compact_sec":$compactSec%.1f,"after_read_sec":$afterSec%.1f,"cpus":$cpus}"""
   }
 
   /** The manifest chain at DEEP history: `v` small commits (the
@@ -681,20 +574,8 @@ object Scale {
     * AS OF timestamp resolution, a change-feed read over the full
     * window, and a retention vacuum dropping most of the history.
     */
-  private def versionsMain(args: Array[String]): Unit = {
+  private def versionsMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val v = if (args.nonEmpty) args(0).toInt else 200
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     val root = ops.Snapshots.init(
       java.nio.file.Files.createTempDirectory("graft_vers_scale").toString)
     val commitSec = time {
@@ -726,8 +607,7 @@ object Scale {
       ops.Snapshots.vacuum(root, keepVersions = 10, minAgeMillis = 0): Unit
     }
     require(ops.Snapshots.versions(root).size == 10)
-    println(f"""{"mode":"versions","n_versions":$v,"commit_sec":$commitSec%.1f,"plan_sec":$planSec%.2f,"count_sec":$countSec%.1f,"history_sec":$historySec%.2f,"asof_sec":$asofSec%.2f,"stats_sec":$statsSec%.2f,"feed_sec":$feedSec%.1f,"vacuum_sec":$vacuumSec%.2f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"versions","n_versions":$v,"commit_sec":$commitSec%.1f,"plan_sec":$planSec%.2f,"count_sec":$countSec%.1f,"history_sec":$historySec%.2f,"asof_sec":$asofSec%.2f,"stats_sec":$statsSec%.2f,"feed_sec":$feedSec%.1f,"vacuum_sec":$vacuumSec%.2f,"cpus":$cpus}"""
   }
 
   /** Deep history WITH vs WITHOUT checkpointing: a manifest references
@@ -741,21 +621,9 @@ object Scale {
     * checkpointed every `k`; metadata bytes, head-manifest refs, and a
     * cold full-history walk measured on each.
     */
-  private def checkpointMain(args: Array[String]): Unit = {
+  private def checkpointMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val v = if (args.nonEmpty) args(0).toInt else 1000
     val k = if (args.length > 1) args(1).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     def build(ckptEvery: Int): (String, Double) = {
       val root = ops.Snapshots.init(
         java.nio.file.Files.createTempDirectory("graft_ckpt_scale").toString)
@@ -795,8 +663,7 @@ object Scale {
     // the consolidated state replays identically
     require(ops.Snapshots.countRows(plainRoot) ==
       ops.Snapshots.countRows(ckptRoot))
-    println(f"""{"mode":"checkpoint","n_versions":$v,"ckpt_every":$k,"plain_manifest_kb":$plainKb,"ckpt_manifest_kb":$ckptKb,"plain_head_refs":${headRefs(plainRoot)},"ckpt_head_refs":${headRefs(ckptRoot)},"plain_commit_sec":$plainCommitSec%.1f,"ckpt_commit_sec":$ckptCommitSec%.1f,"plain_history_sec":$plainHistorySec%.2f,"ckpt_history_sec":$ckptHistorySec%.2f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"checkpoint","n_versions":$v,"ckpt_every":$k,"plain_manifest_kb":$plainKb,"ckpt_manifest_kb":$ckptKb,"plain_head_refs":${headRefs(plainRoot)},"ckpt_head_refs":${headRefs(ckptRoot)},"plain_commit_sec":$plainCommitSec%.1f,"ckpt_commit_sec":$ckptCommitSec%.1f,"plain_history_sec":$plainHistorySec%.2f,"ckpt_history_sec":$ckptHistorySec%.2f,"cpus":$cpus}"""
   }
 
   /** Commit-arbiter throughput: `v` sequential metadata-heavy commits
@@ -808,20 +675,8 @@ object Scale {
     * store each publish adds its round-trips on top — the reason the
     * protocol was designed to hold no lock during data writes.
     */
-  private def arbitersMain(args: Array[String]): Unit = {
+  private def arbitersMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val v = if (args.nonEmpty) args(0).toInt else 300
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000L).selectExpr("sum(id % 7)").collect()
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     def run(arb: ops.CommitArbiter, uriRoot: Boolean): Double = {
       val local = java.nio.file.Files
         .createTempDirectory("graft_arb_scale").toString
@@ -860,8 +715,7 @@ object Scale {
     }
     pool.shutdown()
     require(ops.Snapshots.versions(contRoot).size == threads * per)
-    println(f"""{"mode":"arbiters","n_commits":$v,"hard_link_sec":$hardLink%.1f,"lock_file_sec":$lockFile%.1f,"hadoop_fs_sec":$hadoopFs%.1f,"hadoop_fs_contended4_sec":$contended%.1f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"arbiters","n_commits":$v,"hard_link_sec":$hardLink%.1f,"lock_file_sec":$lockFile%.1f,"hadoop_fs_sec":$hadoopFs%.1f,"hadoop_fs_contended4_sec":$contended%.1f,"cpus":$cpus}"""
   }
 
   /** Streaming micro-batch PLANNING cost against a deep, wide table:
@@ -877,20 +731,9 @@ object Scale {
     * `nBatches` consecutive 1-commit windows and reports TOTAL segment
     * reads — linear in batches, independent of table width.
     */
-  private def streamPlanMain(args: Array[String]): Unit = {
+  private def streamPlanMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val v = if (args.nonEmpty) args(0).toInt else 500
     val nFiles = if (args.length > 1) args(1).toInt else 2048
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     val root = ops.Snapshots.init(
       java.nio.file.Files.createTempDirectory("graft_streamplan").toString)
     // the wide base: one commit whose segment is O(nFiles) entry text
@@ -925,8 +768,7 @@ object Scale {
       require(ops.Snapshots.snapshot(root, head).files.size == nFiles + v)
     }
     val snapReads = ops.Snapshots.segmentReads.get() - r1
-    println(f"""{"mode":"streamplan","n_versions":$v,"base_files":$nFiles,"window2_segment_reads":$windowReads,"window2_sec":$windowSec%.3f,"full_snapshot_segment_reads":$snapReads,"full_snapshot_sec":$snapSec%.3f,"tail_batches":$nBatches,"tail_segment_reads":$tailReads,"tail_sec":$tailSec%.3f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"streamplan","n_versions":$v,"base_files":$nFiles,"window2_segment_reads":$windowReads,"window2_sec":$windowSec%.3f,"full_snapshot_segment_reads":$snapReads,"full_snapshot_sec":$snapSec%.3f,"tail_batches":$nBatches,"tail_segment_reads":$tailReads,"tail_sec":$tailSec%.3f,"cpus":$cpus}"""
   }
 
   /** CDC stream planning at deep history: a WIDE base (its segment is
@@ -939,21 +781,10 @@ object Scale {
     * segment cache before each measured leg, so every read is a real
     * storage GET.
     */
-  private def cdcPlanMain(args: Array[String]): Unit = {
+  private def cdcPlanMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     import org.apache.spark.sql.functions.{col, lit}
     val v = if (args.nonEmpty) args(0).toInt else 400
     val nFiles = if (args.length > 1) args(1).toInt else 512
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     val root = ops.Snapshots.init(
       java.nio.file.Files.createTempDirectory("graft_cdcplan").toString)
     ops.Snapshots.commit(root,
@@ -989,8 +820,7 @@ object Scale {
       require(ops.Snapshots.snapshot(root, head).files.size > nFiles)
     }
     val fullReads = ops.Snapshots.segmentReads.get() - r1
-    println(f"""{"mode":"cdcplan","n_versions":$v,"base_files":$nFiles,"tail_batches":$nBatches,"tail_segment_reads":$tailReads,"tail_sec":$tailSec%.3f,"per_batch_full_snapshot_segment_reads":$fullReads,"per_batch_full_snapshot_sec":$fullSec%.3f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"cdcplan","n_versions":$v,"base_files":$nFiles,"tail_batches":$nBatches,"tail_segment_reads":$tailReads,"tail_sec":$tailSec%.3f,"per_batch_full_snapshot_segment_reads":$fullReads,"per_batch_full_snapshot_sec":$fullSec%.3f,"cpus":$cpus}"""
   }
 
   /** The snapshot format's metadata costs at a WIDE manifest: `n` rows
@@ -1004,21 +834,9 @@ object Scale {
     * numbers are pure metadata-path costs, the part that does NOT shrink
     * when the data is remote.
     */
-  private def snapshotsMain(args: Array[String]): Unit = {
+  private def snapshotsMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val nFiles = if (args.nonEmpty) args(0).toInt else 4096
     val n = nFiles * 2500L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     val root = ops.Snapshots.init(
       java.nio.file.Files.createTempDirectory("graft_snap_scale").toString)
     val commitSec = time {
@@ -1055,8 +873,7 @@ object Scale {
     val vacuumSec = time {
       require(ops.Snapshots.vacuum(root, keepVersions = 1) == 0) // append: nothing dead
     }
-    println(f"""{"mode":"snapshots","n_rows":$n,"n_files":$nFiles,"commit_sec":$commitSec%.1f,"manifest_bytes":$manifestBytes,"base_segment_bytes":${baseSegs.values.sum},"plan_sec":$planSec%.2f,"count_sec":$countSec%.1f,"stats_sec":$statsSec%.1f,"append_sec":$appendSec%.1f,"append_manifest_bytes":$appendManifestBytes,"append_segment_bytes":$appendSegBytes,"vacuum_sec":$vacuumSec%.2f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"snapshots","n_rows":$n,"n_files":$nFiles,"commit_sec":$commitSec%.1f,"manifest_bytes":$manifestBytes,"base_segment_bytes":${baseSegs.values.sum},"plan_sec":$planSec%.2f,"count_sec":$countSec%.1f,"stats_sec":$statsSec%.1f,"append_sec":$appendSec%.1f,"append_manifest_bytes":$appendManifestBytes,"append_segment_bytes":$appendSegBytes,"vacuum_sec":$vacuumSec%.2f,"cpus":$cpus}"""
   }
 
   /** Merge-on-read's read amplification priced, and compaction's cure:
@@ -1069,21 +886,9 @@ object Scale {
     * base + churn + a key join; the scheduled compaction pays it ONCE
     * and every read after is a plain (and prunable) scan again.
     */
-  private def morMain(args: Array[String]): Unit = {
+  private def morMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 10000000L
     val rounds = 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     val root = ops.Snapshots.init(
       java.nio.file.Files.createTempDirectory("graft_mor_scale").toString)
     ops.Snapshots.commit(root, spark.range(n)
@@ -1117,8 +922,7 @@ object Scale {
     // zone-map bite for a 1/8-domain window, after the clustered rewrite
     val stats = ops.Snapshots.zoneMap(spark, root, Seq("id"))
     val survivors = ops.Layout.zonePrune(stats, Seq(("id", 0L, n / 8)))
-    println(f"""{"mode":"mor","n_rows":$n,"rounds":$rounds,"change_commits_sec":$changeSec%.1f,"mor_read_sec":$morReadSec%.1f,"compact_sec":$compactSec%.1f,"plain_read_sec":$plainReadSec%.1f,"files_after":${stats.count()},"survivors_eighth":${survivors.size},"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"mor","n_rows":$n,"rounds":$rounds,"change_commits_sec":$changeSec%.1f,"mor_read_sec":$morReadSec%.1f,"compact_sec":$compactSec%.1f,"plain_read_sec":$plainReadSec%.1f,"files_after":${stats.count()},"survivors_eighth":${survivors.size},"cpus":$cpus}"""
   }
 
   /** Partition-pruned MERGE at volume: a bucket-partitioned table of `n`
@@ -1130,19 +934,10 @@ object Scale {
     * proportional to the BATCH's partition footprint (here ~1/64 of the
     * table), never the table.
     */
-  private def mergeMain(args: Array[String]): Unit = {
+  private def mergeMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 50000000L
     val nBuckets = 256
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-    def table = spark.range(n).repartition(cpus.toInt * 2)
+    def table = spark.range(n).repartition(cpus * 2)
       .select(col("id"), pmod(col("id"), lit(nBuckets.toLong)).as("bucket"),
         (col("id") % 97).cast("double").as("v"))
     def dirBytes(root: String): Long = {
@@ -1151,9 +946,6 @@ object Scale {
         cs.filter(_.isFile).map(_.length()).sum + cs.filter(_.isDirectory).map(walk).sum
       }
       walk(new java.io.File(root))
-    }
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }
     val out = java.nio.file.Files.createTempDirectory("graft_merge_scale").toString
     val writeSec = time {
@@ -1190,25 +982,32 @@ object Scale {
       ops.Reconcile.mergeApply(spark.read.parquet(out), changes, "id", "op")
         .write.mode("overwrite").partitionBy("bucket").parquet(out2)
     }
-    println(f"""{"mode":"merge","n_rows":$n,"n_buckets":$nBuckets,"n_changes":$nChanges,"write_sec":$writeSec%.1f,"table_bytes":$tableBytes,"touched_buckets":4,"touched_bytes_before":$beforeTouched,"touched_bytes_after":$afterTouched,"merge_touched_sec":$touchedSec%.1f,"rows_after":$rowsAfter,"full_rewrite_sec":$fullSec%.1f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"merge","n_rows":$n,"n_buckets":$nBuckets,"n_changes":$nChanges,"write_sec":$writeSec%.1f,"table_bytes":$tableBytes,"touched_buckets":4,"touched_bytes_before":$beforeTouched,"touched_bytes_after":$afterTouched,"merge_touched_sec":$touchedSec%.1f,"rows_after":$rowsAfter,"full_rewrite_sec":$fullSec%.1f,"cpus":$cpus}"""
   }
 
-  private def annMain(args: Array[String]): Unit = {
+  /** Similarity family at volume: brute-force kNN (8 queries), SemDeDup
+    * semantic dedup (cells scaled with n), and PQ encoding over synthetic
+    * 64-dim embeddings. Vectors with id % 50 == 1 are PLANTED near-dups
+    * (copy of id-1 with one component shifted by 0.01 — cosine ≈ 0.9999),
+    * so the semantic-dedup count is checkable: nearly every planted pair
+    * should land in its base's cell and clear the 0.9 floor, and almost
+    * nothing else should.
+    *
+    * Components are md5-hash-derived uniforms in [-1, 1]: a linear
+    * congruential mix (id·k1 + j·k2 mod p) leaves affine structure —
+    * (x+c) mod p is piecewise-linear in x, so ~20% of vector pairs
+    * exceed |cos| 0.4 and the dedup count explodes (measured: 133M
+    * "pairs" at 200k vectors). Hashing (id, j) kills the correlation;
+    * unrelated 64-dim cosines concentrate at N(0, 1/64) and the only
+    * pairs above the floor are the planted ones.
+    */
+  private def annMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 2000000L
     val dim = 64
     // cells scale with n (bounded cell size is what makes SemDeDup's
     // within-cell compare tractable); capped so the literal-centroid
     // argmax stays O(1k·dim) per row
     val cells = math.max(256, math.min(1024, (n / 1000).toInt))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val planted = pmod(col("id"), lit(50L)) === 1
     val base = when(planted, col("id") - 1).otherwise(col("id"))
@@ -1219,16 +1018,8 @@ object Scale {
         when(planted && j === pmod(col("id"), lit(dim.toLong)), 0.01)
           .otherwise(0.0)).cast("float"))
     def embs = spark.range(n)
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .select(col("id").as("vec_id"), comp.as("embedding"))
-
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
 
     val knnSec = time(noop(ops.Similarity.bruteForceTopK(
       embs, embs.where(col("vec_id") < 8), k = 10)))
@@ -1255,8 +1046,7 @@ object Scale {
     val pqHits = exactTop.join(pqTop,
       col("query_id") === col("q") && col("nbr_id") === col("nb")).count()
     val plantedPairs = n / 50
-    println(f"""{"mode":"ann","n_vectors":$n,"dim":$dim,"knn8_sec":$knnSec%.1f,"semdedup_sec":$semSec%.1f,"semdedup_pairs":$pairs,"planted_neardups":$plantedPairs,"pq_encode_sec":$pqSec%.1f,"pq_search_sec":$pqSearchSec%.1f,"pq_recall10":${pqHits / 80.0}%.3f,"cells":$cells,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"ann","n_vectors":$n,"dim":$dim,"knn8_sec":$knnSec%.1f,"semdedup_sec":$semSec%.1f,"semdedup_pairs":$pairs,"planted_neardups":$plantedPairs,"pq_encode_sec":$pqSec%.1f,"pq_search_sec":$pqSearchSec%.1f,"pq_recall10":${pqHits / 80.0}%.3f,"cells":$cells,"cpus":$cpus}"""
   }
 
   /** Synthetic event frame shared by the `events` and `stream` modes:
@@ -1299,16 +1089,8 @@ object Scale {
     * Exact decimal sums (the engine's money discipline) — doubles only
     * in the final projection.
     */
-  private def joinsMain(args: Array[String]): Unit = {
+  private def joinsMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 200000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val nOrd = math.max(1L, n / 4)
     val nCust = math.max(1L, n / 400)
@@ -1316,7 +1098,7 @@ object Scale {
     // each order has exactly 4 lines (id div 4): order keys are dense, so
     // the join hits every build row — no free anti-join shortcuts
     def lineitem = spark.range(n)
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .select(
         (col("id") / 4L).cast("long").as("order_id"),
         (pmod(mixL * 16807L, lit(1000000L)) / lit(100.0))
@@ -1324,7 +1106,7 @@ object Scale {
         pmod(mixL, lit(50L)).cast("int").as("qty"))
     val mixO = pmod(col("id") * 48271L, lit(2147483647L))
     def orders = spark.range(nOrd)
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .select(
         col("id").as("order_id"),
         pmod(col("id") * 2654435761L, lit(nCust)).as("cust_id"),
@@ -1335,13 +1117,6 @@ object Scale {
     def nation = spark.range(25L)
       .select(col("id").cast("int").as("nation_id"),
         concat(lit("nation_"), col("id")).as("nation_name"))
-
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
 
     // q3 shape: fact-fact shuffle join + per-order aggregate + top-10.
     // The date filter keeps ~25% of orders and is pushed below the join.
@@ -1362,8 +1137,7 @@ object Scale {
         .agg(sum(col("price")).cast("double").as("revenue"))
         .orderBy(col("nation_name"))))
 
-    println(f"""{"mode":"joins","n_lineitem":$n,"n_orders":$nOrd,"n_customer":$nCust,"q3_shape_sec":$q3Sec%.1f,"q5_shape_sec":$q5Sec%.1f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"joins","n_lineitem":$n,"n_orders":$nOrd,"n_customer":$nCust,"q3_shape_sec":$q3Sec%.1f,"q5_shape_sec":$q5Sec%.1f,"cpus":$cpus}"""
   }
 
   /** Skewed-join mitigation at volume: a fact table where ONE key holds
@@ -1385,17 +1159,9 @@ object Scale {
     * All three produce the same aggregate (asserted), so the timing
     * difference is purely the mitigation.
     */
-  private def skewMain(args: Array[String]): Unit = {
+  private def skewMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 200000000L
     val nDim = if (args.length > 1) args(1).toLong else 1000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val mixF = pmod(col("id") * 2654435761L, lit(1048573L))
     // key 0 takes HALF the fact; the rest spread uniformly. The hot-key
@@ -1403,7 +1169,7 @@ object Scale {
     // anything: a mildly hot key finishes inside one task anyway, and
     // mitigation overhead would dominate the measurement.
     def fact = spark.range(n)
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .select(
         when(pmod(mixF, lit(2L)) === 0, 0L)
           .otherwise(pmod(col("id") * 48271L, lit(nDim))).as("key"),
@@ -1414,15 +1180,10 @@ object Scale {
         md5(col("id").cast("string")).as("fpay"))
     // ~70-byte payload keeps the dim above any broadcast threshold
     def dim = spark.range(nDim)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .select(col("id").as("dkey"),
         concat(lit("attr_"), md5(col("id").cast("string")),
           md5((col("id") + 1L).cast("string"))).as("payload"))
-
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
 
     def agg(joined: org.apache.spark.sql.DataFrame): Long =
       joined.select(sum(col("v"))).collect()(0).getLong(0)
@@ -1444,18 +1205,9 @@ object Scale {
     }
     require(sumUnmitigated == sumAqe && sumAqe == sumSalted,
       s"mitigations changed the answer: $sumUnmitigated / $sumAqe / $sumSalted")
-    println(f"""{"mode":"skew","n_fact":$n,"n_dim":$nDim,"hot_key_share":0.5,"unmitigated_sec":$unmitigatedSec%.1f,"aqe_skew_sec":$aqeSec%.1f,"salted_sec":$saltedSec%.1f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"skew","n_fact":$n,"n_dim":$nDim,"hot_key_share":0.5,"unmitigated_sec":$unmitigatedSec%.1f,"aqe_skew_sec":$aqeSec%.1f,"salted_sec":$saltedSec%.1f,"cpus":$cpus}"""
   }
 
-  /** Interval-containment range join at volume — evidence that the
-    * day-bucketized equi-join restatement ([[graft.ops.RangeJoin]], the
-    * verified `range_join` / `range_join_auto` queries) scales where the
-    * naive BNLJ cannot: 50M points × 1M intervals is 5·10^13 pair
-    * comparisons naively; bucketized it is a linear-volume hash join.
-    * Every point hits ~avg-interval-coverage intervals, so the matched
-    * row count is checkable against the expected density.
-    */
   /** Triangle counting at volume: the `triangle_count` shape — oriented
     * co-occurrence pair build, mean+σ edge threshold from exact integer
     * moments, wedge-closing equi-joins — over a synthetic incidence list
@@ -1467,18 +1219,10 @@ object Scale {
     *
     *   sbt "runMain graft.Scale graph [nInc]"   (default 10,000,000)
     */
-  private def graphMain(args: Array[String]): Unit = {
+  private def graphMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val nInc = if (args.nonEmpty) args(0).toLong else 10000000L
     val fan = 12L
     val nMembers = 50000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     // (item, member) incidence: f members per item. xxhash64 mixing, not a
     // multiplicative stride — a fixed stride makes every item's member set
@@ -1486,15 +1230,10 @@ object Scale {
     // space onto a degenerate lattice. (No cross-engine oracle here, so
     // Spark-only hashing is fine; the verified query uses portable h60.)
     def inc = spark.range(nInc)
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .select((col("id") / fan).cast("long").as("item"),
         pmod(xxhash64(col("id")), lit(nMembers)).as("member"))
       .distinct()
-
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
 
     var e: org.apache.spark.sql.DataFrame = null
     var nEdges = 0L
@@ -1507,8 +1246,58 @@ object Scale {
       nTriangles = ops.Graph.triangleCount(e).head().getLong(0)
     }
     val rate = (nInc / math.max(pairSec + triSec, 1e-9)).toLong
-    println(f"""{"mode":"graph","n_incidence":$nInc,"fan":$fan,"n_members":$nMembers,"n_edges":$nEdges,"n_triangles":$nTriangles,"pair_build_sec":$pairSec%.1f,"triangle_sec":$triSec%.1f,"incidence_rows_per_sec":$rate,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"graph","n_incidence":$nInc,"fan":$fan,"n_members":$nMembers,"n_edges":$nEdges,"n_triangles":$nTriangles,"pair_build_sec":$pairSec%.1f,"triangle_sec":$triSec%.1f,"incidence_rows_per_sec":$rate,"cpus":$cpus}"""
+  }
+
+  /** Driver-state training loops at volume: batch-GD logistic regression
+    * (`logreg_train`'s `trainWeights`) over nine-figure feature rows and
+    * PCA power iteration (`pca_power`'s `pcaPowerLoop`) over seven-figure
+    * 64-dim vectors. The loops' scale contract — ALL state is an
+    * O(features)/O(dim) driver-side literal vector, nothing cached or
+    * checkpointed — predicts (a) per-round wall time is FLAT (doubling
+    * rounds doubles total), (b) the block manager holds ZERO frames after
+    * any number of rounds, and (c) a re-run is bit-identical. This mode
+    * measures (a), asserts (b) and (c), and prints all three.
+    */
+  private def trainMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+    val nLr = if (args.nonEmpty) args(0).toLong else 100000000L
+    val nPca = if (args.length > 1) args(1).toLong else 1000000L
+    // --- logreg: separable-ish synthetic features, y = [2·x1 + x2/2 > 0]
+    // (plain `range` — already evenly partitioned; a repartition here
+    // would bill a synthetic-data shuffle to every round)
+    val feats = spark.range(0L, nLr, 1L, cpus * 2)
+      .select(lit(1.0d).as("x0"),
+        round(pmod(xxhash64(col("id"), lit(3)), lit(1000)).cast("double")
+          / 500.0d - 1.0d, 6).as("x1"),
+        round(pmod(xxhash64(col("id"), lit(5)), lit(1000)).cast("double")
+          / 500.0d - 1.0d, 6).as("x2"))
+      .select(when(col("x1") * 2.0d + col("x2") * 0.5d > 0, 1.0d)
+        .otherwise(0.0d).as("y"), col("x0"), col("x1"), col("x2"))
+    ops.Learn.trainWeights(feats, Seq("x0", "x1", "x2"), 1, 1.0) // warm
+    // each result is a lazy val, forced inside `time`
+    lazy val w5 = ops.Learn.trainWeights(feats, Seq("x0", "x1", "x2"), 5, 1.0)
+    lazy val w10 = ops.Learn.trainWeights(feats, Seq("x0", "x1", "x2"), 10, 1.0)
+    val t5 = time(w5)
+    val t10 = time(w10)
+    val w5b = ops.Learn.trainWeights(feats, Seq("x0", "x1", "x2"), 5, 1.0)
+    require(w5.toSeq == w5b.toSeq, "re-run must be bit-identical")
+    require(w10(1) > w5(1) && w5(1) > 0, "x1 weight must keep growing")
+    // --- pca: 64-dim vectors, variance planted on dim 0
+    val corpus = spark.range(0L, nPca, 1L, cpus * 2)
+      .select(col("id").as("vec_id"),
+        transform(sequence(lit(0), lit(63)), j =>
+          when(j === 0,
+            pmod(xxhash64(col("id")), lit(4000)).cast("double") / 100.0d - 20.0d)
+            .otherwise(pmod(xxhash64(col("id"), j), lit(200)).cast("double")
+              / 100.0d - 1.0d).cast("float")).as("embedding"))
+    ops.Similarity.pcaPowerLoop(corpus, 1, 64) // warm
+    val p3 = time(ops.Similarity.pcaPowerLoop(corpus, 3, 64))
+    lazy val r6 = ops.Similarity.pcaPowerLoop(corpus, 6, 64)
+    val p6 = time(r6)
+    require(math.abs(r6._2(0)) > 0.99, "planted axis must dominate")
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    require(persisted == 0, s"training loops must leave no cached state, found $persisted")
+    f"""{"mode":"train","n_logreg":$nLr,"logreg_sec_5r":$t5%.1f,"logreg_sec_10r":$t10%.1f,"logreg_sec_per_round":${t10 / 10}%.2f,"w10":[${w10.map(x => f"$x%.4f").mkString(",")}],"n_pca":$nPca,"pca_sec_3r":$p3%.1f,"pca_sec_6r":$p6%.1f,"pca_sec_per_round":${p6 / 6}%.2f,"pca_top_loading":${r6._2(0)}%.4f,"pca_eigval":${r6._3}%.2f,"live_persisted_rdds":$persisted,"cpus":$cpus}"""
   }
 
   /** PageRank loop at volume: the property under test is FLAT per-round
@@ -1520,84 +1309,14 @@ object Scale {
     * non-uniform degrees (a uniform permutation graph fixpoints at round
     * 1 and the loop exits early — the spec caught that once already).
     */
-  /** Driver-state training loops at volume: batch-GD logistic regression
-    * (`logreg_train`'s `trainWeights`) over nine-figure feature rows and
-    * PCA power iteration (`pca_power`'s `pcaPowerLoop`) over seven-figure
-    * 64-dim vectors. The loops' scale contract — ALL state is an
-    * O(features)/O(dim) driver-side literal vector, nothing cached or
-    * checkpointed — predicts (a) per-round wall time is FLAT (doubling
-    * rounds doubles total), (b) the block manager holds ZERO frames after
-    * any number of rounds, and (c) a re-run is bit-identical. This mode
-    * measures (a), asserts (b) and (c), and prints all three.
-    */
-  private def trainMain(args: Array[String]): Unit = {
-    val nLr = if (args.nonEmpty) args(0).toLong else 100000000L
-    val nPca = if (args.length > 1) args(1).toLong else 1000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-    def time[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-    // --- logreg: separable-ish synthetic features, y = [2·x1 + x2/2 > 0]
-    // (plain `range` — already evenly partitioned; a repartition here
-    // would bill a synthetic-data shuffle to every round)
-    val feats = spark.range(0L, nLr, 1L, cpus.toInt * 2)
-      .select(lit(1.0d).as("x0"),
-        round(pmod(xxhash64(col("id"), lit(3)), lit(1000)).cast("double")
-          / 500.0d - 1.0d, 6).as("x1"),
-        round(pmod(xxhash64(col("id"), lit(5)), lit(1000)).cast("double")
-          / 500.0d - 1.0d, 6).as("x2"))
-      .select(when(col("x1") * 2.0d + col("x2") * 0.5d > 0, 1.0d)
-        .otherwise(0.0d).as("y"), col("x0"), col("x1"), col("x2"))
-    ops.Learn.trainWeights(feats, Seq("x0", "x1", "x2"), 1, 1.0) // warm
-    val (w5, t5) = time(ops.Learn.trainWeights(feats, Seq("x0", "x1", "x2"), 5, 1.0))
-    val (w10, t10) = time(ops.Learn.trainWeights(feats, Seq("x0", "x1", "x2"), 10, 1.0))
-    val (w5b, _) = time(ops.Learn.trainWeights(feats, Seq("x0", "x1", "x2"), 5, 1.0))
-    require(w5.toSeq == w5b.toSeq, "re-run must be bit-identical")
-    require(w10(1) > w5(1) && w5(1) > 0, "x1 weight must keep growing")
-    // --- pca: 64-dim vectors, variance planted on dim 0
-    val corpus = spark.range(0L, nPca, 1L, cpus.toInt * 2)
-      .select(col("id").as("vec_id"),
-        transform(sequence(lit(0), lit(63)), j =>
-          when(j === 0,
-            pmod(xxhash64(col("id")), lit(4000)).cast("double") / 100.0d - 20.0d)
-            .otherwise(pmod(xxhash64(col("id"), j), lit(200)).cast("double")
-              / 100.0d - 1.0d).cast("float")).as("embedding"))
-    ops.Similarity.pcaPowerLoop(corpus, 1, 64) // warm
-    val (r3, p3) = time(ops.Similarity.pcaPowerLoop(corpus, 3, 64))
-    val (r6, p6) = time(ops.Similarity.pcaPowerLoop(corpus, 6, 64))
-    require(math.abs(r6._2(0)) > 0.99, "planted axis must dominate")
-    val persisted = spark.sparkContext.getPersistentRDDs.size
-    require(persisted == 0, s"training loops must leave no cached state, found $persisted")
-    println(f"""{"mode":"train","n_logreg":$nLr,"logreg_sec_5r":$t5%.1f,"logreg_sec_10r":$t10%.1f,"logreg_sec_per_round":${t10 / 10}%.2f,"w10":[${w10.map(x => f"$x%.4f").mkString(",")}],"n_pca":$nPca,"pca_sec_3r":$p3%.1f,"pca_sec_6r":$p6%.1f,"pca_sec_per_round":${p6 / 6}%.2f,"pca_top_loading":${r6._2(0)}%.4f,"pca_eigval":${r6._3}%.2f,"live_persisted_rdds":$persisted,"cpus":$cpus}""")
-    spark.stop()
-  }
-
-  private def pagerankMain(args: Array[String]): Unit = {
+  private def pagerankMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val nEdges = if (args.nonEmpty) args(0).toLong else 20000000L
     val nNodes = math.max(nEdges / 20L, 1000L)
     val iters = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
     // hash-mixed src; dst skewed by squaring the hash range so degrees
     // vary by orders of magnitude (hubs + leaves, the web-graph shape)
     val edges = spark.range(nEdges)
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .select(pmod(xxhash64(col("id")), lit(nNodes)).as("src"),
         pmod(pmod(xxhash64(col("id"), lit(7)), lit(nNodes)) *
           pmod(xxhash64(col("id"), lit(13)), lit(nNodes)), lit(nNodes)).as("dst"))
@@ -1607,20 +1326,9 @@ object Scale {
     val total = (System.nanoTime() - t0) / 1e9
     val persisted = spark.sparkContext.getPersistentRDDs.size
     val ds = deltas.map(d => f"$d%.2e").mkString("[\"", "\",\"", "\"]")
-    println(f"""{"mode":"pagerank","n_edges":$nEdges,"n_nodes":$n,"rounds":$rounds,"total_sec":$total%.1f,"sec_per_round":${total / math.max(rounds, 1)}%.1f,"deltas":$ds,"live_persisted_rdds":$persisted,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"pagerank","n_edges":$nEdges,"n_nodes":$n,"rounds":$rounds,"total_sec":$total%.1f,"sec_per_round":${total / math.max(rounds, 1)}%.1f,"deltas":$ds,"live_persisted_rdds":$persisted,"cpus":$cpus}"""
   }
 
-  /** Heavy hitters at token-stream scale: the sketch-accelerated two-pass
-    * (`misra_gries` candidates → exact count on candidates) against the
-    * exact `groupBy(term).count` baseline, on a synthetic stream with a
-    * hot head over a large cold vocabulary. Both paths must produce the
-    * SAME exact answer — the run asserts it — so the comparison is purely
-    * about plan cost. The structural difference the numbers evidence: the
-    * baseline's shuffle carries every distinct term a map task saw
-    * (~vocabulary-sized at scale), the sketch path shuffles k rows per
-    * task, then ≤ k distinct keys.
-    */
   /** Exact quantiles of a NEAR-UNIQUE measure at nine-figure row counts —
     * the workload where the histogram-CDF path degenerates (its shuffle
     * carries one row per distinct value ≈ one per row). The kll_sketch
@@ -1632,28 +1340,15 @@ object Scale {
     * sketch idea (GK-style) but its answer is approximate, while the
     * engine's second pass buys back exactness for one more columnar scan.
     */
-  private def kllMain(args: Array[String]): Unit = {
+  private def kllMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 200000000L
     val k = if (args.length > 1) args(1).toInt else 8192
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     // Map-only generation, ~uniform over a 1e12 domain → ≈99.99% of the
     // 2e8 values are unique: the adversarial case for value-keyed CDFs.
-    def vals = spark.range(0L, n, 1L, cpus.toInt * 2)
+    def vals = spark.range(0L, n, 1L, cpus * 2)
       .select(pmod(xxhash64(col("id")), lit(1000000000000L))
         .cast("double").as("x"))
-
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
 
     val qs = Seq("p50" -> 0.5, "p90" -> 0.9, "p99" -> 0.99, "p999" -> 0.999)
     var got: Map[String, Double] = null
@@ -1686,7 +1381,7 @@ object Scale {
     // WEIGHTED phase: every row carries weight 1+(id mod 37) (total mass
     // ≈ 19n) — the form percentile_approx cannot express at all. Answers
     // proven exact against WEIGHTED true ranks in one more O(1)-state scan.
-    def wvals = spark.range(0L, n, 1L, cpus.toInt * 2)
+    def wvals = spark.range(0L, n, 1L, cpus * 2)
       .select(pmod(xxhash64(col("id")), lit(1000000000000L))
         .cast("double").as("x"),
         (pmod(col("id"), lit(37L)) + 1L).as("w"))
@@ -1711,8 +1406,7 @@ object Scale {
     }
 
     val rate = (n / math.max(kllSec, 1e-9)).toLong
-    println(f"""{"mode":"kll","n":$n,"k":$k,"exact_two_pass_sec":$kllSec%.1f,"builtin_approx_sec":$approxSec%.1f,"weighted_exact_sec":$wSec%.1f,"weighted_mass":$totalW,"rows_per_sec":$rate,"all_exact":true,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"kll","n":$n,"k":$k,"exact_two_pass_sec":$kllSec%.1f,"builtin_approx_sec":$approxSec%.1f,"weighted_exact_sec":$wSec%.1f,"weighted_mass":$totalW,"rows_per_sec":$rate,"all_exact":true,"cpus":$cpus}"""
   }
 
   /** Grouped exact quantiles under GROUP SKEW — the per-group isolation
@@ -1725,36 +1419,23 @@ object Scale {
     * giant group grows its own levels, never its neighbors' error. Every
     * answer is rank-check-proven exact in one final O(groups)-state scan.
     */
-  private def kllSkewMain(args: Array[String]): Unit = {
+  private def kllSkewMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 100000000L
     val nSmall = if (args.length > 1) args(1).toInt else 20
     val k = 2048
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     // 100 weight buckets → "giant", 1 each → "small_i"; each group's
     // values sit on its own scale (gidx·1e6 offset) so cross-group
     // contamination would be unmissable. Map-only generation.
     val weights = (100 + nSmall).toLong
     val gidx = pmod(xxhash64(col("id"), lit(3L)), lit(weights))
-    def rows = spark.range(0L, n, 1L, cpus.toInt * 2)
+    def rows = spark.range(0L, n, 1L, cpus * 2)
       .select(
         when(gidx < 100L, lit("giant"))
           .otherwise(concat(lit("small_"), gidx - 99L)).as("g"),
         (when(gidx < 100L, lit(0L)).otherwise(gidx - 99L) * lit(1000000L) +
           pmod(xxhash64(col("id"), lit(9L)), lit(1000000L)))
           .cast("double").as("x"))
-
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
 
     val qs = Seq("p50" -> 0.5, "p99" -> 0.99)
     var got: Array[(String, String, Double)] = null
@@ -1790,40 +1471,36 @@ object Scale {
         s"$g $nm=$v leaked off its value scale")
     }
     val rate = (n / math.max(sec, 1e-9)).toLong
-    println(f"""{"mode":"kllskew","n":$n,"n_groups":${nSmall + 1},"giant_share":${100.0 / weights}%.2f,"k":$k,"grouped_exact_sec":$sec%.1f,"rows_per_sec":$rate,"all_exact":true,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"kllskew","n":$n,"n_groups":${nSmall + 1},"giant_share":${100.0 / weights}%.2f,"k":$k,"grouped_exact_sec":$sec%.1f,"rows_per_sec":$rate,"all_exact":true,"cpus":$cpus}"""
   }
 
-  private def hhMain(args: Array[String]): Unit = {
+  /** Heavy hitters at token-stream scale: the sketch-accelerated two-pass
+    * (`misra_gries` candidates → exact count on candidates) against the
+    * exact `groupBy(term).count` baseline, on a synthetic stream with a
+    * hot head over a large cold vocabulary. Both paths must produce the
+    * SAME exact answer — the run asserts it — so the comparison is purely
+    * about plan cost. The structural difference the numbers evidence: the
+    * baseline's shuffle carries every distinct term a map task saw
+    * (~vocabulary-sized at scale), the sketch path shuffles k rows per
+    * task, then ≤ k distinct keys.
+    */
+  private def hhMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 100000000L
     val coldVocab = if (args.length > 1) args(1).toLong else 10000000L
     val nHot = 100L
     val k = 4096
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     // ~50% of arrivals drawn from 100 hot terms, the rest spread over a
     // cold vocabulary large enough that distinct-term state dwarfs k.
     // Map-only generation (ranged partitions, no repartition shuffle): the
     // term stream stands in for a parquet scan, so each path pays only ITS
     // OWN aggregation machinery on top of the scan.
-    def toks = spark.range(0L, n, 1L, cpus.toInt * 2)
+    def toks = spark.range(0L, n, 1L, cpus * 2)
       .select(when(pmod(xxhash64(col("id")), lit(2L)) === 0L,
           concat(lit("hot"), pmod(xxhash64(col("id"), lit(1L)), lit(nHot))))
         .otherwise(
           concat(lit("cold"), pmod(xxhash64(col("id"), lit(2L)), lit(coldVocab))))
         .as("term"))
-
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
 
     val minCount = n / 1000L // hot terms sit ~5e-3·n, 5x above
     var sketchRows: Array[(String, Long)] = null
@@ -1841,8 +1518,7 @@ object Scale {
     require(sketchRows.toSet == exactRows.toSet,
       s"sketch path diverged: ${sketchRows.length} vs ${exactRows.length} rows")
     val rate = (n / math.max(sketchSec, 1e-9)).toLong
-    println(f"""{"mode":"hh","n_tokens":$n,"cold_vocab":$coldVocab,"k":$k,"n_heavy":${exactRows.length},"sketch_two_pass_sec":$sketchSec%.1f,"exact_groupby_sec":$exactSec%.1f,"tokens_per_sec":$rate,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"hh","n_tokens":$n,"cold_vocab":$coldVocab,"k":$k,"n_heavy":${exactRows.length},"sketch_two_pass_sec":$sketchSec%.1f,"exact_groupby_sec":$exactSec%.1f,"tokens_per_sec":$rate,"cpus":$cpus}"""
   }
 
   /** Grouped heavy hitters under SOURCE SKEW — the per-group
@@ -1857,21 +1533,13 @@ object Scale {
     * Asserted against the exact `groupBy(source, term)` baseline AND
     * against the expected per-source hot-term count.
     */
-  private def hhSkewMain(args: Array[String]): Unit = {
+  private def hhSkewMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 100000000L
     val nSmall = if (args.length > 1) args(1).toInt else 20
     val nHot = 50L
     val k = 4096
     val coldVocab = 20000000L
     val minCount = 100L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftFunctions.register(spark)
 
     // 100 weight buckets → "giant", 1 bucket each → "small_i": the giant
@@ -1879,7 +1547,7 @@ object Scale {
     // nHot per-source hot terms, 50% a large shared cold vocabulary (the
     // distinct-state pressure). Map-only generation, no shuffle.
     val weights = (100 + nSmall).toLong
-    def toks = spark.range(0L, n, 1L, cpus.toInt * 2)
+    def toks = spark.range(0L, n, 1L, cpus * 2)
       .select(
         when(pmod(xxhash64(col("id"), lit(3L)), lit(weights)) < 100L,
             lit("giant"))
@@ -1891,11 +1559,6 @@ object Scale {
           .otherwise(concat(lit("cold"),
             pmod(xxhash64(col("id"), lit(2L)), lit(coldVocab))))
           .as("term"))
-
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
 
     var sketchRows: Array[(String, String, Long)] = null
     var exactRows: Array[(String, String, Long)] = null
@@ -1925,21 +1588,20 @@ object Scale {
     require(perSource.size == nSmall + 1 && starved.isEmpty,
       s"per-source isolation violated: $starved (expected $nHot each over ${nSmall + 1} sources)")
     val rate = (n / math.max(sketchSec, 1e-9)).toLong
-    println(f"""{"mode":"hhskew","n_tokens":$n,"n_sources":${nSmall + 1},"giant_share":${100.0 / weights}%.2f,"k":$k,"n_heavy":${sketchRows.length},"per_source_hot":$nHot,"sketch_two_pass_sec":$sketchSec%.1f,"exact_groupby_sec":$exactSec%.1f,"tokens_per_sec":$rate,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"hhskew","n_tokens":$n,"n_sources":${nSmall + 1},"giant_share":${100.0 / weights}%.2f,"k":$k,"n_heavy":${sketchRows.length},"per_source_hot":$nHot,"sketch_two_pass_sec":$sketchSec%.1f,"exact_groupby_sec":$exactSec%.1f,"tokens_per_sec":$rate,"cpus":$cpus}"""
   }
 
-  private def rangeMain(args: Array[String]): Unit = {
+  /** Interval-containment range join at volume — evidence that the
+    * day-bucketized equi-join restatement ([[graft.ops.RangeJoin]], the
+    * verified `range_join` / `range_join_auto` queries) scales where the
+    * naive BNLJ cannot: 50M points × 1M intervals is 5·10^13 pair
+    * comparisons naively; bucketized it is a linear-volume hash join.
+    * Every point hits ~avg-interval-coverage intervals, so the matched
+    * row count is checkable against the expected density.
+    */
+  private def rangeMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val nPts = if (args.nonEmpty) args(0).toLong else 50000000L
     val nIv = if (args.length > 1) args(1).toLong else 1000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     // 4-year span, 0-10 min interval widths: expected intervals covering a
     // random point = nIv · avgWidth / span ≈ 2.4 at the defaults, so the
@@ -1950,7 +1612,7 @@ object Scale {
     val spanSec = 1461L * 24 * 3600
     val baseUs = 1767225600000000L // 2026-01-01 UTC
     def points = spark.range(nPts)
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .select(
         col("id").as("point_id"),
         timestamp_micros(lit(baseUs) +
@@ -1964,21 +1626,13 @@ object Scale {
       .withColumn("hi", timestamp_micros(
         unix_micros(col("lo")) + pmod(col("interval_id") * 16807L, lit(600L)) * 1000000L))
 
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-
     var matched = 0L
     val joinSec = time {
       matched = ops.RangeJoin.pointInInterval(points, intervals, "ts", "lo", "hi").count()
     }
-    val aggSec = time {
-      ops.RangeJoin.countSumByInterval(points, intervals, "ts", "lo", "hi", col("value"))
-        .write.format("noop").mode("overwrite").save()
-    }
-    println(f"""{"mode":"range","n_points":$nPts,"n_intervals":$nIv,"matched_rows":$matched,"point_in_interval_sec":$joinSec%.1f,"count_sum_sec":$aggSec%.1f,"cpus":$cpus}""")
-    spark.stop()
+    val aggSec = time(noop(
+      ops.RangeJoin.countSumByInterval(points, intervals, "ts", "lo", "hi", col("value"))))
+    f"""{"mode":"range","n_points":$nPts,"n_intervals":$nIv,"matched_rows":$matched,"point_in_interval_sec":$joinSec%.1f,"count_sum_sec":$aggSec%.1f,"cpus":$cpus}"""
   }
 
   /** Structured Streaming at volume: the watermarked hourly-window
@@ -1990,20 +1644,12 @@ object Scale {
     * run evidences the streaming machinery (file source, state store,
     * micro-batch planner) at corpus scale, not just at the fixture size.
     */
-  private def streamMain(args: Array[String]): Unit = {
+  private def streamMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 100000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val users = math.max(1L, n / 200)
     val dir = java.nio.file.Files.createTempDirectory("graft_stream_scale").toString
-    val events = synthEvents(spark, n, users, cpus.toInt)
+    val events = synthEvents(spark, n, users, cpus)
     val genSec = {
       val t0 = System.nanoTime()
       events.write.mode("overwrite").parquet(dir)
@@ -2017,7 +1663,7 @@ object Scale {
       .option("maxFilesPerTrigger", math.max(1, nFiles / 8))
       .parquet(dir)
     val result = streaming.StreamOps.runToCompletion(spark,
-      streaming.StreamOps.hourlyStatsStream(stream), statePartitions = cpus.toInt)
+      streaming.StreamOps.hourlyStatsStream(stream), statePartitions = cpus)
       .cache()
     val rows = result.count()
     val streamSec = (System.nanoTime() - t0) / 1e9
@@ -2028,8 +1674,7 @@ object Scale {
     val batch = streaming.StreamOps.hourlyStatsStream(spark.read.parquet(dir))
     val diff = result.unionAll(batch).groupBy(result.columns.map(col): _*)
       .count().where(col("count") =!= 2).count()
-    println(f"""{"mode":"stream","n_events":$n,"n_files":$nFiles,"hourly_rows":$rows,"batch_parity":${diff == 0},"stream_sec":$streamSec%.1f,"gen_write_sec":$genSec%.1f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"stream","n_events":$n,"n_files":$nFiles,"hourly_rows":$rows,"batch_parity":${diff == 0},"stream_sec":$streamSec%.1f,"gen_write_sec":$genSec%.1f,"cpus":$cpus}"""
   }
 
   /** Synthetic corpus shared by the `dedup` and `spans` modes: 12 tokens
@@ -2058,21 +1703,16 @@ object Scale {
       .select(col("id").as("doc_id"), concat_ws(" ", toks: _*).as("text"))
   }
 
-  private def dedupMain(args: Array[String]): Unit = {
+  /** `dedup` mode drives the MinHash-LSH near-dup pipeline (the same
+    * operators as the `minhash_pairs` query, same k/bands) over synthetic
+    * documents with a planted 5% near-duplicate rate — each planted doc
+    * copies its base's 12 tokens with exactly one perturbed, so candidate
+    * recall is testable and the hashing/banding/self-join cost is real.
+    */
+  private def dedupMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 5000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
-    def docs = synthDocs(spark, n, cpus.toInt)
-
-    // warm-up off the clock
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
+    def docs = synthDocs(spark, n, cpus)
 
     val t0 = System.nanoTime()
     // same operators and parameters as the verified minhash_pairs query
@@ -2080,8 +1720,7 @@ object Scale {
     val found = pairs.count()
     val sec = (System.nanoTime() - t0) / 1e9
     val planted = n / 20
-    println(f"""{"mode":"dedup","n_docs":$n,"planted_neardups":$planted,"lsh_pairs_found":$found,"seconds":$sec%.1f,"docs_per_sec":${n / sec}%.0f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"dedup","n_docs":$n,"planted_neardups":$planted,"lsh_pairs_found":$found,"seconds":$sec%.1f,"docs_per_sec":${n / sec}%.0f,"cpus":$cpus}"""
   }
 
   /** lex_min/lex_max vs the built-in min/max SortAggregate fallback, at
@@ -2093,26 +1732,14 @@ object Scale {
     * hash map); the typed-imperative path is one O(1)-state comparison
     * per row with map-side combine.
     */
-  private def lexMain(args: Array[String]): Unit = {
+  private def lexMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 100000000L
     val nKeys = if (args.length > 1) args(1).toLong else n / 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftFunctions.register(spark)
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-    def rows = spark.range(n).repartition(cpus.toInt * 2)
+    def rows = spark.range(n).repartition(cpus * 2)
       .select(pmod(xxhash64(col("id")), lit(nKeys)).as("k"),
         pmod(xxhash64(col("id"), lit(3)), lit(1000000L)).as("doc_id"),
         pmod(xxhash64(col("id"), lit(5)), lit(64L)).as("chunk_id"))
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     var cs = 0L
     val builtinSec = time {
       cs = rows.groupBy(col("k"))
@@ -2128,8 +1755,7 @@ object Scale {
         .head().getLong(0)
     }
     require(cs == cs2, s"lex_min diverged from min(struct): $cs vs $cs2")
-    println(f"""{"mode":"lex","n_rows":$n,"n_keys":$nKeys,"builtin_sortagg_sec":$builtinSec%.1f,"lex_objhash_sec":$lexSec%.1f,"checksum":$cs,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"lex","n_rows":$n,"n_keys":$nKeys,"builtin_sortagg_sec":$builtinSec%.1f,"lex_objhash_sec":$lexSec%.1f,"checksum":$cs,"cpus":$cpus}"""
   }
 
   /** Incremental near-dup at volume: build the persisted signature store
@@ -2142,39 +1768,26 @@ object Scale {
     * (same generator, offset ids), so found candidates ≥ batch size is
     * the correctness signal riding along.
     */
-  private def incrMain(args: Array[String]): Unit = {
+  private def incrMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val nBase = if (args.nonEmpty) args(0).toLong else 2000000L
     val nBatch = if (args.length > 1) args(1).toLong else 20000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
 
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     var store: org.apache.spark.sql.DataFrame = null
     var storeRows = 0L
     val buildSec = time {
-      store = ops.Dedup.signatureStore(synthDocs(spark, nBase, cpus.toInt),
+      store = ops.Dedup.signatureStore(synthDocs(spark, nBase, cpus),
         k = 6, bands = 3, shingleN = 3).localCheckpoint()
       storeRows = store.count()
     }
     // the incoming batch re-uses the base generator on an id slice, so
     // every batch doc has an exact-duplicate base doc to find
-    val batch = synthDocs(spark, nBatch, cpus.toInt)
+    val batch = synthDocs(spark, nBatch, cpus)
     var found = 0L
     val probeSec = time {
       found = ops.Dedup.incrNearDup(store, batch, k = 6, bands = 3,
         shingleN = 3).count()
     }
-    println(f"""{"mode":"incr","n_base":$nBase,"n_batch":$nBatch,"store_rows":$storeRows,"build_sec":$buildSec%.1f,"probe_sec":$probeSec%.1f,"candidates":$found,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"incr","n_base":$nBase,"n_batch":$nBatch,"store_rows":$storeRows,"build_sec":$buildSec%.1f,"probe_sec":$probeSec%.1f,"candidates":$found,"cpus":$cpus}"""
   }
 
   /** Substring-level dup-span statistic at volume: [[graft.ops.TextStats
@@ -2187,19 +1800,10 @@ object Scale {
     * dup_frac > 0 — the flagged count is the correctness signal riding
     * along with the throughput number.
     */
-  private def spansMain(args: Array[String]): Unit = {
+  private def spansMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 2000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
-    def docs = synthDocs(spark, n, cpus.toInt)
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
+    def docs = synthDocs(spark, n, cpus)
 
     val t0 = System.nanoTime()
     val agg = ops.TextStats.dupSpans(docs, 8)
@@ -2208,20 +1812,9 @@ object Scale {
       .collect()(0)
     val sec = (System.nanoTime() - t0) / 1e9
     val (nDocs, flagged) = (agg.getLong(0), agg.getLong(1))
-    println(f"""{"mode":"spans","n_docs":$n,"docs_with_grams":$nDocs,"docs_flagged":$flagged,"planted_docs":${n / 20},"seconds":$sec%.1f,"docs_per_sec":${n / sec}%.0f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"spans","n_docs":$n,"docs_with_grams":$nDocs,"docs_flagged":$flagged,"planted_docs":${n / 20},"seconds":$sec%.1f,"docs_per_sec":${n / sec}%.0f,"cpus":$cpus}"""
   }
 
-  /** `sparse` mode: [[graft.ops.TextStats.sparseKnn]] at corpus volume.
-    * Synthetic docs of 24 tokens drawn from a power-law vocabulary
-    * (token id = floor(V·u³) over a hash-uniform u, so the head is
-    * stopword-dense and the tail is sparse, like real text). Times the
-    * WHOLE op — postings build + idf + norms + broadcast search — and
-    * reports the result count so the run can't be dead-code-eliminated.
-    * The interesting scale fact: search cost tracks the POSTINGS OF THE
-    * QUERIED TERMS, not the corpus, because the broadcast query-term
-    * join prunes everything else before the (query, doc) aggregate.
-    */
   /** `perplexity` mode: the CCNet-style quality gate at 10⁸ tokens over
     * the STAGE-ONCE tokenized corpus ([[graft.ops.TextStage]]). Measures
     * the three-way split a production run has: one tokenize+stage pass,
@@ -2232,18 +1825,9 @@ object Scale {
     * Asserts the gate flags a sane fraction (> 0, < 20%) and that no
     * cached state survives the run.
     */
-  private def perplexityMain(args: Array[String]): Unit = {
+  private def perplexityMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 4000000L
     val vocab = if (args.length > 1) args(1).toLong else 100000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
     val nTok = 25
     // zipf-ish vocabulary (u³ skews mass to small ids) + 1% planted
     // "token soup" docs drawing uniformly from the whole vocabulary —
@@ -2256,7 +1840,7 @@ object Scale {
         when(col("id") % 100 === 0, soup)
           .otherwise(floor(u * u * u * vocab).cast("long")).cast("string"))
     }
-    def docs = spark.range(n).repartition(cpus.toInt * 2)
+    def docs = spark.range(n).repartition(cpus * 2)
       .select(col("id").as("doc_id"),
         concat(lit("s"), (col("id") % 8).cast("string")).as("source"),
         concat_ws(" ", toks: _*).as("text"))
@@ -2278,29 +1862,29 @@ object Scale {
     require(flagged > 0 && flagged < n / 5, s"gate flagged $flagged of $n")
     require(div.length == 8, s"expected 8 sources, got ${div.length}")
     val cached = spark.sparkContext.getPersistentRDDs.size
-    println(f"""{"mode":"perplexity","n_docs":$n,"n_tokens":$nTokens,"vocab":$vocab,"stage_seconds":$tStage%.1f,"ppl_seconds":$tPpl%.1f,"div_seconds":$tDiv%.1f,"flagged":$flagged,"cached_rdds":$cached,"tokens_per_sec":${nTokens / (tStage + tPpl + tDiv)}%.0f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"perplexity","n_docs":$n,"n_tokens":$nTokens,"vocab":$vocab,"stage_seconds":$tStage%.1f,"ppl_seconds":$tPpl%.1f,"div_seconds":$tDiv%.1f,"flagged":$flagged,"cached_rdds":$cached,"tokens_per_sec":${nTokens / (tStage + tPpl + tDiv)}%.0f,"cpus":$cpus}"""
   }
 
-  private def sparseMain(args: Array[String]): Unit = {
+  /** `sparse` mode: [[graft.ops.TextStats.sparseKnn]] at corpus volume.
+    * Synthetic docs of 24 tokens drawn from a power-law vocabulary
+    * (token id = floor(V·u³) over a hash-uniform u, so the head is
+    * stopword-dense and the tail is sparse, like real text). Times the
+    * WHOLE op — postings build + idf + norms + broadcast search — and
+    * reports the result count so the run can't be dead-code-eliminated.
+    * The interesting scale fact: search cost tracks the POSTINGS OF THE
+    * QUERIED TERMS, not the corpus, because the broadcast query-term
+    * join prunes everything else before the (query, doc) aggregate.
+    */
+  private def sparseMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 2000000L
     val vocab = if (args.length > 1) args(1).toLong else 200000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
     val nTok = 24
     val toks = (0 until nTok).map { j =>
       val u = pmod(xxhash64(col("id"), lit(j)), lit(1L << 20))
         .cast("double") / (1L << 20).toDouble
       concat(lit("t"), floor(u * u * u * vocab).cast("long").cast("string"))
     }
-    def docs = spark.range(n).repartition(cpus.toInt * 2)
+    def docs = spark.range(n).repartition(cpus * 2)
       .select(col("id").as("doc_id"), concat_ws(" ", toks: _*).as("text"))
     // query the dense head, the mid-range, and the sparse tail
     val queries = Seq(
@@ -2311,8 +1895,7 @@ object Scale {
     val res = ops.TextStats.sparseKnn(docs, queries, k = 10).collect()
     val sec = (System.nanoTime() - t0) / 1e9
     require(res.nonEmpty && res.forall(_.getDouble(3) > 0), "empty/zero results")
-    println(f"""{"mode":"sparse","n_docs":$n,"vocab":$vocab,"tokens_per_doc":$nTok,"result_rows":${res.length},"seconds":$sec%.1f,"docs_per_sec":${n / sec}%.0f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"sparse","n_docs":$n,"vocab":$vocab,"tokens_per_doc":$nTok,"result_rows":${res.length},"seconds":$sec%.1f,"docs_per_sec":${n / sec}%.0f,"cpus":$cpus}"""
   }
 
   /** `shard` mode: [[graft.ops.TextStats.shuffleShard]] at epoch-export
@@ -2322,19 +1905,10 @@ object Scale {
     * ranking costs per-shard independent sorts only (wall time scales
     * with n/shards per task, never a global sort).
     */
-  private def shardMain(args: Array[String]): Unit = {
+  private def shardMain(args: Array[String]): Unit = leg { (spark, cpus) =>
     val n = if (args.nonEmpty) args(0).toLong else 100000000L
     val shards = if (args.length > 1) args(1).toInt else 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-    def rows = spark.range(n).repartition(cpus.toInt * 2)
+    def rows = spark.range(n).repartition(cpus * 2)
       .select(col("id").cast("string").as("doc_id"))
     val t0 = System.nanoTime()
     val sizes = ops.TextStats.shuffleShard(rows, "doc_id", "epoch1", shards)
@@ -2344,7 +1918,6 @@ object Scale {
     require(sizes.length == shards && sizes.forall(r => r.getLong(1) == r.getLong(2)),
       "every shard present, positions contiguous to the shard size")
     val (mn, mx) = (sizes.map(_.getLong(1)).min, sizes.map(_.getLong(1)).max)
-    println(f"""{"mode":"shard","n_rows":$n,"shards":$shards,"min_shard":$mn,"max_shard":$mx,"balance":${mx.toDouble / mn}%.4f,"seconds":$sec%.1f,"rows_per_sec":${n / sec}%.0f,"cpus":$cpus}""")
-    spark.stop()
+    f"""{"mode":"shard","n_rows":$n,"shards":$shards,"min_shard":$mn,"max_shard":$mx,"balance":${mx.toDouble / mn}%.4f,"seconds":$sec%.1f,"rows_per_sec":${n / sec}%.0f,"cpus":$cpus}"""
   }
 }

@@ -77,9 +77,11 @@ object Dedup {
     */
   def minhashSignatures(docs: DataFrame, k: Int, shingleN: Int): DataFrame = {
     // Hash-heavy map stage: fan a few-split scan out first, so the
-    // per-shingle hashing uses every core.
+    // per-shingle hashing uses every core. Only the two columns read
+    // below cross that shuffle.
     val sh = shingles(tokens(col("text")), shingleN)
-    graft.spark.Adaptive.fanOut(docs).select(col("doc_id"), sh.as("sh"))
+    graft.spark.Adaptive.fanOut(docs.select(col("doc_id"), col("text")))
+      .select(col("doc_id"), sh.as("sh"))
       .where(size(col("sh")) > 0)
       .select(col("doc_id"), minhash31(col("sh"), k).as("sig"))
   }

@@ -884,32 +884,6 @@ object Similarity {
           .as("recall_res"))
   }
 
-  /** Declarative restatement of [[pqEncode]]'s per-row encoding —
-    * `array_min` over (distance, index) structs with explicit
-    * left-associated squared-difference sums. Value-equivalent to the
-    * native [[graft.functions.PqCodes]] path (pinned by
-    * `NativeExprEquivalenceSpec`) but ~1k expression nodes per row; kept
-    * as the executable specification, not the production path.
-    */
-  def pqEncodeDeclarative(corpus: DataFrame, subs: Int, k: Int,
-                          idCol: String = "vec_id",
-                          embCol: String = "embedding"): DataFrame = {
-    val (c, cents) = pqPrep(corpus, subs, k, idCol, embCol)
-    val subDim = cents.head.length / subs
-    val codeCols = (0 until subs).map { s =>
-      val structs = cents.indices.map { j =>
-        val dist = (0 until subDim).map { i =>
-          val pos = s * subDim + i
-          val diff = element_at(col("e"), pos + 1) - lit(cents(j)(pos))
-          diff * diff
-        }.reduceLeft(_ + _)
-        struct(dist.as("d"), lit(j.toLong).as("j"))
-      }
-      array_min(array(structs: _*)).getField("j").as(s"c$s")
-    }
-    c.select(col(idCol) +: codeCols: _*)
-  }
-
   /** Scalar (uint8) quantization encode: each dimension affinely mapped
     * to 0..255 against the corpus's per-dimension [min, max] — the 4×
     * compression rung between raw floats and product quantization (PQ
@@ -1058,8 +1032,8 @@ object Similarity {
   /** Shared PQ preparation: normalized corpus + deterministic hash-ranked
     * codebook (the same bounded selection the IVF coarse quantizer uses).
     */
-  private def pqPrep(corpus: DataFrame, subs: Int, k: Int,
-                     idCol: String, embCol: String): (DataFrame, Array[Array[Double]]) = {
+  private[graft] def pqPrep(corpus: DataFrame, subs: Int, k: Int,
+                            idCol: String, embCol: String): (DataFrame, Array[Array[Double]]) = {
     val cents = pqCodebook(corpus, k, idCol, embCol)
     require(cents.head.length % subs == 0,
       s"dim ${cents.head.length} not divisible into $subs sub-vectors")

@@ -124,7 +124,7 @@ object Sorts {
       SortOrder(attr, Ascending)
     }
     GraftColumnBridge.ofRows(spark,
-      graft.plans.HybridSortPlan(order, threshold, global = true, analyzed))
+      graft.plans.HybridSortPlan(order, threshold, analyzed))
   }
 
   /** Print sink (reference O14: the stdout dumps at

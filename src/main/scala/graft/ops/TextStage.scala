@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Stage-once tokenized corpus: the regex tokenizer is the CPU-expensive
   * leg of every text-statistics operator, and the LM family
   * ([[TextStats.docPerplexity]] — five token/bigram aggregates,
-  * [[TextStats.bigramSurprisal]] — three, [[TextStats.sourceDivergence]],
-  * [[TextStats.unigramSurprisal]]) used to re-tokenize the corpus once
+  * [[TextStats.bigramSurprisalTk]] — three, [[TextStats.sourceDivergence]],
+  * [[TextStats.unigramSurprisalTk]]) used to re-tokenize the corpus once
   * PER AGGREGATE. A production pipeline tokenizes once, stages the token
   * stream to storage, and lets every consumer read the staged columnar
   * frame — this object is that staging layer.

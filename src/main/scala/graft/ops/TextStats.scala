@@ -268,7 +268,7 @@ object TextStats {
 
   /** The map-only (doc_id, dl, tf_0..tf_n) projection [[bm25]] scores —
     * exposed so a caller needing BOTH the ranking and another view of the
-    * same token statistics (e.g. [[ndcgAt]]'s relevance labels) can
+    * same token statistics (e.g. [[ndcgAtTk]]'s relevance labels) can
     * materialize it ONCE and scan the corpus once, instead of once per
     * consumer. ~`(terms+2)·8` bytes per doc — checkpoint-sized at any
     * corpus scale.
@@ -390,19 +390,6 @@ object TextStats {
       .select(col("doc_id"), col("rank"), col("term"), col("tfidf"))
   }
 
-  /** Unigram language-model surprisal per document — the model-based
-    * quality signal: train a unigram LM on the corpus itself (term counts
-    * over total tokens, one aggregate) and score each document by its
-    * mean per-token surprisal `-ln p(term)`. Boilerplate and templated
-    * text (common tokens) scores low; rare-token noise scores high —
-    * the distribution's tails are what a curation pass inspects.
-    *
-    * Scale shape: the LM "training" is one term-keyed hash-aggregate; the
-    * scoring join keys on term (tf rows, not token occurrences — each
-    * (doc, term) pair once). Per-term contributions are quantized to 6 dp
-    * and summed as exact DECIMALs so the doc score is independent of fold
-    * order — the float-sum determinism trap of distributed scoring.
-    */
   /** Pointwise-mutual-information collocations: adjacent token bigrams
     * scored by `ln(p(a,b) / (p(a) p(b)))` — high-PMI pairs are phrases
     * ("new york"), low-PMI pairs are coincidences; the collocation-mining
@@ -413,13 +400,9 @@ object TextStats {
     * candidate set BEFORE the two unigram-count joins, and the totals ride
     * along as broadcast one-row tables. PMI from integer counts rounds at
     * 6 dp after a fixed expression order — engine-portable like the
-    * TF-IDF scoring above.
+    * TF-IDF scoring above. Reads an already-tokenized `tk` frame — the
+    * stage-once path (see [[TextStage]]).
     */
-  def pmiBigrams(docs: DataFrame, minCount: Int): DataFrame =
-    pmiBigramsTk(docs.select(tokens(col("text")).as("tk")), minCount)
-
-  /** [[pmiBigrams]] over an already-tokenized `tk` frame — the stage-once
-    * path (see [[TextStage]]). */
   def pmiBigramsTk(tkDocs: DataFrame, minCount: Int): DataFrame = {
     val toks = tkDocs.select(col("tk"))
     val pairs = toks.select(explode(expr(
@@ -551,13 +534,9 @@ object TextStats {
     * k rows. The normal equations are written out explicitly (n·Σxy −
     * ΣxΣy over n·Σx² − (Σx)²) instead of `regr_slope` so any engine
     * computes the identical formula; rounding to 6 dp absorbs summation-
-    * order noise on the k-term sums.
+    * order noise on the k-term sums. Reads an already-tokenized `tk` frame
+    * — the stage-once path (see [[TextStage]]).
     */
-  def zipfFit(docs: DataFrame, k: Int): DataFrame =
-    zipfFitTk(docs.select(tokens(col("text")).as("tk")), k)
-
-  /** [[zipfFit]] over an already-tokenized `tk` frame — the stage-once
-    * path (see [[TextStage]]). */
   def zipfFitTk(tkDocs: DataFrame, k: Int): DataFrame = {
     val xy = vocabTopKTk(tkDocs, k).select(
       log(col("rank").cast("double")).as("x"),
@@ -595,15 +574,9 @@ object TextStats {
     * its labels (the corpus never shuffles); the ideal-DCG leg is a
     * bounded-heap top-k over the same checkpointed projection. Gains use the graded
     * form (2^rel − 1) and positions discount by ln(pos+1)/ln 2, written
-    * identically in the SQL oracle.
+    * identically in the SQL oracle. Reads an already-tokenized
+    * `(doc_id, tk)` frame — the stage-once path (see [[TextStage]]).
     */
-  def ndcgAt(docs: DataFrame, terms: Seq[String], k: Int,
-             k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    ndcgAtTk(docs.select(col("doc_id"), tokens(col("text")).as("tk")),
-      terms, k, k1, b)
-
-  /** [[ndcgAt]] over an already-tokenized `(doc_id, tk)` frame — the
-    * stage-once path (see [[TextStage]]). */
   def ndcgAtTk(tkDocs: DataFrame, terms: Seq[String], k: Int,
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // ONE corpus scan: the checkpointed tf projection feeds the bm25
@@ -771,24 +744,6 @@ object TextStats {
         round(col("hs").cast("double"), 6).as("entropy"))
   }
 
-  /** Per-document mean bigram surprisal `−ln p(w₂|w₁)` under the corpus
-    * bigram LM (`p(w₂|w₁) = c(w₁,w₂) / c(w₁,·)`, maximum likelihood over
-    * the corpus' own bigram stream) — the context-sensitive upgrade of
-    * [[unigramSurprisal]]: repetitive/templated text scores near zero,
-    * incoherent token soup scores high even when each token is common.
-    * The classic KenLM-style quality gate, restated engine-portably.
-    *
-    * Shape: one bigram explode feeds all three aggregates (per-doc tf,
-    * corpus bigram counts, prefix counts), each map-side combined; the two
-    * count joins run on the REDUCED bigram vocabulary, not the stream.
-    * Determinism: per-bigram surprisal is 6dp-quantized to DECIMAL before
-    * the tf-weighted sum, so accumulation order cannot perturb the mean
-    * (same contract as the unigram scorer). Documents with fewer than two
-    * tokens have no bigrams and drop out.
-    */
-  def bigramSurprisal(docs: DataFrame): DataFrame =
-    bigramSurprisalTk(docs.select(col("doc_id"), tokens(col("text")).as("tk")))
-
   /** The decimal sum `s` over the count `n` as a double, rounded to 6
     * places the way SQL engines round a double: scale by 10^6, round half
     * away from zero, scale back. Spark's `round(x, 6)` instead rounds the
@@ -799,9 +754,23 @@ object TextStats {
   private[graft] def mean6(s: Column, n: Column): Column =
     round(s.cast("double") / n * 1e6, 0) / 1e6
 
-  /** [[bigramSurprisal]] over an ALREADY-tokenized `(doc_id, tk)` frame —
-    * the stage-once path (see [[TextStage]]): all three aggregates read
-    * pre-split token arrays, the regex tokenizer never runs here.
+  /** Per-document mean bigram surprisal `−ln p(w₂|w₁)` under the corpus
+    * bigram LM (`p(w₂|w₁) = c(w₁,w₂) / c(w₁,·)`, maximum likelihood over
+    * the corpus' own bigram stream) — the context-sensitive upgrade of
+    * [[unigramSurprisalTk]]: repetitive/templated text scores near zero,
+    * incoherent token soup scores high even when each token is common.
+    * The classic KenLM-style quality gate, restated engine-portably.
+    *
+    * Shape: one bigram explode feeds all three aggregates (per-doc tf,
+    * corpus bigram counts, prefix counts), each map-side combined; the two
+    * count joins run on the REDUCED bigram vocabulary, not the stream.
+    * Determinism: per-bigram surprisal is 6dp-quantized to DECIMAL before
+    * the tf-weighted sum, so accumulation order cannot perturb the mean
+    * (same contract as the unigram scorer). Documents with fewer than two
+    * tokens have no bigrams and drop out. Reads an ALREADY-tokenized
+    * `(doc_id, tk)` frame — the stage-once path (see [[TextStage]]): all
+    * three aggregates read pre-split token arrays, the regex tokenizer
+    * never runs here.
     */
   def bigramSurprisalTk(tkDocs: DataFrame): DataFrame = {
     val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
@@ -947,12 +916,21 @@ object TextStats {
         (col("ppl") > col("mean_ppl") + lit(2.0d) * col("std_ppl")).as("flagged"))
   }
 
-  def unigramSurprisal(docs: DataFrame): DataFrame =
-    unigramSurprisalTk(
-      docs.select(col("doc_id"), tokens(col("text")).as("tk")))
-
-  /** [[unigramSurprisal]] over an already-tokenized `(doc_id, tk)` frame
-    * — the stage-once path (see [[TextStage]]). */
+  /** Unigram language-model surprisal per document — the model-based
+    * quality signal: train a unigram LM on the corpus itself (term counts
+    * over total tokens, one aggregate) and score each document by its
+    * mean per-token surprisal `-ln p(term)`. Boilerplate and templated
+    * text (common tokens) scores low; rare-token noise scores high —
+    * the distribution's tails are what a curation pass inspects.
+    *
+    * Scale shape: the LM "training" is one term-keyed hash-aggregate; the
+    * scoring join keys on term (tf rows, not token occurrences — each
+    * (doc, term) pair once). Per-term contributions are quantized to 6 dp
+    * and summed as exact DECIMALs so the doc score is independent of fold
+    * order — the float-sum determinism trap of distributed scoring.
+    * Reads an already-tokenized `(doc_id, tk)` frame — the stage-once
+    * path (see [[TextStage]]).
+    */
   def unigramSurprisalTk(tkDocs: DataFrame): DataFrame = {
     val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val tok = tkDocs.select(col("doc_id"), explode(col("tk")).as("term"))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, NullsFirst, SortOrder, SortPrefix, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.execution.{SortPrefixUtils, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types._
@@ -24,7 +24,7 @@ import graft.ops.HybridSort
   * (`/root/reference/QuickInsertionHeap.c:197-215`) — as a first-class
   * Catalyst *physical operator*, not just a rewrite to `orderBy`.
   *
-  * `global = true` declares `OrderedDistribution(order)` as the required
+  * The operator declares `OrderedDistribution(order)` as its required
   * child distribution, so `EnsureRequirements` inserts a range-partitioning
   * shuffle: Spark's sampled range scatter standing in for the reference's
   * root-computed `Scatterv` counts (`QuickInsertionHeap.c:164-187`). Each
@@ -82,8 +82,7 @@ import graft.ops.HybridSort
   * algorithm-level parity and as the engine's planner-extension showcase
   * (logical node + strategy + exec, injected via [[graft.GraftExtensions]]).
   */
-case class HybridSortPlan(order: Seq[SortOrder], threshold: Int,
-                          global: Boolean, child: LogicalPlan)
+case class HybridSortPlan(order: Seq[SortOrder], threshold: Int, child: LogicalPlan)
   extends UnaryNode {
   override def output: Seq[Attribute] = child.output
   override def maxRows: Option[Long] = child.maxRows
@@ -98,18 +97,17 @@ case class HybridSortPlan(order: Seq[SortOrder], threshold: Int,
   */
 object HybridSortStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case HybridSortPlan(order, threshold, global, child) =>
-      HybridSortExec(order, threshold, global, planLater(child)) :: Nil
+    case HybridSortPlan(order, threshold, child) =>
+      HybridSortExec(order, threshold, planLater(child)) :: Nil
     case _ => Nil
   }
 }
 
-/** Physical hybrid sort: requires a range-partitioned child when `global`,
+/** Physical hybrid sort: requires a range-partitioned child,
   * external-sorts each partition (hybrid quicksort per run, heap merge of
   * spilled runs — see [[HybridSortPlan]]'s scale contract).
   */
-case class HybridSortExec(order: Seq[SortOrder], threshold: Int,
-                          global: Boolean, child: SparkPlan)
+case class HybridSortExec(order: Seq[SortOrder], threshold: Int, child: SparkPlan)
   extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
@@ -122,8 +120,7 @@ case class HybridSortExec(order: Seq[SortOrder], threshold: Int,
     "spillBytes" -> SQLMetrics.createSizeMetric(sparkContext, "spill bytes"))
 
   override def requiredChildDistribution: Seq[Distribution] =
-    if (global) OrderedDistribution(order) :: Nil
-    else UnspecifiedDistribution :: Nil
+    OrderedDistribution(order) :: Nil
 
   override protected def doExecute(): RDD[InternalRow] = {
     // LazilyGeneratedOrdering is serializable and regenerates its codegen'd

@@ -87,6 +87,18 @@ class AdaptiveSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fannedOut(Adaptive.fanOut(narrow)))
   }
 
+  test("Dedup.minhashSignatures fans out only the doc_id and text it reads") {
+    val docs = spark.range(0, 200, 1, 1).selectExpr("id AS doc_id",
+      "concat('w', id % 7, ' w', id % 5, ' w', id % 3) AS text",
+      "id AS a", "'x' AS b", "1.0 AS c")
+    val sig = graft.ops.Dedup.minhashSignatures(docs, k = 4, shingleN = 2)
+    val shuffled = sig.queryExecution.analyzed.collect {
+      case r: Repartition => r.child.output.map(_.name)
+    }
+    assert(shuffled == Seq(Seq("doc_id", "text")))
+    assert(sig.count() == 200)
+  }
+
   test("broadcastIf hints up to and including the cap") {
     val df = spark.range(0, 10).toDF()
     def hinted(f: DataFrame => DataFrame): Boolean =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,6 +23,29 @@ class NativeExprEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
+
+  /** Declarative restatement of [[graft.ops.Similarity.pqEncode]]'s
+    * per-row encoding — `array_min` over (distance, index) structs with
+    * explicit left-associated squared-difference sums: the executable
+    * specification of the native [[graft.functions.PqCodes]] path, at
+    * ~1k expression nodes per row.
+    */
+  private def pqEncodeDeclarative(corpus: DataFrame, subs: Int, k: Int): DataFrame = {
+    val (c, cents) = graft.ops.Similarity.pqPrep(corpus, subs, k, "vec_id", "embedding")
+    val subDim = cents.head.length / subs
+    val codeCols = (0 until subs).map { s =>
+      val structs = cents.indices.map { j =>
+        val dist = (0 until subDim).map { i =>
+          val pos = s * subDim + i
+          val diff = element_at(col("e"), pos + 1) - lit(cents(j)(pos))
+          diff * diff
+        }.reduceLeft(_ + _)
+        struct(dist.as("d"), lit(j.toLong).as("j"))
+      }
+      array_min(array(structs: _*)).getField("j").as(s"c$s")
+    }
+    c.select(col("vec_id") +: codeCols: _*)
+  }
 
   private def texts = Seq(
     "the quick brown fox jumps over the lazy dog",
@@ -97,7 +120,7 @@ class NativeExprEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = vecs.toDF("vec_id", "embedding")
     val native = graft.ops.Similarity.pqEncode(df, subs = 4, k = 8)
       .orderBy(col("vec_id")).collect().map(_.toSeq)
-    val decl = graft.ops.Similarity.pqEncodeDeclarative(df, subs = 4, k = 8)
+    val decl = pqEncodeDeclarative(df, subs = 4, k = 8)
       .orderBy(col("vec_id")).collect().map(_.toSeq)
     assert(native.toSeq == decl.toSeq)
   }

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.TextStats
 
-/** The surprisal means (`avg_surprisal` of `bigramSurprisal` and
-  * `unigramSurprisal`) round `s / n` to 6 places as SQL's
+/** The surprisal means (`avg_surprisal` of `bigramSurprisalTk` and
+  * `unigramSurprisalTk`) round `s / n` to 6 places as SQL's
   * `round(CAST(s AS DOUBLE) / n, 6)` does: the double scaled by 10^6, then
   * rounded half away from zero. The expected values are DuckDB's.
   */

@@ -108,12 +108,24 @@ object Scale {
     * codegen off the clock, prints the JSON line `body` returns, and stops
     * the session. `body` gets the session and its core count.
     */
-  private def leg(body: (SparkSession, Int) => String): Unit = {
-    val spark = Harness.session()
+  private def leg(body: (SparkSession, Int) => String): Unit =
+    tableLeg((spark, cpus, _) => body(spark, cpus))
+
+  /** [[leg]] for the legs that write tables: `body` also gets `workDir`,
+    * which makes a fresh working directory (named after its argument)
+    * under the leg's scratch root. The scaffold deletes the root with
+    * everything in it when the leg ends, also when it fails.
+    */
+  private def tableLeg(body: (SparkSession, Int, String => String) => String): Unit = {
+    val scratch = java.nio.file.Files.createTempDirectory("graft_scale")
     try {
-      spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-      println(body(spark, spark.sparkContext.defaultParallelism))
-    } finally spark.stop()
+      val spark = Harness.session()
+      try {
+        spark.range(1000000L).selectExpr("sum(id % 7)").collect()
+        println(body(spark, spark.sparkContext.defaultParallelism, prefix =>
+          java.nio.file.Files.createTempDirectory(scratch, prefix).toString))
+      } finally spark.stop()
+    } finally ops.SnapIO.deleteTree(scratch.toString)
   }
 
   /** The default leg: `global_sort`, `top_k`, `HybridSortExec` over four
@@ -318,7 +330,7 @@ object Scale {
     * pruned fraction of the table is never opened, listed cost aside —
     * the scan cost scales with the SELECTED box, not the table.
     */
-  private def zorderMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+  private def zorderMain(args: Array[String]): Unit = tableLeg { (spark, cpus, workDir) =>
     val n = if (args.nonEmpty) args(0).toLong else 50000000L
     // AQE off for the MEASURED scans only: the adaptive wrapper hides
     // the FileSourceScanExec (and its numFiles/filesSize metrics) behind
@@ -330,7 +342,7 @@ object Scale {
         pmod(graft.functions.h60(concat(lit("za:"), col("id"))), lit(1024L)).as("a"),
         pmod(graft.functions.h60(concat(lit("zb:"), col("id"))), lit(1024L)).as("b"),
         (col("id") % 97).cast("double").as("v"))
-    val out = java.nio.file.Files.createTempDirectory("graft_zorder_scale").toString
+    val out = workDir("graft_zorder_scale")
     val writeSec = time {
       ops.Layout.zorderWrite(df, "a", "b", 10, 6, out): Unit
     }
@@ -379,7 +391,7 @@ object Scale {
     * pruned scan's planned bytes shrink with the window, not the table —
     * the Delta/Iceberg file-skipping channel for NON-partition columns.
     */
-  private def zonemapMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+  private def zonemapMain(args: Array[String]): Unit = tableLeg { (spark, cpus, workDir) =>
     val n = if (args.nonEmpty) args(0).toLong else 50000000L
     val nFiles = 64
     // AQE off for the MEASURED scans (same reason as zorderMain: the
@@ -387,7 +399,7 @@ object Scale {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val df = spark.range(n).repartition(cpus * 2)
       .select(col("id"), (col("id") % 97).cast("double").as("v"))
-    val out = java.nio.file.Files.createTempDirectory("graft_zm_scale").toString
+    val out = workDir("graft_zm_scale")
     val writeSec = time {
       df.repartitionByRange(nFiles, col("id"))
         .sortWithinPartitions(col("id"))
@@ -434,9 +446,9 @@ object Scale {
     * skipping is the only stats channel left, and its bytes track the
     * WINDOW, not the file.
     */
-  private def rowgroupsMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+  private def rowgroupsMain(args: Array[String]): Unit = tableLeg { (spark, cpus, workDir) =>
     val n = if (args.nonEmpty) args(0).toLong else 50000000L
-    val out = java.nio.file.Files.createTempDirectory("graft_rg_scale").toString
+    val out = workDir("graft_rg_scale")
     val writeSec = time {
       spark.range(n).select(col("id"), (col("id") % 97).cast("double").as("v"))
         .orderBy("id").coalesce(1)
@@ -482,11 +494,11 @@ object Scale {
     * pattern every secondary-index design exists for — served by footer
     * + bitset reads instead of a full-table scan.
     */
-  private def bloomMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+  private def bloomMain(args: Array[String]): Unit = tableLeg { (spark, cpus, workDir) =>
     val n = if (args.nonEmpty) args(0).toLong else 50000000L
     val nFiles = 64
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val out = java.nio.file.Files.createTempDirectory("graft_bloom_scale").toString
+    val out = workDir("graft_bloom_scale")
     val writeSec = time {
       spark.range(n).select(col("id"), (col("id") % 97).cast("double").as("v"))
         .repartition(nFiles, col("id"))
@@ -524,10 +536,10 @@ object Scale {
     * leg prices, now for the positional flavor that serves non-key
     * predicates.
     */
-  private def posMorMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+  private def posMorMain(args: Array[String]): Unit = tableLeg { (spark, cpus, workDir) =>
     val n = if (args.nonEmpty) args(0).toLong else 10000000L
     val root = ops.Snapshots.init(
-      java.nio.file.Files.createTempDirectory("graft_posmor_scale").toString)
+      workDir("graft_posmor_scale"))
     ops.Snapshots.commit(root, spark.range(n)
       .select(col("id"), (col("id") % 97).cast("double").as("v"))
       .repartitionByRange(32, col("id")).sortWithinPartitions("id"),
@@ -574,10 +586,10 @@ object Scale {
     * AS OF timestamp resolution, a change-feed read over the full
     * window, and a retention vacuum dropping most of the history.
     */
-  private def versionsMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+  private def versionsMain(args: Array[String]): Unit = tableLeg { (spark, cpus, workDir) =>
     val v = if (args.nonEmpty) args(0).toInt else 200
     val root = ops.Snapshots.init(
-      java.nio.file.Files.createTempDirectory("graft_vers_scale").toString)
+      workDir("graft_vers_scale"))
     val commitSec = time {
       (0 until v).foreach { i =>
         ops.Snapshots.commit(root,
@@ -621,12 +633,12 @@ object Scale {
     * checkpointed every `k`; metadata bytes, head-manifest refs, and a
     * cold full-history walk measured on each.
     */
-  private def checkpointMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+  private def checkpointMain(args: Array[String]): Unit = tableLeg { (spark, cpus, workDir) =>
     val v = if (args.nonEmpty) args(0).toInt else 1000
     val k = if (args.length > 1) args(1).toInt else 100
     def build(ckptEvery: Int): (String, Double) = {
       val root = ops.Snapshots.init(
-        java.nio.file.Files.createTempDirectory("graft_ckpt_scale").toString)
+        workDir("graft_ckpt_scale"))
       val sec = time {
         (0 until v).foreach { i =>
           ops.Snapshots.commit(root,
@@ -675,11 +687,10 @@ object Scale {
     * store each publish adds its round-trips on top — the reason the
     * protocol was designed to hold no lock during data writes.
     */
-  private def arbitersMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+  private def arbitersMain(args: Array[String]): Unit = tableLeg { (spark, cpus, workDir) =>
     val v = if (args.nonEmpty) args(0).toInt else 300
     def run(arb: ops.CommitArbiter, uriRoot: Boolean): Double = {
-      val local = java.nio.file.Files
-        .createTempDirectory("graft_arb_scale").toString
+      val local = workDir("graft_arb_scale")
       val root = ops.Snapshots.init(if (uriRoot) "file://" + local else local)
       ops.Snapshots.withArbiter(arb) {
         time {
@@ -695,8 +706,7 @@ object Scale {
     val lockFile = run(ops.LockFileArbiter, uriRoot = false)
     val hadoopFs = run(ops.HadoopFsArbiter, uriRoot = true)
     // 4-way contention through the FS arbiter: every commit must land
-    val contRoot = ops.Snapshots.init("file://" + java.nio.file.Files
-      .createTempDirectory("graft_arb_scale_c").toString)
+    val contRoot = ops.Snapshots.init("file://" + workDir("graft_arb_scale_c"))
     val threads = 4
     val per = v / threads
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
@@ -731,11 +741,12 @@ object Scale {
     * `nBatches` consecutive 1-commit windows and reports TOTAL segment
     * reads — linear in batches, independent of table width.
     */
-  private def streamPlanMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+  private def streamPlanMain(args: Array[String]): Unit = tableLeg { (spark, cpus, workDir) =>
     val v = if (args.nonEmpty) args(0).toInt else 500
+    require(v >= 4, s"streamplan needs at least 4 versions for its tail windows, got $v")
     val nFiles = if (args.length > 1) args(1).toInt else 2048
     val root = ops.Snapshots.init(
-      java.nio.file.Files.createTempDirectory("graft_streamplan").toString)
+      workDir("graft_streamplan"))
     // the wide base: one commit whose segment is O(nFiles) entry text
     ops.Snapshots.commit(root,
       spark.range(nFiles * 10L).toDF().repartition(nFiles), "wide-base"): Unit
@@ -753,7 +764,9 @@ object Scale {
     // (b) a consumer tailing nBatches consecutive 1-commit windows
     // (before the full snapshot below warms the whole segment cache —
     // each read here is a real storage GET)
-    val nBatches = math.min(200, v - 1)
+    // the windows end at head - 3 and must all lie inside the appends
+    // (versions 2 .. head), so at most v - 3 of them fit
+    val nBatches = math.min(200, v - 3)
     val r2 = ops.Snapshots.segmentReads.get()
     val tailSec = time {
       (0 until nBatches).foreach { i =>
@@ -781,12 +794,12 @@ object Scale {
     * segment cache before each measured leg, so every read is a real
     * storage GET.
     */
-  private def cdcPlanMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+  private def cdcPlanMain(args: Array[String]): Unit = tableLeg { (spark, cpus, workDir) =>
     import org.apache.spark.sql.functions.{col, lit}
     val v = if (args.nonEmpty) args(0).toInt else 400
     val nFiles = if (args.length > 1) args(1).toInt else 512
     val root = ops.Snapshots.init(
-      java.nio.file.Files.createTempDirectory("graft_cdcplan").toString)
+      workDir("graft_cdcplan"))
     ops.Snapshots.commit(root,
       spark.range(nFiles * 10L).toDF().repartition(nFiles), "wide-base"): Unit
     (0 until v).foreach { i =>
@@ -834,11 +847,11 @@ object Scale {
     * numbers are pure metadata-path costs, the part that does NOT shrink
     * when the data is remote.
     */
-  private def snapshotsMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+  private def snapshotsMain(args: Array[String]): Unit = tableLeg { (spark, cpus, workDir) =>
     val nFiles = if (args.nonEmpty) args(0).toInt else 4096
     val n = nFiles * 2500L
     val root = ops.Snapshots.init(
-      java.nio.file.Files.createTempDirectory("graft_snap_scale").toString)
+      workDir("graft_snap_scale"))
     val commitSec = time {
       ops.Snapshots.commit(root, spark.range(n)
         .repartitionByRange(nFiles, col("id"))
@@ -886,11 +899,11 @@ object Scale {
     * base + churn + a key join; the scheduled compaction pays it ONCE
     * and every read after is a plain (and prunable) scan again.
     */
-  private def morMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+  private def morMain(args: Array[String]): Unit = tableLeg { (spark, cpus, workDir) =>
     val n = if (args.nonEmpty) args(0).toLong else 10000000L
     val rounds = 16
     val root = ops.Snapshots.init(
-      java.nio.file.Files.createTempDirectory("graft_mor_scale").toString)
+      workDir("graft_mor_scale"))
     ops.Snapshots.commit(root, spark.range(n)
       .select(col("id"), (col("id") % 97).cast("double").as("v"))
       .repartitionByRange(32, col("id")).sortWithinPartitions("id"),
@@ -934,7 +947,7 @@ object Scale {
     * proportional to the BATCH's partition footprint (here ~1/64 of the
     * table), never the table.
     */
-  private def mergeMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+  private def mergeMain(args: Array[String]): Unit = tableLeg { (spark, cpus, workDir) =>
     val n = if (args.nonEmpty) args(0).toLong else 50000000L
     val nBuckets = 256
     def table = spark.range(n).repartition(cpus * 2)
@@ -947,7 +960,7 @@ object Scale {
       }
       walk(new java.io.File(root))
     }
-    val out = java.nio.file.Files.createTempDirectory("graft_merge_scale").toString
+    val out = workDir("graft_merge_scale")
     val writeSec = time {
       table.write.mode("overwrite").partitionBy("bucket").parquet(out)
     }
@@ -977,7 +990,7 @@ object Scale {
     val rowsAfter = spark.read.parquet(out).count()
     // contrast: the naive full-table rewrite (merge everything, write
     // everything) — what mergeTouched's pruning avoids
-    val out2 = java.nio.file.Files.createTempDirectory("graft_merge_full").toString
+    val out2 = workDir("graft_merge_full")
     val fullSec = time {
       ops.Reconcile.mergeApply(spark.read.parquet(out), changes, "id", "op")
         .write.mode("overwrite").partitionBy("bucket").parquet(out2)
@@ -1644,11 +1657,11 @@ object Scale {
     * run evidences the streaming machinery (file source, state store,
     * micro-batch planner) at corpus scale, not just at the fixture size.
     */
-  private def streamMain(args: Array[String]): Unit = leg { (spark, cpus) =>
+  private def streamMain(args: Array[String]): Unit = tableLeg { (spark, cpus, workDir) =>
     val n = if (args.nonEmpty) args(0).toLong else 100000000L
 
     val users = math.max(1L, n / 200)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_scale").toString
+    val dir = workDir("graft_stream_scale")
     val events = synthEvents(spark, n, users, cpus)
     val genSec = {
       val t0 = System.nanoTime()

@@ -3295,9 +3295,11 @@ object SparkEntry {
 
     // Recall@5 of the IVF index vs exact brute force — the ANN analog of
     // sketch_eval: measure the approximation before trusting the index.
-    "ann_recall" -> ((s, d) =>
-      Similarity.annRecall(emb(s, d), emb(s, d).where(col("vec_id") < 8), 5, IvfCentroids)
-        .orderBy(col("query_id"))),
+    "ann_recall" -> ((s, d) => {
+      val e = emb(s, d)
+      Similarity.annRecall(e, e.where(col("vec_id") < 8), 5, IvfCentroids)
+        .orderBy(col("query_id"))
+    }),
 
     // The IVF recall KNOB priced: recall@5 at nprobe=1 vs nprobe=2 side
     // by side — multi-probe recovers true neighbors that sit just across

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types._
 
 import graft.spark.Adaptive
 
@@ -253,36 +255,84 @@ object Graph {
     * and the SHORTEST directed distance otherwise — the reachability /
     * blast-radius primitive (lineage tracing, contamination spread,
     * k-hop neighborhoods) in the same driver-sequenced loop family as
-    * [[pagerankConverged]].
+    * [[pagerankConverged]]. Each node appears once. Edges with a null
+    * endpoint are dropped: a null node can be neither reached nor
+    * expanded, and a join never matches it against the visited set, so
+    * keeping it would re-add it at every level.
     *
     * Scale shape — frontier expansion, never an adjacency matrix or a
-    * transitive closure:
-    *  - the DISTINCT edge list is checkpointed once (multi-edges add
-    *    nothing to reachability, so they are collapsed before the loop —
-    *    a web-scale hot page's 10⁶ duplicate in-links would otherwise
-    *    multiply every frontier join);
-    *  - each level is one keyed join (edges ⋈ frontier on src — the
-    *    per-level cost is the edges INCIDENT to the frontier, not |E|),
-    *    one distinct, and one left-anti join against the visited set:
-    *    all hash-partitioned on the node key, nothing quadratic;
-    *  - the visited set (the loop state) is lazily `localCheckpoint`ed
-    *    per level and the previous level's blocks are freed once the
-    *    next materializes — the same O(1)-lineage / O(1)-storage
-    *    discipline as the PageRank loop. The ONE driver action per
-    *    level is the new-node count, which doubles as the
-    *    materialization trigger and the termination test (an empty
-    *    frontier ends the loop before `maxHops`).
+    * transitive closure. The DISTINCT edge list is checkpointed once
+    * (multi-edges add nothing to reachability — a web-scale hot page's
+    * 10⁶ duplicate in-links would otherwise multiply every frontier
+    * join), and its row count picks one of two loops:
+    *  - at most [[graft.spark.Adaptive.BroadcastEdgesMax]] edges: the
+    *    loop state lives on the driver. The visited map holds at most
+    *    2·|E| nodes, and one level's collected `dst` at most |E| rows —
+    *    the bound a broadcast of the same state would have. Each level is
+    *    one query, edges ⋈ broadcast(frontier) on src, that collects
+    *    `dst`; the driver drops the nodes it has visited, and what is
+    *    left is the next frontier. That is two Spark jobs per level (the
+    *    broadcast and the collect). The result is built from the driver's
+    *    rows, so it is lineage-cut like the other loop's. Node values are
+    *    compared in the type Spark would compare them in (the seeds are
+    *    cast to it); a type whose JVM equality differs from Spark's
+    *    (floating point, binary, nested) takes the other loop.
+    *  - above the cap: each level is one keyed join (edges ⋈ frontier on
+    *    src — the per-level cost is the edges INCIDENT to the frontier,
+    *    not |E|), one distinct, and one left-anti join against the
+    *    visited set, all hash-partitioned on the node key. The visited
+    *    set is lazily `localCheckpoint`ed per level and the previous
+    *    level's blocks are freed once the next materializes — the same
+    *    O(1)-lineage / O(1)-storage discipline as the PageRank loop. The
+    *    new-node count is the materialization trigger and the termination
+    *    test.
+    * Either loop stops before `maxHops` on an empty frontier.
     */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "bfs needs a non-negative hop cap")
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    // The per-level frontier and visited frames hold at most 2·|edges|
-    // nodes: broadcast them under the edge cap, measured by a count the
-    // eager checkpoint makes free (see Adaptive.broadcastIf).
-    val b = Adaptive.broadcastIf(edges.sparkSession, e.count(), Adaptive.BroadcastEdgesMax)
-    var visited = seeds.select(col("node")).distinct()
+    val e = edges.select(col("src"), col("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+      .distinct().localCheckpoint()
+    val start = seeds.select(col("node")).distinct()
       .select(col("node"), lit(0).as("hops"))
-      .localCheckpoint(eager = false)
+    // the schema the shuffled loop's union gives the result
+    val schema = start.unionAll(e.select(col("dst").as("node"), lit(1).as("hops"))).schema
+    if (Adaptive.underCap(edges.sparkSession, e.count(), Adaptive.BroadcastEdgesMax) &&
+        equalsOnDriver(schema("node").dataType)) bfsOnDriver(e, start, schema, maxHops)
+    else bfsShuffled(e, start, maxHops)
+  }
+
+  /** Node types whose JVM value equality is Spark's join equality. */
+  private def equalsOnDriver(t: DataType): Boolean = t match {
+    case StringType | ByteType | ShortType | IntegerType | LongType | BooleanType |
+         DateType | TimestampType | TimestampNTZType | _: DecimalType => true
+    case _ => false
+  }
+
+  private def bfsOnDriver(e: DataFrame, start: DataFrame, schema: StructType,
+                          maxHops: Int): DataFrame = {
+    val spark = e.sparkSession
+    val node = schema("node")
+    val visited = scala.collection.mutable.LinkedHashMap.empty[Any, Int]
+    start.select(col("node").cast(node.dataType)).collect()
+      .foreach(r => visited(r.get(0)) = 0)
+    var frontier: Seq[Any] = visited.keys.toSeq
+    var level = 0
+    while (level < maxHops && frontier.nonEmpty) {
+      val f = spark.createDataFrame(frontier.map(Row(_)).asJava, StructType(Seq(node)))
+      level += 1
+      frontier = e.join(broadcast(f), e("src") === f("node"))
+        .select(col("dst").cast(node.dataType)).collect()
+        .map(_.get(0)).filterNot(visited.contains).distinct.toSeq
+      frontier.foreach(visited(_) = level)
+    }
+    graft.spark.CheckpointUtil.unpersistCheckpointed(e)
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      visited.iterator.map { case (n, h) => Row(n, h) }.toSeq), schema)
+  }
+
+  private def bfsShuffled(e: DataFrame, start: DataFrame, maxHops: Int): DataFrame = {
+    var visited = start.localCheckpoint(eager = false)
     // the frontier is carved from the checkpointed visited frame (its
     // newest level) rather than checkpointed separately — one cached
     // frame of loop state per level, not two
@@ -290,9 +340,9 @@ object Graph {
     var grew = visited.count() > 0
     while (level < maxHops && grew) {
       val frontier = visited.where(col("hops") === level).select(col("node"))
-      val next = e.join(b(frontier), e("src") === frontier("node"))
+      val next = e.join(frontier, e("src") === frontier("node"))
         .select(col("dst").as("node")).distinct()
-        .join(b(visited.select(col("node"))), Seq("node"), "left_anti")
+        .join(visited.select(col("node")), Seq("node"), "left_anti")
         .select(col("node"), lit(level + 1).as("hops"))
       val grown = visited.unionAll(next).localCheckpoint(eager = false)
       level += 1

@@ -67,15 +67,20 @@ object Similarity {
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id",
                      embCol: String = "embedding"): DataFrame =
-    bruteForceFromC(
-      fanOut(corpus.select(col(idCol).cast("long").as("nbr_id"),
-          asDouble(col(embCol)).as("c_emb")))
-        .withColumn("c_nrm", sqrt(dot(col("c_emb"), col("c_emb")))),
-      queries, k, idCol, embCol)
+    bruteForceFromC(corpusSide(corpus, idCol, embCol), queries, k, idCol, embCol)
+
+  /** The corpus side every search leg reads: `(nbr_id, c_emb, c_nrm)`,
+    * the vector as doubles and its norm, fanned out to cluster width.
+    */
+  private def corpusSide(corpus: DataFrame, idCol: String,
+                         embCol: String): DataFrame =
+    fanOut(corpus.select(col(idCol).cast("long").as("nbr_id"),
+        asDouble(col(embCol)).as("c_emb")))
+      .withColumn("c_nrm", sqrt(dot(col("c_emb"), col("c_emb"))))
 
   /** [[bruteForceTopK]] from a pre-projected `(nbr_id, c_emb, c_nrm)`
-    * corpus frame — lets recall probes share one corpus projection
-    * across their exact and approximate legs.
+    * corpus frame ([[corpusSide]]) — lets recall probes share one corpus
+    * projection across their exact and approximate legs.
     */
   private def bruteForceFromC(c: DataFrame, queries: DataFrame, k: Int,
                               idCol: String, embCol: String): DataFrame = {
@@ -104,19 +109,9 @@ object Similarity {
               numCentroids: Int,
               idCol: String = "vec_id",
               embCol: String = "embedding"): DataFrame = {
-    val c = fanOut(corpus.select(col(idCol).cast("long").as("nbr_id"),
-      asDouble(col(embCol)).as("c_emb")))
-    val cells = assignCells(c, "nbr_id", "c_emb", numCentroids)
-    val q = queries.select(col(idCol).cast("long").as("query_id"),
-      asDouble(col(embCol)).as("q_emb"))
-    val qCells = assignCells(q, "query_id", "q_emb", numCentroids,
-      corpusForCentroids = Some(c))
-    val scored = cells.join(broadcast(qCells), Seq("cell"))
-      .where(col("query_id") =!= col("nbr_id"))
-      .select(col("query_id"), col("nbr_id"),
-        round(cosineFromNorms(dot(col("q_emb"), col("c_emb")),
-          col("q_nrm"), col("c_nrm")), 6).as("cos_sim"))
-    topPerKey(scored, k)
+    val c = corpusSide(corpus, idCol, embCol)
+    val (ids, embs) = sampleCentroids(c, numCentroids)
+    ivfFromC(c, queries, k, ids, embs, idCol, embCol)
   }
 
   /** [[ivfTopK]] against an EXPLICIT (artifact-loaded — see
@@ -130,9 +125,18 @@ object Similarity {
   def ivfTopKWith(corpus: DataFrame, queries: DataFrame, k: Int,
                   ids: Array[Long], embs: Array[Array[Double]],
                   idCol: String = "vec_id",
-                  embCol: String = "embedding"): DataFrame = {
-    val c = fanOut(corpus.select(col(idCol).cast("long").as("nbr_id"),
-      asDouble(col(embCol)).as("c_emb")))
+                  embCol: String = "embedding"): DataFrame =
+    ivfFromC(corpusSide(corpus, idCol, embCol), queries, k, ids, embs, idCol,
+      embCol)
+
+  /** The IVF search behind [[ivfTopK]] and [[ivfTopKWith]], from a
+    * [[corpusSide]] frame and a centroid table: corpus and queries are
+    * assigned map-only against the same centroids, and each query is
+    * scored against its own cell only.
+    */
+  private def ivfFromC(c: DataFrame, queries: DataFrame, k: Int,
+                       ids: Array[Long], embs: Array[Array[Double]],
+                       idCol: String, embCol: String): DataFrame = {
     val cells = assignToCentroids(c, "nbr_id", "c_emb", ids, embs)
     val q = queries.select(col(idCol).cast("long").as("query_id"),
       asDouble(col(embCol)).as("q_emb"))
@@ -197,9 +201,8 @@ object Similarity {
     require(nprobe >= 1, "nprobe must be at least 1")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val c = fanOut(corpus.select(col(idCol).cast("long").as("nbr_id"),
-      asDouble(col(embCol)).as("c_emb")))
-    val cells = assignToCentroids(c, "nbr_id", "c_emb", ids, embs)
+    val cells = assignToCentroids(corpusSide(corpus, idCol, embCol), "nbr_id",
+      "c_emb", ids, embs)
     val centDf = ids.zip(embs).toSeq.map { case (i, e) => (i, e.toSeq) }
       .toDF("cell", "ce")
     val q = queries.select(col(idCol).cast("long").as("query_id"),
@@ -1098,10 +1101,8 @@ object Similarity {
     */
   private def assignCells(df: DataFrame, idName: String, embName: String,
                           numCentroids: Int,
-                          corpusForCentroids: Option[DataFrame] = None,
                           passThrough: Seq[String] = Nil): DataFrame = {
-    val (ids, embs) = sampleCentroids(corpusForCentroids.getOrElse(df),
-      numCentroids)
+    val (ids, embs) = sampleCentroids(df, numCentroids)
     assignToCentroids(df, idName, embName, ids, embs, passThrough)
   }
 
@@ -1152,16 +1153,24 @@ object Similarity {
     * `sketch_eval` query: measure the approximation on the corpus itself,
     * then pick the nprobe/centroid knobs).
     *
-    * Both inputs are the already-bounded top-k frames (O(|queries|·k)
-    * rows), so the comparison join and the per-query aggregate cost
-    * nothing at any corpus scale — all the heavy lifting is inside the
-    * two (independently scale-shaped) retrieval plans.
+    * Equal to joining [[bruteForceTopK]] with [[ivfTopK]], but the corpus
+    * side is built once for both legs: one projection and fan-out
+    * ([[corpusSide]]), materialized once (the centroid sample and both
+    * legs read its blocks — unmaterialized, each of the three re-ran the
+    * scan and the fan-out shuffle), and one centroid sample, which the
+    * IVF leg assigns both the corpus and the queries against. Both legs'
+    * outputs are the already-bounded top-k frames (O(|queries|·k) rows),
+    * so the comparison join and the per-query aggregate cost nothing at
+    * any corpus scale.
     */
   def annRecall(corpus: DataFrame, queries: DataFrame, k: Int,
                 numCentroids: Int): DataFrame = {
-    val exact = bruteForceTopK(corpus, queries, k)
+    val (idCol, embCol) = ("vec_id", "embedding")
+    val c = corpusSide(corpus, idCol, embCol).localCheckpoint()
+    val (ids, embs) = sampleCentroids(c, numCentroids)
+    val exact = bruteForceFromC(c, queries, k, idCol, embCol)
       .select(col("query_id"), col("nbr_id"))
-    val approx = ivfTopK(corpus, queries, k, numCentroids)
+    val approx = ivfFromC(c, queries, k, ids, embs, idCol, embCol)
       .select(col("query_id").as("aq"), col("nbr_id").as("an"))
     exact.join(approx,
         col("query_id") === col("aq") && col("nbr_id") === col("an"), "left")

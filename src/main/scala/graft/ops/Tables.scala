@@ -3,14 +3,27 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Parquet scans of the driver-generated corpus (see /root/repo/TESTDATA.md).
-  * Plain `spark.read.parquet` so Catalyst keeps full pushdown/pruning
-  * freedom — every filter and projection in the queries below reaches the
-  * parquet reader (`PushedFilters` / `ReadSchema` in explain output).
+/** Parquet scans of the driver-generated corpus (see TESTDATA.md). Plain
+  * parquet reads so Catalyst keeps full pushdown/pruning freedom — every
+  * filter and projection in the queries below reaches the parquet reader
+  * (`PushedFilters` / `ReadSchema` in explain output).
   */
 object Tables {
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * schema comes from the footer Spark would read, read on the driver
+    * ([[org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims]]).
+    * The schema is still read, not declared — `events.ts` has shipped in
+    * two encodings and [[normalizeTs]] branches on the one on disk. Paths
+    * the shim does not cover (globs, partitioned or summarized
+    * directories) fall back to the inferring read.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims
+      .footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   def lineitem(s: SparkSession, d: String): DataFrame = read(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = read(s, d, "orders")

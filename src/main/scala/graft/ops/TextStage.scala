@@ -38,6 +38,6 @@ object TextStage {
           graft.functions.tokens(col("text")).as("tk"))
         .write.mode("overwrite").parquet(p)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 }

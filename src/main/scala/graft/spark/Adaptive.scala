@@ -14,9 +14,9 @@ object Adaptive {
     */
   val BroadcastNodesMax = "spark.graft.graph.broadcastNodesMax"
 
-  /** Cap on edge-bounded frames — `triangleCount`'s probe sides, the
-    * `bfsHops` frontier and visited set, the `dupClusters` label frames —
-    * compared against the measured edge count.
+  /** Cap on edge-bounded state — `triangleCount`'s probe sides, the
+    * `bfsHops` loop state it keeps on the driver, the `dupClusters` label
+    * frames — compared against the measured edge count.
     */
   val BroadcastEdgesMax = "spark.graft.graph.broadcastEdgesMax"
 
@@ -57,8 +57,13 @@ object Adaptive {
     * rather than failing at Spark's broadcast limit. The join strategy
     * never changes a result.
     */
-  def broadcastIf(spark: SparkSession, rows: Long, key: String): DataFrame => DataFrame = {
-    val cap = spark.conf.getOption(key).map(_.toLong).getOrElse(DefaultBroadcastRows)
-    if (rows <= cap) (df: DataFrame) => broadcast(df) else identity
-  }
+  def broadcastIf(spark: SparkSession, rows: Long, key: String): DataFrame => DataFrame =
+    if (underCap(spark, rows, key)) (df: DataFrame) => broadcast(df) else identity
+
+  /** The [[broadcastIf]] gate as a Boolean: `rows` is at most the cap set
+    * under `key`, so a frame that many rows bounds may also be held on the
+    * driver.
+    */
+  def underCap(spark: SparkSession, rows: Long, key: String): Boolean =
+    rows <= spark.conf.getOption(key).map(_.toLong).getOrElse(DefaultBroadcastRows)
 }

@@ -98,7 +98,7 @@ object StreamOps {
                                  k: Int = 4096, minCount: Long = 50): DataFrame = {
     GraftFunctions.register(spark)
     val path = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.ops.Tables.parquet(spark, path).schema
     def toksOf(df: DataFrame): DataFrame =
       df.select(col("source"), explode(tokens(col("text"))).as("term"))
     val sketch = toksOf(spark.readStream.schema(schema).parquet(stageDir(path)))
@@ -180,7 +180,7 @@ object StreamOps {
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema // ts: long (nanos) or ntz µs
+    val schema = graft.ops.Tables.parquet(spark, path).schema // ts: long (nanos) or ntz µs
     graft.ops.Tables.normalizeTs(
       spark.readStream.schema(schema).parquet(stageDir(path)))
   }

@@ -7,8 +7,9 @@ package org.apache.spark.sql
   * .internalCreateDataFrame(rdd, schema, isStreaming)` — is
   * `private[sql]`. Every production v1 connector (Delta included)
   * bridges this the same way: one tiny object inside the
-  * `org.apache.spark.sql` namespace. Nothing else in the repo reaches
-  * into Spark internals; keep it that way.
+  * `org.apache.spark.sql` namespace. The repo reaches Spark internals
+  * only through shims like this one (`GraftParquetShims` is the parquet
+  * package's); keep it that way.
   */
 object GraftSqlShims { // public only so graft.sources can call it
 

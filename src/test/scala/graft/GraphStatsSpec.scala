@@ -1,11 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.GraftTestShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Graph, Stats}
+import graft.spark.Adaptive
 
 /** Round-6 library ops: triangle counting (oriented edge list +
   * co-occurrence edge derivation) and the 2-D skyline — each pinned to
@@ -247,6 +250,82 @@ class GraphStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"checkpoint leak — persistent RDDs grew $before -> $after over 12 levels")
     assert(r.queryExecution.logical
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+  }
+
+  /** bfsHops rows as sorted strings, under the default edge cap (the
+    * driver-held loop) and with `broadcastEdgesMax = 0` (the shuffled
+    * loop); each run must list every node once.
+    */
+  private def bfsBothModes(edges: DataFrame, seeds: DataFrame,
+                           maxHops: Int): (Seq[String], Seq[String]) = {
+    def run(): Seq[String] = {
+      val rows = Graph.bfsHops(edges, seeds, maxHops).collect()
+        .map(r => s"${r.get(0)}@${r.getInt(1)}").toSeq.sorted
+      val nodes = rows.map(_.takeWhile(_ != '@'))
+      assert(nodes.distinct.size == nodes.size, s"a node appears twice: $rows")
+      rows
+    }
+    val underCap = run()
+    spark.conf.set(Adaptive.BroadcastEdgesMax, "0")
+    try (underCap, run()) finally spark.conf.unset(Adaptive.BroadcastEdgesMax)
+  }
+
+  test("bfsHops: the driver-held and shuffled loops return the same rows") {
+    val sp = spark; import sp.implicits._
+    val rnd = new scala.util.Random(11)
+    (1 to 3).foreach { round =>
+      val edges = Seq.fill(60)((s"v${rnd.nextInt(30)}", s"v${rnd.nextInt(30)}"))
+        .toDF("src", "dst")
+      val seeds = Seq.fill(2)(s"v${rnd.nextInt(30)}").toDF("node")
+      Seq(1, 3, 10).foreach { hops =>
+        val (driver, shuffled) = bfsBothModes(edges, seeds, hops)
+        assert(driver == shuffled, s"round $round, maxHops $hops")
+        assert(driver.nonEmpty)
+      }
+    }
+    // null endpoints: dropped in both modes, so null never appears at a
+    // hop > 0 (a null seed stays at hop 0)
+    val withNulls = Seq(("a", "b"), ("a", null), ("b", null), ("b", "c"),
+      ("c", null), (null, "d"), ("c", "a")).toDF("src", "dst")
+    val (nd, ns) = bfsBothModes(withNulls, Seq("a").toDF("node"), 4)
+    assert(nd == Seq("a@0", "b@1", "c@2") && ns == nd)
+    val (sd, ss) = bfsBothModes(withNulls, Seq("a", null).toDF("node"), 4)
+    assert(sd == Seq("a@0", "b@1", "c@2", "null@0") && ss == sd)
+    (1 to 2).foreach { _ =>
+      val edges = Seq.fill(80)((rnd.nextInt(40).toLong,
+          Option.when(rnd.nextInt(8) != 0)(rnd.nextInt(40).toLong)))
+        .toDF("src", "dst")
+      val (driver, shuffled) = bfsBothModes(edges, Seq(0, 1).toDF("node"), 6)
+      assert(driver == shuffled)
+      assert(driver.contains("0@0") && !driver.exists(_.startsWith("null")))
+    }
+    // long-typed nodes seeded with ints: the seeds compare as longs
+    val longs = Seq.fill(80)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+      .toDF("src", "dst")
+    val (ld, ls) = bfsBothModes(longs, Seq(3, 5, 3).toDF("node"), 8)
+    assert(ld == ls && ld.count(_.endsWith("@0")) == 2)
+  }
+
+  test("bfsHops under the edge cap launches at most two jobs per level") {
+    val sp = spark; import sp.implicits._
+    val sc = spark.sparkContext
+    val edges = (0 until 12).map(i => (s"n$i", s"n${i + 1}")).toDF("src", "dst")
+    def jobs(maxHops: Int): Int = {
+      var n = 0
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { n += 1 }
+      }
+      GraftTestShim.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        assert(Graph.bfsHops(edges, Seq("n0").toDF("node"), maxHops).count() == maxHops + 1)
+        GraftTestShim.drain(sc)
+        listener.synchronized(n)
+      } finally sc.removeSparkListener(listener)
+    }
+    val six = jobs(6)
+    val twelve = jobs(12)
+    assert(twelve - six <= 2 * 6, s"6 levels: $six jobs, 12 levels: $twelve jobs")
   }
 
   /** Brute-force 2-D skyline per the dominance definition. */

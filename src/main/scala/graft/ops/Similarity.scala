@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{h60, GraftFunctions}
@@ -8,23 +9,28 @@ import graft.spark.Adaptive.fanOut
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Two paths, both shaped so the corpus side is NEVER shuffled:
+  * Every ANN operator is composed from one private helper per step, and
+  * none of them shuffles the corpus side for a join:
   *
-  *  - [[bruteForceTopK]]: exact cosine top-k. The query set (small by
-  *    contract) is broadcast; the corpus streams through a map-side
-  *    broadcast join, and the per-query result is reduced by
-  *    [[graft.functions.TopKByScore]] — a bounded-heap aggregate with
-  *    partial (map-side) aggregation, so each task emits at most k rows per
-  *    query into the shuffle. At 100 TB: one corpus scan, k·tasks shuffle
-  *    rows, O(k) memory per group. (A window-function top-k would instead
-  *    land the whole corpus' scores for one query on one task.)
-  *
-  *  - [[ivfTopK]]: IVF (inverted-file) ANN. A deterministic centroid subset
-  *    partitions the corpus into cells ("coarse quantizer"); each query
-  *    probes only its own cell. Cell assignment is a map-only argmax over a
-  *    collected centroid array literal — no cross join, no window, no
-  *    shuffle of the corpus; the only shuffle in the whole plan is the
-  *    final k-row-per-task top-k aggregation.
+  *  - corpus side, [[corpusSide]]: `(nbr_id, c_emb, c_nrm)`, the vector
+  *    as doubles and its norm, fanned out to cluster width. A leg that
+  *    routes adds `cell` with [[assignToCentroids]], a map-only native
+  *    argmax over the centroid table embedded as literals;
+  *  - sample, [[hashRankSample]]: the rows ranking first by
+  *    `h60("cent:" || id)`, then id, then `limit` — the IVF centroids, the
+  *    k-means seed and both PQ codebooks (TakeOrderedAndProject: a
+  *    bounded heap, O(K) driver rows at any corpus size);
+  *  - cell probe, [[queryCells]]: each query's `nprobe` nearest cells,
+  *    from the native argmax at nprobe = 1 and from a ranked
+  *    (queries × K) broadcast cross above it;
+  *  - ADC, [[adcTables]] and [[adcSum]]: the PQ distance table per query
+  *    (or per (query, probed cell) for residual codes), and a code row's
+  *    distance as `subs` lookups into it;
+  *  - top-k emit, [[topKBy]]: a bounded-heap per-query aggregate, k rows
+  *    per task into the one shuffle;
+  *  - recall, [[recallTable]]: `truth ⟕ legs → n_exact, hit_*, recall_*`.
+  *    Every recall probe builds one corpus side, checkpointed once, draws
+  *    one sample from it, and feeds every leg from them.
   *
   * Floating point is pinned for oracle portability: all arithmetic is done
   * in double with a left-fold accumulation (`aggregate`), matching the
@@ -40,10 +46,9 @@ object Similarity {
     * per-row cost.
     */
   def dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
+    GraftColumnBridge.column(
       graft.functions.DotProduct(
-        org.apache.spark.sql.GraftColumnBridge.expression(a),
-        org.apache.spark.sql.GraftColumnBridge.expression(b)))
+        GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 
   /** Cast float embedding to double once, so all downstream arithmetic is
     * double-precision in every engine.
@@ -59,7 +64,10 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     cosineFromNorms(dot(a, b), sqrt(dot(a, a)), sqrt(dot(b, b)))
 
-  /** Exact top-k cosine neighbors for each query vector.
+  /** Exact top-k cosine neighbors for each query vector. The query set
+    * (small by contract) is broadcast and crossed with the corpus side,
+    * which streams through map-side: one corpus scan, k rows per task
+    * into the shuffle, O(k) memory per query at any corpus size.
     *
     * @param corpus  (id, embedding float array) — the big side, map-only
     * @param queries (id, embedding float array) — the small side, broadcast
@@ -78,28 +86,29 @@ object Similarity {
         asDouble(col(embCol)).as("c_emb")))
       .withColumn("c_nrm", sqrt(dot(col("c_emb"), col("c_emb"))))
 
-  /** [[bruteForceTopK]] from a pre-projected `(nbr_id, c_emb, c_nrm)`
-    * corpus frame ([[corpusSide]]) — lets recall probes share one corpus
-    * projection across their exact and approximate legs.
-    */
+  /** The query side every search leg reads: `(query_id, q_emb)`. */
+  private def querySide(queries: DataFrame, idCol: String,
+                        embCol: String): DataFrame =
+    queries.select(col(idCol).cast("long").as("query_id"),
+      asDouble(col(embCol)).as("q_emb"))
+
+  /** [[bruteForceTopK]] from a [[corpusSide]] frame. */
   private def bruteForceFromC(c: DataFrame, queries: DataFrame, k: Int,
                               idCol: String, embCol: String): DataFrame = {
-    val q = queries.select(col(idCol).cast("long").as("query_id"),
-        asDouble(col(embCol)).as("q_emb"))
+    val q = querySide(queries, idCol, embCol)
       .withColumn("q_nrm", sqrt(dot(col("q_emb"), col("q_emb"))))
-    val scored = c.crossJoin(broadcast(q))
-      .where(col("query_id") =!= col("nbr_id"))
-      .select(col("query_id"), col("nbr_id"),
-        round(cosineFromNorms(dot(col("q_emb"), col("c_emb")),
-          col("q_nrm"), col("c_nrm")), 6).as("cos_sim"))
-    topPerKey(scored, k)
+    topKBy(c.crossJoin(broadcast(q)), cosineScore, "cos_sim", k)
   }
+
+  /** Cosine of a (query, corpus) pair from the two sides' norms. */
+  private def cosineScore: Column =
+    cosineFromNorms(dot(col("q_emb"), col("c_emb")), col("q_nrm"), col("c_nrm"))
 
   /** IVF ANN: centroids are the `numCentroids` corpus rows ranking first by
     * a deterministic hash of their id (engine-agnostic "training" — a
     * hash-uniform K-row sample). Every vector is assigned to its nearest
     * centroid (its *cell*); a query is answered from its own cell only —
-    * approximate by construction.
+    * approximate by construction. This is [[ivfTopKProbe]] at nprobe = 1.
     *
     * The centroid count is a FIXED K, independent of corpus size: the
     * driver-side centroid table and the per-row argmax both stay O(K) at
@@ -108,185 +117,176 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               numCentroids: Int,
               idCol: String = "vec_id",
-              embCol: String = "embedding"): DataFrame = {
-    val c = corpusSide(corpus, idCol, embCol)
-    val (ids, embs) = sampleCentroids(c, numCentroids)
-    ivfFromC(c, queries, k, ids, embs, idCol, embCol)
-  }
+              embCol: String = "embedding"): DataFrame =
+    ivfTopKProbe(corpus, queries, k, numCentroids, 1, idCol, embCol)
 
   /** [[ivfTopK]] against an EXPLICIT (artifact-loaded — see
     * [[ModelStore.centroidArrays]]) coarse-quantizer table: the
     * train-the-quantizer/ship-it/search-with-it IVF flow — corpus and
     * queries both assign map-only against the SHIPPED k-means centroids
-    * (no sampling scan, no training); everything after assignment is
-    * [[ivfTopK]]'s shape (corpus never shuffled, query cells broadcast,
-    * bounded-heap per-query top-k).
+    * (no sampling scan, no training). This is [[ivfTopKProbeWith]] at
+    * nprobe = 1.
     */
   def ivfTopKWith(corpus: DataFrame, queries: DataFrame, k: Int,
                   ids: Array[Long], embs: Array[Array[Double]],
                   idCol: String = "vec_id",
                   embCol: String = "embedding"): DataFrame =
-    ivfFromC(corpusSide(corpus, idCol, embCol), queries, k, ids, embs, idCol,
-      embCol)
-
-  /** The IVF search behind [[ivfTopK]] and [[ivfTopKWith]], from a
-    * [[corpusSide]] frame and a centroid table: corpus and queries are
-    * assigned map-only against the same centroids, and each query is
-    * scored against its own cell only.
-    */
-  private def ivfFromC(c: DataFrame, queries: DataFrame, k: Int,
-                       ids: Array[Long], embs: Array[Array[Double]],
-                       idCol: String, embCol: String): DataFrame = {
-    val cells = assignToCentroids(c, "nbr_id", "c_emb", ids, embs)
-    val q = queries.select(col(idCol).cast("long").as("query_id"),
-      asDouble(col(embCol)).as("q_emb"))
-    val qCells = assignToCentroids(q, "query_id", "q_emb", ids, embs)
-    val scored = cells.join(broadcast(qCells), Seq("cell"))
-      .where(col("query_id") =!= col("nbr_id"))
-      .select(col("query_id"), col("nbr_id"),
-        round(cosineFromNorms(dot(col("q_emb"), col("c_emb")),
-          col("q_nrm"), col("c_nrm")), 6).as("cos_sim"))
-    topPerKey(scored, k)
-  }
+    ivfTopKProbeWith(corpus, queries, k, ids, embs, 1, idCol, embCol)
 
   /** Multi-probe IVF: each query probes its `nprobe` NEAREST cells, not
     * just the top one — the standard IVF recall knob (a true neighbor
     * just across a cell boundary is invisible at nprobe=1; probing the
     * runner-up cells recovers most of them for nprobe× the probe cost).
-    * `nprobe = 1` reproduces [[ivfTopK]] exactly.
+    * [[ivfTopK]] is this operator at `nprobe = 1`, so it reproduces
+    * [[ivfTopK]] by construction.
     *
-    * Scale shape is unchanged from [[ivfTopK]]: the corpus is assigned
-    * map-only and never shuffled; the (queries × nprobe) probe table is
-    * broadcast; per-query top-k via the bounded-heap aggregate. The
-    * query-to-cells ranking runs on a (queries × K) broadcast cross of
-    * the SAME hash-rank centroid table — bounded by contract (small
-    * query set, fixed K), and each corpus vector lives in exactly one
-    * cell so multi-probe never produces duplicate candidates.
+    * Scale shape: the corpus is assigned map-only and never shuffled; the
+    * (queries × nprobe) probe table is broadcast ([[queryCells]]); per-query
+    * top-k via the bounded-heap aggregate.
     */
   def ivfTopKProbe(corpus: DataFrame, queries: DataFrame, k: Int,
                    numCentroids: Int, nprobe: Int,
                    idCol: String = "vec_id",
                    embCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).cast("long").as("nbr_id"),
-      asDouble(col(embCol)).as("c_emb"))
-    val (ids, embs) = sampleCentroids(c, numCentroids)
-    probeTopK(corpus, queries, k, ids, embs, nprobe, idCol, embCol)
+    val c = corpusSide(corpus, idCol, embCol)
+    val (ids, embs) = sampleCentroids(c, "nbr_id", "c_emb", numCentroids)
+    ivfSearch(c, queries, k, ids, embs, nprobe, idCol, embCol)
   }
 
   /** Multi-probe IVF with the SHIPPED (artifact-loaded) quantizer — the
     * recall knob [[ivfTopKProbe]] has, on the [[ivfTopKWith]] deploy
     * flow: without it a deployed index cannot trade probe cost for
-    * recall. `nprobe = 1` reproduces [[ivfTopKWith]] exactly (same
-    * pinned cell-ranking kernel). Scale shape unchanged: corpus assigned
-    * map-only against O(K·dim) literals and never shuffled; the
-    * (queries × nprobe) probe table broadcast; bounded-heap top-k.
+    * recall. [[ivfTopKWith]] is this operator at `nprobe = 1`, so it
+    * reproduces [[ivfTopKWith]] by construction.
     */
   def ivfTopKProbeWith(corpus: DataFrame, queries: DataFrame, k: Int,
                        ids: Array[Long], embs: Array[Array[Double]],
                        nprobe: Int,
                        idCol: String = "vec_id",
                        embCol: String = "embedding"): DataFrame =
-    probeTopK(corpus, queries, k, ids, embs, nprobe, idCol, embCol)
+    ivfSearch(corpusSide(corpus, idCol, embCol), queries, k, ids, embs,
+      nprobe, idCol, embCol)
 
-  /** Shared multi-probe kernel: assign the corpus to the given centroid
-    * table map-only, rank every query's `nprobe` nearest cells over the
-    * broadcast (queries × K) cross, probe them. Each corpus vector lives
-    * in exactly one cell, so multi-probe never yields duplicate
-    * candidates.
+  /** The cosine IVF search behind every IVF leg, from a [[corpusSide]]
+    * frame and a centroid table: the corpus is assigned to its cell
+    * map-only, each query is routed to its [[queryCells]], and the two
+    * meet in a broadcast hash join on `cell`. Each corpus vector lives in
+    * exactly one cell, so probing several never yields a duplicate
+    * candidate.
     */
-  private def probeTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+  private def ivfSearch(c: DataFrame, queries: DataFrame, k: Int,
                         ids: Array[Long], embs: Array[Array[Double]],
                         nprobe: Int, idCol: String,
                         embCol: String): DataFrame = {
+    val cells = assignToCentroids(c, "nbr_id", "c_emb", ids, embs)
+    val qCells = queryCells(querySide(queries, idCol, embCol), ids, embs,
+      nprobe)
+    topKBy(cells.join(broadcast(qCells), Seq("cell")), cosineScore,
+      "cos_sim", k)
+  }
+
+  /** The cells a query probes: its `nprobe` nearest centroids, ranked as
+    * [[assignToCentroids]] ranks them (6-dp cosine, ties to the smaller
+    * cell id, zero norms → 0.0). At `nprobe = 1` that is the native argmax
+    * itself; above it the (queries × K) cross with the centroid table,
+    * broadcast and bounded by contract (small query set, fixed K), is
+    * ranked per query. Output: `(query_id, q_emb, cell, q_nrm)`.
+    */
+  private def queryCells(q: DataFrame, ids: Array[Long],
+                         embs: Array[Array[Double]], nprobe: Int): DataFrame = {
     require(nprobe >= 1, "nprobe must be at least 1")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cells = assignToCentroids(corpusSide(corpus, idCol, embCol), "nbr_id",
-      "c_emb", ids, embs)
-    val centDf = ids.zip(embs).toSeq.map { case (i, e) => (i, e.toSeq) }
-      .toDF("cell", "ce")
-    val q = queries.select(col(idCol).cast("long").as("query_id"),
-        asDouble(col(embCol)).as("q_emb"))
-      .withColumn("q_nrm", sqrt(dot(col("q_emb"), col("q_emb"))))
-    // (queries × K) cell ranking — 6dp cosine, ties to the smaller cell
-    // id, zero norms → 0.0: the same pinned kernel as the native argmax,
-    // so nprobe=1 picks the identical cell.
-    val qCells = q.crossJoin(broadcast(centDf))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"),
-        round(cosine(col("q_emb"), col("ce")), 6).as("c_cos"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("c_cos").desc, col("cell").asc)))
-      .where(col("rn") <= nprobe)
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"))
-    val scored = cells.join(broadcast(qCells), Seq("cell"))
-      .where(col("query_id") =!= col("nbr_id"))
-      .select(col("query_id"), col("nbr_id"),
-        round(cosineFromNorms(dot(col("q_emb"), col("c_emb")),
-          col("q_nrm"), col("c_nrm")), 6).as("cos_sim"))
-    topPerKey(scored, k)
+    if (nprobe == 1) assignToCentroids(q, "query_id", "q_emb", ids, embs)
+    else {
+      val spark = q.sparkSession
+      import spark.implicits._
+      val centDf = ids.zip(embs).toSeq.map { case (i, e) => (i, e.toSeq) }
+        .toDF("cell", "ce")
+      q.crossJoin(broadcast(centDf))
+        .withColumn("rn", row_number().over(Window.partitionBy(col("query_id"))
+          .orderBy(round(cosine(col("q_emb"), col("ce")), 6).desc,
+            col("cell").asc)))
+        .where(col("rn") <= nprobe)
+        .select(col("query_id"), col("q_emb"), col("cell"),
+          sqrt(dot(col("q_emb"), col("q_emb"))).as("q_nrm"))
+    }
   }
 
   /** Recall\@k of the IVF index at nprobe = 1 AND at `nprobe`, against the
     * exact brute-force neighbors, per query — the calibration table that
     * prices the recall knob before an index is deployed ("how much recall
-    * does the second probe buy"). All three retrieval legs are the
-    * already-bounded top-k frames, so the comparison costs O(queries·k)
-    * at any corpus scale.
+    * does the second probe buy"). Equal to joining [[bruteForceTopK]],
+    * [[ivfTopK]] and [[ivfTopKProbe]], built as [[annRecall]] is: see
+    * [[ivfRecall]].
     */
   def annRecallProbe(corpus: DataFrame, queries: DataFrame, k: Int,
-                     numCentroids: Int, nprobe: Int): DataFrame = {
-    val exact = bruteForceTopK(corpus, queries, k)
-      .select(col("query_id"), col("nbr_id"))
-    val p1 = ivfTopK(corpus, queries, k, numCentroids)
-      .select(col("query_id").as("q1"), col("nbr_id").as("n1"))
-    val pn = ivfTopKProbe(corpus, queries, k, numCentroids, nprobe)
-      .select(col("query_id").as("qn"), col("nbr_id").as("nn"))
-    exact
-      .join(p1, col("query_id") === col("q1") && col("nbr_id") === col("n1"),
-        "left")
-      .join(pn, col("query_id") === col("qn") && col("nbr_id") === col("nn"),
-        "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        count(col("n1")).as("hit_p1"),
-        count(col("nn")).as(s"hit_p$nprobe"),
-        round(count(col("n1")).cast("double") / count(lit(1)), 4)
-          .as("recall_p1"),
-        round(count(col("nn")).cast("double") / count(lit(1)), 4)
-          .as(s"recall_p$nprobe"))
-  }
+                     numCentroids: Int, nprobe: Int): DataFrame =
+    ivfRecall(corpus, queries, k,
+      sampleCentroids(_, "nbr_id", "c_emb", numCentroids),
+      "p1" -> 1, s"p$nprobe" -> nprobe)
 
   /** [[annRecallProbe]] for the SHIPPED quantizer: recall\@k of
     * [[ivfTopKWith]] (nprobe = 1) and [[ivfTopKProbeWith]] (at `nprobe`)
     * against exact brute force — the calibration row a deployed index's
     * recall knob is priced with, run against the artifact the index
     * actually serves (the sampled-quantizer [[annRecallProbe]] prices a
-    * quantizer nothing deploys). Same bounded shape: all three legs are
-    * top-k frames, comparison costs O(queries·k) at any corpus scale.
+    * quantizer nothing deploys).
     */
   def annRecallTrained(corpus: DataFrame, queries: DataFrame, k: Int,
                        ids: Array[Long], embs: Array[Array[Double]],
-                       nprobe: Int): DataFrame = {
-    val exact = bruteForceTopK(corpus, queries, k)
-      .select(col("query_id"), col("nbr_id"))
-    val p1 = ivfTopKWith(corpus, queries, k, ids, embs)
-      .select(col("query_id").as("q1"), col("nbr_id").as("n1"))
-    val pn = ivfTopKProbeWith(corpus, queries, k, ids, embs, nprobe)
-      .select(col("query_id").as("qn"), col("nbr_id").as("nn"))
-    exact
-      .join(p1, col("query_id") === col("q1") && col("nbr_id") === col("n1"),
-        "left")
-      .join(pn, col("query_id") === col("qn") && col("nbr_id") === col("nn"),
-        "left")
+                       nprobe: Int): DataFrame =
+    ivfRecall(corpus, queries, k, _ => (ids, embs),
+      "p1" -> 1, s"p$nprobe" -> nprobe)
+
+  /** The cosine IVF recall probes' shared shape: one [[corpusSide]],
+    * materialized once (the centroid sample and every leg read its
+    * blocks; unmaterialized, each would re-run the scan and the fan-out
+    * shuffle, as Spark does not reuse identical exchanges), one centroid
+    * table drawn from it, the exact leg, and one [[ivfSearch]] leg per
+    * `(name, nprobe)`, all compared by [[recallTable]].
+    */
+  private def ivfRecall(corpus: DataFrame, queries: DataFrame, k: Int,
+                        centroids: DataFrame => (Array[Long], Array[Array[Double]]),
+                        legs: (String, Int)*): DataFrame = {
+    val (idCol, embCol) = ("vec_id", "embedding")
+    val c = corpusSide(corpus, idCol, embCol).localCheckpoint()
+    val (ids, embs) = centroids(c)
+    recallTable(bruteForceFromC(c, queries, k, idCol, embCol),
+      legs.map { case (name, nprobe) =>
+        name -> ivfSearch(c, queries, k, ids, embs, nprobe, idCol, embCol)
+      }: _*)
+  }
+
+  /** Recall\@k per query of each named leg against `truth`, all top-k
+    * frames `(query_id, nbr_id, …)`: `truth ⟕ legs → (query_id, n_exact,
+    * hit_<leg>…, recall_<leg>…)`; the unnamed leg ([[annRecall]]'s)
+    * yields `n_hit` and `recall`. Every input is a bounded top-k frame
+    * (O(queries·k) rows), so the comparison costs nothing at any corpus
+    * scale.
+    */
+  private def recallTable(truth: DataFrame,
+                          legs: (String, DataFrame)*): DataFrame = {
+    // leg i joins as columns (tq, tn), t = 'a' + i; its hits count tn
+    val named = legs.zipWithIndex.map { case ((leg, top), i) =>
+      val t = ('a' + i).toChar
+      val (hit, recall) =
+        if (leg.isEmpty) ("n_hit", "recall") else (s"hit_$leg", s"recall_$leg")
+      (top.select(col("query_id").as(s"${t}q"), col("nbr_id").as(s"${t}n")),
+        t, hit, recall)
+    }
+    named.foldLeft(truth.select(col("query_id"), col("nbr_id"))) {
+        case (acc, (top, t, _, _)) => acc.join(top,
+          col("query_id") === col(s"${t}q") && col("nbr_id") === col(s"${t}n"),
+          "left")
+      }
       .groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_exact"),
-        count(col("n1")).as("hit_p1"),
-        count(col("nn")).as(s"hit_p$nprobe"),
-        round(count(col("n1")).cast("double") / count(lit(1)), 4)
-          .as("recall_p1"),
-        round(count(col("nn")).cast("double") / count(lit(1)), 4)
-          .as(s"recall_p$nprobe"))
+        named.map { case (_, t, hit, _) => count(col(s"${t}n")).as(hit) }: _*)
+      .select(Seq(col("query_id"), col("n_exact")) ++
+        named.map { case (_, _, hit, _) => col(hit) } ++
+        named.map { case (_, _, hit, recall) =>
+          round(col(hit).cast("double") / col("n_exact").cast("double"), 4)
+            .as(recall)
+        }: _*)
   }
 
   /** One distributed Lloyd (k-means) iteration over the embedding corpus:
@@ -308,7 +308,14 @@ object Similarity {
                  embCol: String = "embedding"): DataFrame = {
     val c = fanOut(corpus.select(col(idCol).cast("long").as("id"),
       asDouble(col(embCol)).as("e")))
-    val assigned = assignCells(c, "id", "e", numCentroids)
+    cellMeans(assignCells(c, "id", "e", numCentroids))
+  }
+
+  /** The Lloyd update of an assigned `(…, e, cell)` frame: per (cell, dim)
+    * the member count and the exact decimal component mean, rounded to
+    * 6 dp — `(cell, dim, n_members, mean_val)`.
+    */
+  private def cellMeans(assigned: DataFrame): DataFrame =
     assigned.select(col("cell"), posexplode(col("e")))
       .select(col("cell"), (col("pos") + 1).cast("long").as("dim"),
         col("col").as("v"))
@@ -317,7 +324,6 @@ object Similarity {
         sum(col("v").cast(org.apache.spark.sql.types.DecimalType(28, 12))).as("s"))
       .select(col("cell"), col("dim"), col("n_members"),
         round(col("s").cast("double") / col("n_members"), 6).as("mean_val"))
-  }
 
   /** Full Lloyd training loop: [[kmeansStep]]'s assign→mean round iterated
     * `maxIters` times (or until the centroids reach a fixed point). Output
@@ -364,29 +370,15 @@ object Similarity {
     import spark.implicits._
     val c = fanOut(corpus.select(col(idCol).cast("long").as("id"),
       asDouble(col(embCol)).as("e")))
-    // Round-0 centroids: the identical deterministic hash-rank K-row
-    // sample assignCells draws (TakeOrderedAndProject — bounded heap,
-    // O(K) driver rows at any corpus size).
-    val centRows = c
-      .orderBy(h60(concat(lit("cent:"), col("id").cast("string"))).asc,
-        col("id").asc)
-      .limit(numCentroids).collect()
-    require(centRows.nonEmpty, "no centroids: empty corpus")
-    val ids = centRows.map(_.getLong(0))
-    var embs = centRows.map(_.getSeq[Double](1).toArray)
+    // Round-0 centroids: the identical hash-rank K-row sample assignCells
+    // draws.
+    val (ids, seed) = sampleCentroids(c, "id", "e", numCentroids)
+    var embs = seed
     var lastMeans = Array.empty[org.apache.spark.sql.Row]
     var rounds = 0
     var done = false
     while (rounds < maxIters && !done) {
-      val means = assignToCentroids(c, "id", "e", ids, embs)
-        .select(col("cell"), posexplode(col("e")))
-        .select(col("cell"), (col("pos") + 1).cast("long").as("dim"),
-          col("col").as("v"))
-        .groupBy(col("cell"), col("dim"))
-        .agg(count(lit(1)).as("n_members"),
-          sum(col("v").cast(org.apache.spark.sql.types.DecimalType(28, 12))).as("s"))
-        .select(col("cell"), col("dim"), col("n_members"),
-          round(col("s").cast("double") / col("n_members"), 6).as("mean_val"))
+      val means = cellMeans(assignToCentroids(c, "id", "e", ids, embs))
         .collect() // ≤ K·dim rows — bounded driver state by construction
       lastMeans = means
       val byCell = means.groupBy(_.getLong(0)).map { case (cell, rs) =>
@@ -471,68 +463,76 @@ object Similarity {
                  subs: Int, cents: Array[Array[Double]],
                  idCol: String = "vec_id",
                  embCol: String = "embedding"): DataFrame =
-    pqTopKFromEmb(
-      fanOut(corpus.select(col(idCol).cast("long").as(idCol),
-        asDouble(col(embCol)).as("e"))),
-      queries, topK, subs, cents, idCol, embCol)
+    pqTopKFromC(corpusSide(corpus, idCol, embCol), queries, topK, subs,
+      cents, idCol, embCol)
 
-  /** [[pqTopKWith]] from a pre-projected `(idCol, e)` corpus frame —
-    * lets [[annRecallIvfPq]] reuse the one materialized corpus
-    * projection its probe legs already carry instead of re-scanning and
-    * re-encoding per leg.
+  /** [[pqTopKWith]] from a [[corpusSide]] frame — lets [[annRecallIvfPq]]
+    * score its unrouted leg from the one materialized corpus side its
+    * probe legs read.
     */
-  private def pqTopKFromEmb(c: DataFrame, queries: DataFrame, topK: Int,
-                            subs: Int, cents: Array[Array[Double]],
-                            idCol: String, embCol: String): DataFrame = {
+  private def pqTopKFromC(c: DataFrame, queries: DataFrame, topK: Int,
+                          subs: Int, cents: Array[Array[Double]],
+                          idCol: String, embCol: String): DataFrame = {
+    val coded = c.select(col("nbr_id"),
+      pqCodesOf(col("c_emb"), cents, subs).as("codes"))
+    val qdt = adcTables(querySide(queries, idCol, embCol), Seq("query_id"),
+      cents, subs)
+    topKBy(coded.crossJoin(broadcast(qdt)), adcSum(subs), "adc", topK,
+      distance = true)
+  }
+
+  /** The native PQ encoder ([[graft.functions.PqCodes]]) over `emb`: the
+    * index of each sub-vector's nearest codebook entry.
+    */
+  private def pqCodesOf(emb: Column, cents: Array[Array[Double]],
+                        subs: Int): Column = {
     require(cents.head.length % subs == 0,
       s"dim ${cents.head.length} not divisible into $subs sub-vectors")
-    val subDim = cents.head.length / subs
-    val codes = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.PqCodes(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("e")),
-        cents, subs))
-    // Per-(query, codebook-entry) distance rows against the k-row codebook
-    // FRAME (not k×subs inlined literal chains — a single giant projection
-    // costs seconds of analysis + codegen per run), then one tiny
-    // aggregate assembles each query's lookup table ordered by entry id.
-    // dtj[j+1][s+1] = ||q_sub(s) − cent_j_sub(s)||².
-    val spark = c.sparkSession
+    GraftColumnBridge.column(graft.functions.PqCodes(
+      GraftColumnBridge.expression(emb), cents, subs))
+  }
+
+  /** The ADC distance table of every `keys` group of `q` (its vector in
+    * `q_emb`) against the codebook `cents`: per-(row, codebook-entry)
+    * distance rows against the k-row codebook FRAME, broadcast (not
+    * k×subs inlined literal chains — a single giant projection costs
+    * seconds of analysis + codegen per run), then one tiny aggregate
+    * assembles each group's table ordered by entry id:
+    * `dtj[j+1][s+1] = ||q_sub(s) − cent_j_sub(s)||²`, a left-associated
+    * sum. Output: `keys ++ dtj`.
+    */
+  private def adcTables(q: DataFrame, keys: Seq[String],
+                        cents: Array[Array[Double]], subs: Int): DataFrame = {
+    val spark = q.sparkSession
     import spark.implicits._
+    val subDim = cents.head.length / subs
     val cbook = broadcast(
       cents.zipWithIndex.map { case (ce, j) => (j, ce.toSeq) }
         .toSeq.toDF("j", "ce"))
     val entryDists = array((0 until subs).map { s =>
       (0 until subDim).map { i =>
         val p = s * subDim + i
-        val diff = element_at(col("qe"), p + 1) - element_at(col("ce"), p + 1)
+        val diff = element_at(col("q_emb"), p + 1) - element_at(col("ce"), p + 1)
         diff * diff
       }.reduceLeft(_ + _)
     }: _*)
-    val qdt = queries
-      .select(col(idCol).cast("long").as("query_id"),
-        asDouble(col(embCol)).as("qe"))
-      .crossJoin(cbook)
-      .select(col("query_id"), col("j"), entryDists.as("ds"))
-      .groupBy(col("query_id"))
+    q.crossJoin(cbook)
+      .select(keys.map(col) :+ col("j") :+ entryDists.as("ds"): _*)
+      .groupBy(keys.map(col): _*)
       .agg(transform(array_sort(collect_list(struct(col("j"), col("ds")))),
         x => x.getField("ds")).as("dtj"))
-    val adc = (0 until subs).map { s =>
+  }
+
+  /** A code row's ADC distance: its `subs` lookups into the `dtj` table,
+    * summed left-associated.
+    */
+  private def adcSum(subs: Int): Column =
+    (0 until subs).map { s =>
       element_at(
         element_at(col("dtj"),
           (element_at(col("codes"), s + 1) + 1).cast("int")),
         s + 1)
     }.reduceLeft(_ + _)
-    val scored = c.withColumn("codes", codes)
-      .select(col(idCol).as("nbr_id"), col("codes"))
-      .join(broadcast(qdt), col("query_id") =!= col("nbr_id"))
-      .select(col("query_id"), col("nbr_id"), round(adc, 6).as("adc"))
-    GraftFunctions.register(scored.sparkSession)
-    scored.groupBy(col("query_id"))
-      .agg(expr(s"topk_by_score(-adc, nbr_id, $topK)").as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.nbr_id").as("nbr_id"), (-col("col.cos_sim")).as("adc"))
-  }
 
   /** IVF-PQ: the coarse quantizer ROUTES, the product quantizer SCORES —
     * the composed index shape trillion-vector deployments actually run
@@ -547,9 +547,8 @@ object Similarity {
     * the two knobs (cells, nprobe) price recall against bytes touched.
     *
     * Determinism as [[pqTopKWith]]: left-associated ADC sums, 6-dp
-    * rounds before ranking, ties to the smaller neighbor id; cell
-    * ranking is the same pinned 6-dp cosine / smaller-cell-id kernel
-    * the native argmax uses, so nprobe=1 probes the argmax cell.
+    * rounds before ranking, ties to the smaller neighbor id; cells are
+    * probed by [[queryCells]], so nprobe=1 probes the argmax cell.
     * Output: `(query_id, rank, nbr_id, adc)`.
     */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, topK: Int,
@@ -557,95 +556,47 @@ object Similarity {
                 subs: Int, cents: Array[Array[Double]], nprobe: Int,
                 idCol: String = "vec_id",
                 embCol: String = "embedding"): DataFrame =
-    ivfPqTopKFromAssigned(
-      ivfAssigned(corpus, coarseIds, coarseEmbs, idCol, embCol),
-      queries, topK, coarseIds, coarseEmbs, subs, cents, nprobe, idCol,
-      embCol)
+    ivfPqSearch(ivfAssigned(corpus, coarseIds, coarseEmbs, idCol, embCol),
+      queries, topK, coarseIds, coarseEmbs, subs, cents, nprobe,
+      residual = false, idCol, embCol)
 
-  /** The shared corpus-side frame of the IVF-PQ family: `(nbr_id, e,
-    * cell, c_nrm)` — the vector, its coarse cell (native argmax) and its
-    * norm, fanned to cluster width. Computed ONCE and (in the recall
-    * probes) materialized once, then every leg derives its codes from it
-    * map-side instead of re-scanning and re-assigning the corpus.
+  /** The routed corpus side of the IVF-PQ family: the [[corpusSide]]
+    * plus its coarse `cell` (native argmax). In the recall probes it is
+    * materialized once and every leg derives its codes from it map-side.
     */
   private def ivfAssigned(corpus: DataFrame, coarseIds: Array[Long],
                           coarseEmbs: Array[Array[Double]],
                           idCol: String, embCol: String): DataFrame =
-    assignToCentroids(
-      fanOut(corpus.select(col(idCol).cast("long").as("nbr_id"),
-        asDouble(col(embCol)).as("e"))),
-      "nbr_id", "e", coarseIds, coarseEmbs)
+    assignToCentroids(corpusSide(corpus, idCol, embCol), "nbr_id", "c_emb",
+      coarseIds, coarseEmbs)
 
-  /** [[ivfPqTopK]] from a pre-assigned corpus frame (see
-    * [[ivfAssigned]]); the raw-vector PQ codes are derived map-side.
+  /** The IVF-PQ search behind [[ivfPqTopK]] (`residual = false`: codes of
+    * the vector) and [[ivfPqResTopK]] (`residual = true`: codes of
+    * `x − centroid(cell)`), from an [[ivfAssigned]] frame. The raw leg's
+    * distance table is per query and joins its probed cells; the residual
+    * leg's is per (query, probed cell), over the query residual
+    * `q − centroid(cell)`.
     */
-  private def ivfPqTopKFromAssigned(assigned: DataFrame, queries: DataFrame,
-                                    topK: Int, coarseIds: Array[Long],
-                                    coarseEmbs: Array[Array[Double]],
-                                    subs: Int, cents: Array[Array[Double]],
-                                    nprobe: Int, idCol: String,
-                                    embCol: String): DataFrame = {
-    require(nprobe >= 1, "nprobe must be at least 1")
-    require(cents.head.length % subs == 0,
-      s"dim ${cents.head.length} not divisible into $subs sub-vectors")
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val subDim = cents.head.length / subs
-    // ONE map-only projection: coarse cell (native argmax over the
-    // shipped centroids) + PQ codes (native encoder over the shipped
-    // codebook) — the whole indexing pass at any corpus size.
-    val codes = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.PqCodes(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("e")),
-        cents, subs))
-    val coded = assigned
-      .select(col("nbr_id"), col("cell"), codes.as("codes"))
-    // Query side: nprobe nearest cells (bounded (queries × K) cross)...
-    val centDf = coarseIds.zip(coarseEmbs).toSeq
-      .map { case (i, e) => (i, e.toSeq) }.toDF("cell", "ce")
-    val q = queries.select(col(idCol).cast("long").as("query_id"),
-      asDouble(col(embCol)).as("qe"))
-    val qCells = q.crossJoin(broadcast(centDf))
-      .select(col("query_id"), col("cell"),
-        round(cosine(col("qe"), col("ce")), 6).as("c_cos"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("c_cos").desc, col("cell").asc)))
-      .where(col("rn") <= nprobe)
-      .select(col("query_id"), col("cell"))
-    // ...plus the per-query ADC distance table (the pqTopKWith kernel).
-    val cbook = broadcast(
-      cents.zipWithIndex.map { case (ce, j) => (j, ce.toSeq) }
-        .toSeq.toDF("j", "ce"))
-    val entryDists = array((0 until subs).map { s =>
-      (0 until subDim).map { i =>
-        val p = s * subDim + i
-        val diff = element_at(col("qe"), p + 1) - element_at(col("ce"), p + 1)
-        diff * diff
-      }.reduceLeft(_ + _)
-    }: _*)
-    val qdt = q.crossJoin(cbook)
-      .select(col("query_id"), col("j"), entryDists.as("ds"))
-      .groupBy(col("query_id"))
-      .agg(transform(array_sort(collect_list(struct(col("j"), col("ds")))),
-        x => x.getField("ds")).as("dtj"))
-    val qSide = qCells.join(qdt, "query_id")
-      .select(col("query_id"), col("cell"), col("dtj"))
-    val adc = (0 until subs).map { s =>
-      element_at(
-        element_at(col("dtj"),
-          (element_at(col("codes"), s + 1) + 1).cast("int")),
-        s + 1)
-    }.reduceLeft(_ + _)
-    val scored = coded.join(broadcast(qSide), Seq("cell"))
-      .where(col("query_id") =!= col("nbr_id"))
-      .select(col("query_id"), col("nbr_id"), round(adc, 6).as("adc"))
-    GraftFunctions.register(spark)
-    scored.groupBy(col("query_id"))
-      .agg(expr(s"topk_by_score(-adc, nbr_id, $topK)").as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.nbr_id").as("nbr_id"), (-col("col.cos_sim")).as("adc"))
+  private def ivfPqSearch(assigned: DataFrame, queries: DataFrame,
+                          topK: Int, coarseIds: Array[Long],
+                          coarseEmbs: Array[Array[Double]], subs: Int,
+                          cents: Array[Array[Double]], nprobe: Int,
+                          residual: Boolean, idCol: String,
+                          embCol: String): DataFrame = {
+    def encoded(emb: String): Column =
+      if (residual) residualOf(col(emb), coarseIds, coarseEmbs) else col(emb)
+    val coded = assigned.select(col("nbr_id"), col("cell"),
+      pqCodesOf(encoded("c_emb"), cents, subs).as("codes"))
+    val q = querySide(queries, idCol, embCol)
+    val qCells = queryCells(q, coarseIds, coarseEmbs, nprobe)
+    val qSide =
+      if (residual)
+        adcTables(qCells.select(col("query_id"), col("cell"),
+          encoded("q_emb").as("q_emb")), Seq("query_id", "cell"), cents, subs)
+      else qCells.join(adcTables(q, Seq("query_id"), cents, subs), "query_id")
+        .select(col("query_id"), col("cell"), col("dtj"))
+    topKBy(coded.join(broadcast(qSide), Seq("cell")), adcSum(subs), "adc",
+      topK, distance = true)
   }
 
   /** The composed index's ROUTING loss priced: recall\@k of
@@ -662,37 +613,16 @@ object Similarity {
                      ids: Array[Long], embs: Array[Array[Double]],
                      subs: Int, cents: Array[Array[Double]],
                      nprobe: Int): DataFrame = {
-    // ONE corpus pass for all three legs: the assigned frame (vector +
-    // cell + norm) is materialized once and each leg derives its codes /
-    // scores from it map-side — this probe used to scan, fan out and
-    // PQ-encode the corpus once PER LEG (3×). Same checkpoint discipline
-    // as minhashPairs' signature frame; at cluster scale you'd persist
-    // the assigned frame to a table for the same reason.
+    // ONE corpus pass for all three legs: the routed corpus side is
+    // materialized once and each leg derives its codes from it map-side.
+    // At cluster scale you'd persist it to a table for the same reason.
     val assigned = ivfAssigned(corpus, ids, embs, "vec_id", "embedding")
       .localCheckpoint()
-    val truth = pqTopKFromEmb(
-        assigned.select(col("nbr_id").as("vec_id"), col("e")),
-        queries, k, subs, cents, "vec_id", "embedding")
-      .select(col("query_id"), col("nbr_id"))
-    val p1 = ivfPqTopKFromAssigned(assigned, queries, k, ids, embs, subs,
-        cents, 1, "vec_id", "embedding")
-      .select(col("query_id").as("q1"), col("nbr_id").as("n1"))
-    val pn = ivfPqTopKFromAssigned(assigned, queries, k, ids, embs, subs,
-        cents, nprobe, "vec_id", "embedding")
-      .select(col("query_id").as("qn"), col("nbr_id").as("nn"))
-    truth
-      .join(p1, col("query_id") === col("q1") && col("nbr_id") === col("n1"),
-        "left")
-      .join(pn, col("query_id") === col("qn") && col("nbr_id") === col("nn"),
-        "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        count(col("n1")).as("hit_p1"),
-        count(col("nn")).as(s"hit_p$nprobe"),
-        round(count(col("n1")).cast("double") / count(lit(1)), 4)
-          .as("recall_p1"),
-        round(count(col("nn")).cast("double") / count(lit(1)), 4)
-          .as(s"recall_p$nprobe"))
+    def leg(np: Int) = ivfPqSearch(assigned, queries, k, ids, embs, subs,
+      cents, np, residual = false, "vec_id", "embedding")
+    recallTable(
+      pqTopKFromC(assigned, queries, k, subs, cents, "vec_id", "embedding"),
+      "p1" -> leg(1), s"p$nprobe" -> leg(nprobe))
   }
 
   /** The coarse centroid table as a literal MAP column (`cell → mean
@@ -704,6 +634,12 @@ object Similarity {
     map_from_arrays(
       array(ids.map(lit(_)): _*),
       array(embs.map(e => array(e.map(lit(_)): _*)): _*))
+
+  /** `emb − centroid(cell)` of a row carrying its `cell`, element-wise. */
+  private def residualOf(emb: Column, ids: Array[Long],
+                         embs: Array[Array[Double]]): Column =
+    zip_with(emb, element_at(centroidMapLit(ids, embs), col("cell")),
+      (x, y) => x - y)
 
   /** RESIDUAL PQ codebook: the same deterministic hash-ranked k-row
     * sample as [[pqCodebook]], but each entry is the sample vector MINUS
@@ -721,20 +657,12 @@ object Similarity {
                     coarseEmbs: Array[Array[Double]],
                     idCol: String = "vec_id",
                     embCol: String = "embedding"): Array[Array[Double]] = {
-    val sample = corpus
-      .select(col(idCol).cast("long").as("vec_id"),
-        asDouble(col(embCol)).as("e"))
-      .orderBy(h60(concat(lit("cent:"), col("vec_id").cast("string"))).asc,
-        col("vec_id").asc)
-      .limit(k)
+    val sample = hashRankSample(corpus.select(
+      col(idCol).cast("long").as("vec_id"), asDouble(col(embCol)).as("e")),
+      "vec_id", k)
+    // projections of the ordered sample keep its order: code j is rank j
     val rows = assignToCentroids(sample, "vec_id", "e", coarseIds, coarseEmbs)
-      .withColumn("r", zip_with(col("e"),
-        element_at(centroidMapLit(coarseIds, coarseEmbs), col("cell")),
-        (x, y) => x - y))
-      // re-pin the hash-rank order so code index j is stable
-      .orderBy(h60(concat(lit("cent:"), col("vec_id").cast("string"))).asc,
-        col("vec_id").asc)
-      .select(col("r")).collect()
+      .select(residualOf(col("e"), coarseIds, coarseEmbs)).collect()
     require(rows.nonEmpty, "no codebook rows: empty corpus")
     rows.map(_.getSeq[Double](0).toArray)
   }
@@ -756,90 +684,10 @@ object Similarity {
                    coarseIds: Array[Long], coarseEmbs: Array[Array[Double]],
                    subs: Int, residCents: Array[Array[Double]], nprobe: Int,
                    idCol: String = "vec_id",
-                   embCol: String = "embedding"): DataFrame = {
-    require(nprobe >= 1, "nprobe must be at least 1")
-    require(residCents.head.length % subs == 0,
-      s"dim ${residCents.head.length} not divisible into $subs sub-vectors")
-    ivfPqResTopKFromAssigned(
-      ivfAssigned(corpus, coarseIds, coarseEmbs, idCol, embCol),
+                   embCol: String = "embedding"): DataFrame =
+    ivfPqSearch(ivfAssigned(corpus, coarseIds, coarseEmbs, idCol, embCol),
       queries, topK, coarseIds, coarseEmbs, subs, residCents, nprobe,
-      idCol, embCol)
-  }
-
-  /** [[ivfPqResTopK]] from a pre-assigned corpus frame (see
-    * [[ivfAssigned]]); the residual PQ codes are derived map-side from
-    * the frame's vector and cell columns.
-    */
-  private def ivfPqResTopKFromAssigned(assigned: DataFrame,
-                                       queries: DataFrame, topK: Int,
-                                       coarseIds: Array[Long],
-                                       coarseEmbs: Array[Array[Double]],
-                                       subs: Int,
-                                       residCents: Array[Array[Double]],
-                                       nprobe: Int, idCol: String,
-                                       embCol: String): DataFrame = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val subDim = residCents.head.length / subs
-    // ONE map-only projection: coarse cell (native argmax), residual
-    // (literal-map centroid lookup), PQ codes over the residual
-    val resid = zip_with(col("e"),
-      element_at(centroidMapLit(coarseIds, coarseEmbs), col("cell")),
-      (x, y) => x - y)
-    val codes = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.PqCodes(
-        org.apache.spark.sql.GraftColumnBridge.expression(resid),
-        residCents, subs))
-    val coded = assigned
-      .select(col("nbr_id"), col("cell"), codes.as("codes"))
-    // Query side: nprobe nearest cells, KEEPING each probed cell's
-    // centroid — the query residual is per (query, cell)
-    val centDf = coarseIds.zip(coarseEmbs).toSeq
-      .map { case (i, e) => (i, e.toSeq) }.toDF("cell", "ce")
-    val q = queries.select(col(idCol).cast("long").as("query_id"),
-      asDouble(col(embCol)).as("qe"))
-    val qCells = q.crossJoin(broadcast(centDf))
-      .select(col("query_id"), col("cell"), col("ce"), col("qe"),
-        round(cosine(col("qe"), col("ce")), 6).as("c_cos"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("c_cos").desc, col("cell").asc)))
-      .where(col("rn") <= nprobe)
-      .select(col("query_id"), col("cell"), col("ce"), col("qe"))
-    // distance table per (query, probed cell): subs entries per code j,
-    // each a left-associated sum of ((q[p] − ce[p]) − rc[p])² terms
-    val cbook = broadcast(
-      residCents.zipWithIndex.map { case (rc, j) => (j, rc.toSeq) }
-        .toSeq.toDF("j", "rc"))
-    val entryDists = array((0 until subs).map { s =>
-      (0 until subDim).map { i =>
-        val p = s * subDim + i
-        val diff = (element_at(col("qe"), p + 1) -
-          element_at(col("ce"), p + 1)) - element_at(col("rc"), p + 1)
-        diff * diff
-      }.reduceLeft(_ + _)
-    }: _*)
-    val qdt = qCells.crossJoin(cbook)
-      .select(col("query_id"), col("cell"), col("j"), entryDists.as("ds"))
-      .groupBy(col("query_id"), col("cell"))
-      .agg(transform(array_sort(collect_list(struct(col("j"), col("ds")))),
-        x => x.getField("ds")).as("dtj"))
-    val adc = (0 until subs).map { s =>
-      element_at(
-        element_at(col("dtj"),
-          (element_at(col("codes"), s + 1) + 1).cast("int")),
-        s + 1)
-    }.reduceLeft(_ + _)
-    val scored = coded.join(broadcast(qdt), Seq("cell"))
-      .where(col("query_id") =!= col("nbr_id"))
-      .select(col("query_id"), col("nbr_id"), round(adc, 6).as("adc"))
-    GraftFunctions.register(spark)
-    scored.groupBy(col("query_id"))
-      .agg(expr(s"topk_by_score(-adc, nbr_id, $topK)").as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.nbr_id").as("nbr_id"), (-col("col.cos_sim")).as("adc"))
-  }
+      residual = true, idCol, embCol)
 
   /** The residual-encoding gain priced at IDENTICAL bytes: recall\@k of
     * raw-vector IVF-PQ ([[ivfPqTopK]]) and residual IVF-PQ
@@ -857,34 +705,16 @@ object Similarity {
                         subs: Int, rawCents: Array[Array[Double]],
                         residCents: Array[Array[Double]],
                         nprobe: Int): DataFrame = {
-    // ONE corpus pass shared by the exact leg (vector + norm ride the
-    // frame) and both code legs (raw / residual codes derived map-side)
-    // — see annRecallIvfPq's checkpoint note.
+    // ONE corpus pass shared by the exact leg and both code legs — see
+    // annRecallIvfPq's checkpoint note.
     val assigned = ivfAssigned(corpus, ids, embs, "vec_id", "embedding")
       .localCheckpoint()
-    val truth = bruteForceFromC(
-        assigned.select(col("nbr_id"), col("e").as("c_emb"), col("c_nrm")),
-        queries, k, "vec_id", "embedding")
-      .select(col("query_id"), col("nbr_id"))
-    val raw = ivfPqTopKFromAssigned(assigned, queries, k, ids, embs, subs,
-        rawCents, nprobe, "vec_id", "embedding")
-      .select(col("query_id").as("q1"), col("nbr_id").as("n1"))
-    val res = ivfPqResTopKFromAssigned(assigned, queries, k, ids, embs,
-        subs, residCents, nprobe, "vec_id", "embedding")
-      .select(col("query_id").as("q2"), col("nbr_id").as("n2"))
-    truth
-      .join(raw, col("query_id") === col("q1") && col("nbr_id") === col("n1"),
-        "left")
-      .join(res, col("query_id") === col("q2") && col("nbr_id") === col("n2"),
-        "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        count(col("n1")).as("hit_raw"),
-        count(col("n2")).as("hit_res"),
-        round(count(col("n1")).cast("double") / count(lit(1)), 4)
-          .as("recall_raw"),
-        round(count(col("n2")).cast("double") / count(lit(1)), 4)
-          .as("recall_res"))
+    def leg(cents: Array[Array[Double]], residual: Boolean) =
+      ivfPqSearch(assigned, queries, k, ids, embs, subs, cents, nprobe,
+        residual, "vec_id", "embedding")
+    recallTable(bruteForceFromC(assigned, queries, k, "vec_id", "embedding"),
+      "raw" -> leg(rawCents, residual = false),
+      "res" -> leg(residCents, residual = true))
   }
 
   /** Scalar (uint8) quantization encode: each dimension affinely mapped
@@ -944,27 +774,18 @@ object Similarity {
 
   private def sqTopKFrom(prep: DataFrame, queries: DataFrame, topK: Int,
                          dim: Int, idCol: String, embCol: String): DataFrame = {
-    val q = queries.select(col(idCol).cast("long").as("query_id"),
-      asDouble(col(embCol)).as("qe"))
     val recon = (i: Int) =>
       element_at(col("mns"), i) +
         element_at(col("codes"), i).cast("double") *
           (element_at(col("mxs"), i) - element_at(col("mns"), i)) / lit(255.0)
     val dist = (1 to dim).map { i =>
-      val diff = element_at(col("qe"), i) - recon(i)
+      val diff = element_at(col("q_emb"), i) - recon(i)
       diff * diff
     }.reduceLeft(_ + _)
-    val scored = prep
-      .select(col(idCol).cast("long").as("nbr_id"),
-        col("codes"), col("mns"), col("mxs"))
-      .join(broadcast(q), col("query_id") =!= col("nbr_id"))
-      .select(col("query_id"), col("nbr_id"), round(dist, 6).as("sq_dist"))
-    GraftFunctions.register(scored.sparkSession)
-    scored.groupBy(col("query_id"))
-      .agg(expr(s"topk_by_score(-sq_dist, nbr_id, $topK)").as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.nbr_id").as("nbr_id"), (-col("col.cos_sim")).as("sq_dist"))
+    val coded = prep.select(col(idCol).cast("long").as("nbr_id"),
+      col("codes"), col("mns"), col("mxs"))
+    topKBy(coded.crossJoin(broadcast(querySide(queries, idCol, embCol))),
+      dist, "sq_dist", topK, distance = true)
   }
 
   /** Shared SQ preparation: corpus with per-dim bound arrays riding as a
@@ -1044,23 +865,15 @@ object Similarity {
       asDouble(col(embCol)).as("e")), cents)
   }
 
-  /** The PQ codebook as driver arrays: the deterministic hash-ranked
-    * k-row sample (TakeOrderedAndProject — bounded heap, O(k·dim) driver
-    * state at any corpus size). The train half of the
+  /** The PQ codebook as driver arrays: the [[hashRankSample]] of k rows
+    * (O(k·dim) driver state at any corpus size). The train half of the
     * [[pqEncodeWith]]/[[pqTopKWith]] apply paths — persist it with
     * [[ModelStore.savePqCodebook]].
     */
   def pqCodebook(corpus: DataFrame, k: Int, idCol: String = "vec_id",
-                 embCol: String = "embedding"): Array[Array[Double]] = {
-    val centRows = corpus
-      .select(col(idCol).cast("long").as(idCol), asDouble(col(embCol)).as("e"))
-      .orderBy(h60(concat(lit("cent:"), col(idCol).cast("string"))).asc,
-        col(idCol).asc)
-      .limit(k)
-      .select(col("e")).collect()
-    require(centRows.nonEmpty, "no codebook rows: empty corpus")
-    centRows.map(_.getSeq[Double](0).toArray)
-  }
+                 embCol: String = "embedding"): Array[Array[Double]] =
+    sampleCentroids(corpus.select(col(idCol).cast("long").as(idCol),
+      asDouble(col(embCol)).as("e")), idCol, "e", k)._2
 
   /** [[pqEncode]] against an EXPLICIT (artifact-loaded) codebook — the
     * sampling scan disappears; encoding stays a pure map-only projection.
@@ -1068,68 +881,57 @@ object Similarity {
   def pqEncodeWith(corpus: DataFrame, subs: Int,
                    cents: Array[Array[Double]], idCol: String = "vec_id",
                    embCol: String = "embedding"): DataFrame = {
-    require(cents.head.length % subs == 0,
-      s"dim ${cents.head.length} not divisible into $subs sub-vectors")
     val c = corpus.select(col(idCol).cast("long").as(idCol),
       asDouble(col(embCol)).as("e"))
-    val codes = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.PqCodes(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("e")),
-        cents, subs))
     val codeCols = (0 until subs).map(s =>
       element_at(col("codes"), s + 1).as(s"c$s"))
-    c.withColumn("codes", codes)
+    c.withColumn("codes", pqCodesOf(col("e"), cents, subs))
       .select(col(idCol) +: codeCols: _*)
   }
 
-  /** Nearest-centroid (max cosine) cell id per row; ties broken by smaller
-    * centroid id; zero-norm rows deterministically land in the smallest
-    * centroid id's cell.
-    *
-    * Centroid selection is a bounded hash-rank sample: the K corpus rows
-    * with the smallest `h60("cent:" || id)` (id tie-break). This plans as
-    * TakeOrderedAndProject — a bounded heap per task, K rows shuffled, K
-    * rows collected — so the driver-side table is provably O(K) no matter
-    * how large the corpus is, and selection stays deterministic and
-    * engine-portable (the oracle replays the same md5 ranking).
-    *
-    * The K centroids are embedded as an array literal, so assignment is a
-    * map-only projection — the big side is never joined, shuffled, or
-    * windowed. Centroid norms are precomputed driver-side with the same
-    * left-fold the column `dot` uses, so results are bit-identical to an
-    * all-column-expression plan.
+  /** Nearest-centroid (max cosine) cell id per row against the
+    * [[sampleCentroids]] table of `df` itself; see [[assignToCentroids]].
     */
   private def assignCells(df: DataFrame, idName: String, embName: String,
                           numCentroids: Int,
                           passThrough: Seq[String] = Nil): DataFrame = {
-    val (ids, embs) = sampleCentroids(df, numCentroids)
+    val (ids, embs) = sampleCentroids(df, idName, embName, numCentroids)
     assignToCentroids(df, idName, embName, ids, embs, passThrough)
   }
 
-  /** The deterministic hash-rank centroid sample behind [[assignCells]]
-    * (TakeOrderedAndProject — bounded heap, O(K) driver rows at any
-    * corpus size), split out so multi-probe assignment can reuse the
-    * IDENTICAL centroid table.
+  /** The one deterministic sample behind every centroid table and PQ
+    * codebook: the `n` rows of `df` with the smallest
+    * `h60("cent:" || id)`, ties to the smaller id, in that order. It
+    * plans as TakeOrderedAndProject — a bounded heap per task, n rows
+    * shuffled — so selection stays O(n) at any corpus size, and
+    * engine-portable (the oracle replays the same md5 ranking).
     */
-  private def sampleCentroids(base: DataFrame,
-                              numCentroids: Int): (Array[Long], Array[Array[Double]]) = {
-    val Seq(bId, bEmb) = base.columns.take(2).toSeq
-    val centRows = base
-      .orderBy(h60(concat(lit("cent:"), col(bId).cast("string"))).asc,
-        col(bId).asc)
-      .limit(numCentroids)
-      .select(col(bId).cast("long"), col(bEmb)).collect()
-    require(centRows.nonEmpty, "no centroids: empty corpus")
-    (centRows.map(_.getLong(0)), centRows.map(_.getSeq[Double](1).toArray))
+  private def hashRankSample(df: DataFrame, idName: String,
+                             n: Int): DataFrame =
+    df.orderBy(h60(concat(lit("cent:"), col(idName).cast("string"))).asc,
+        col(idName).asc)
+      .limit(n)
+
+  /** [[hashRankSample]] collected as a centroid table: ids and vectors,
+    * O(n) driver rows.
+    */
+  private def sampleCentroids(df: DataFrame, idName: String, embName: String,
+                              n: Int): (Array[Long], Array[Array[Double]]) = {
+    val rows = hashRankSample(df, idName, n)
+      .select(col(idName).cast("long"), col(embName)).collect()
+    require(rows.nonEmpty, "no centroids: empty corpus")
+    (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray))
   }
 
-  /** Map-only nearest-centroid assignment against an EXPLICIT centroid
-    * table (ids + vectors embedded as literals in the native argmax
-    * expression) — the shared kernel of [[assignCells]] (hash-rank-sampled
-    * centroids) and the [[kmeansTrain]] loop (each round's recomputed
-    * means). Centroid norms are precomputed driver-side with the same
-    * left-fold the column `dot` uses, so results are bit-identical to an
-    * all-column-expression plan.
+  /** Map-only nearest-centroid (max cosine) assignment against an
+    * EXPLICIT centroid table — ties broken by the smaller centroid id,
+    * zero-norm rows in the smallest id's cell. The ids and vectors embed
+    * as literals in the native argmax expression, so the big side is
+    * never joined, shuffled, or windowed. Centroid norms are precomputed
+    * driver-side with the same left-fold the column `dot` uses, so
+    * results are bit-identical to an all-column-expression plan. Output:
+    * the id, the vector, `passThrough`, `cell` and the row's norm
+    * (`q_nrm` for queries, `c_nrm` otherwise).
     */
   private def assignToCentroids(df: DataFrame, idName: String, embName: String,
                                 ids: Array[Long], embs: Array[Array[Double]],
@@ -1137,10 +939,9 @@ object Similarity {
     val nrms = embs.map(e => math.sqrt(e.foldLeft(0.0d)((acc, x) => acc + x * x)))
     // Native argmax over the embedded centroid table (rounded to 6dp,
     // ties to the smaller id, zero norms → 0.0 — pinned to the oracle).
-    val cell = org.apache.spark.sql.GraftColumnBridge.column(
+    val cell = GraftColumnBridge.column(
       graft.functions.NearestCentroid(
-        org.apache.spark.sql.GraftColumnBridge.expression(col(embName)),
-        ids, embs, nrms))
+        GraftColumnBridge.expression(col(embName)), ids, embs, nrms))
     val nrmName = if (idName == "query_id") "q_nrm" else "c_nrm"
     df.withColumn("_nrm", sqrt(dot(col(embName), col(embName))))
       .select(Seq(col(idName), col(embName)) ++ passThrough.map(col) ++
@@ -1153,32 +954,14 @@ object Similarity {
     * `sketch_eval` query: measure the approximation on the corpus itself,
     * then pick the nprobe/centroid knobs).
     *
-    * Equal to joining [[bruteForceTopK]] with [[ivfTopK]], but the corpus
-    * side is built once for both legs: one projection and fan-out
-    * ([[corpusSide]]), materialized once (the centroid sample and both
-    * legs read its blocks — unmaterialized, each of the three re-ran the
-    * scan and the fan-out shuffle), and one centroid sample, which the
-    * IVF leg assigns both the corpus and the queries against. Both legs'
-    * outputs are the already-bounded top-k frames (O(|queries|·k) rows),
-    * so the comparison join and the per-query aggregate cost nothing at
-    * any corpus scale.
+    * Equal to joining [[bruteForceTopK]] with [[ivfTopK]], but built by
+    * [[ivfRecall]]: one corpus side, materialized once, and one centroid
+    * sample feed both legs. Output: `(query_id, n_exact, n_hit, recall)`.
     */
   def annRecall(corpus: DataFrame, queries: DataFrame, k: Int,
-                numCentroids: Int): DataFrame = {
-    val (idCol, embCol) = ("vec_id", "embedding")
-    val c = corpusSide(corpus, idCol, embCol).localCheckpoint()
-    val (ids, embs) = sampleCentroids(c, numCentroids)
-    val exact = bruteForceFromC(c, queries, k, idCol, embCol)
-      .select(col("query_id"), col("nbr_id"))
-    val approx = ivfFromC(c, queries, k, ids, embs, idCol, embCol)
-      .select(col("query_id").as("aq"), col("nbr_id").as("an"))
-    exact.join(approx,
-        col("query_id") === col("aq") && col("nbr_id") === col("an"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_exact"), count(col("an")).as("n_hit"))
-      .select(col("query_id"), col("n_exact"), col("n_hit"),
-        round(col("n_hit").cast("double") / col("n_exact").cast("double"), 4).as("recall"))
-  }
+                numCentroids: Int): DataFrame =
+    ivfRecall(corpus, queries, k,
+      sampleCentroids(_, "nbr_id", "c_emb", numCentroids), "" -> 1)
 
   /** Eval-set contamination at the EMBEDDING level — the semantic
     * complement of [[Decontaminate.flagOverlap]]'s n-gram pass (paraphrased
@@ -1238,7 +1021,6 @@ object Similarity {
                  idCol: String = "vec_id",
                  embCol: String = "embedding",
                  labelCol: String = "label"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = fanOut(corpus.select(col(idCol).cast("long").as("id"),
       asDouble(col(embCol)).as("e"), col(labelCol).as("label")))
     val assigned = assignCells(c, "id", "e", numCentroids,
@@ -1594,14 +1376,11 @@ object Similarity {
     * top-k — the "how high does the first relevant hit rank" metric,
     * with label agreement as the relevance oracle.
     *
-    * Scale shape: everything after [[bruteForceTopK]] (one corpus scan,
-    * bounded per-query heaps) is bounded — the label lookup joins the
-    * corpus against the BROADCAST (queries × k)-row ranked frame
-    * (corpus side map-only), and the reciprocal ranks aggregate over
-    * ≤ queries rows. The tiny RR frame is checkpointed before being read
-    * twice (per-query rows + the MRR summary), so no corpus re-scan
-    * hides behind the second consumer. RR sums are exact decimals —
-    * order-free, engine-portable.
+    * Scale shape: everything after [[labeledTopK]] is bounded — the
+    * reciprocal ranks aggregate over ≤ queries rows. The tiny RR frame is
+    * checkpointed before being read twice (per-query rows + the MRR
+    * summary), so no corpus re-scan hides behind the second consumer. RR
+    * sums are exact decimals — order-free, engine-portable.
     *
     * Output: `(query_id, first_rank, rr, mrr)` — `first_rank`/`rr` are 0
     * for queries with no same-label neighbor in the top-k; `mrr` is the
@@ -1611,14 +1390,9 @@ object Similarity {
             idCol: String = "vec_id", embCol: String = "embedding",
             labelCol: String = "label"): DataFrame = {
     val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
-    val top = bruteForceTopK(corpus, queries, k, idCol, embCol)
-    val nbrLab = corpus.select(col(idCol).cast("long").as("nbr_id"),
-      col(labelCol).as("nlabel"))
-    val labeled = nbrLab.join(broadcast(top), "nbr_id")
-    val qlab = queries.select(col(idCol).cast("long").as("query_id"),
-      col(labelCol).as("qlabel"))
-    val firsts = labeled.join(broadcast(qlab), "query_id")
-      .where(col("nlabel") === col("qlabel"))
+    val (labeled, qlab) = labeledTopK(corpus, queries, k, idCol, embCol,
+      labelCol)
+    val firsts = labeled.where(col("nlabel") === col("qlabel"))
       .groupBy(col("query_id")).agg(min(col("rank")).as("first_rank"))
     val rr = qlab.join(firsts, Seq("query_id"), "left")
       .select(col("query_id"),
@@ -1630,6 +1404,26 @@ object Similarity {
       round(sum(col("rr").cast(dec6)).cast("double") / count(lit(1)), 6)
         .as("mrr"))
     rr.crossJoin(broadcast(summary))
+  }
+
+  /** The labeled prefix [[mrrAt]] and [[mapAt]] share: the exact cosine
+    * top-k ([[bruteForceTopK]]: one corpus scan, bounded per-query heaps)
+    * with each neighbor's label `nlabel` and its query's label `qlabel`.
+    * The label lookup joins the corpus against the BROADCAST
+    * (queries × k)-row ranked frame, so the corpus side stays map-only.
+    * Returned with the `(query_id, qlabel)` frame every query's output
+    * row comes from.
+    */
+  private def labeledTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+                          idCol: String, embCol: String,
+                          labelCol: String): (DataFrame, DataFrame) = {
+    val top = bruteForceTopK(corpus, queries, k, idCol, embCol)
+    val nbrLab = corpus.select(col(idCol).cast("long").as("nbr_id"),
+      col(labelCol).as("nlabel"))
+    val qlab = queries.select(col(idCol).cast("long").as("query_id"),
+      col(labelCol).as("qlabel"))
+    (nbrLab.join(broadcast(top), "nbr_id").join(broadcast(qlab), "query_id"),
+      qlab)
   }
 
   /** Map-only cell assignment against an EXPLICIT (artifact-loaded —
@@ -1667,17 +1461,11 @@ object Similarity {
   def mapAt(corpus: DataFrame, queries: DataFrame, k: Int,
             idCol: String = "vec_id", embCol: String = "embedding",
             labelCol: String = "label"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
-    val top = bruteForceTopK(corpus, queries, k, idCol, embCol)
-    val nbrLab = corpus.select(col(idCol).cast("long").as("nbr_id"),
-      col(labelCol).as("nlabel"))
-    val labeled = nbrLab.join(broadcast(top), "nbr_id")
-    val qlab = queries.select(col(idCol).cast("long").as("query_id"),
-      col(labelCol).as("qlabel"))
-    val marked = labeled.join(broadcast(qlab), "query_id")
-      .select(col("query_id"), col("rank"),
-        (col("nlabel") === col("qlabel")).cast("long").as("rel"))
+    val (labeled, qlab) = labeledTopK(corpus, queries, k, idCol, embCol,
+      labelCol)
+    val marked = labeled.select(col("query_id"), col("rank"),
+      (col("nlabel") === col("qlabel")).cast("long").as("rel"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("rank"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val prefixed = marked.select(col("query_id"), col("rank"), col("rel"),
@@ -1707,16 +1495,27 @@ object Similarity {
     BigDecimal(x).setScale(scale, scala.math.BigDecimal.RoundingMode.HALF_UP)
       .toDouble
 
-  /** Per-query top-k by similarity (desc), deterministic tie-break on id.
-    * Bounded-heap aggregate with map-side partial aggregation — see
-    * [[graft.functions.TopKByScore]].
+  /** The one top-k emit of every search leg: each query's `k` best
+    * `pairs` (`query_id`, `nbr_id`, …) by `score`, with self matches
+    * dropped and the score rounded to 6 dp (so any engine ranks identical
+    * values) and named `name`; ties go to the smaller neighbor id, and a
+    * `distance` ranks ascending. The bounded-heap `topk_by_score`
+    * aggregate ([[graft.functions.TopKByScore]]) combines map-side, so
+    * each task sends at most k rows per query into the one shuffle — a
+    * window top-k would land one query's whole corpus of scores on one
+    * task. Output: `(query_id, rank, nbr_id, <name>)`.
     */
-  private def topPerKey(scored: DataFrame, k: Int): DataFrame = {
-    GraftFunctions.register(scored.sparkSession)
-    scored.groupBy(col("query_id"))
-      .agg(expr(s"topk_by_score(cos_sim, nbr_id, $k)").as("top"))
+  private def topKBy(pairs: DataFrame, score: Column, name: String, k: Int,
+                     distance: Boolean = false): DataFrame = {
+    GraftFunctions.register(pairs.sparkSession)
+    val heapScore = if (distance) s"-$name" else name
+    pairs.where(col("query_id") =!= col("nbr_id"))
+      .select(col("query_id"), col("nbr_id"), round(score, 6).as(name))
+      .groupBy(col("query_id"))
+      .agg(expr(s"topk_by_score($heapScore, nbr_id, $k)").as("top"))
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.nbr_id").as("nbr_id"), col("col.cos_sim").as("cos_sim"))
+        col("col.nbr_id").as("nbr_id"),
+        (if (distance) -col("col.cos_sim") else col("col.cos_sim")).as(name))
   }
 }

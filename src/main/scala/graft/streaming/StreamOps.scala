@@ -158,18 +158,27 @@ object StreamOps {
 
   /** Stage a path as a file-stream source directory. The file source
     * monitors a DIRECTORY of arriving files (the landing-dir contract);
-    * the test corpus is a single parquet file, so link it into a fresh
-    * directory — zero-copy, and the same shape a production ingest sees.
+    * the test corpus is a single parquet file, so link it into a
+    * directory of its own — zero-copy, and the same shape a production
+    * ingest sees. A directory path is returned as is. A file is staged
+    * once per JVM (memoised by absolute path), and its directory and link
+    * are deleted when the JVM exits.
     */
   def stageDir(path: String): String = {
     val p = java.nio.file.Paths.get(path)
     if (java.nio.file.Files.isDirectory(p)) path
-    else {
+    else staged.computeIfAbsent(p.toAbsolutePath.toString, { abs =>
       val dir = java.nio.file.Files.createTempDirectory("graft_src")
-      java.nio.file.Files.createSymbolicLink(dir.resolve(p.getFileName), p)
+      dir.toFile.deleteOnExit() // registered first, so deleted last
+      val link = java.nio.file.Files.createSymbolicLink(
+        dir.resolve(p.getFileName), java.nio.file.Paths.get(abs))
+      link.toFile.deleteOnExit()
       dir.toString
-    }
+    })
   }
+
+  private val staged =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Open the events parquet directory as a STREAM with the same
     * schema-adaptive µs timestamp normalization
@@ -217,21 +226,14 @@ object StreamOps {
     SessionConf.withConf(spark, "spark.sql.shuffle.partitions" -> n.toString)(body)
 
   /** Run `body` with trailing NO-DATA micro-batches disabled
-    * (`spark.sql.streaming.noDataMicroBatches.enabled=false`). After the
-    * last data batch of a bounded (`AvailableNow`) run, Spark schedules
-    * one extra empty batch purely to act on the advanced watermark — a
-    * full state-store load/commit round-trip per stateful operator per
-    * partition (measured: the second of stream_join's two batch jobs,
-    * 0.65 s of its 1.7 s batch wall). None of the bounded runners need
-    * it for OUTPUT correctness: complete/update-mode sinks re-emit final
-    * state with the last data batch; the append-mode paths here
-    * (dropDuplicates*, flatMapGroupsWithState gap-closes, stream-stream
-    * INNER join, stateless transforms) all emit on arrival/match, and
-    * the sessionization queries pin watermark delays past the corpus
-    * span precisely so that no event-time timeout ever fires. A pipeline
-    * that DOES rely on watermark-driven emission (append-mode windowed
-    * aggregates, timer fires) must leave the default on — which is why
-    * this is scoped to the bounded runners, not set session-wide.
+    * (`spark.sql.streaming.noDataMicroBatches.enabled=false`): after the
+    * last data batch of a bounded (`AvailableNow`) run, Spark would
+    * schedule one extra empty batch purely to act on the advanced
+    * watermark — a state-store load/commit round trip per stateful
+    * operator per partition (measured: 0.65 s of stream_join's 1.7 s
+    * batch wall). The bounded runners' sinks do not need it
+    * (complete/update mode re-emits final state with the last data
+    * batch; see [[runToParquet]]'s guard for the append-mode runner).
     */
   private def withoutNoDataBatches[T](spark: SparkSession)(body: => T): T =
     SessionConf.withConf(spark,
@@ -268,9 +270,26 @@ object StreamOps {
     * completion, writing PARQUET — the production sink shape: exactly-once
     * file commits via the checkpoint/commit log, resumable by checkpoint.
     * Returns the written rows read back.
+    *
+    * Append mode emits a streaming aggregate's window only once the
+    * watermark passes it, which takes a no-data batch this runner does not
+    * run, so the final windows would be dropped silently: a plan with a
+    * streaming `Aggregate` is refused with an `IllegalArgumentException`.
+    * Run those through [[runToCompletion]]. Deduplication, inner joins
+    * and stateless transforms emit on arrival or match; a state function
+    * whose event-time timeouts must fire needs the no-data batch too, which
+    * is why the sessionization builders set a watermark delay past the
+    * corpus span.
     */
   def runToParquet(spark: SparkSession, out: DataFrame,
                    statePartitions: Int = 8): DataFrame = {
+    require(out.queryExecution.analyzed.find {
+        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a.isStreaming
+        case _ => false
+      }.isEmpty,
+      "runToParquet runs append mode without no-data batches, so a " +
+        "streaming aggregate's final windows would never be emitted; " +
+        "use runToCompletion")
     val base = java.nio.file.Files.createTempDirectory("graft_stream").toString
     withoutNoDataBatches(spark) { withStatePartitions(spark, statePartitions) {
       val q = out.writeStream

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Similarity
 
-/** `Similarity.annRecall` builds its corpus side once for both legs; its
-  * rows must be those of the two independent legs joined.
+/** The recall probes of `Similarity` build one corpus side for all their
+  * legs; their rows must be those of the independent public legs joined.
   */
 class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -58,6 +58,102 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
       // neither all hits nor all misses: the IVF leg is really approximate
       val hits = got.map(_.getLong(2))
       assert(hits.sum > 0 && hits.exists(_ < k), s"k=$k hits $hits")
+    }
+  }
+
+  /** The three-leg recall table as the probes joined their public legs:
+    * `exact ⟕ p1 ⟕ pn` on (query, neighbor), hits counted per query.
+    */
+  private def threeLegRecall(exact: DataFrame, p1: DataFrame, pn: DataFrame,
+                             nprobe: Int): DataFrame =
+    exact.select(col("query_id"), col("nbr_id"))
+      .join(p1.select(col("query_id").as("q1"), col("nbr_id").as("n1")),
+        col("query_id") === col("q1") && col("nbr_id") === col("n1"), "left")
+      .join(pn.select(col("query_id").as("qn"), col("nbr_id").as("nn")),
+        col("query_id") === col("qn") && col("nbr_id") === col("nn"), "left")
+      .groupBy(col("query_id"))
+      .agg(count(lit(1)).as("n_exact"),
+        count(col("n1")).as("hit_p1"),
+        count(col("nn")).as(s"hit_p$nprobe"),
+        round(count(col("n1")).cast("double") / count(lit(1)), 4)
+          .as("recall_p1"),
+        round(count(col("nn")).cast("double") / count(lit(1)), 4)
+          .as(s"recall_p$nprobe"))
+
+  private def corpus300(): DataFrame = {
+    val sp = spark; import sp.implicits._
+    val rnd = new scala.util.Random(5)
+    (0 until 300).map(i =>
+      (i.toLong, Array.fill(8)((rnd.nextGaussian() * 2).toFloat))).toDF("vec_id", "embedding")
+  }
+
+  /** k-means centroids of `corpus` as the (ids, vectors) table the
+    * shipped-quantizer operators take.
+    */
+  private def trainedCentroids(corpus: DataFrame, cells: Int)
+      : (Array[Long], Array[Array[Double]]) = {
+    val byCell = Similarity.kmeansTrain(corpus, cells, 3).collect()
+      .groupBy(_.getAs[Long]("cell")).toSeq.sortBy(_._1)
+    (byCell.map(_._1).toArray,
+      byCell.map(_._2.sortBy(_.getAs[Long]("dim"))
+        .map(_.getAs[Double]("mean_val"))).toArray)
+  }
+
+  /** Row-for-row equality with the composition, and a non-vacuous probe:
+    * the `nprobe` leg finds every neighbor the single cell finds and,
+    * summed over the queries, more.
+    */
+  private def assertSameAndProbing(got: Seq[org.apache.spark.sql.Row],
+                                   want: Seq[org.apache.spark.sql.Row],
+                                   what: String): Unit = {
+    assert(got == want, what)
+    assert(got.size == 8, what)
+    val (h1, hn) = (got.map(_.getLong(2)), got.map(_.getLong(3)))
+    assert(h1.zip(hn).forall { case (a, b) => b >= a } && hn.sum > h1.sum,
+      s"$what: hits at nprobe 1 $h1, at nprobe $hn")
+  }
+
+  test("annRecallProbe and annRecallTrained equal the three-leg composition row for row") {
+    val corpus = corpus300()
+    val queries = corpus.where(col("vec_id") < 8)
+    val (ids, embs) = trainedCentroids(corpus, 16)
+    for (k <- Seq(5, 16); nprobe <- Seq(2, 3)) {
+      val exact = Similarity.bruteForceTopK(corpus, queries, k)
+      assertSameAndProbing(
+        Similarity.annRecallProbe(corpus, queries, k, 16, nprobe)
+          .orderBy("query_id").collect().toSeq,
+        threeLegRecall(exact, Similarity.ivfTopK(corpus, queries, k, 16),
+          Similarity.ivfTopKProbe(corpus, queries, k, 16, nprobe), nprobe)
+          .orderBy("query_id").collect().toSeq,
+        s"annRecallProbe k=$k nprobe=$nprobe")
+      assertSameAndProbing(
+        Similarity.annRecallTrained(corpus, queries, k, ids, embs, nprobe)
+          .orderBy("query_id").collect().toSeq,
+        threeLegRecall(exact,
+          Similarity.ivfTopKWith(corpus, queries, k, ids, embs),
+          Similarity.ivfTopKProbeWith(corpus, queries, k, ids, embs, nprobe),
+          nprobe)
+          .orderBy("query_id").collect().toSeq,
+        s"annRecallTrained k=$k nprobe=$nprobe")
+    }
+  }
+
+  test("annRecallIvfPq equals the three-leg composition row for row") {
+    val corpus = corpus300()
+    val queries = corpus.where(col("vec_id") < 8)
+    val (ids, embs) = trainedCentroids(corpus, 16)
+    val cents = Similarity.pqCodebook(corpus, 16)
+    for (k <- Seq(5, 16); nprobe <- Seq(2, 3)) {
+      assertSameAndProbing(
+        Similarity.annRecallIvfPq(corpus, queries, k, ids, embs, 4, cents,
+            nprobe)
+          .orderBy("query_id").collect().toSeq,
+        threeLegRecall(Similarity.pqTopKWith(corpus, queries, k, 4, cents),
+          Similarity.ivfPqTopK(corpus, queries, k, ids, embs, 4, cents, 1),
+          Similarity.ivfPqTopK(corpus, queries, k, ids, embs, 4, cents, nprobe),
+          nprobe)
+          .orderBy("query_id").collect().toSeq,
+        s"annRecallIvfPq k=$k nprobe=$nprobe")
     }
   }
 }

@@ -1834,7 +1834,9 @@ object Scale {
     * then [[graft.ops.TextStats.docPerplexityTk]] (five aggregates) and
     * [[graft.ops.TextStats.sourceDivergenceTk]] both reading the SAME
     * staged frame — the cross-consumer reuse that makes staging pay:
-    * the regex tokenizer runs once for 100M tokens, not 6+ times.
+    * the tokenizer ([[graft.functions.Tokens]], one byte pass per
+    * document) runs once for 100M tokens, not 6+ times;
+    * `stage_seconds` times that pass and the parquet write.
     * Asserts the gate flags a sane fraction (> 0, < 20%) and that no
     * cached state survives the run.
     */

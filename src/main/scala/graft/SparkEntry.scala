@@ -460,25 +460,6 @@ object SparkEntry {
   private val sortCols =
     Seq("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_returnflag")
 
-  /** Scratch directory for the sink/round-trip queries, removed on JVM
-    * exit. The returned DataFrame is lazy — the directory must outlive
-    * this call (the harness collects later, possibly several times), so
-    * the earliest safe cleanup point is process exit; the shutdown hook
-    * stops repeated bench/verify runs from accumulating dead copies in
-    * /tmp across JVMs.
-    */
-  private def tempDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(p.toFile)
-    }))
-    p.toString
-  }
-
   // ---- fitted-state artifacts (train ONCE per JVM; apply-passes LOAD —
   //      see ModelStore) -------------------------------------------------
 
@@ -1177,7 +1158,7 @@ object SparkEntry {
     // write tab-framed lines, read them back with the text source, and
     // re-derive the typed columns by splitting at the first tab.
     "text_roundtrip" -> ((s, d) => {
-      val path = tempDir("graft_text")
+      val path = ModelStore.scratchDir("graft_text")
       docs(s, d)
         .select(concat_ws("\t", col("doc_id"), col("text")).as("value"))
         .write.mode("overwrite").text(path)
@@ -1449,7 +1430,7 @@ object SparkEntry {
       // the bucketed layout is a one-time table-design cost, not part of
       // the join: write it once per session (bench run 2 times the join)
       if (!s.catalog.tableExists("graft_orders_b")) {
-        val base = tempDir("graft_bucketed")
+        val base = ModelStore.scratchDir("graft_bucketed")
         Tables.orders(s, d).write.mode("overwrite").format("parquet")
           .option("path", s"$base/orders_b")
           .bucketBy(8, "o_custkey").sortBy("o_custkey")
@@ -1472,7 +1453,7 @@ object SparkEntry {
     // are never listed or read. At 100 TB this is the difference between
     // scanning one status partition and scanning the table.
     "partitioned_scan" -> ((s, d) => {
-      val base = tempDir("graft_part")
+      val base = ModelStore.scratchDir("graft_part")
       Tables.orders(s, d).write.mode("overwrite")
         .partitionBy("o_orderstatus").parquet(base)
       s.read.parquet(base)
@@ -2738,7 +2719,7 @@ object SparkEntry {
     // (file, offset) order with NO re-sort — matching the ORDER BY oracle
     // proves the sink preserved global order end-to-end.
     "sorted_sink" -> ((s, d) => {
-      val path = tempDir("graft_sorted_sink")
+      val path = ModelStore.scratchDir("graft_sorted_sink")
       Sorts.sortedSink(li(s, d).select(sortCols.map(col): _*), path,
         col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
       Sorts.readSortedSink(s, path)
@@ -2750,7 +2731,7 @@ object SparkEntry {
     // the exactly-once distributed-write pattern. The digest is over keys
     // (not formatted rows) so the oracle recomputes it engine-portably.
     "digest_sink" -> ((s, d) => {
-      val path = tempDir("graft_digest")
+      val path = ModelStore.scratchDir("graft_digest")
       li(s, d)
         .select(h60(concat(
           col("l_orderkey").cast("string"), lit(":"),
@@ -2764,7 +2745,7 @@ object SparkEntry {
     // through a written CSV / JSON copy and back, against the parquet
     // oracle — proves header/quoting/type inference plumbing.
     "csv_roundtrip" -> ((s, d) => {
-      val path = tempDir("graft_csv")
+      val path = ModelStore.scratchDir("graft_csv")
       val nation = Tables.nation(s, d)
       nation.write.mode("overwrite").option("header", "true").csv(path)
       s.read.option("header", "true").schema(nation.schema).csv(path)
@@ -2779,7 +2760,7 @@ object SparkEntry {
     // scale the per-file footer schemas merge on the driver — no data
     // pass; readers prune to the union schema as usual.
     "schema_drift" -> ((s, d) => {
-      val path = tempDir("graft_drift")
+      val path = ModelStore.scratchDir("graft_drift")
       val doc = docs(s, d)
       doc.where(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("lang"))
@@ -2795,7 +2776,7 @@ object SparkEntry {
     }),
 
     "json_roundtrip" -> ((s, d) => {
-      val path = tempDir("graft_json")
+      val path = ModelStore.scratchDir("graft_json")
       val supplier = Tables.supplier(s, d)
       supplier.write.mode("overwrite").json(path)
       s.read.schema(supplier.schema).json(path)
@@ -2803,7 +2784,7 @@ object SparkEntry {
     }),
 
     "orc_roundtrip" -> ((s, d) => {
-      val path = tempDir("graft_orc")
+      val path = ModelStore.scratchDir("graft_orc")
       val part = Tables.part(s, d)
       part.write.mode("overwrite").orc(path)
       s.read.orc(path).orderBy(col("p_partkey"))

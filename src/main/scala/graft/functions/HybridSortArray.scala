@@ -65,7 +65,8 @@ object HybridSortArrayUtil {
 
 /** `hybrid_sort_array(arr[, threshold])` — sorts an int/long array column
   * ascending using the reference's hybrid quicksort+insertion-sort
-  * (threshold default 25, `/root/reference/SequentialQuickInsert.c:5`).
+  * (threshold default [[HybridSort.DefaultThreshold]]; the reference's is
+  * 25, `SequentialQuickInsert.c:5`).
   *
   * Implemented as a native Catalyst expression (not a Scala UDF) so it
   * participates in whole-stage codegen: `doGenCode` emits a direct static

@@ -33,7 +33,7 @@ object ShingleUtil {
   * Semantically identical to the declarative
   * `transform(sequence(1, size(toks)-n+1), i -> concat_ws(' ', slice(toks, i, n)))`
   * — but that form re-evaluates the ENTIRE `toks` expression subtree
-  * (regex split + filter over the full text) for every lambda element,
+  * (the tokenizer pass over the full text) for every lambda element,
   * because `slice(toks, i, n)` inlines the tree into the lambda body:
   * O(tokens²) per document, the dominant cost of every shingle-based
   * operator. Here the child evaluates once per row and shingle assembly

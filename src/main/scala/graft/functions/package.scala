@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** Column helpers shared by every operator in the engine.
@@ -34,11 +33,22 @@ package object functions {
     org.apache.spark.sql.GraftColumnBridge.column(
       MinHash31(org.apache.spark.sql.GraftColumnBridge.expression(c), k))
 
-  /** Lowercased alphanumeric tokens; empty tokens removed.
+  /** Lower-cased alphanumeric tokens: the maximal `[a-z0-9]` runs of
+    * `lower(c)`, as `array<string>` with no null or empty element; null in,
+    * null out. Native single-pass expression (see [[Tokens]]), equal row for
+    * row to `filter(split(lower(c), '[^a-z0-9]+'), t -> t != '')`.
     * DuckDB mirror: `list_filter(string_split_regex(lower(x),'[^a-z0-9]+'), t -> t <> '')`.
     */
   def tokens(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), t => t =!= lit(""))
+    org.apache.spark.sql.GraftColumnBridge.column(
+      Tokens(org.apache.spark.sql.GraftColumnBridge.expression(c)))
+
+  /** 60-bit SimHash fingerprint of a string-array column (see
+    * [[SimHash60]]).
+    */
+  def simhash60(c: Column): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(
+      SimHash60(org.apache.spark.sql.GraftColumnBridge.expression(c)))
 
   /** `n`-word shingles (space-joined) of a token array; empty when the
     * document has fewer than `n` tokens. Native single-pass expression —

@@ -196,14 +196,10 @@ object Dedup {
 
   /** SimHash fingerprint per document (see functions.SimHash60): 60-bit
     * signature whose Hamming distance approximates cosine similarity of
-    * the token-frequency vectors. Requires GraftFunctions.register first.
+    * the token-frequency vectors.
     */
-  def simhash(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    docs.select(col("doc_id"),
-      expr("simhash60(filter(split(lower(text), '[^a-z0-9]+'), t -> t != ''))")
-        .as("simhash"))
-  }
+  def simhash(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), simhash60(tokens(col("text"))).as("simhash"))
 
   /** Exact n-gram Jaccard computed ONLY over candidate pairs (doc_a, doc_b)
     * — e.g. the output of [[minhashPairs]]. This is the scale-correct

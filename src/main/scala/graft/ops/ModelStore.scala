@@ -41,9 +41,12 @@ import org.apache.spark.sql.functions._
   */
 object ModelStore {
 
-  /** Scratch directory removed at JVM exit — artifacts must outlive the
-    * (lazy) frames built over them and stay for every later apply-pass
-    * in the run, so process exit is the earliest safe cleanup point.
+  /** Scratch directory removed at JVM exit. Fitted artifacts, sink
+    * round trips and streaming outputs and checkpoints all go here: each
+    * must outlive the lazy frame built over it (the harness may collect
+    * that frame later, several times), so process exit is the earliest
+    * safe cleanup point, and the hook keeps repeated runs from piling up
+    * dead copies in the temp directory.
     */
   def scratchDir(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix)

@@ -769,8 +769,8 @@ object TextStats {
     * (same contract as the unigram scorer). Documents with fewer than two
     * tokens have no bigrams and drop out. Reads an ALREADY-tokenized
     * `(doc_id, tk)` frame — the stage-once path (see [[TextStage]]): all
-    * three aggregates read pre-split token arrays, the regex tokenizer
-    * never runs here.
+    * three aggregates read pre-split token arrays, the tokenizer never
+    * runs here.
     */
   def bigramSurprisalTk(tkDocs: DataFrame): DataFrame = {
     val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)

@@ -290,7 +290,7 @@ object StreamOps {
       "runToParquet runs append mode without no-data batches, so a " +
         "streaming aggregate's final windows would never be emitted; " +
         "use runToCompletion")
-    val base = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val base = graft.ops.ModelStore.scratchDir("graft_stream")
     withoutNoDataBatches(spark) { withStatePartitions(spark, statePartitions) {
       val q = out.writeStream
         .outputMode(OutputMode.Append)
@@ -333,7 +333,7 @@ object StreamOps {
                       keyMod: Int): DataFrame = {
     val ev = graft.ops.Tables.events(spark, dir)
       .select(col("event_id").cast("long").as("event_id"))
-    val base = java.nio.file.Files.createTempDirectory("graft_resume").toString
+    val base = graft.ops.ModelStore.scratchDir("graft_resume")
     val src = s"$base/src"
     new java.io.File(src).mkdirs(): Unit
     def addFile(df: DataFrame, name: String): Unit = {
@@ -479,7 +479,7 @@ object StreamOps {
     * Returns the combined (n_rows, xor_digest) row.
     */
   def foreachBatchDigest(spark: SparkSession, digests: DataFrame): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_fbd").toString
+    val base = graft.ops.ModelStore.scratchDir("graft_fbd")
     val q = digests.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -519,7 +519,7 @@ object StreamOps {
     */
   def cdcApplyStream(spark: SparkSession, changes: DataFrame, root: String,
                      keyCol: String, opCol: String): Long = {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc").toString
+    val ckpt = graft.ops.ModelStore.scratchDir("graft_cdc")
     val before = graft.ops.Snapshots.latestVersion(root).getOrElse(0L)
     val q = changes.writeStream
       .outputMode(OutputMode.Append)
@@ -558,7 +558,7 @@ object StreamOps {
   def cdcApplyStreamMor(spark: SparkSession, changes: DataFrame,
                         root: String, keyCol: String,
                         opCol: String): Long = {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdcm").toString
+    val ckpt = graft.ops.ModelStore.scratchDir("graft_cdcm")
     val before = graft.ops.Snapshots.latestVersion(root).getOrElse(0L)
     val q = changes.writeStream
       .outputMode(OutputMode.Append)

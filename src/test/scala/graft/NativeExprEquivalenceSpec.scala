@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
+import org.scalacheck.{Gen, Prop, Test => PropTest}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -52,6 +55,99 @@ class NativeExprEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     "a b", "", "one", "x y z", "dup dup dup dup",
     "Sig@ns & punctuation-heavy!! text?? with 123 numbers",
     ("w " * 200).trim)
+
+  /** Declarative restatement of [[graft.functions.tokens]]: the
+    * `lower` + regex `split` + lambda `filter` chain the native
+    * [[graft.functions.Tokens]] replaced, and what the DuckDB oracles
+    * mirror. The executable specification of the tokenizer.
+    */
+  private def tokensDeclarative(c: Column): Column =
+    filter(split(lower(c), "[^a-z0-9]+"), t => t =!= lit(""))
+
+  /** Runs `body` under each of the four (ICU case mapping on/off,
+    * codegen'd/interpreted) settings the tokenizer must agree in.
+    */
+  private def tokenModes(body: String => Unit): Unit =
+    for (icu <- Seq(true, false); codegen <- Seq(true, false)) {
+      graft.spark.SessionConf.withConf(spark,
+        "spark.sql.icu.caseMappings.enabled" -> icu.toString,
+        "spark.sql.codegen.wholeStage" -> codegen.toString,
+        "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")) {
+        body(s"icu=$icu codegen=$codegen")
+      }
+    }
+
+  /** Rows whose `text` is `s` or, when `s` is null, the binary `b` cast to
+    * string (invalid UTF-8 included). Built from an RDD so the optimizer
+    * cannot fold the projection over a local relation before it runs.
+    */
+  private def textRows(rows: Seq[(String, Array[Byte])]): DataFrame = {
+    val schema = StructType(Seq(
+      StructField("s", StringType), StructField("b", BinaryType)))
+    spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map { case (s, b) => Row(s, b) }, 2), schema)
+      .select(coalesce(col("s"), col("b").cast("string")).as("text"))
+  }
+
+  /** Rows where the native tokens differ from the declarative ones. */
+  private def tokenMismatches(df: DataFrame, mode: String): Seq[String] = {
+    val out = df.select(col("text"), tokens(col("text")).as("nat"),
+      tokensDeclarative(col("text")).as("dec"))
+    val codegen = out.queryExecution.executedPlan
+      .find(_.isInstanceOf[WholeStageCodegenExec]).isDefined
+    assert(codegen == mode.endsWith("codegen=true"), s"$mode: plan ${out.queryExecution.executedPlan}")
+    out.collect().toSeq.collect {
+      case r if r.get(1) != r.get(2) => s"$mode: text=${r.get(0)} native=${r.get(1)} spec=${r.get(2)}"
+    }
+  }
+
+  private val tokenEdgeCases: Seq[String] = Seq(
+    null, "", " \t--,, !? ", "--leading and trailing--", "0 42 007 x9y8 1a2b3",
+    "MiXeD CaSe ABC def GHI",
+    "ÀÉÎÕÜ çñ ÅØÞ ΑΒΓ ΣΊΣΥΦΟΣ Ωmega ÉcoleX",
+    "\u212Aelvin 5\u212A \u212A",                  // Kelvin sign lowers to ASCII 'k'
+    "\u0130stanbul \u0130I i\u0130i",              // dotted capital I lowers to "i" + U+0307
+    "straße STRASSE \u1E9E Maß",                     // ß and capital ẞ
+    "a\uD83D\uDE00b \uD835\uDC00\uD835\uDC01C x\uD83D\uDE00", // surrogate pairs
+    "tab\tnew\nline\u0000nul")
+
+  private val invalidUtf8: Seq[Array[Byte]] = Seq(
+    Array(0xC3, 0x28, 0x41, 0x62),                   // bad continuation byte
+    Array(0xFF, 'Z', 0xE2, 0x84, 'k', 0x80),         // truncated and stray bytes
+    Array(0xF0, 0x9F, 'A', 'b', 0xC0, 0xAF, '9'),    // overlong encoding
+    Array(0xED, 0xA0, 0x80, 'x', 'Y', 0xED, 0xB0, 0x80) // encoded lone surrogates
+  ).map(_.map(_.toByte))
+
+  test("Tokens == declarative filter(split(lower)) on edge cases, ICU on/off, interpreted and codegen'd") {
+    val df = textRows(tokenEdgeCases.map(s => (s, null)) ++ invalidUtf8.map(b => (null, b)))
+    tokenModes { mode =>
+      val bad = tokenMismatches(df, mode)
+      assert(bad.isEmpty, bad.mkString("\n"))
+    }
+    // the spec really is exercised: a non-ASCII capital lowering to ASCII yields a token
+    val kelvin = df.where(col("text") === "\u212Aelvin 5\u212A \u212A")
+      .select(tokens(col("text"))).head().getSeq[String](0)
+    assert(kelvin == Seq("kelvin", "5k", "k"))
+  }
+
+  test("Tokens == declarative spec over random mixed ASCII/non-ASCII text (ScalaCheck)") {
+    val alphabet = ("abcXYZ019 -_.,\t".map(_.toString) ++ Seq(
+      "é", "É", "ß", "\u1E9E", "\u0130", "ı", "\u212A", "Σ", "ς", "ǅ", "Ⅻ", "Ａ",
+      "\uD83D\uDE00", "\u0000", "\u0307"))
+    val asciiChar = Gen.oneOf("abcdeXYZ0189 ,.-!".toSeq).map(_.toString)
+    val text = Gen.frequency(
+      1 -> Gen.listOf(asciiChar).map(_.mkString),
+      2 -> Gen.listOf(Gen.oneOf(alphabet)).map(_.mkString))
+    val prop = Prop.forAll(Gen.listOfN(48, text)) { batch =>
+      val df = textRows(batch.map(s => (s, null)))
+      var bad = Seq.empty[String]
+      tokenModes(mode => bad ++= tokenMismatches(df, mode))
+      Prop(bad.isEmpty) :| bad.take(5).mkString("\n")
+    }
+    val res = PropTest.check(PropTest.Parameters.default
+      .withMinSuccessfulTests(8).withInitialSeed(20261019L), prop)
+    assert(res.passed, res.status.toString)
+  }
 
   test("Shingles == declarative transform+slice form") {
     import spark.implicits._

@@ -472,11 +472,27 @@ object SparkEntry {
     */
   private def cid(d: String): String = s"$d|${ModelStore.fingerprint(d)}"
 
-  // work dirs whose two-phase snapshot-stream consumption already ran in
-  // THIS process (the phases are idempotent — this just avoids paying
-  // two extra stream startups per repeat invocation)
-  private val SnapSrcPhased =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** The process-local work dir of one snapshot-stream builder over one
+    * table: its landing dir, checkpoint and sink. A streaming checkpoint
+    * embeds absolute paths and its sink writes no `_SUCCESS`, so this
+    * state never rides the durable store; it is a [[ModelStore.scratchDir]],
+    * deleted at exit. Memoized per JVM by `prefix` and `(cid(d) + root)`,
+    * so every call in one process resumes the same checkpoint; `firstUse`
+    * runs once, right after the dir is made.
+    */
+  private def snapWork(d: String, root: String, prefix: String)(
+      firstUse: String => Unit = _ => ()): String = {
+    var fresh = false
+    val work = SnapWork.computeIfAbsent(s"$prefix|${cid(d)}$root", { _ =>
+      fresh = true
+      ModelStore.scratchDir(prefix)
+    })
+    if (fresh) firstUse(work)
+    work
+  }
+
+  private val SnapWork =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The shared MOR fixture `snapshot_mor` and `snapshot_cdf` both read
     * (ModelStore memoizes by key, so whichever runs first builds it —
@@ -2157,8 +2173,7 @@ object SparkEntry {
     // feed's declarative replay (same as snapshot_cdf_pos).
     "stream_snapshot_cdc" -> ((s, d) => {
       val root = snapCdfPosTable(s, d)
-      val work = s"${System.getProperty("java.io.tmpdir")}/graft_snapcdc_" +
-        java.lang.Integer.toHexString((cid(d) + root).hashCode)
+      val work = snapWork(d, root, "graft_snapcdc")()
       streaming.StreamOps.drainToParquet(s,
         s.readStream.format("graft-snap")
           .option("readChangeFeed", "true").option("keyCol", "c_custkey")
@@ -2244,10 +2259,7 @@ object SparkEntry {
     // table across invocations idempotently; oracle = the batch state.
     "stream_snapshot_front" -> ((s, d) => {
       val root = snapSqlTable(s, d)
-      // consumption state is process-local (checkpoints embed absolute
-      // paths — never inside a durable-store artifact)
-      val work = s"${System.getProperty("java.io.tmpdir")}/graft_snapfront_" +
-        java.lang.Integer.toHexString((cid(d) + root).hashCode)
+      val work = snapWork(d, root, "graft_snapfront")()
       streaming.StreamOps.drainToParquet(s,
         s.readStream.format("graft-snap").load(root),
         s"$work/sink", s"$work/ckpt")
@@ -2268,8 +2280,7 @@ object SparkEntry {
     // state — oracle = the same declarative replay.
     "stream_snapshot_sink" -> ((s, d) => {
       val root = snapSqlTable(s, d)
-      val work = s"${System.getProperty("java.io.tmpdir")}/graft_snapsink_" +
-        java.lang.Integer.toHexString((cid(d) + root).hashCode)
+      val work = snapWork(d, root, "graft_snapsink")()
       val dst = s"$work/table"
       streaming.StreamOps.drainToSnap(s,
         s.readStream.format("graft-snap").load(root), dst, s"$work/ckpt")
@@ -2441,10 +2452,7 @@ object SparkEntry {
         val cust = Tables.customer(s, d).select(col("c_custkey"),
           col("c_mktsegment"), dec2(col("c_acctbal")).as("acctbal"))
         Snapshots.commit(p, cust, "base"): Unit
-        val path = s"$d/customer.parquet"
-        val schema = s.read.parquet(path).schema
-        val changes = s.readStream.schema(schema)
-          .parquet(streaming.StreamOps.stageDir(path))
+        val changes = streaming.StreamOps.fileStream(s, s"$d/customer.parquet")
           .where(pmod(col("c_custkey"), lit(4)) === 1)
           .select(col("c_custkey"), col("c_mktsegment"),
             // round to dec2 FIRST (the target's stored scale), then
@@ -2524,10 +2532,7 @@ object SparkEntry {
         val cust = Tables.customer(s, d).select(col("c_custkey"),
           col("c_mktsegment"), dec2(col("c_acctbal")).as("acctbal"))
         Snapshots.commit(p, cust, "base"): Unit
-        val path = s"$d/customer.parquet"
-        val schema = s.read.parquet(path).schema
-        val changes = s.readStream.schema(schema)
-          .parquet(streaming.StreamOps.stageDir(path))
+        val changes = streaming.StreamOps.fileStream(s, s"$d/customer.parquet")
           .where(pmod(col("c_custkey"), lit(4)) === 2)
           .select(col("c_custkey"), col("c_mktsegment"),
             dec2(dec2(col("c_acctbal")) * 3).as("acctbal"),
@@ -2641,29 +2646,25 @@ object SparkEntry {
             cust.where(pmod(col("c_custkey"), lit(3)) === r), s"slice$r"): Unit
         }
       }
-      // consumption state lives in a PROCESS-LOCAL work dir, never
-      // inside the artifact: a streaming checkpoint embeds absolute
-      // paths and its sink writes no _SUCCESS, so it must not ride the
-      // durable store's verify-and-rename publish. Phases replay per
-      // process (idempotent by construction; a crash mid-phase resumes)
-      val work = s"${System.getProperty("java.io.tmpdir")}/graft_snapsrc_" +
-        java.lang.Integer.toHexString((cid(d) + root).hashCode)
-      def drain(): Unit = streaming.StreamOps.drainToParquet(s,
-        streaming.StreamOps.snapshotSource(s, s"$work/stage", custSchema),
-        s"$work/sink", s"$work/ckpt")
-      if (SnapSrcPhased.add(work)) {
+      // consumption state lives in the process-local work dir, never
+      // inside the artifact (see snapWork)
+      def drain(w: String): Unit = streaming.StreamOps.drainToParquet(s,
+        streaming.StreamOps.snapshotSource(s, s"$w/stage", custSchema),
+        s"$w/sink", s"$w/ckpt")
+      // the two phases run once per process, when the work dir is new
+      val work = snapWork(d, root, "graft_snapsrc") { w =>
         // phase 1: only commit 1 is published to the landing dir
-        streaming.StreamOps.syncSnapshotSource(root, s"$work/stage",
+        streaming.StreamOps.syncSnapshotSource(root, s"$w/stage",
           Some(1L)): Unit
-        drain() // consume commit 1 ... then the consumer process dies
+        drain(w) // consume commit 1 ... then the consumer process dies
         // commits 2–3 land while the pipeline is down
-        streaming.StreamOps.syncSnapshotSource(root, s"$work/stage"): Unit
-        drain() // NEW query object, SAME checkpoint — the restart
+        streaming.StreamOps.syncSnapshotSource(root, s"$w/stage"): Unit
+        drain(w) // NEW query object, SAME checkpoint — the restart
       }
       // the idempotent-resume leg, every invocation: nothing new staged,
       // the offset log skips everything, zero rows append
       streaming.StreamOps.syncSnapshotSource(root, s"$work/stage"): Unit
-      drain()
+      drain(work)
       s.read.parquet(s"$work/sink")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_rows"),
@@ -4228,21 +4229,13 @@ object SparkEntry {
         .orderBy(col("event_type"))
     }),
 
-    // Streaming dedup on the document digest through the PARQUET sink
-    // (append mode, checkpointed, exactly-once file commits) — the
-    // production shape of an incremental corpus-dedup pass. Only the
-    // digest is projected: the first-occurrence row is arrival-order-
-    // dependent, the distinct digest set is not.
     // Complete-mode streaming TOP-K: sorting a streaming Dataset is only
     // legal after an aggregation in complete mode — this exercises that
     // surface (orderBy + limit over the running token counts; the final
     // memory-sink table is the full-input top-20, equal to the batch
     // vocabulary head).
     "stream_vocab" -> ((s, d) => {
-      val path = s"$d/documents.parquet"
-      val schema = s.read.parquet(path).schema
-      val stream = s.readStream.schema(schema)
-        .parquet(streaming.StreamOps.stageDir(path))
+      val stream = streaming.StreamOps.fileStream(s, s"$d/documents.parquet")
       val top = stream.select(explode(tokens(col("text"))).as("term"))
         .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("term").asc).limit(20)
@@ -4259,10 +4252,7 @@ object SparkEntry {
     // a quality gate on a crawl feed.
     "stream_score" -> ((s, d) => {
       val w = ModelStore.loadWeights(s, Learn.featureNames, logregArtifact(s, d))
-      val path = s"$d/documents.parquet"
-      val schema = s.read.parquet(path).schema
-      val stream = s.readStream.schema(schema)
-        .parquet(streaming.StreamOps.stageDir(path))
+      val stream = streaming.StreamOps.fileStream(s, s"$d/documents.parquet")
       streaming.StreamOps.runToCompletion(s, Learn.scoreByLang(stream, w))
         .orderBy(col("lang"))
     }),
@@ -4291,11 +4281,13 @@ object SparkEntry {
       streaming.StreamOps.streamApproxDistinctByType(s, d)
         .orderBy(col("event_type"))),
 
+    // Streaming dedup on the document digest through the PARQUET sink
+    // (append mode, checkpointed, exactly-once file commits) — the
+    // production shape of an incremental corpus-dedup pass. Only the
+    // digest is projected: the first-occurrence row is arrival-order-
+    // dependent, the distinct digest set is not.
     "stream_dedup" -> ((s, d) => {
-      val path = s"$d/documents.parquet"
-      val schema = s.read.parquet(path).schema
-      val stream = s.readStream.schema(schema)
-        .parquet(streaming.StreamOps.stageDir(path))
+      val stream = streaming.StreamOps.fileStream(s, s"$d/documents.parquet")
         // synthetic arrival time, offset past epoch 0: the initial
         // watermark IS 0, and a row landing exactly on it counts as late
         .select(md5(col("text")).as("digest"),
@@ -4330,10 +4322,7 @@ object SparkEntry {
       // is the in-process stand-in for exactly that.
       val store = Dedup.signatureStore(docs(s, d).where(col("doc_id") < 400),
         MinhashK, MinhashBands, ShingleN).localCheckpoint()
-      val path = s"$d/documents.parquet"
-      val schema = s.read.parquet(path).schema
-      val stream = s.readStream.schema(schema)
-        .parquet(streaming.StreamOps.stageDir(path))
+      val stream = streaming.StreamOps.fileStream(s, s"$d/documents.parquet")
         .where(col("doc_id") >= 400)
       val flagged = streaming.StreamOps.nearDupProbeStream(stream, store,
         MinhashK, MinhashBands, ShingleN, MaxBucket)
@@ -4342,14 +4331,14 @@ object SparkEntry {
     }),
 
     // flatMapGroupsWithState sessionization run as a bounded stream. The
-    // staged source is ONE file → ONE micro-batch, and the watermark
-    // delay exceeds the corpus time span, so the trailing no-data batch
-    // fires no event-time timeouts: the emitted set is deterministically
-    // every session CLOSED by a later event — all sessions except each
-    // user's final (still-open) one — which is exactly what the oracle
-    // states. total_value is omitted: its double accumulation follows
-    // arrival order among equal-timestamp events, which the shuffle does
-    // not pin.
+    // staged source is ONE file → ONE micro-batch, the bounded runner
+    // runs no trailing no-data batch, and the watermark delay exceeds the
+    // corpus time span, so no event-time timeout fires: the emitted set is
+    // deterministically every session CLOSED by a later event — all
+    // sessions except each user's final (still-open) one — which is
+    // exactly what the oracle states. total_value is omitted: its double
+    // accumulation follows arrival order among equal-timestamp events,
+    // which the shuffle does not pin.
     "stream_sessions" -> ((s, d) => {
       import s.implicits._
       val ev = streaming.StreamOps.eventsStream(s, d)

@@ -86,6 +86,14 @@ object Similarity {
         asDouble(col(embCol)).as("c_emb")))
       .withColumn("c_nrm", sqrt(dot(col("c_emb"), col("c_emb"))))
 
+  /** The corpus side of the k-means family: `(id, e)` plus `extra`, the
+    * vector as doubles, fanned out to cluster width.
+    */
+  private def cellSide(corpus: DataFrame, idCol: String, embCol: String,
+                       extra: Column*): DataFrame =
+    fanOut(corpus.select(col(idCol).cast("long").as("id") +:
+      asDouble(col(embCol)).as("e") +: extra: _*))
+
   /** The query side every search leg reads: `(query_id, q_emb)`. */
   private def querySide(queries: DataFrame, idCol: String,
                         embCol: String): DataFrame =
@@ -306,8 +314,7 @@ object Similarity {
   def kmeansStep(corpus: DataFrame, numCentroids: Int,
                  idCol: String = "vec_id",
                  embCol: String = "embedding"): DataFrame = {
-    val c = fanOut(corpus.select(col(idCol).cast("long").as("id"),
-      asDouble(col(embCol)).as("e")))
+    val c = cellSide(corpus, idCol, embCol)
     cellMeans(assignCells(c, "id", "e", numCentroids))
   }
 
@@ -368,8 +375,7 @@ object Similarity {
     require(maxIters >= 1, "k-means needs at least one round")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val c = fanOut(corpus.select(col(idCol).cast("long").as("id"),
-      asDouble(col(embCol)).as("e")))
+    val c = cellSide(corpus, idCol, embCol)
     // Round-0 centroids: the identical hash-rank K-row sample assignCells
     // draws.
     val (ids, seed) = sampleCentroids(c, "id", "e", numCentroids)
@@ -795,9 +801,7 @@ object Similarity {
   private def sqPrep(corpus: DataFrame, dim: Int,
                      idCol: String, embCol: String): DataFrame = {
     val c = fanOut(corpus.select(col(idCol), asDouble(col(embCol)).as("e")))
-    val mm = c.agg(
-      array((1 to dim).map(i => min(element_at(col("e"), i))): _*).as("mns"),
-      array((1 to dim).map(i => max(element_at(col("e"), i))): _*).as("mxs"))
+    val mm = dimBounds(c, dim)
     val code = (i: Int) => {
       val v = element_at(col("e"), i)
       val mn = element_at(col("mns"), i)
@@ -837,13 +841,18 @@ object Similarity {
   def sqBoundsArrays(corpus: DataFrame, dim: Int,
                      embCol: String = "embedding")
       : (Array[Double], Array[Double]) = {
-    val c = corpus.select(asDouble(col(embCol)).as("e"))
-    val row = c.agg(
-      array((1 to dim).map(i => min(element_at(col("e"), i))): _*).as("mns"),
-      array((1 to dim).map(i => max(element_at(col("e"), i))): _*).as("mxs"))
+    val row = dimBounds(corpus.select(asDouble(col(embCol)).as("e")), dim)
       .head()
     (row.getSeq[Double](0).toArray, row.getSeq[Double](1).toArray)
   }
+
+  /** The SQ bounds of an `e` array column: ONE aggregate with 2·dim
+    * slots, one row `(mns, mxs)` of per-dimension minima and maxima.
+    */
+  private def dimBounds(c: DataFrame, dim: Int): DataFrame =
+    c.agg(
+      array((1 to dim).map(i => min(element_at(col("e"), i))): _*).as("mns"),
+      array((1 to dim).map(i => max(element_at(col("e"), i))): _*).as("mxs"))
 
   /** [[sqEncode]] against an explicit bounds codebook — pure map-only. */
   def sqEncodeWith(corpus: DataFrame, dim: Int, mns: Array[Double],
@@ -1021,8 +1030,7 @@ object Similarity {
                  idCol: String = "vec_id",
                  embCol: String = "embedding",
                  labelCol: String = "label"): DataFrame = {
-    val c = fanOut(corpus.select(col(idCol).cast("long").as("id"),
-      asDouble(col(embCol)).as("e"), col(labelCol).as("label")))
+    val c = cellSide(corpus, idCol, embCol, col(labelCol).as("label"))
     val assigned = assignCells(c, "id", "e", numCentroids,
       passThrough = Seq("label"))
     val g = assigned.groupBy(col("cell"), col("label"))
@@ -1051,8 +1059,7 @@ object Similarity {
   def semanticDedup(corpus: DataFrame, numCentroids: Int, minCosine: Double,
                     idCol: String = "vec_id",
                     embCol: String = "embedding"): DataFrame = {
-    val c = fanOut(corpus.select(col(idCol).cast("long").as("id"),
-      asDouble(col(embCol)).as("e")))
+    val c = cellSide(corpus, idCol, embCol)
     val assigned = assignCells(c, "id", "e", numCentroids)
     val a = assigned.select(col("cell"), col("id").as("id_a"),
       col("e").as("ea"), col("c_nrm").as("na"))
@@ -1182,6 +1189,16 @@ object Similarity {
     (mu, comps(0), eigs(0), n)
   }
 
+  /** Order-free decimal fold of a double-product array: each product is
+    * cast to DECIMAL(28, 12) and summed exactly, so the inner product does
+    * not depend on summation order and the oracle replays it bit for bit.
+    */
+  private def decDot(a: Column, b: Column): Column = {
+    val dec = org.apache.spark.sql.types.DecimalType(28, 12)
+    aggregate(zip_with(a, b, (x, w) => x * w), lit(0).cast(dec),
+      (acc, p) => (acc + p.cast(dec)).cast(dec)).cast("double")
+  }
+
   /** Top-m principal components by power iteration WITH DEFLATION: each
     * component runs the same per-round one-scan update [[pcaPowerLoop]]
     * uses, but the round's image u is Gram-Schmidt-orthogonalized
@@ -1230,10 +1247,6 @@ object Similarity {
     val mu = muRows.sortBy(_.getLong(0)).map(_.getDouble(2))
     require(mu.length == dim, s"pcaPower: corpus dim ${mu.length} != $dim")
     val muLit = array(mu.map(lit(_)): _*)
-    // Order-free decimal fold of a double-product array.
-    def decDot(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, w) => x * w), lit(0).cast(dec),
-        (acc, p) => (acc + p.cast(dec)).cast(dec)).cast("double")
     // Mirrors the engines' double→DECIMAL(28,12) cast (shortest decimal
     // representation, HALF_UP) so the driver-side norm² reduction is the
     // same exact decimal sum the oracle computes.
@@ -1308,13 +1321,9 @@ object Similarity {
   def pcaProjectWith(corpus: DataFrame, mu: Array[Double], v: Array[Double],
                      idCol: String = "vec_id",
                      embCol: String = "embedding"): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(28, 12)
     val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val muLit = array(mu.map(lit(_)): _*)
     val vLit = array(v.map(lit(_)): _*)
-    def decDot(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, w) => x * w), lit(0).cast(dec),
-        (acc, p) => (acc + p.cast(dec)).cast(dec)).cast("double")
     corpus
       .select(col(idCol).cast("long").as("vec_id"),
         zip_with(
@@ -1346,12 +1355,8 @@ object Similarity {
                       comps: Array[Array[Double]],
                       idCol: String = "vec_id",
                       embCol: String = "embedding"): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(28, 12)
     val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val muLit = array(mu.map(lit(_)): _*)
-    def decDot(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, w) => x * w), lit(0).cast(dec),
-        (acc, p) => (acc + p.cast(dec)).cast(dec)).cast("double")
     val rawScores = comps.zipWithIndex.map { case (v, t) =>
       decDot(col("ce"), array(v.map(lit(_)): _*)).as(s"_s${t + 1}")
     }

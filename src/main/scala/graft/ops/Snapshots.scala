@@ -329,6 +329,11 @@ object Snapshots {
 
   def latestVersion(root: String): Option[Long] = versions(root).lastOption
 
+  /** The version a reader pinned, else the latest committed one. */
+  private def resolve(root: String, version: Option[Long]): Long =
+    version.orElse(latestVersion(root)).getOrElse(
+      throw new IllegalStateException(s"no committed version under $root"))
+
   // Segment files are IMMUTABLE once linked into a manifest, so their
   // parsed lines cache safely by absolute path — history() walks V
   // versions whose manifests share segments (O(V²) refs but O(V)
@@ -482,8 +487,7 @@ object Snapshots {
   def read(spark: SparkSession, root: String,
            version: Option[Long] = None,
            evolved: Boolean = false): DataFrame = {
-    val v = version.orElse(latestVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
+    val v = resolve(root, version)
     val snap = snapshot(root, v)
     requirePlainFiles(snap, root, "a plain file read")
     val files = snap.files
@@ -528,9 +532,20 @@ object Snapshots {
     */
   def readPruned(spark: SparkSession, root: String,
                  preds: Seq[(String, Any, Any)],
-                 version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
+                 version: Option[Long] = None): DataFrame =
+    prunedRead(spark, root, preds, version)(zoneMap(spark, root, _, _, _))
+
+  /** The one body of [[readPruned]] and [[readPrunedManifest]]: `stats`
+    * builds the zone-map table of (numeric columns, version, string
+    * columns), and [[Layout.zonePrune]] keeps the files the predicates
+    * can match — numeric predicates prune on numeric bounds, the others
+    * on string bounds.
+    */
+  private def prunedRead(spark: SparkSession, root: String,
+                         preds: Seq[(String, Any, Any)],
+                         version: Option[Long])(
+      stats: (Seq[String], Option[Long], Seq[String]) => DataFrame): DataFrame = {
+    val v = resolve(root, version)
     val snap = snapshot(root, v)
     requirePlainFiles(snap, root, "a pruned file read")
     requireStableNames(snap, root, "a pruned file read")
@@ -538,8 +553,7 @@ object Snapshots {
       "read it with an explicit schema via spark.read.schema(...)")
     val numeric = preds.filter(_._2.isInstanceOf[Number]).map(_._1)
     val strings = preds.filterNot(_._2.isInstanceOf[Number]).map(_._1)
-    val survivors = Layout.zonePrune(
-      zoneMap(spark, root, numeric, Some(v), strings), preds)
+    val survivors = Layout.zonePrune(stats(numeric, Some(v), strings), preds)
     if (survivors.isEmpty) {
       // every zone misses: the result is PROVABLY empty — return an
       // empty frame with the table's schema (from one manifest file's
@@ -557,8 +571,7 @@ object Snapshots {
   def zoneMap(spark: SparkSession, root: String, cols: Seq[String],
               version: Option[Long] = None,
               strCols: Seq[String] = Seq.empty): DataFrame = {
-    val v = version.orElse(latestVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
+    val v = resolve(root, version)
     val snap = snapshot(root, v)
     requireStableNames(snap, root,
       "a zone-map stats build (stats key raw file column names)")
@@ -582,8 +595,7 @@ object Snapshots {
                       strCols: Seq[String] = Seq.empty): DataFrame = {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-    val v = version.orElse(latestVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
+    val v = resolve(root, version)
     val snap0 = snapshot(root, v)
     requireStableNames(snap0, root,
       "a manifest-stats read (stats key committed-time column names)")
@@ -624,24 +636,11 @@ object Snapshots {
     */
   def readPrunedManifest(spark: SparkSession, root: String,
                          preds: Seq[(String, Any, Any)],
-                         version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
-    val snap = snapshot(root, v)
-    requirePlainFiles(snap, root, "a pruned file read")
-    requireStableNames(snap, root, "a pruned file read")
-    require(snap.files.nonEmpty, s"version $v of $root lists no files; " +
-      "read it with an explicit schema via spark.read.schema(...)")
+                         version: Option[Long] = None): DataFrame =
     // numeric predicates prune on `s=` bounds, string predicates on the
-    // `z=` string bounds — same split as [[readPruned]]'s footer route
-    val numeric = preds.filter(_._2.isInstanceOf[Number]).map(_._1)
-    val strings = preds.filterNot(_._2.isInstanceOf[Number]).map(_._1)
-    val survivors = Layout.zonePrune(
-      zoneMapManifest(spark, root, numeric, Some(v), strings), preds)
-    if (survivors.isEmpty)
-      spark.read.parquet(s"$root/${snap.files.head.path}").limit(0)
-    else spark.read.parquet(survivors: _*)
-  }
+    // `z=` string bounds
+    prunedRead(spark, root, preds, version)(
+      zoneMapManifest(spark, root, _, _, _))
 
   /** [[zoneMap]] at ROW-GROUP granularity ([[Layout.zoneMapRowGroups]]
     * over the manifest's file list): per-(file, row group) stats + byte
@@ -652,8 +651,7 @@ object Snapshots {
   def zoneMapRowGroups(spark: SparkSession, root: String, cols: Seq[String],
                        version: Option[Long] = None,
                        strCols: Seq[String] = Seq.empty): DataFrame = {
-    val v = version.orElse(latestVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
+    val v = resolve(root, version)
     val snap = snapshot(root, v)
     requireStableNames(snap, root,
       "a row-group stats build (stats key raw file column names)")
@@ -698,8 +696,7 @@ object Snapshots {
     * again).
     */
   def countRows(root: String, version: Option[Long] = None): Option[Long] = {
-    val v = version.orElse(latestVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
+    val v = resolve(root, version)
     val s = snapshot(root, v)
     if (s.deletes.nonEmpty || s.posDeletes.nonEmpty) None
     else Some(s.files.map(_.rows).sum)
@@ -1326,8 +1323,7 @@ object Snapshots {
     */
   def positionsWhere(spark: SparkSession, root: String, pred: Column,
                      version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
+    val v = resolve(root, version)
     scanWithPositions(spark, root, snapshot(root, v))
       .where(pred)
       .select(col("_gfile").as("_file"), col("_gpos").as("_pos"))
@@ -1550,8 +1546,7 @@ object Snapshots {
     */
   def readMerged(spark: SparkSession, root: String, keyCol: String,
                  version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
+    val v = resolve(root, version)
     val snap = snapshot(root, v)
     if (snap.deletes.isEmpty && snap.posDeletes.isEmpty)
       return read(spark, root, Some(v))

@@ -4,11 +4,11 @@ import java.sql.Timestamp
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo,
+  GroupState, GroupStateTimeout, OutputMode, StatefulProcessor,
+  StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 import graft.functions._
 import graft.spark.SessionConf
@@ -97,11 +97,9 @@ object StreamOps {
   def streamHeavyHittersBySource(spark: SparkSession, dir: String,
                                  k: Int = 4096, minCount: Long = 50): DataFrame = {
     GraftFunctions.register(spark)
-    val path = s"$dir/documents.parquet"
-    val schema = graft.ops.Tables.parquet(spark, path).schema
     def toksOf(df: DataFrame): DataFrame =
       df.select(col("source"), explode(tokens(col("text"))).as("term"))
-    val sketch = toksOf(spark.readStream.schema(schema).parquet(stageDir(path)))
+    val sketch = toksOf(fileStream(spark, s"$dir/documents.parquet"))
       .groupBy(col("source"))
       .agg(expr(s"misra_gries(term, $k)").as("cand"),
         count(lit(1)).as("n_source"))
@@ -180,6 +178,15 @@ object StreamOps {
   private val staged =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** Open a parquet path as a file STREAM over [[stageDir]]'s directory.
+    * The schema comes from the file footer on the driver
+    * ([[graft.ops.Tables.parquet]]), so opening the stream launches no
+    * schema-inference job.
+    */
+  def fileStream(spark: SparkSession, path: String): DataFrame =
+    spark.readStream.schema(graft.ops.Tables.parquet(spark, path).schema)
+      .parquet(stageDir(path))
+
   /** Open the events parquet directory as a STREAM with the same
     * schema-adaptive µs timestamp normalization
     * [[graft.ops.Tables.normalizeTs]] applies on the batch path (the corpus
@@ -187,26 +194,12 @@ object StreamOps {
     * see the batch-side comment). Pure reader: a NANOS-encoded corpus
     * needs [[graft.ops.Tables.NanosAsLongConf]] set at session build.
     */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    val schema = graft.ops.Tables.parquet(spark, path).schema // ts: long (nanos) or ntz µs
-    graft.ops.Tables.normalizeTs(
-      spark.readStream.schema(schema).parquet(stageDir(path)))
-  }
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    graft.ops.Tables.normalizeTs(fileStream(spark, s"$dir/events.parquet"))
 
-  /** A stateful streaming query creates one state-store instance per
-    * shuffle partition PER stateful operator, each with its own checkpoint
-    * files every micro-batch — at a bounded test volume that fixed cost
-    * dwarfs the data. The partition count is frozen into the checkpoint at
-    * FIRST start, so the bounded runners below pin a small count for the
-    * query's lifetime and restore the session setting afterwards. A
-    * production deployment sizes this to the live key cardinality instead
-    * (state partitions, unlike batch shuffles, cannot be changed later
-    * without rebuilding state — size generously there).
-    */
   /** Streaming-leg fingerprint: the state-operator names of the LAST
     * completed graft streaming run, captured from the final micro-batch's
-    * progress by every `runTo*` helper. The streaming analog of the batch
+    * progress by every bounded runner. The streaming analog of the batch
     * plan-fingerprint snapshot — a silent switch from, say, a streaming
     * dedup to a full aggregation (or a stateful operator appearing in a
     * supposedly stateless stream-static join) shows up here as a changed
@@ -216,28 +209,67 @@ object StreamOps {
   def lastStateOps: Seq[String] = lastStateOpsRef.get
   private val lastStateOpsRef =
     new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
-  private def recordStateOps(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+
+  /** The one bounded-stream runner: every query below starts here, runs
+    * to completion under `Trigger.AvailableNow` and records its
+    * [[lastStateOps]]. Two session settings are scoped to the run and
+    * restored after it, also when the query fails:
+    *
+    *  - `spark.sql.shuffle.partitions` is pinned to `statePartitions`. A
+    *    stateful streaming query creates one state-store instance per
+    *    shuffle partition PER stateful operator, each with its own
+    *    checkpoint files every micro-batch — at a bounded test volume that
+    *    fixed cost dwarfs the data. The partition count is frozen into the
+    *    checkpoint at FIRST start, so it is pinned for the query's lifetime.
+    *    A production deployment sizes this to the live key cardinality
+    *    instead (state partitions, unlike batch shuffles, cannot be changed
+    *    later without rebuilding state — size generously there).
+    *  - trailing NO-DATA micro-batches are disabled
+    *    (`spark.sql.streaming.noDataMicroBatches.enabled=false`): after the
+    *    last data batch of a bounded run, Spark would schedule one extra
+    *    empty batch purely to act on the advanced watermark — a state-store
+    *    load/commit round trip per stateful operator per partition
+    *    (measured: 0.65 s of stream_join's 1.7 s batch wall). The bounded
+    *    runners' sinks do not need it (complete/update mode re-emits final
+    *    state with the last data batch; see [[runToParquet]]'s guard for
+    *    the append-mode runner).
+    *
+    * `conf` adds settings scoped the same way.
+    */
+  private def runBounded(spark: SparkSession, writer: DataStreamWriter[_],
+                         statePartitions: Int = 8,
+                         conf: Seq[(String, String)] = Nil): Unit =
+    SessionConf.withConf(spark, conf ++ Seq(
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> statePartitions.toString): _*) {
+      val q = writer.trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      recordStateOps(q)
+    }
+
+  private def recordStateOps(q: StreamingQuery): Unit = {
     val p = q.lastProgress
     lastStateOpsRef.set(
       if (p == null) Nil else p.stateOperators.map(_.operatorName).toSeq)
   }
 
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
-    SessionConf.withConf(spark, "spark.sql.shuffle.partitions" -> n.toString)(body)
+  /** [[runBounded]] through the memory sink; returns the sink's table. */
+  private def runToMemory(spark: SparkSession, out: Dataset[_],
+                          mode: OutputMode, statePartitions: Int,
+                          conf: Seq[(String, String)] = Nil): DataFrame = {
+    val name = s"graft_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    runBounded(spark, out.writeStream.outputMode(mode).format("memory")
+      .queryName(name), statePartitions, conf)
+    spark.table(name)
+  }
 
-  /** Run `body` with trailing NO-DATA micro-batches disabled
-    * (`spark.sql.streaming.noDataMicroBatches.enabled=false`): after the
-    * last data batch of a bounded (`AvailableNow`) run, Spark would
-    * schedule one extra empty batch purely to act on the advanced
-    * watermark — a state-store load/commit round trip per stateful
-    * operator per partition (measured: 0.65 s of stream_join's 1.7 s
-    * batch wall). The bounded runners' sinks do not need it
-    * (complete/update mode re-emits final state with the last data
-    * batch; see [[runToParquet]]'s guard for the append-mode runner).
-    */
-  private def withoutNoDataBatches[T](spark: SparkSession)(body: => T): T =
-    SessionConf.withConf(spark,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(body)
+  /** [[runBounded]] appending to a checkpointed file sink. */
+  private def appendTo(spark: SparkSession, src: DataFrame, format: String,
+                       path: String, ckpt: String,
+                       statePartitions: Int = 8): Unit =
+    runBounded(spark, src.writeStream.outputMode(OutputMode.Append)
+      .format(format).option("path", path)
+      .option("checkpointLocation", ckpt), statePartitions)
 
   /** Run a streaming aggregate over the bounded file source to completion
     * (`Trigger.AvailableNow`) and return the final result table.
@@ -251,20 +283,8 @@ object StreamOps {
     * writes the same query to a real sink in update/append mode.
     */
   def runToCompletion(spark: SparkSession, agg: DataFrame,
-                      statePartitions: Int = 8): DataFrame = {
-    val name = s"graft_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    withoutNoDataBatches(spark) { withStatePartitions(spark, statePartitions) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete)
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      recordStateOps(q)
-    } }
-    spark.table(name)
-  }
+                      statePartitions: Int = 8): DataFrame =
+    runToMemory(spark, agg, OutputMode.Complete, statePartitions)
 
   /** Run a streaming (append-mode) transform over a bounded file source to
     * completion, writing PARQUET — the production sink shape: exactly-once
@@ -291,17 +311,8 @@ object StreamOps {
         "streaming aggregate's final windows would never be emitted; " +
         "use runToCompletion")
     val base = graft.ops.ModelStore.scratchDir("graft_stream")
-    withoutNoDataBatches(spark) { withStatePartitions(spark, statePartitions) {
-      val q = out.writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", s"$base/data")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      recordStateOps(q)
-    } }
+    appendTo(spark, out, "parquet", s"$base/data", s"$base/ckpt",
+      statePartitions)
     spark.read.schema(out.schema).parquet(s"$base/data")
   }
 
@@ -344,20 +355,11 @@ object StreamOps {
       java.nio.file.Files.copy(part.toPath,
         java.nio.file.Paths.get(src, s"$name.parquet")): Unit
     }
-    def runOnce(): Unit = withoutNoDataBatches(spark) { withStatePartitions(spark, 8) {
-      val out = spark.readStream.schema("event_id BIGINT").parquet(src)
+    def runOnce(): Unit = drainToParquet(spark,
+      spark.readStream.schema("event_id BIGINT").parquet(src)
         .select(pmod(col("event_id"), lit(keyMod.toLong)).as("k"))
-        .dropDuplicates("k")
-      val q = out.writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", s"$base/data")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      recordStateOps(q)
-    } }
+        .dropDuplicates("k"),
+      s"$base/data", s"$base/ckpt")
     addFile(ev.where(pmod(col("event_id"), lit(keyMod.toLong)) <
       keyMod / 2), "phase1")
     runOnce() // ...process dies here: this query object is never reused
@@ -435,17 +437,8 @@ object StreamOps {
     * every other bounded runner.
     */
   def drainToParquet(spark: SparkSession, src: DataFrame,
-                     path: String, ckpt: String): Unit = {
-    val q = src.writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordStateOps(q)
-  }
+                     path: String, ckpt: String): Unit =
+    appendTo(spark, src, "parquet", path, ckpt)
 
   /** Drain a bounded stream INTO a graft-snap snapshot table through the
     * front door's streaming sink ([[graft.sources.SnapshotDataSource]]):
@@ -455,17 +448,8 @@ object StreamOps {
     * fingerprint like every other bounded runner.
     */
   def drainToSnap(spark: SparkSession, src: DataFrame,
-                  dstRoot: String, ckpt: String): Unit = {
-    val q = src.writeStream
-      .outputMode(OutputMode.Append)
-      .format("graft-snap")
-      .option("path", dstRoot)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordStateOps(q)
-  }
+                  dstRoot: String, ckpt: String): Unit =
+    appendTo(spark, src, "graft-snap", dstRoot, ckpt)
 
   /** `foreachBatch` with an idempotent side sink — the bridge to writers
     * that only exist for batch (here the engine's own `graft-digest` V2
@@ -480,18 +464,14 @@ object StreamOps {
     */
   def foreachBatchDigest(spark: SparkSession, digests: DataFrame): DataFrame = {
     val base = graft.ops.ModelStore.scratchDir("graft_fbd")
-    val q = digests.writeStream
+    runBounded(spark, digests.writeStream
       .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         batch.write.format("graft-digest")
           .option("path", s"$base/batch_$batchId")
           .mode("overwrite").save()
       }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordStateOps(q)
+      .option("checkpointLocation", s"$base/ckpt"))
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("n_rows", LongType, nullable = false),
@@ -518,27 +498,14 @@ object StreamOps {
     * number of commits published.
     */
   def cdcApplyStream(spark: SparkSession, changes: DataFrame, root: String,
-                     keyCol: String, opCol: String): Long = {
-    val ckpt = graft.ops.ModelStore.scratchDir("graft_cdc")
-    val before = graft.ops.Snapshots.latestVersion(root).getOrElse(0L)
-    val q = changes.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty) {
-          val base = graft.ops.Snapshots.latestVersion(root)
-          val merged = graft.ops.Reconcile.mergeApply(
-            graft.ops.Snapshots.read(spark, root), batch.toDF(), keyCol, opCol)
-          graft.ops.Snapshots.commit(root, merged, s"cdc-$id",
-            replace = true, basedOn = base): Unit
-        }
-      }
-      .option("checkpointLocation", s"$ckpt/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordStateOps(q)
-    graft.ops.Snapshots.latestVersion(root).getOrElse(0L) - before
-  }
+                     keyCol: String, opCol: String): Long =
+    commitEachBatch(spark, changes, root, "graft_cdc") { (batch, id) =>
+      val base = graft.ops.Snapshots.latestVersion(root)
+      val merged = graft.ops.Reconcile.mergeApply(
+        graft.ops.Snapshots.read(spark, root), batch, keyCol, opCol)
+      graft.ops.Snapshots.commit(root, merged, s"cdc-$id",
+        replace = true, basedOn = base): Unit
+    }
 
   /** [[cdcApplyStream]]'s merge-on-read twin — the shape a 100 TB CDC
     * sink actually ships: each micro-batch publishes ONE
@@ -557,26 +524,30 @@ object StreamOps {
     */
   def cdcApplyStreamMor(spark: SparkSession, changes: DataFrame,
                         root: String, keyCol: String,
-                        opCol: String): Long = {
-    val ckpt = graft.ops.ModelStore.scratchDir("graft_cdcm")
+                        opCol: String): Long =
+    commitEachBatch(spark, changes, root, "graft_cdcm") { (batch, id) =>
+      graft.ops.Snapshots.commitChanges(root,
+        upserts = batch.where(col(opCol) =!= lit("delete")).drop(opCol),
+        deleteKeys = batch.where(col(opCol) === lit("delete"))
+          .select(col(keyCol)),
+        keyCol, s"cdc-mor-$id"): Unit
+    }
+
+  /** The CDC sinks' shared loop: a bounded `foreachBatch` run on a scratch
+    * checkpoint that hands each non-empty micro-batch and its id to
+    * `commit`. Returns the number of versions published under `root`.
+    */
+  private def commitEachBatch(spark: SparkSession, changes: DataFrame,
+                              root: String, prefix: String)(
+      commit: (DataFrame, Long) => Unit): Long = {
+    val ckpt = graft.ops.ModelStore.scratchDir(prefix)
     val before = graft.ops.Snapshots.latestVersion(root).getOrElse(0L)
-    val q = changes.writeStream
+    runBounded(spark, changes.writeStream
       .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty) {
-          graft.ops.Snapshots.commitChanges(root,
-            upserts = batch.toDF().where(col(opCol) =!= lit("delete"))
-              .drop(opCol),
-            deleteKeys = batch.toDF().where(col(opCol) === lit("delete"))
-              .select(col(keyCol)),
-            keyCol, s"cdc-mor-$id"): Unit
-        }
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
+        if (!batch.isEmpty) commit(batch.toDF(), id)
       }
-      .option("checkpointLocation", s"$ckpt/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordStateOps(q)
+      .option("checkpointLocation", s"$ckpt/ckpt"))
     graft.ops.Snapshots.latestVersion(root).getOrElse(0L) - before
   }
 
@@ -656,21 +627,9 @@ object StreamOps {
     */
   def runToCompletionUpdate(spark: SparkSession, out: Dataset[_],
                             statePartitions: Int = 8): DataFrame =
-    SessionConf.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      val name = s"graft_tws_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withoutNoDataBatches(spark) { withStatePartitions(spark, statePartitions) {
-        val q = out.writeStream
-          .outputMode(OutputMode.Update)
-          .format("memory")
-          .queryName(name)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        recordStateOps(q)
-      } }
-      spark.table(name)
-    }
+    runToMemory(spark, out, OutputMode.Update, statePartitions,
+      Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
 
   // ----------------------------------------------------- sessionization
 

@@ -1671,10 +1671,8 @@ object Scale {
     val nFiles = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
 
     val t0 = System.nanoTime()
-    val stream = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", math.max(1, nFiles / 8))
-      .parquet(dir)
+    val stream = streaming.StreamOps.fileStream(spark, dir,
+      Map("maxFilesPerTrigger" -> math.max(1, nFiles / 8).toString))
     val result = streaming.StreamOps.runToCompletion(spark,
       streaming.StreamOps.hourlyStatsStream(stream), statePartitions = cpus)
       .cache()

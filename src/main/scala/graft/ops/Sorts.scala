@@ -104,8 +104,10 @@ object Sorts {
   }
 
   /** Global sort through the engine's OWN physical operator
-    * ([[graft.plans.HybridSortExec]]): range-scatter shuffle (required
-    * distribution) + per-partition hybrid quicksort/insertion-sort — the
+    * ([[graft.plans.HybridSortExec]]): its own chunked range scatter
+    * (`RangePartitioner` bounds; each map task ships its rows to their
+    * ranges as a few byte chunks, one sample job and one sort job, no
+    * Exchange node) + per-partition hybrid quicksort/insertion-sort — the
     * reference's algorithm planned as a first-class Catalyst node instead
     * of `orderBy`. Keys are resolved by name against the input and sorted
     * ascending (the reference's only order). Like Tungsten's SortExec, the

@@ -2,19 +2,22 @@ package graft.plans
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, File, FileInputStream, FileOutputStream}
 
-import org.apache.spark.TaskContext
-import org.apache.spark.rdd.RDD
+import scala.reflect.ClassTag
+
+import org.apache.spark.{Partitioner, RangePartitioner, TaskContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.GraftSpillUtil
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, NullsFirst, SortOrder, SortPrefix, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, BoundReference, NullsFirst, SortOrder, SortPrefix, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{OrderedDistribution, Partitioning, RangePartitioning}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.execution.{SortPrefixUtils, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.array.ByteArrayMethods
+import org.apache.spark.util.MutablePair
 import org.apache.spark.util.collection.unsafe.sort.PrefixComparators.RadixSortSupport
 
 import graft.ops.HybridSort
@@ -24,58 +27,74 @@ import graft.ops.HybridSort
   * (`/root/reference/QuickInsertionHeap.c:197-215`) — as a first-class
   * Catalyst *physical operator*, not just a rewrite to `orderBy`.
   *
-  * The operator declares `OrderedDistribution(order)` as its required
-  * child distribution, so `EnsureRequirements` inserts a range-partitioning
-  * shuffle: Spark's sampled range scatter standing in for the reference's
-  * root-computed `Scatterv` counts (`QuickInsertionHeap.c:164-187`). Each
-  * task then runs the reference's hybrid structure
+  * The operator runs its own range scatter, as the reference scatters
+  * contiguous chunks with `Scatterv` (`QuickInsertionHeap.c:164-187`).
+  * Spark's `RangePartitioner` samples the sort key for the bounds, exactly
+  * as a range exchange would; each map task then appends every row to a
+  * page for its target range and ships each page as ONE shuffle record,
+  * so the shuffle moves a few chunks per task instead of serializing every
+  * row. The row's target is found by comparing its normalized key prefix
+  * with the bounds' prefixes; rows are compared only on a prefix tie, and
+  * never for an exact key. Each reduce task views its chunks' rows in
+  * place and runs the reference's hybrid structure
   * (`SequentialQuickInsert.c:40-52`: quicksort, insertion sort below the
   * threshold knob of `quickThreshold.c:188-191`) with a worst-case-safe
-  * partition step (see [[graft.ops.HybridSort]]) over its partition. The
+  * partition step (see [[graft.ops.HybridSort]]) over its range. The
   * kernel sorts primitive `Long`s, as the reference sorts plain ints: each
   * row's key is packed with its index, and only rows whose packed key
   * prefixes tie are compared by Catalyst's generated row ordering — so the
   * operator sorts ANY schema by ANY key set, not just the reference's bare
   * ints. Downstream consumption in partition-index order is the
   * gather/merge; no single-node k-way merge exists anywhere (the
-  * reference's rank-0 merge is its scale ceiling).
+  * reference's rank-0 merge is its scale ceiling). A child already
+  * range-partitioned on the order (or in one partition) is sorted in place,
+  * with no scatter.
   *
   * Scale contract: unlike the reference (which `malloc`s the full chunk,
   * `QuickInsertionHeap.c:181`, and dies past node memory), this operator
-  * is an EXTERNAL hybrid sort. A run is one growable byte page holding its
-  * rows back to back (each as its `Int` length, then its UnsafeRow bytes)
-  * plus, per row, an `Int` page offset and a `Long` packing a 32-bit
-  * order-preserving prefix of the leading sort key (high half) with the
-  * row's index (low half). A full run — per-task budget
-  * `spark.graft.hybridSort.spillRows` / `.spillBytes`, default 4M rows /
-  * 128 MB — is sorted by the hybrid kernel's `Long` copy over its packed
-  * keys and written straight from the page to a local sorted-run file;
-  * the partition's output is a k-way min-heap merge of the spilled runs
-  * plus the final in-memory run — the reference's own O8 heap merge
-  * (`QuickInsertionHeap.cu:199-206`), applied where it belongs at 100 TB:
-  * per-task run reconciliation, never a single-node gather. A partition
-  * that fits the budget never touches disk (the common case when
-  * `spark.sql.shuffle.partitions` is sized to the data) and is emitted as
-  * UnsafeRow views into its page; a skewed range partition degrades to
-  * sequential spill I/O instead of an executor OOM. Heap footprint is
-  * hard-bounded by the byte budget — independent of partition size — so
-  * AQE partition coalescing (which merges by serialized shuffle bytes)
-  * can no longer push the operator past the heap. `spillRuns`/`spillBytes`
-  * SQL metrics surface the behavior in the UI and in tests.
+  * is an EXTERNAL hybrid sort on both sides of its scatter.
+  *  - Map side: a task's pages together hold at most the byte budget
+  *    `spark.graft.hybridSort.spillBytes` (default 128 MB), each target's
+  *    page at most its `1/n` share; a full page is shipped as a chunk and
+  *    refilled, so a task's scatter memory is bounded whatever its input.
+  *  - Reduce side: a run is one growable byte page holding its rows back
+  *    to back (each as its `Int` length, then its UnsafeRow bytes — the
+  *    chunk layout) plus, per row, an `Int` page offset and a `Long`
+  *    packing a 32-bit order-preserving prefix of the leading sort key
+  *    (high half) with the row's index (low half). A full run — per-task
+  *    budget `spark.graft.hybridSort.spillRows` / `.spillBytes`, default
+  *    4M rows / 128 MB — is sorted by the hybrid kernel's `Long` copy over
+  *    its packed keys and written straight from the page to a local
+  *    sorted-run file; the partition's output is a k-way min-heap merge of
+  *    the spilled runs plus the final in-memory run — the reference's own
+  *    O8 heap merge (`QuickInsertionHeap.cu:199-206`), applied where it
+  *    belongs at 100 TB: per-task run reconciliation, never a single-node
+  *    gather. A partition that fits the budget never touches disk (the
+  *    common case when `spark.sql.shuffle.partitions` is sized to the
+  *    data) and is emitted as UnsafeRow views into its page; a skewed
+  *    range partition degrades to sequential spill I/O instead of an
+  *    executor OOM.
+  *  - The plan holds no Exchange node: the scatter's shuffle lives inside
+  *    this operator, so AQE neither makes it a query stage nor coalesces
+  *    its partitions. There are always `spark.sql.shuffle.partitions`
+  *    of them (AQE's initial partition number when AQE coalescing is on),
+  *    and the operator states them as its `RangePartitioning`.
+  * `spillRuns`/`spillBytes` SQL metrics surface the spill in the UI and in
+  * tests.
   *
-  * Executor sizing rule: a run (page, offsets, packed keys) is plain heap,
-  * NOT registered with Spark's TaskMemoryManager, so Spark can neither
-  * account for it nor ask it to spill under pressure — each task is
-  * individually bounded. The budget ledger counts what a run measurably
-  * holds: the page bytes written (each row's bytes plus its 4-byte length)
-  * plus 12 B/row for its offset and packed key. A run holds no per-row
-  * object, so no per-object estimate is added. The page grows by doubling
-  * but not past the byte budget (except to fit one row), so `concurrent
-  * tasks per executor × spillBytes` bounds the operator's heap: at the
-  * defaults (128 MB budget, 8 tasks/executor) that is ~1 GiB — well inside
-  * a standard 8 GiB executor; shrink `spark.graft.hybridSort.spillBytes`
-  * before raising task concurrency on small-heap executors. The row index
-  * is 32 bits and offsets are `Int`, so `spillRows` must be below 2^31 and
+  * Executor sizing rule: pages and runs are plain heap, NOT registered
+  * with Spark's TaskMemoryManager, so Spark can neither account for them
+  * nor ask them to spill under pressure — each task is individually
+  * bounded. The run's budget ledger counts what a run measurably holds:
+  * the page bytes written (each row's bytes plus its 4-byte length) plus
+  * 12 B/row for its offset and packed key. A run holds no per-row object,
+  * so no per-object estimate is added. Pages grow by doubling but not past
+  * their budget (except to fit one row), so `concurrent tasks per executor
+  * × spillBytes` bounds the operator's heap: at the defaults (128 MB
+  * budget, 8 tasks/executor) that is ~1 GiB — well inside a standard
+  * 8 GiB executor; shrink `spark.graft.hybridSort.spillBytes` before
+  * raising task concurrency on small-heap executors. The row index is 32
+  * bits and offsets are `Int`, so `spillRows` must be below 2^31 and
   * `spillBytes` at most [[ExternalHybridSorter.MaxPageBytes]]; the
   * operator rejects larger values. The production default remains
   * [[graft.ops.Sorts.globalSort]]; this operator exists for
@@ -103,24 +122,38 @@ object HybridSortStrategy extends SparkStrategy {
   }
 }
 
-/** Physical hybrid sort: requires a range-partitioned child,
-  * external-sorts each partition (hybrid quicksort per run, heap merge of
-  * spilled runs — see [[HybridSortPlan]]'s scale contract).
+/** Physical hybrid sort: range-scatters its child in chunks (unless the
+  * child is already range-partitioned on the order), then external-sorts
+  * each partition (hybrid quicksort per run, heap merge of spilled runs —
+  * see [[HybridSortPlan]]'s scale contract).
   */
 case class HybridSortExec(order: Seq[SortOrder], threshold: Int, child: SparkPlan)
   extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
   override def outputOrdering: Seq[SortOrder] = order
-  override def outputPartitioning: Partitioning = child.outputPartitioning
   override def nodeName: String = "GraftHybridSort"
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "spillRuns" -> SQLMetrics.createMetric(sparkContext, "spilled sorted runs"),
     "spillBytes" -> SQLMetrics.createSizeMetric(sparkContext, "spill bytes"))
 
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(order) :: Nil
+  /** Whether the child's rows must move to their ranges first: a child
+    * that already satisfies the order's distribution is sorted in place.
+    */
+  private def scatters: Boolean =
+    !child.outputPartitioning.satisfies(OrderedDistribution(order))
+
+  @transient private lazy val numPartitions: Int = conf.numShufflePartitions
+
+  override def outputPartitioning: Partitioning =
+    if (scatters) RangePartitioning(order, numPartitions) else child.outputPartitioning
+
+  /** A scattering node names its scatter, the shuffle it runs. */
+  override def simpleString(maxFields: Int): String = {
+    val base = super.simpleString(maxFields)
+    if (scatters) s"$base, RangeScatter $numPartitions" else base
+  }
 
   override protected def doExecute(): RDD[InternalRow] = {
     // LazilyGeneratedOrdering is serializable and regenerates its codegen'd
@@ -130,16 +163,50 @@ case class HybridSortExec(order: Seq[SortOrder], threshold: Int, child: SparkPla
     val attrs = child.output
     val maxRunRows = budget("spark.graft.hybridSort.spillRows", 4194304L,
       Int.MaxValue, "the row index packed beside each key is 32 bits")
-    val maxRunBytes = budget("spark.graft.hybridSort.spillBytes", 128L << 20,
-      ExternalHybridSorter.MaxPageBytes, "a run's rows live in one byte array")
     val key = KeyPrefix(order, attrs)
     val runsMetric = longMetric("spillRuns")
     val bytesMetric = longMetric("spillBytes")
-    child.execute().mapPartitions({ iter =>
+    val input = if (scatters) scattered else child.execute()
+    input.mapPartitions({ iter =>
       new ExternalHybridSorter(attrs.length,
         UnsafeProjection.create(attrs, attrs), ord, key, t,
         maxRunRows, maxRunBytes, runsMetric, bytesMetric).sort(iter)
     }, preservesPartitioning = true)
+  }
+
+  private def maxRunBytes: Long = budget("spark.graft.hybridSort.spillBytes", 128L << 20,
+    ExternalHybridSorter.MaxPageBytes, "a run's rows live in one byte array")
+
+  /** The child's rows in their ranges: Spark's `RangePartitioner` samples
+    * the sort key for the bounds, as a range exchange does; each map task
+    * ships its rows to the bounds' ranges as [[RangeScatter]] chunks, and
+    * each reduce task views its chunks' rows in place. Lazy, so that
+    * executing the plan again reuses the shuffle, as an exchange's would.
+    */
+  @transient private lazy val scattered: RDD[InternalRow] = {
+    val attrs = child.output
+    val n = numPartitions
+    val input = child.execute()
+    val keyOrder = order.zipWithIndex.map { case (o, i) =>
+      o.copy(child = BoundReference(i, o.dataType, o.nullable))
+    }
+    val keyOrd = new LazilyGeneratedOrdering(keyOrder)
+    val sample = input.mapPartitions { iter =>
+      val project = UnsafeProjection.create(order.map(_.child), attrs)
+      val pair = new MutablePair[InternalRow, Null]()
+      iter.map(row => pair.update(project(row).copy(), null))
+    }
+    val bounds = RangeScatter.boundsOf(new RangePartitioner(n, sample, ascending = true,
+      conf.rangeExchangeSampleSizePerPartition)(keyOrd, ClassTag(classOf[InternalRow])))
+    val boundKey = KeyPrefix(keyOrder, Nil)
+    val boundPrefix = boundKey.projection()
+    val scatter = RangeScatter(attrs, order, bounds,
+      bounds.map(b => boundKey.of(boundPrefix(b))), keyOrd,
+      (maxRunBytes / n).max(1L).toInt)
+    val numFields = attrs.length
+    new ShuffledRDD[Int, Array[Byte], Array[Byte]](
+      input.mapPartitions(scatter.chunks), new RangeScatter.Targets(n))
+      .mapPartitions(chunks => RangeScatter.rows(numFields, chunks.map(_._2)))
   }
 
   /** A run budget conf value, at least 1 and at most `max`. */
@@ -162,7 +229,24 @@ case class HybridSortExec(order: Seq[SortOrder], threshold: Int, child: SparkPla
   * date or timestamp sort key), so a run with no nulls whose key range
   * fits 32 bits needs no row comparison at all.
   */
-private[plans] final case class KeyPrefix(key: SortOrder, unsigned: Boolean, exact: Boolean)
+private[plans] final case class KeyPrefix(key: SortOrder, unsigned: Boolean, exact: Boolean) {
+  /** The prefix of a null key: the least when nulls sort first, else the greatest. */
+  val nullKey: Long = if (key.nullOrdering == NullsFirst) Long.MinValue else Long.MaxValue
+
+  /** A projection of a row's raw prefix; mutable, so one per task. */
+  def projection(): UnsafeProjection = UnsafeProjection.create(Seq(SortPrefix(key)))
+
+  /** A non-null key's raw prefix, mapped so signed order is output order. */
+  def normalize(raw: Long): Long = {
+    var v = raw
+    if (unsigned) v ^= Long.MinValue
+    if (!key.isAscending) v = ~v
+    v
+  }
+
+  /** The mapped prefix in `projection`'s output `p`. */
+  def of(p: UnsafeRow): Long = if (p.isNullAt(0)) nullKey else normalize(p.getLong(0))
+}
 
 private[plans] object KeyPrefix {
   def apply(order: Seq[SortOrder], input: Seq[Attribute]): KeyPrefix = {
@@ -177,6 +261,132 @@ private[plans] object KeyPrefix {
       case _ => false
     }
     KeyPrefix(key, unsigned, exact = order.length == 1 && exactType)
+  }
+}
+
+/** The map side of the operator's scatter. `bounds` are the range bounds
+  * (sort-key rows, ordered by `keyOrd`), `boundKeys` their mapped
+  * prefixes; a row goes to the range numbered by how many bounds sort
+  * strictly below its key, as `RangePartitioner.getPartition` sends it.
+  * Each task appends each row to its target's page as its `Int` length and
+  * its UnsafeRow bytes, and ships a page as one `(target, bytes)` chunk when
+  * the next row would take it past `pageBytes`, and at the end of its input.
+  */
+private[plans] final case class RangeScatter(
+    attrs: Seq[Attribute], order: Seq[SortOrder], bounds: Array[InternalRow],
+    boundKeys: Array[Long], keyOrd: Ordering[InternalRow], pageBytes: Int) {
+
+  def chunks(rows: Iterator[InternalRow]): Iterator[(Int, Array[Byte])] =
+    new Iterator[(Int, Array[Byte])] {
+      private val key = KeyPrefix(order, attrs)
+      private val prefixOf = key.projection()
+      private lazy val keyOf = UnsafeProjection.create(order.map(_.child), attrs)
+      private val toUnsafe = UnsafeProjection.create(attrs, attrs)
+      private val pages = new Array[Array[Byte]](bounds.length + 1)
+      private val used = new Array[Int](pages.length)
+      private val ready = new java.util.ArrayDeque[(Int, Array[Byte])]()
+      private var flushed = false
+
+      override def hasNext: Boolean = {
+        while (ready.isEmpty && rows.hasNext) add(rows.next() match {
+          case u: UnsafeRow => u
+          case r => toUnsafe(r)
+        })
+        if (ready.isEmpty && !flushed) {
+          flushed = true
+          pages.indices.foreach(t => if (used(t) > 0) ship(t))
+        }
+        !ready.isEmpty
+      }
+
+      override def next(): (Int, Array[Byte]) = {
+        if (!hasNext) throw new NoSuchElementException
+        ready.poll()
+      }
+
+      private def add(u: UnsafeRow): Unit = {
+        val t = target(u)
+        val size = u.getSizeInBytes
+        if (pages(t) == null || used(t).toLong + 4 + size > pages(t).length) room(t, 4 + size)
+        val page = pages(t)
+        Platform.putInt(page, Platform.BYTE_ARRAY_OFFSET + used(t), size)
+        u.writeToMemory(page, Platform.BYTE_ARRAY_OFFSET + used(t) + 4)
+        used(t) += 4 + size
+      }
+
+      /** Makes room for `need` more bytes in `t`'s page: ships the page
+        * first if they would take it past `pageBytes`, then grows it by
+        * doubling, but not past `pageBytes` unless one row needs more.
+        */
+      private def room(t: Int, need: Int): Unit = {
+        if (used(t) > 0 && used(t).toLong + need > pageBytes) ship(t)
+        val want = used(t).toLong + need
+        val have = if (pages(t) == null) 0 else pages(t).length
+        if (want > have) {
+          val cap = want.max((2L * have).max(1 << 12).min(pageBytes))
+          if (cap > ExternalHybridSorter.MaxPageBytes) throw new IllegalStateException(
+            s"a $need-byte row does not fit one ${ExternalHybridSorter.MaxPageBytes}-byte page")
+          pages(t) = java.util.Arrays.copyOf(
+            if (pages(t) == null) Array.emptyByteArray else pages(t), cap.toInt)
+        }
+      }
+
+      private def ship(t: Int): Unit = {
+        ready.add((t, java.util.Arrays.copyOf(pages(t), used(t))))
+        used(t) = 0
+      }
+
+      /** How many bounds sort strictly below the row's key. */
+      private def target(u: UnsafeRow): Int = {
+        if (boundKeys.isEmpty) return 0
+        val p = key.of(prefixOf(u))
+        var lo = 0
+        var hi = boundKeys.length
+        while (lo < hi) { // the first bound whose prefix is not below p
+          val mid = (lo + hi) >>> 1
+          if (boundKeys(mid) < p) lo = mid + 1 else hi = mid
+        }
+        // an exact key's equal prefix is an equal key (a null's prefix is shared)
+        if (lo == boundKeys.length || boundKeys(lo) != p || (key.exact && p != key.nullKey)) lo
+        else {
+          val k = keyOf(u)
+          while (lo < boundKeys.length && boundKeys(lo) == p && keyOrd.compare(bounds(lo), k) < 0)
+            lo += 1
+          lo
+        }
+      }
+    }
+}
+
+private[plans] object RangeScatter {
+  /** The bounds a `RangePartitioner` sampled. Spark keeps them private, so
+    * they are read by reflection; drawing them any other way would fork
+    * Spark's sampling.
+    */
+  def boundsOf(p: RangePartitioner[InternalRow, Null]): Array[InternalRow] = {
+    val f = classOf[RangePartitioner[_, _]].getDeclaredField("rangeBounds")
+    f.setAccessible(true)
+    f.get(p).asInstanceOf[Array[InternalRow]]
+  }
+
+  /** Sends a chunk to the partition its key names. */
+  final class Targets(override val numPartitions: Int) extends Partitioner {
+    override def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  }
+
+  /** The rows of a partition's chunks, as one UnsafeRow view moved along. */
+  def rows(numFields: Int, chunks: Iterator[Array[Byte]]): Iterator[InternalRow] = {
+    val view = new UnsafeRow(numFields)
+    chunks.flatMap { bytes =>
+      Iterator.unfold(0) { at =>
+        if (at >= bytes.length) None
+        else {
+          val size = Platform.getInt(bytes, Platform.BYTE_ARRAY_OFFSET + at)
+          view.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + at + 4, size)
+          Some((view: InternalRow, at + 4 + size))
+        }
+      }
+    }
   }
 }
 
@@ -204,10 +414,7 @@ private[plans] final class ExternalHybridSorter(
     runsMetric: SQLMetric, bytesMetric: SQLMetric) {
   import ExternalHybridSorter._
 
-  private val prefixOf = UnsafeProjection.create(Seq(SortPrefix(key.key)))
-  private val nullKey =
-    if (key.key.nullOrdering == NullsFirst) Long.MinValue else Long.MaxValue
-  private val descending = !key.key.isAscending
+  private val prefixOf = key.projection()
 
   // The run: rows back to back in `page`, row i at `offsets(i)` as its Int
   // length then its bytes; `keys(i)` its normalized prefix while buffering,
@@ -281,11 +488,9 @@ private[plans] final class ExternalHybridSorter(
   /** The row's leading-key prefix, mapped so signed order is output order. */
   private def prefix(u: UnsafeRow): Long = {
     val p = prefixOf(u)
-    if (p.isNullAt(0)) { hasNull = true; nullKey }
+    if (p.isNullAt(0)) { hasNull = true; key.nullKey }
     else {
-      var v = p.getLong(0)
-      if (key.unsigned) v ^= Long.MinValue
-      if (descending) v = ~v
+      val v = key.normalize(p.getLong(0))
       if (v < minKey) minKey = v
       if (v > maxKey) maxKey = v
       v

@@ -181,11 +181,13 @@ object StreamOps {
   /** Open a parquet path as a file STREAM over [[stageDir]]'s directory.
     * The schema comes from the file footer on the driver
     * ([[graft.ops.Tables.parquet]]), so opening the stream launches no
-    * schema-inference job.
+    * schema-inference job. `options` go to the file source as they are
+    * (for example `maxFilesPerTrigger`).
     */
-  def fileStream(spark: SparkSession, path: String): DataFrame =
+  def fileStream(spark: SparkSession, path: String,
+                 options: Map[String, String] = Map.empty): DataFrame =
     spark.readStream.schema(graft.ops.Tables.parquet(spark, path).schema)
-      .parquet(stageDir(path))
+      .options(options).parquet(stageDir(path))
 
   /** Open the events parquet directory as a STREAM with the same
     * schema-adaptive µs timestamp normalization

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.GraftTestShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Repartition, ResolvedHint}
 import org.apache.spark.sql.functions._
@@ -39,21 +38,8 @@ class AdaptiveSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def slots: Int = spark.sparkContext.defaultParallelism
 
-  /** Jobs launched while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    var jobs = 0
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
-    }
-    GraftTestShim.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      GraftTestShim.drain(sc)
-      (out, listener.synchronized(jobs))
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring[T](body: => T): (T, Int) =
+    GraftTestShim.jobsDuring(spark.sparkContext)(body)
 
   private def fannedOut(df: DataFrame): Boolean = df.queryExecution.logical match {
     case r: Repartition => r.shuffle && r.numPartitions == slots

@@ -3,7 +3,7 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.GraftTestShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -113,9 +113,7 @@ class GlobalIndexSpec extends AnyFunSuite with BeforeAndAfterAll
   test("the range shuffle's map stage runs once, across two collects") {
     val sc = spark.sparkContext
     val mapStages = mutable.Set.empty[Int]
-    var jobs = 0
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
         if (e.taskType == "ShuffleMapTask") mapStages += e.stageId
       }
@@ -125,18 +123,14 @@ class GlobalIndexSpec extends AnyFunSuite with BeforeAndAfterAll
     try {
       val df = spark.range(0, 20000, 1, 3).selectExpr("id % 97 AS k", "id")
       val q = Sorts.globalIndex(df, col("k"), col("id")).orderBy("idx")
-      val first = q.collect()
-      GraftTestShim.drain(sc)
-      val jobsFirst = listener.synchronized(jobs)
+      val (first, jobsFirst) = GraftTestShim.jobsDuring(sc)(q.collect())
       val second = q.collect()
       GraftTestShim.drain(sc)
       assert(first.toSeq == second.toSeq)
       assert(first.map(_.getLong(0)).toSeq == (0L until 20000L))
-      listener.synchronized {
-        assert(mapStages.size == 1, s"map stages run: $mapStages")
-        // sample, map stage, count, result
-        assert(jobsFirst <= 5, s"jobs for one globalIndex + collect: $jobsFirst")
-      }
+      listener.synchronized(assert(mapStages.size == 1, s"map stages run: $mapStages"))
+      // sample, map stage, count, result
+      assert(jobsFirst <= 5, s"jobs for one globalIndex + collect: $jobsFirst")
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.GraftTestShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -310,19 +309,8 @@ class GraphStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark; import sp.implicits._
     val sc = spark.sparkContext
     val edges = (0 until 12).map(i => (s"n$i", s"n${i + 1}")).toDF("src", "dst")
-    def jobs(maxHops: Int): Int = {
-      var n = 0
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { n += 1 }
-      }
-      GraftTestShim.drain(sc)
-      sc.addSparkListener(listener)
-      try {
-        assert(Graph.bfsHops(edges, Seq("n0").toDF("node"), maxHops).count() == maxHops + 1)
-        GraftTestShim.drain(sc)
-        listener.synchronized(n)
-      } finally sc.removeSparkListener(listener)
-    }
+    def jobs(maxHops: Int): Int = GraftTestShim.jobsDuring(sc)(
+      assert(Graph.bfsHops(edges, Seq("n0").toDF("node"), maxHops).count() == maxHops + 1))._2
     val six = jobs(6)
     val twelve = jobs(12)
     assert(twelve - six <= 2 * 6, s"6 levels: $six jobs, 12 levels: $twelve jobs")

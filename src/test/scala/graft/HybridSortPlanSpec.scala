@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -41,15 +42,84 @@ class HybridSortPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.sameElements(want))
   }
 
-  test("plans GraftHybridSort over a range-partitioning exchange, no SortExec") {
+  test("plans GraftHybridSort with its own range scatter: no Exchange, no SortExec") {
     val sp = spark
     val df = sp.range(1000).selectExpr("cast(id % 13 as bigint) as k", "id as v")
-    val plan = Sorts.hybridSortExec(df, 25, "k", "v")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("GraftHybridSort"), plan)
-    assert(plan.toLowerCase.contains("rangepartitioning"), plan)
+    val q = Sorts.hybridSortExec(df, 25, "k", "v")
+    val exec = findHybridExec(q.queryExecution.executedPlan).get
+    val plan = q.queryExecution.executedPlan.toString
+    exec.outputPartitioning match {
+      case RangePartitioning(order, 4) =>
+        assert(order.map(_.child.references.head.name) == Seq("k", "v"), plan)
+      case p => fail(s"the operator states $p, not its range partitioning:\n$plan")
+    }
+    assert(plan.contains("RangeScatter 4"), plan)
+    assert(!plan.contains("Exchange"), s"no exchange below the operator:\n$plan")
     assert("""\+- Sort \[""".r.findFirstIn(plan).isEmpty,
       s"built-in SortExec must not appear:\n$plan")
+  }
+
+  test("a child already range-partitioned on the order is sorted in place") {
+    val sp = spark; import sp.implicits._
+    val df = sp.range(0, 3000, 1, 3).selectExpr("cast(id * 7919 % 1000 as bigint) as k")
+    val ranged = df.repartitionByRange(3, $"k")
+    val q = Sorts.hybridSortExec(ranged, 25, "k")
+    val plan = q.queryExecution.executedPlan.toString
+    assert(!plan.contains("RangeScatter"), plan)
+    assert("(?<![A-Za-z])Exchange ".r.findAllIn(plan).length == 1, plan)
+    val got = q.collect().map(_.getLong(0))
+    assert(got.sameElements(df.collect().map(_.getLong(0)).sorted))
+  }
+
+  test("one sort launches two jobs: the bounds' sample and the sort") {
+    val sp = spark
+    val df = sp.range(0, 20000, 1, 4).selectExpr("cast(id * 2654435761 % 9973 as bigint) as k")
+    val (n, jobs) = org.apache.spark.GraftTestShim.jobsDuring(sp.sparkContext)(
+      Sorts.hybridSortExec(df, 25, "k").queryExecution.toRdd.count())
+    assert(n == 20000)
+    assert(jobs == 2, s"one hybrid sort launched $jobs jobs")
+  }
+
+  /** The scatter's adversarial inputs: each equals `orderBy` row for row. */
+  private def adversarial(sp: SparkSession): Seq[(String, DataFrame, Seq[String])] = {
+    val base = sp.range(0, 4000, 1, 4)
+    Seq(
+      ("presorted", base.selectExpr("id as k", "id as v"), Seq("k", "v")),
+      ("reverse", base.selectExpr("4000 - id as k", "id as v"), Seq("k", "v")),
+      ("all-equal", base.selectExpr("7L as k", "id as v"), Seq("k", "v")),
+      ("3 distinct", base.selectExpr("id % 3 as k", "id as v"), Seq("k", "v")),
+      ("90% one key", base.selectExpr(
+        "case when id % 10 = 0 then id else 42 end as k", "id as v"), Seq("k", "v")),
+      ("one row", sp.range(0, 1, 1, 1).selectExpr("id as k", "id as v"), Seq("k", "v")),
+      ("empty", base.selectExpr("id as k", "id as v").where("k < 0"), Seq("k", "v")),
+      ("null keys", base.selectExpr(
+        "case when id % 5 = 0 then null else id % 97 end as k", "id as v"), Seq("k", "v")),
+      ("null exact key", base.selectExpr(
+        "case when id % 5 = 0 then null else cast(id % 97 as int) end as k"), Seq("k")),
+      ("string-led", base.selectExpr(
+        "concat('key', cast(id % 37 as string)) as s", "id % 11 as k", "id as v"),
+        Seq("s", "k", "v")),
+      ("double-led", base.selectExpr(
+        "case when id % 9 = 0 then null else (id % 53) / 7.0 end as d",
+        "cast(id as double) as x", "id as v"), Seq("d", "x", "v")))
+  }
+
+  test("adversarial inputs equal orderBy at 1, 4 and 7 partitions, with one page and with many") {
+    val sp = spark
+    // A 4 KiB budget bounds each target's page to 4096 / n bytes, so each
+    // map task (about 28 KiB of rows) ships several chunks per target.
+    for (parts <- Seq(1, 4, 7); pageBytes <- Seq(None, Some("4096"))) {
+      sp.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      pageBytes.foreach(sp.conf.set("spark.graft.hybridSort.spillBytes", _))
+      try adversarial(sp).foreach { case (name, df, keys) =>
+        val got = Sorts.hybridSortExec(df, 25, keys: _*).collect().toSeq
+        val want = df.orderBy(keys.map(org.apache.spark.sql.functions.col): _*).collect().toSeq
+        assert(got == want, s"$name at $parts partitions, page bound $pageBytes")
+      } finally {
+        sp.conf.set("spark.sql.shuffle.partitions", "4")
+        sp.conf.unset("spark.graft.hybridSort.spillBytes")
+      }
+    }
   }
 
   test("ties across a partition boundary stay a multiset permutation") {

@@ -49,7 +49,7 @@ class PlanFingerprintSpec extends AnyFunSuite with BeforeAndAfterAll {
     * SortAggregate) with a letter lookbehind.
     */
   private val counters: Seq[(String, scala.util.matching.Regex)] = Seq(
-    "shuffles" -> "(?<![A-Za-z])Exchange ".r,
+    "shuffles" -> "(?<![A-Za-z])Exchange |RangeScatter ".r,
     "broadcasts" -> "BroadcastExchange".r,
     "sorts" -> "(?<![A-Za-z])Sort \\[".r,
     "smj" -> "SortMergeJoin".r,

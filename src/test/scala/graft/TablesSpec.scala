@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.GraftTestShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims
 import org.scalatest.BeforeAndAfterAll
@@ -33,29 +32,14 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  /** Jobs launched while `f` runs. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    var n = 0
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { n += 1 }
-    }
-    GraftTestShim.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      f
-      GraftTestShim.drain(sc)
-      listener.synchronized(n)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("every corpus table: the footer schema is the inferred one, read with no job") {
     tables.foreach { t =>
       val p = s"$sfDir/$t.parquet"
       val inferred = spark.read.parquet(p).schema
       assert(GraftParquetShims.footerSchema(spark, p).contains(inferred), t)
       assert(Tables.parquet(spark, p).schema == inferred, t)
-      assert(jobsOf(Tables.read(spark, sfDir, t).schema) == 0, t)
+      assert(GraftTestShim.jobsDuring(spark.sparkContext)(
+        Tables.read(spark, sfDir, t).schema)._2 == 0, t)
     }
   }
 

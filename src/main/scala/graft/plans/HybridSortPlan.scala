@@ -196,13 +196,9 @@ case class HybridSortExec(order: Seq[SortOrder], threshold: Int, child: SparkPla
       val pair = new MutablePair[InternalRow, Null]()
       iter.map(row => pair.update(project(row).copy(), null))
     }
-    val bounds = RangeScatter.boundsOf(new RangePartitioner(n, sample, ascending = true,
-      conf.rangeExchangeSampleSizePerPartition)(keyOrd, ClassTag(classOf[InternalRow])))
-    val boundKey = KeyPrefix(keyOrder, Nil)
-    val boundPrefix = boundKey.projection()
-    val scatter = RangeScatter(attrs, order, bounds,
-      bounds.map(b => boundKey.of(boundPrefix(b))), keyOrd,
-      (maxRunBytes / n).max(1L).toInt)
+    val part = new RangePartitioner(n, sample, ascending = true,
+      conf.rangeExchangeSampleSizePerPartition)(keyOrd, ClassTag(classOf[InternalRow]))
+    val scatter = RangeScatter(attrs, order, part, (maxRunBytes / n).max(1L).toInt)
     val numFields = attrs.length
     new ShuffledRDD[Int, Array[Byte], Array[Byte]](
       input.mapPartitions(scatter.chunks), new RangeScatter.Targets(n))
@@ -244,8 +240,6 @@ private[plans] final case class KeyPrefix(key: SortOrder, unsigned: Boolean, exa
     v
   }
 
-  /** The mapped prefix in `projection`'s output `p`. */
-  def of(p: UnsafeRow): Long = if (p.isNullAt(0)) nullKey else normalize(p.getLong(0))
 }
 
 private[plans] object KeyPrefix {
@@ -264,48 +258,48 @@ private[plans] object KeyPrefix {
   }
 }
 
-/** The map side of the operator's scatter. `bounds` are the range bounds
-  * (sort-key rows, ordered by `keyOrd`), `boundKeys` their mapped
-  * prefixes; a row goes to the range numbered by how many bounds sort
-  * strictly below its key, as `RangePartitioner.getPartition` sends it.
-  * Each task appends each row to its target's page as its `Int` length and
-  * its UnsafeRow bytes, and ships a page as one `(target, bytes)` chunk when
-  * the next row would take it past `pageBytes`, and at the end of its input.
+/** The map side of the operator's scatter. `part` is the range
+  * partitioner over the sort key; a row goes to the range it names for the
+  * row's key. Each task appends each row to its target's page as its `Int`
+  * length and its UnsafeRow bytes, and ships a page as one `(target, bytes)`
+  * chunk when the next row would take it past `pageBytes`. At the end of
+  * its input it ships its pages one at a time, dropping each as it goes, so
+  * the task holds its pages plus at most one shipped chunk.
   */
 private[plans] final case class RangeScatter(
-    attrs: Seq[Attribute], order: Seq[SortOrder], bounds: Array[InternalRow],
-    boundKeys: Array[Long], keyOrd: Ordering[InternalRow], pageBytes: Int) {
+    attrs: Seq[Attribute], order: Seq[SortOrder], part: Partitioner, pageBytes: Int) {
 
   def chunks(rows: Iterator[InternalRow]): Iterator[(Int, Array[Byte])] =
     new Iterator[(Int, Array[Byte])] {
-      private val key = KeyPrefix(order, attrs)
-      private val prefixOf = key.projection()
-      private lazy val keyOf = UnsafeProjection.create(order.map(_.child), attrs)
+      private val keyOf = UnsafeProjection.create(order.map(_.child), attrs)
       private val toUnsafe = UnsafeProjection.create(attrs, attrs)
-      private val pages = new Array[Array[Byte]](bounds.length + 1)
+      private val pages = new Array[Array[Byte]](part.numPartitions)
       private val used = new Array[Int](pages.length)
-      private val ready = new java.util.ArrayDeque[(Int, Array[Byte])]()
-      private var flushed = false
+      private var shipped: (Int, Array[Byte]) = _
+      private var flushAt = 0 // the next page the end-of-input flush ships
 
       override def hasNext: Boolean = {
-        while (ready.isEmpty && rows.hasNext) add(rows.next() match {
+        while (shipped == null && rows.hasNext) add(rows.next() match {
           case u: UnsafeRow => u
           case r => toUnsafe(r)
         })
-        if (ready.isEmpty && !flushed) {
-          flushed = true
-          pages.indices.foreach(t => if (used(t) > 0) ship(t))
+        while (shipped == null && flushAt < pages.length) {
+          if (used(flushAt) > 0) ship(flushAt)
+          pages(flushAt) = null
+          flushAt += 1
         }
-        !ready.isEmpty
+        shipped != null
       }
 
       override def next(): (Int, Array[Byte]) = {
         if (!hasNext) throw new NoSuchElementException
-        ready.poll()
+        val c = shipped
+        shipped = null
+        c
       }
 
       private def add(u: UnsafeRow): Unit = {
-        val t = target(u)
+        val t = part.getPartition(keyOf(u))
         val size = u.getSizeInBytes
         if (pages(t) == null || used(t).toLong + 4 + size > pages(t).length) room(t, 4 + size)
         val page = pages(t)
@@ -332,43 +326,13 @@ private[plans] final case class RangeScatter(
       }
 
       private def ship(t: Int): Unit = {
-        ready.add((t, java.util.Arrays.copyOf(pages(t), used(t))))
+        shipped = (t, java.util.Arrays.copyOf(pages(t), used(t)))
         used(t) = 0
-      }
-
-      /** How many bounds sort strictly below the row's key. */
-      private def target(u: UnsafeRow): Int = {
-        if (boundKeys.isEmpty) return 0
-        val p = key.of(prefixOf(u))
-        var lo = 0
-        var hi = boundKeys.length
-        while (lo < hi) { // the first bound whose prefix is not below p
-          val mid = (lo + hi) >>> 1
-          if (boundKeys(mid) < p) lo = mid + 1 else hi = mid
-        }
-        // an exact key's equal prefix is an equal key (a null's prefix is shared)
-        if (lo == boundKeys.length || boundKeys(lo) != p || (key.exact && p != key.nullKey)) lo
-        else {
-          val k = keyOf(u)
-          while (lo < boundKeys.length && boundKeys(lo) == p && keyOrd.compare(bounds(lo), k) < 0)
-            lo += 1
-          lo
-        }
       }
     }
 }
 
 private[plans] object RangeScatter {
-  /** The bounds a `RangePartitioner` sampled. Spark keeps them private, so
-    * they are read by reflection; drawing them any other way would fork
-    * Spark's sampling.
-    */
-  def boundsOf(p: RangePartitioner[InternalRow, Null]): Array[InternalRow] = {
-    val f = classOf[RangePartitioner[_, _]].getDeclaredField("rangeBounds")
-    f.setAccessible(true)
-    f.get(p).asInstanceOf[Array[InternalRow]]
-  }
-
   /** Sends a chunk to the partition its key names. */
   final class Targets(override val numPartitions: Int) extends Partitioner {
     override def getPartition(key: Any): Int = key.asInstanceOf[Int]

@@ -140,15 +140,16 @@ object Scale {
 
     val sortSec = time(noop(ops.Sorts.globalSort(gen.select("value"), col("value"))))
     val topkSec = time(noop(ops.Sorts.topK(gen, 100, col("value").desc, col("id"))))
-    // the custom physical operator (HybridSortExec: range scatter via
-    // EnsureRequirements + per-partition quicksort/insertion-sort
-    // hybrid per run, heap merge of spilled runs) over the same frame —
-    // the reference's algorithm head-to-head against Tungsten's sort at
-    // 50x the reference's published ceiling. Since the round-7 external
-    // rework the operator spills past its run budget, so it runs at the
-    // session's DEFAULT partitioning with AQE coalescing ON — no
-    // partition-sizing discipline, the exact posture Tungsten's sort
-    // gets. Default budget: 128 MB per task run.
+    // the custom physical operator (HybridSortExec: its own chunked range
+    // scatter + per-partition quicksort/insertion-sort hybrid per run,
+    // heap merge of spilled runs) over the same frame — the reference's
+    // algorithm head-to-head against Tungsten's sort at 50x the
+    // reference's published ceiling. The operator spills past its run
+    // budget, so it runs at the session's default partitioning with no
+    // partition-sizing discipline. Its scatter is not an Exchange, so AQE
+    // never coalesces it: it always runs spark.sql.shuffle.partitions
+    // reduce tasks, where globalSort's exchange may be coalesced — the
+    // two legs differ in that posture. Default budget: 128 MB per task run.
     val hybridSec = time(noop(ops.Sorts.hybridSortExec(gen.select("value"), 25, "value")))
     // same plan under a deliberately TINY run budget (8 MB → ~16x the
     // spilled runs): prices the spill path itself — sequential run I/O +

@@ -1,11 +1,13 @@
 package graft.plans
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, File, FileInputStream, FileOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, File, FileInputStream, FileOutputStream, InputStream, OutputStream}
+import java.nio.ByteBuffer
 
 import scala.reflect.ClassTag
 
 import org.apache.spark.{Partitioner, RangePartitioner, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.{DeserializationStream, SerializationStream, Serializer, SerializerInstance}
 import org.apache.spark.sql.GraftSpillUtil
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
@@ -33,9 +35,8 @@ import graft.ops.HybridSort
   * as a range exchange would; each map task then appends every row to a
   * page for its target range and ships each page as ONE shuffle record,
   * so the shuffle moves a few chunks per task instead of serializing every
-  * row. The row's target is found by comparing its normalized key prefix
-  * with the bounds' prefixes; rows are compared only on a prefix tie, and
-  * never for an exact key. Each reduce task views its chunks' rows in
+  * row. The row's target is the range the `RangePartitioner` names for its
+  * key, as in a range exchange. Each reduce task views its chunks' rows in
   * place and runs the reference's hybrid structure
   * (`SequentialQuickInsert.c:40-52`: quicksort, insertion sort below the
   * threshold knob of `quickThreshold.c:188-191`) with a worst-case-safe
@@ -53,10 +54,14 @@ import graft.ops.HybridSort
   * Scale contract: unlike the reference (which `malloc`s the full chunk,
   * `QuickInsertionHeap.c:181`, and dies past node memory), this operator
   * is an EXTERNAL hybrid sort on both sides of its scatter.
-  *  - Map side: a task's pages together hold at most the byte budget
-  *    `spark.graft.hybridSort.spillBytes` (default 128 MB), each target's
-  *    page at most its `1/n` share; a full page is shipped as a chunk and
-  *    refilled, so a task's scatter memory is bounded whatever its input.
+  *  - Map side: each target's page holds at most its `1/n` share of the
+  *    byte budget `spark.graft.hybridSort.spillBytes` (default 128 MB), so
+  *    a task's pages together hold at most the budget; a full page is
+  *    handed to the shuffle itself as one chunk (no copy) and replaced, and
+  *    at the end of the input the pages are handed over and dropped one at
+  *    a time. A task's scatter memory is thus the budget plus one chunk in
+  *    flight, whatever its input. Chunks stream through their own
+  *    serializer: each is its length and its bytes.
   *  - Reduce side: a run is one growable byte page holding its rows back
   *    to back (each as its `Int` length, then its UnsafeRow bytes — the
   *    chunk layout) plus, per row, an `Int` page offset and a `Long`
@@ -89,14 +94,17 @@ import graft.ops.HybridSort
   * the page bytes written (each row's bytes plus its 4-byte length) plus
   * 12 B/row for its offset and packed key. A run holds no per-row object,
   * so no per-object estimate is added. Pages grow by doubling but not past
-  * their budget (except to fit one row), so `concurrent tasks per executor
-  * × spillBytes` bounds the operator's heap: at the defaults (128 MB
-  * budget, 8 tasks/executor) that is ~1 GiB — well inside a standard
-  * 8 GiB executor; shrink `spark.graft.hybridSort.spillBytes` before
-  * raising task concurrency on small-heap executors. The row index is 32
-  * bits and offsets are `Int`, so `spillRows` must be below 2^31 and
-  * `spillBytes` at most [[ExternalHybridSorter.MaxPageBytes]]; the
-  * operator rejects larger values. The production default remains
+  * their budget (except to fit one row); a task holds at most one chunk
+  * (`spillBytes / n`) beside them — the map side's chunk in flight, the
+  * reduce side's chunk being read — so `concurrent tasks per executor ×
+  * spillBytes × (1 + 1/n)` bounds the operator's heap: at the defaults
+  * (128 MB budget, 8 tasks/executor, 8+ partitions) that is ~1.1 GiB —
+  * well inside a standard 8 GiB executor; shrink
+  * `spark.graft.hybridSort.spillBytes` before raising task concurrency on
+  * small-heap executors. The row index is 32 bits and offsets are `Int`,
+  * so `spillRows` must be below 2^31 and `spillBytes` at most
+  * [[ExternalHybridSorter.MaxPageBytes]]; the operator rejects larger
+  * values. The production default remains
   * [[graft.ops.Sorts.globalSort]]; this operator exists for
   * algorithm-level parity and as the engine's planner-extension showcase
   * (logical node + strategy + exec, injected via [[graft.GraftExtensions]]).
@@ -200,8 +208,9 @@ case class HybridSortExec(order: Seq[SortOrder], threshold: Int, child: SparkPla
       conf.rangeExchangeSampleSizePerPartition)(keyOrd, ClassTag(classOf[InternalRow]))
     val scatter = RangeScatter(attrs, order, part, (maxRunBytes / n).max(1L).toInt)
     val numFields = attrs.length
-    new ShuffledRDD[Int, Array[Byte], Array[Byte]](
+    new ShuffledRDD[Int, RangeScatter.Chunk, RangeScatter.Chunk](
       input.mapPartitions(scatter.chunks), new RangeScatter.Targets(n))
+      .setSerializer(RangeScatter.ChunkSerializer)
       .mapPartitions(chunks => RangeScatter.rows(numFields, chunks.map(_._2)))
   }
 
@@ -261,22 +270,24 @@ private[plans] object KeyPrefix {
 /** The map side of the operator's scatter. `part` is the range
   * partitioner over the sort key; a row goes to the range it names for the
   * row's key. Each task appends each row to its target's page as its `Int`
-  * length and its UnsafeRow bytes, and ships a page as one `(target, bytes)`
-  * chunk when the next row would take it past `pageBytes`. At the end of
-  * its input it ships its pages one at a time, dropping each as it goes, so
-  * the task holds its pages plus at most one shipped chunk.
+  * length and its UnsafeRow bytes. When the next row would take a page past
+  * `pageBytes`, the page itself is handed to the shuffle as one chunk and
+  * the target gets a fresh page; at the end of its input the task hands
+  * over its pages one at a time, dropping each as it goes. So the task holds
+  * its pages plus at most one chunk in flight, and no row is copied twice.
   */
 private[plans] final case class RangeScatter(
     attrs: Seq[Attribute], order: Seq[SortOrder], part: Partitioner, pageBytes: Int) {
+  import RangeScatter.Chunk
 
-  def chunks(rows: Iterator[InternalRow]): Iterator[(Int, Array[Byte])] =
-    new Iterator[(Int, Array[Byte])] {
+  def chunks(rows: Iterator[InternalRow]): Iterator[(Int, Chunk)] =
+    new Iterator[(Int, Chunk)] {
       private val keyOf = UnsafeProjection.create(order.map(_.child), attrs)
       private val toUnsafe = UnsafeProjection.create(attrs, attrs)
       private val pages = new Array[Array[Byte]](part.numPartitions)
       private val used = new Array[Int](pages.length)
-      private var shipped: (Int, Array[Byte]) = _
-      private var flushAt = 0 // the next page the end-of-input flush ships
+      private var shipped: (Int, Chunk) = _
+      private var flushAt = 0 // the next page the end-of-input flush hands over
 
       override def hasNext: Boolean = {
         while (shipped == null && rows.hasNext) add(rows.next() match {
@@ -284,14 +295,14 @@ private[plans] final case class RangeScatter(
           case r => toUnsafe(r)
         })
         while (shipped == null && flushAt < pages.length) {
-          if (used(flushAt) > 0) ship(flushAt)
+          if (used(flushAt) > 0) shipped = (flushAt, Chunk(pages(flushAt), used(flushAt)))
           pages(flushAt) = null
           flushAt += 1
         }
         shipped != null
       }
 
-      override def next(): (Int, Array[Byte]) = {
+      override def next(): (Int, Chunk) = {
         if (!hasNext) throw new NoSuchElementException
         val c = shipped
         shipped = null
@@ -308,12 +319,17 @@ private[plans] final case class RangeScatter(
         used(t) += 4 + size
       }
 
-      /** Makes room for `need` more bytes in `t`'s page: ships the page
-        * first if they would take it past `pageBytes`, then grows it by
-        * doubling, but not past `pageBytes` unless one row needs more.
+      /** Makes room for `need` more bytes in `t`'s page: hands the page to
+        * the shuffle first if they would take it past `pageBytes`, then
+        * grows it by doubling, but not past `pageBytes` unless one row
+        * needs more.
         */
       private def room(t: Int, need: Int): Unit = {
-        if (used(t) > 0 && used(t).toLong + need > pageBytes) ship(t)
+        if (used(t) > 0 && used(t).toLong + need > pageBytes) {
+          shipped = (t, Chunk(pages(t), used(t)))
+          pages(t) = new Array[Byte](pages(t).length)
+          used(t) = 0
+        }
         val want = used(t).toLong + need
         val have = if (pages(t) == null) 0 else pages(t).length
         if (want > have) {
@@ -324,34 +340,80 @@ private[plans] final case class RangeScatter(
             if (pages(t) == null) Array.emptyByteArray else pages(t), cap.toInt)
         }
       }
-
-      private def ship(t: Int): Unit = {
-        shipped = (t, java.util.Arrays.copyOf(pages(t), used(t)))
-        used(t) = 0
-      }
     }
 }
 
 private[plans] object RangeScatter {
+  /** The first `length` bytes of `bytes`: rows back to back, each as its
+    * `Int` length and its UnsafeRow bytes.
+    */
+  final case class Chunk(bytes: Array[Byte], length: Int)
+
   /** Sends a chunk to the partition its key names. */
   final class Targets(override val numPartitions: Int) extends Partitioner {
     override def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
-  /** The rows of a partition's chunks, as one UnsafeRow view moved along. */
-  def rows(numFields: Int, chunks: Iterator[Array[Byte]]): Iterator[InternalRow] = {
-    val view = new UnsafeRow(numFields)
-    chunks.flatMap { bytes =>
-      Iterator.unfold(0) { at =>
-        if (at >= bytes.length) None
-        else {
-          val size = Platform.getInt(bytes, Platform.BYTE_ARRAY_OFFSET + at)
-          view.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + at + 4, size)
-          Some((view: InternalRow, at + 4 + size))
+  /** Streams each chunk as its length and its first `length` bytes, and
+    * reads it back as a chunk of exactly that many. The reduce side needs
+    * no key, so none is written, as Spark's `UnsafeRowSerializer` does.
+    */
+  object ChunkSerializer extends Serializer with Serializable {
+    override def newInstance(): SerializerInstance = new SerializerInstance {
+      override def serialize[T: ClassTag](t: T): ByteBuffer = unsupported
+      override def deserialize[T: ClassTag](bytes: ByteBuffer): T = unsupported
+      override def deserialize[T: ClassTag](bytes: ByteBuffer, loader: ClassLoader): T =
+        unsupported
+      private def unsupported = throw new UnsupportedOperationException("chunks only stream")
+
+      override def serializeStream(s: OutputStream): SerializationStream =
+        new SerializationStream {
+          private val out = new DataOutputStream(s)
+          override def writeKey[T: ClassTag](key: T): SerializationStream = this
+          override def writeObject[T: ClassTag](t: T): SerializationStream = {
+            val c = t.asInstanceOf[Chunk]
+            out.writeInt(c.length)
+            out.write(c.bytes, 0, c.length)
+            this
+          }
+          override def flush(): Unit = out.flush()
+          override def close(): Unit = out.close()
         }
-      }
+
+      override def deserializeStream(s: InputStream): DeserializationStream =
+        new DeserializationStream {
+          private val in = new DataInputStream(s)
+          override def readKey[T: ClassTag](): T = null.asInstanceOf[T]
+          override def readObject[T: ClassTag](): T = {
+            val bytes = new Array[Byte](in.readInt())
+            in.readFully(bytes)
+            Chunk(bytes, bytes.length).asInstanceOf[T]
+          }
+          override def close(): Unit = in.close()
+        }
     }
   }
+
+  /** The rows of a partition's chunks, as one UnsafeRow view moved along. */
+  def rows(numFields: Int, chunks: Iterator[Chunk]): Iterator[InternalRow] =
+    new Iterator[InternalRow] {
+      private val view = new UnsafeRow(numFields)
+      private var chunk = Chunk(Array.emptyByteArray, 0)
+      private var at = 0
+
+      override def hasNext: Boolean = {
+        while (at >= chunk.length && chunks.hasNext) { chunk = chunks.next(); at = 0 }
+        at < chunk.length
+      }
+
+      override def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        val size = Platform.getInt(chunk.bytes, Platform.BYTE_ARRAY_OFFSET + at)
+        view.pointTo(chunk.bytes, Platform.BYTE_ARRAY_OFFSET + at + 4, size)
+        at += 4 + size
+        view
+      }
+    }
 }
 
 private[graft] object ExternalHybridSorter {

@@ -122,6 +122,21 @@ class HybridSortPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("past 200 partitions (the sort-based shuffle writer) the scatter equals orderBy") {
+    val sp = spark
+    sp.conf.set("spark.sql.shuffle.partitions", "201")
+    sp.conf.set("spark.graft.hybridSort.spillBytes", "40000")
+    try adversarial(sp).filter(a => Set("reverse", "null keys", "string-led")(a._1)).foreach {
+      case (name, df, keys) =>
+        val got = Sorts.hybridSortExec(df, 25, keys: _*).collect().toSeq
+        val want = df.orderBy(keys.map(org.apache.spark.sql.functions.col): _*).collect().toSeq
+        assert(got == want, s"$name at 201 partitions")
+    } finally {
+      sp.conf.set("spark.sql.shuffle.partitions", "4")
+      sp.conf.unset("spark.graft.hybridSort.spillBytes")
+    }
+  }
+
   test("ties across a partition boundary stay a multiset permutation") {
     val sp = spark; import sp.implicits._
     // heavy duplication (the reference's regime: 4M values in a 5M space)

@@ -234,22 +234,7 @@ case class HybridSortExec(order: Seq[SortOrder], threshold: Int, child: SparkPla
   * date or timestamp sort key), so a run with no nulls whose key range
   * fits 32 bits needs no row comparison at all.
   */
-private[plans] final case class KeyPrefix(key: SortOrder, unsigned: Boolean, exact: Boolean) {
-  /** The prefix of a null key: the least when nulls sort first, else the greatest. */
-  val nullKey: Long = if (key.nullOrdering == NullsFirst) Long.MinValue else Long.MaxValue
-
-  /** A projection of a row's raw prefix; mutable, so one per task. */
-  def projection(): UnsafeProjection = UnsafeProjection.create(Seq(SortPrefix(key)))
-
-  /** A non-null key's raw prefix, mapped so signed order is output order. */
-  def normalize(raw: Long): Long = {
-    var v = raw
-    if (unsigned) v ^= Long.MinValue
-    if (!key.isAscending) v = ~v
-    v
-  }
-
-}
+private[plans] final case class KeyPrefix(key: SortOrder, unsigned: Boolean, exact: Boolean)
 
 private[plans] object KeyPrefix {
   def apply(order: Seq[SortOrder], input: Seq[Attribute]): KeyPrefix = {
@@ -440,7 +425,10 @@ private[plans] final class ExternalHybridSorter(
     runsMetric: SQLMetric, bytesMetric: SQLMetric) {
   import ExternalHybridSorter._
 
-  private val prefixOf = key.projection()
+  private val prefixOf = UnsafeProjection.create(Seq(SortPrefix(key.key)))
+  private val nullKey =
+    if (key.key.nullOrdering == NullsFirst) Long.MinValue else Long.MaxValue
+  private val descending = !key.key.isAscending
 
   // The run: rows back to back in `page`, row i at `offsets(i)` as its Int
   // length then its bytes; `keys(i)` its normalized prefix while buffering,
@@ -514,9 +502,11 @@ private[plans] final class ExternalHybridSorter(
   /** The row's leading-key prefix, mapped so signed order is output order. */
   private def prefix(u: UnsafeRow): Long = {
     val p = prefixOf(u)
-    if (p.isNullAt(0)) { hasNull = true; key.nullKey }
+    if (p.isNullAt(0)) { hasNull = true; nullKey }
     else {
-      val v = key.normalize(p.getLong(0))
+      var v = p.getLong(0)
+      if (key.unsigned) v ^= Long.MinValue
+      if (descending) v = ~v
       if (v < minKey) minKey = v
       if (v > maxKey) maxKey = v
       v
